@@ -386,9 +386,13 @@ object Bench {
     // timing consumer can't compare an errored run's total against a
     // clean one without seeing the flag (ADVICE r7)
     val rc = if (errors.nonEmpty) 1 else 0
-    val calJson = calib.map(c => f"$c%.4f").mkString("[", ",", "]")
+    // JSON numbers format under Locale.ROOT: the f interpolator uses
+    // the JVM default locale, which writes "1,234" under de_DE
+    def num(v: Double, digits: Int): String =
+      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+    val calJson = calib.map(num(_, 4)).mkString("[", ",", "]")
     val calProbesJson = calProbeNames.zipWithIndex.map { case (n, p) =>
-      "\"" + n + "\":" + calProbes.map(ps => f"${ps(p)}%.4f")
+      "\"" + n + "\":" + calProbes.map(ps => num(ps(p), 4))
         .mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val full =
@@ -419,7 +423,7 @@ object Bench {
     // only — the full record above and the total line below are
     // byte-identical to previous rounds' emission.
     runs.foreach { case (name, med, _, ts) =>
-      println(f"""{"q":"$name","med":$med%.3f,"reps":[${ts.map(t => f"$t%.3f").mkString(",")}]}""")
+      println(s"""{"q":"$name","med":${num(med, 3)},"reps":[${ts.map(num(_, 3)).mkString(",")}]}""")
     }
     println(s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${results.size},"nerrors":${errors.size},"sf":"$sfDir"}""")
     spark.stop()

@@ -65,56 +65,35 @@ object Queries3 {
     }),
 
     // ---- §2.5 rank method variants: min / dense / first / max / pct —
-    //      all derived from the distributed per-value rank stats.
-    //      method='first' adds the within-tie ordinal via
-    //      Reductions.withinTieOrdinal: the tiebreak column is bucketed
-    //      by value-deterministic quantile cuts, so NO window is
-    //      partitioned by the value alone — l_quantity has ~50 distinct
-    //      values and a by-value window would put a whole ~N/50-row tie
-    //      group on one task at 100 TB. The largest partition anywhere
-    //      is ~tieGroup/buckets.
+    //      all derived from the per-value rank stats
+    //      (Reductions.rankStatsTable: one bounded counts collect,
+    //      broadcast back). method='first' adds the within-tie ordinal
+    //      via Reductions.withinTieOrdinal: the tiebreak column is
+    //      bucketed by value-deterministic quantile cuts, so NO window
+    //      is partitioned by the value alone — l_quantity has ~50
+    //      distinct values and a by-value window would put a whole
+    //      ~N/50-row tie group on one task at 100 TB. The largest
+    //      partition anywhere is ~tieGroup/buckets.
     //      Null values left-join to null stats -> null ranks
     //      (pandas na_option='keep', intentional), unlike a nulls-last
     //      window which would assign them trailing ranks. ----
     "q_rank_methods" -> ((s, d) => {
       val q = col("l_quantity")
       val li = T(s, d, "lineitem")
-      // ONE pure-codegen probe job for the whole query: the per-value
-      // counts (exact rank stats for a low-cardinality key, bounded by
-      // the limit like rankStatsTable's small path) and the tiebreak
-      // column's min/max (evenly spaced within-tie bucket cuts — cut
-      // quality affects balance only, and order keys are dense) come
-      // from the same hash aggregate.
-      val probe = li.filter(q.isNotNull)
-        .groupBy(q.as("__v"))
-        .agg(count(lit(1)).cast("double").as("__cnt"),
-          min(col("l_orderkey")).as("__mn"), max(col("l_orderkey")).as("__mx"))
-        .orderBy(col("__v")).limit(1000001).collect()
-      require(probe.length <= 1000000,
-        "q_rank_methods: value cardinality above the broadcast-stats bound")
+      val stats = Reductions.rankStatsTable(li, "l_quantity")
+      val tot = stats.agg(sum(col("__gc")).as("__tot"))
       val tiebreak = Seq(col("l_orderkey"), col("l_linenumber"),
         col("l_extendedprice"), col("l_discount"))
-      val hist = probe.map(r => r.getDouble(0) -> r.getDouble(1).toLong).toSeq
-      val stats = Reductions.rankStatsFromCounts(s, hist, "__rk")
-      val tot = lit(hist.map(_._2).sum.toDouble)
-      val nb = s.sparkContext.defaultParallelism
-      val cuts =
-        if (probe.isEmpty) Array.empty[Double]
-        else {
-          val mn = probe.map(_.getLong(2)).min.toDouble
-          val mx = probe.map(_.getLong(3)).max.toDouble
-          (1 until nb).map(i => mn + (mx - mn) * i / nb).toArray
-        }
-      val st = li.join(stats, q === col("__rkv"), "left").drop("__rkv")
-      Reductions.withinTieOrdinal(st, "l_quantity", tiebreak, "__tie_ord",
-          statsSource = Some(li), knownCuts = Some(cuts))
+      Reductions.withinTieOrdinal(li, "l_quantity", tiebreak, "__tie_ord")
+        .join(stats, q === col("__gv"), "left")
+        .crossJoin(broadcast(tot))
         .select(
           col("l_orderkey"), col("l_linenumber"), q,
-          (col("__rk_before") + 1).cast("long").as("rk_min"),
-          col("__rk_dense").cast("long").as("rk_dense"),
-          (col("__rk_before") + col("__tie_ord")).cast("long").as("rk_first"),
-          (col("__rk_before") + col("__rk_cnt")).cast("long").as("rk_max"),
-          r((col("__rk_before") + 1) / tot, 6).as("rk_min_pct"))
+          (col("__gb") + 1).cast("long").as("rk_min"),
+          col("__gd").cast("long").as("rk_dense"),
+          (col("__gb") + col("__tie_ord")).cast("long").as("rk_first"),
+          (col("__gb") + col("__gc")).cast("long").as("rk_max"),
+          r((col("__gb") + 1) / col("__tot"), 6).as("rk_min_pct"))
         .orderBy(col("l_orderkey"), col("l_linenumber"), q,
           col("l_extendedprice"), col("rk_first"))
     }),

@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
   * k*(k-1)/2 `corr` expressions (map-side combinable — fine for the
   * reference's <=100-column frames; for very wide frames use
   * `ml.stat.Correlation` on an assembled vector, which computes the
-  * Gramian once). Spearman's rank prestep is the distributed
-  * [[Reductions.rankStatsTable]] join — value-counts aggregate + prefix
-  * sum over the counts table, one join-back per column, no global
-  * window at any scale. Kendall (the reference's numba kernel is O(n²)
-  * pairwise, `_numba.py:106-146`) has three tiers here: bounded-collect
+  * Gramian once). Spearman's rank prestep is the [[Rank]] kernel —
+  * one probe job, then broadcast stats joins or bucketed midrank
+  * windows, no global window at any scale. Kendall (the reference's
+  * numba kernel is O(n²) pairwise, `_numba.py:106-146`) has three
+  * tiers here: bounded-collect
   * Knight ([[kendallFast]]), sampled ([[kendallApprox]]), and the
   * unbounded exact grid decomposition ([[kendallDistributed]]).
   */
@@ -39,14 +39,6 @@ object Corr {
   def kendallCollectMaxRows(k: Int, budgetBytes: Long = 256L << 20): Long =
     budgetBytes / (64L + 48L * k.max(1))
 
-  /** Key-NDV bound for [[corrMatrixBy]]'s grouped-probe regime (r15):
-    * at or below it, ONE grouped probe pass collects every column's
-    * per-key exact histograms / fixed-bucket counts (collect memory is
-    * bounded at ~cols × 2 × broadcast-gate entries by the per-key cap)
-    * and every rank attachment is driver-built; above it, the in-plan
-    * per-column machinery keeps the driver safe. */
-  private[graft] val GroupedProbeMaxKeys: Long = 1024L
-
   /** Pairwise pearson matrix in long form (c1, c2, corr), upper triangle. */
   def pearsonLong(df: DataFrame, cols: Seq[String]): DataFrame = {
     val pairs = for {
@@ -63,15 +55,18 @@ object Corr {
     * long form (key, c1, c2, corr), upper triangle incl. the diagonal.
     * pearson: ONE grouped aggregate carries all k(k+1)/2 `corr` cells —
     * map-side-combinable co-moments, one shuffle on the group key.
-    * spearman: each column midranked WITHIN its group via
-    * [[Reductions.withMidrankBy]] — (key, value-quantile-bucket)
-    * windows, NOT `Window.partitionBy(key)`, so a low-cardinality group
-    * key (l_returnflag: 3 values) never serializes n/3 of the corpus
-    * through one sort task; all columns' bucket cuts come from ONE
-    * approxQuantile probe. NULL cells midrank to NULL and are pairwise-
+    * spearman: each column midranked WITHIN its group by the [[Rank]]
+    * kernel — stats joins or (key, value-bucket) windows, never
+    * `Window.partitionBy(key)`, so a low-cardinality group key
+    * (l_returnflag: 3 values) never serializes n/3 of the corpus
+    * through one sort task. NULL cells midrank to NULL and are pairwise-
     * masked by the correlation (the old group-window form ranked nulls
-    * first, polluting the coefficient). Like [[spearmanMatrix]], ranks
-    * are computed per COLUMN (not per pair): on null-laden data this is
+    * first, polluting the coefficient). Columns are cast to double up
+    * front, like pandas' `to_numpy(dtype=float)`: every rank regime then
+    * ranks the same float64 values (a long above 2^53 ties with its
+    * double neighbours on both sides of the key bound). Like
+    * [[spearmanMatrix]], ranks are computed per COLUMN (not per pair):
+    * on null-laden data this is
     * rank-then-mask, whereas pandas re-ranks each pair's common rows —
     * the documented fast-path deviation; see [[corrMatrixPairwise]] for
     * the exact per-pair semantics ungrouped.
@@ -84,127 +79,12 @@ object Corr {
     // pandas groupby(dropna=True): null keys drop for EVERY method
     // (Spark's groupBy would keep a null-key group)
     val df = df0.filter(col(key).isNotNull)
+      .select(col(key) +: cols.map(c => col(c).cast("double").as(c)): _*)
     val src = method match {
       case "pearson" => df
       case "spearman" =>
-        val spark = df.sparkSession
-        // floor 2: a defaultParallelism==1 session would degenerate the
-        // fallback bucket count; an extra bucket is placement-only
-        val n = math.max(spark.sparkContext.defaultParallelism, 2)
-        // The gate is sized from the session's
-        // autoBroadcastJoinThreshold (VERDICT r14 item 6) so no stats
-        // broadcast can outgrow what the session would broadcast.
-        val gate = Reductions.groupRankStatsMaxRows(spark)
-        // probe job 1: NDV gates only (key + every column)
-        val probeAggs =
-          approx_count_distinct(col(key)).as("__ndk") +:
-          cols.zipWithIndex.map { case (c, i) =>
-            approx_count_distinct(col(c)).as(s"__nd$i") }
-        val st = df.agg(probeAggs.head, probeAggs.tail: _*).collect()(0)
-        val ndk = st.getLong(st.fieldIndex("__ndk"))
-        def ndc(i: Int): Long = st.getLong(st.fieldIndex(s"__nd$i"))
-        // exact double round-trip: the grouped probe histograms values
-        // cast to double, so its stats only equal raw-value grouping
-        // when the cast is injective
-        def castExact(c: String): Boolean = df.schema(c).dataType match {
-          case org.apache.spark.sql.types.DoubleType |
-               org.apache.spark.sql.types.FloatType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.ByteType => true
-          case _ => false
-        }
-        val ranked =
-          if (ndk <= GroupedProbeMaxKeys && cols.forall(castExact)) {
-            // probe job 2 (r15): ONE grouped pass collects, per key and
-            // per column, the exact value histogram (capped so the
-            // whole collect stays within the broadcast gate), the exact
-            // fixed-bucket counts ([[graft.functions.SortableBucket]]),
-            // and the NaN count. EVERY column's rank attachment is then
-            // driver-built — per-(key,value) stats join or per-(key,
-            // bucket) offsets + window — with ZERO per-column in-plan
-            // aggregate subtrees: the former plan re-evaluated the
-            // (key, c) source once per column for the stats counts and
-            // once for the window offsets (guide §2.4: remove the
-            // passes outright), plus a percentile sketch per column in
-            // the probe.
-            val capPerKey = math.max(16L, gate / math.max(ndk, 1L)).toInt
-            def fb(c: Column) = graft.functions.SortableBucket
-              .sortableBucket(c.cast("double")).cast("double")
-            val hAggs = cols.zipWithIndex.flatMap { case (c, i) => Seq(
-              Reductions.boundedHistogram(col(c).cast("double"), capPerKey)
-                .as(s"__h$i"),
-              Reductions.boundedHistogram(fb(col(c)), capPerKey)
-                .as(s"__b$i"),
-              count(when(isnan(col(c).cast("double")), 1)).as(s"__nan$i")) }
-            val rowsK = df.groupBy(col(key).as("__k"))
-              .agg(hAggs.head, hAggs.tail: _*).collect().toSeq
-            def histsOf(fld: String): Seq[(Any, Seq[(Double, Long)])] =
-              rowsK.map { r =>
-                val f = r.fieldIndex(fld)
-                (r.get(0), if (r.isNullAt(f)) null
-                  else r.getMap[Double, Long](f).toSeq)
-              }
-            cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-              val out = s"__mr_$c"
-              val vh = histsOf(s"__h$i"); val bh = histsOf(s"__b$i")
-              val nans = rowsK.map(r =>
-                r.getLong(r.fieldIndex(s"__nan$i")))
-              val vhOk = vh.forall(_._2 != null) &&
-                vh.map(_._2.size).sum + nans.count(_ > 0) <= gate
-              val bhOk = bh.forall(_._2 != null) &&
-                bh.map(_._2.size).sum <= gate && {
-                  // window balance: no single (key, bucket) partition
-                  // may dominate (same 20% bound as the ungrouped path)
-                  val all = bh.flatMap(_._2.map(_._2))
-                  val total = all.sum
-                  total == 0 || all.max.toDouble / total <= 0.2
-                }
-              if (vhOk) {
-                val stats = Reductions.rankStatsFromGroupCounts(spark,
-                  d.schema(key).dataType,
-                  vh.zip(nans).map { case ((k, h), nc) => (k, h, nc) })
-                d.join(stats, col(key) === col("__gk") &&
-                    col(c) === col("__gv"), "left")
-                  .withColumn(out, when(col(c).isNotNull,
-                    col("__gb") + (col("__gc") + 1) / 2.0))
-                  .drop("__gk", "__gv", "__gc", "__gb")
-              } else if (bhOk)
-                Reductions.withGroupMidrankFixed(d, key, c, out, bh)
-              else Reductions.withMidrankBy(d, key, c, out, n,
-                statsSource = Some(df.select(col(key), col(c))))
-            }.select(col(key) +: cols.map(c => col(s"__mr_$c").as(c)): _*)
-          } else {
-            // high-NDV-key regime: the per-column in-plan machinery
-            // (grouped stats aggregate / bucketed-window offsets) stays
-            // — those subtrees are what keeps this regime driver-safe.
-            // Window-fallback columns get their quantile cuts from ONE
-            // batched approxQuantile job (the old probe carried a
-            // percentile sketch for every column on every call).
-            val need = cols.zipWithIndex
-              .filter { case (_, i) => ndk * ndc(i) > gate }
-            val cutsByCol: Map[Int, Array[Double]] =
-              if (need.isEmpty) Map.empty
-              else {
-                val probs = (1 until n).map(_.toDouble / n).toArray
-                val named = need.map { case (c, i) => (s"__qc$i", i) }
-                val slim = df.select(need.map { case (c, i) =>
-                  col(c).cast("double").as(s"__qc$i") }: _*)
-                val qs = slim.stat.approxQuantile(
-                  named.map(_._1).toArray, probs, 0.01)
-                named.map(_._2).zip(qs.map(_.distinct.sorted)).toMap
-              }
-            cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-              if (ndk * ndc(i) <= gate)
-                Reductions.withGroupRankStats(d, key, c, s"__mr_$c",
-                  statsSource = Some(df.select(col(key), col(c))))
-              else Reductions.withMidrankBy(d, key, c, s"__mr_$c", n,
-                knownCuts = Some(cutsByCol(i)),
-                statsSource = Some(df.select(col(key), col(c))))
-            }.select(col(key) +: cols.map(c => col(s"__mr_$c").as(c)): _*)
-          }
-        ranked
+        Rank.midrank(Rank.probe(df, Seq(key), cols), cols.map(c => s"__mr_$c"))
+          .select(col(key) +: cols.map(c => col(s"__mr_$c").as(c)): _*)
       case "kendall" =>
         return kendallMatrixBy(df, key, cols,
             maxGroupRows = kendallMaxGroupRows, minPeriods = minPeriods)
@@ -377,85 +257,43 @@ object Corr {
     one.select(expr(stacked))
   }
 
-  /** Spearman rho for one pair: pearson over average ranks. ONE probe
-    * pass fetches, per column, the EXACT value counts if the column is
-    * low-cardinality (bounded histogram — the whole per-value rank
-    * prestep in a single pass, broadcast join-back) AND exact counts
-    * of the FIXED order-preserving bucket
-    * ([[graft.functions.SortableBucket]], r15): a continuous column's
-    * midrank window gets its per-bucket offsets straight from the
-    * probe via [[Reductions.withMidrankFixed]] — no quantile sketch,
-    * no in-plan offsets subtree re-reading the base. One lazy job does
-    * the bucket shuffle(s) and the final corr; no checkpoint, no
-    * frame-sized broadcast, no single-task sort at any cardinality.
-    * A column too concentrated for fixed buckets falls back to
-    * [[Reductions.withMidrank]]'s quantile-cut buckets (placement
-    * only, never rank values).
+  /** Spearman rho for one pair: pearson over average ranks, both
+    * attached by the [[Rank]] kernel after ONE probe job (broadcast
+    * stats join for a low-cardinality side, probe-fed fixed-bucket
+    * window for a continuous one, quantile-cut window when fixed
+    * buckets would be too imbalanced). One lazy job does the bucket
+    * shuffle(s) and the final corr; no checkpoint, no frame-sized
+    * broadcast, no single-task sort at any cardinality.
     *
-    * Rows where either side is null are excluded up front (pandas
-    * pairwise-complete masking — ranks are computed on the common
-    * subset).
+    * Rows where either side is null or NaN are excluded up front
+    * (pandas pairwise-complete masking, which treats NaN as missing —
+    * ranks are computed on the common subset), like the matrix forms.
     *
-    * Like [[rankedFrame]], the continuous-side midrank sort sizes its
-    * OWN shuffle from input volume above the plan-stats gate
-    * ([[Reductions.SortBigBytes]]): same count -> [[Reductions.sortWidth]]
-    * -> explicit repartition, so the single-pair form inherits the
-    * measured sf10 lesson too (width moves placement, never ranks). */
+    * Like [[rankedFrame]], the midrank sort sizes its OWN shuffle from
+    * input volume above the plan-stats gate `bigBytes`
+    * ([[Reductions.SortBigBytes]]; see [[rankWidth]]). */
   def spearman(df: DataFrame, a: String, b: String,
                bigBytes: Long = Reductions.SortBigBytes): DataFrame = {
-    val spark = df.sparkSession
-    val base = df.filter(col(a).isNotNull && col(b).isNotNull)
-      .select(col(a).cast("double").as("__a"), col(b).cast("double").as("__b"))
-    val dp = math.max(spark.sparkContext.defaultParallelism, 2)
-    val est = base.queryExecution.optimizedPlan.stats.sizeInBytes
-    def fb(c: Column) = graft.functions.SortableBucket
-      .sortableBucket(c).cast("double")
-    val st = base.agg(
-      Reductions.boundedHistogram(col("__a")).as("ha"),
-      Reductions.boundedHistogram(col("__b")).as("hb"),
-      Reductions.boundedHistogram(fb(col("__a"))).as("ba"),
-      Reductions.boundedHistogram(fb(col("__b"))).as("bb"))
-      .collect()(0)
-    def histOf(i: Int): Seq[(Double, Long)] =
-      if (st.isNullAt(i)) null else st.getMap[Double, Long](i).toSeq
-    // width from the probe's own counts — the pairwise-complete base
-    // has no nulls, so any surviving histogram sums to the row count;
-    // a count() job only runs if every histogram poisoned (r15)
-    lazy val probedRows: Long = (0 until 4).iterator
-      .map(st.getMap[Double, Long](_))
-      .collectFirst { case m if m != null => m.values.sum }
-      .getOrElse(base.count())
-    val sortW =
-      if (est < BigInt(bigBytes)) 0
-      else {
-        val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        // ranked frame carries 2 values + 2 ranks + bucket id + offset
-        Reductions.sortWidth(probedRows, 6, session)
-      }
-    // Low-cardinality side: driver-built rank-stats LocalRelation,
-    // broadcast join — no shuffle of the frame, no second scan.
-    // Continuous side: fixed-bucket midrank window fed by the probe's
-    // exact bucket counts. Both exact.
-    def rankCol(in: DataFrame, c: String, out: String,
-                hist: Seq[(Double, Long)], bcnt: Seq[(Double, Long)],
-                pfx: String): DataFrame =
-      if (hist != null) {
-        val stt = Reductions.rankStatsFromCounts(spark, hist, pfx)
-        in.join(stt, col(c) === col(s"${pfx}v"), "left")
-          .withColumn(out, col(s"${pfx}_before") + (col(s"${pfx}_cnt") + 1) / 2.0)
-          .drop(s"${pfx}v", s"${pfx}_cnt", s"${pfx}_before", s"${pfx}_dense")
-      } else if (Reductions.fixedBucketsBalanced(bcnt))
-        Reductions.withMidrankFixed(in, c, out, bcnt, width = sortW)
-      else Reductions.withMidrank(in, c, out,
-        buckets = if (sortW > 0) math.max(dp, math.min(2 * sortW, 4096))
-                  else dp,
-        statsSource = Some(base), width = sortW)
-    val ranked = rankCol(
-      rankCol(base, "__a", "ra", histOf(0), histOf(2), "__ra"),
-      "__b", "rb", histOf(1), histOf(3), "__rb")
-    ranked.agg(Core.safeCorr(col("ra"), col("rb")).as("spearman"))
+    val base = df.select(col(a).cast("double").as("__a"),
+        col(b).cast("double").as("__b"))
+      .filter(Seq("__a", "__b").map(c => col(c).isNotNull && !isnan(col(c)))
+        .reduce(_ && _))
+    val p = Rank.probe(base, Nil, Seq("__a", "__b"))
+    Rank.midrank(p, Seq("ra", "rb"), rankWidth(p, bigBytes))
+      .agg(Core.safeCorr(col("ra"), col("rb")).as("spearman"))
   }
 
+  /** Shuffle width of an ungrouped probe's midrank windows (VERDICT r13
+    * item 1): 0 (session width, zero extra work) while the probed
+    * frame's plan-stats size is below `bigBytes`; above it
+    * [[Reductions.sortWidth]] from the probe's exact row count (which
+    * counts NaN rows too), with the sorted frame carrying each
+    * column's value and rank plus the bucket id and offset. Width moves
+    * placement, never ranks. */
+  private def rankWidth(p: Rank.Probe, bigBytes: Long): Int =
+    if (p.df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(bigBytes)) 0
+    else Reductions.sortWidth(p.groups.get.map(_.rows).sum, 2 * p.cols.size + 2,
+      p.df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
 
   /** Full spearman matrix over `cols`, long form (c1, c2, spearman),
     * upper triangle — pandas `p_corr(method='spearman')` on a k-column
@@ -489,33 +327,17 @@ object Corr {
 
   /** Shared prestep of the matrix forms: the listwise-complete frame
     * with every column's midrank attached (`__c<i>` value, `__r<i>`
-    * rank) after ONE batched stats job, plus the upper-triangle index
-    * pairs.
-    *
-    * The probe computes, per column, a bounded exact value histogram
-    * (low-NDV columns rank via a broadcast stats join — no shuffle of
-    * the frame) AND exact counts of the FIXED order-preserving bucket
-    * ([[graft.functions.SortableBucket]], r15): a high-NDV column's
-    * midrank window gets its per-bucket offsets straight from the
-    * probe (driver prefix sum over ≤2¹⁸ ids, broadcast back), so the
-    * main job no longer re-evaluates the base inside an offsets
-    * subtree and the probe no longer pays a percentile sketch per
-    * column. A column whose fixed buckets are too imbalanced (>20% of
-    * rows in one bucket — concentration inside ≲2⁻⁶ relative width)
-    * falls back to quantile-cut buckets via [[Reductions.withMidrank]].
-    *
-    * The midrank sort stage sizes its OWN shuffle from input volume
-    * (VERDICT r13 item 1): a plan-stats gate (`bigBytes`, default
-    * [[Reductions.SortBigBytes]]) keeps small inputs on the session
-    * width with zero extra work; above it, one exact `count()` over the
-    * pruned frame (cheap next to the sort it protects) drives
-    * [[Reductions.sortWidth]]. Bucket choice and width affect
-    * placement/balance only, never rank values — pinned by CorrSpec's
-    * forced-big-path equality. */
+    * rank) after ONE batched [[Rank]] probe job, plus the
+    * upper-triangle index pairs. Low-NDV columns rank via a broadcast
+    * stats join (no shuffle of the frame); a high-NDV column's
+    * fixed-bucket window gets its per-bucket offsets straight from the
+    * probe. The midrank sort sizes its own shuffle above `bigBytes`
+    * ([[rankWidth]]). Bucket choice and width affect placement/balance
+    * only, never rank values — pinned by GroupCorrSpec's forced-big-path
+    * equality. */
   private[graft] def rankedFrame(df: DataFrame, cols: Seq[String],
       bigBytes: Long = Reductions.SortBigBytes)
     : (DataFrame, Seq[(Int, Int)]) = {
-    val spark = df.sparkSession
     val k = cols.size
     require(k >= 2, "corr matrix: need at least two columns")
     val keep = cols.map(c => col(c).isNotNull && !isnan(col(c).cast("double")))
@@ -523,70 +345,9 @@ object Corr {
     val base = df.filter(keep)
       .select(cols.zipWithIndex.map { case (c, i) =>
         col(c).cast("double").as(s"__c$i") }: _*)
-    // floor 2: dp==1 would otherwise degenerate the fallback bucket
-    // count below; an extra bucket affects placement only
-    val dp = math.max(spark.sparkContext.defaultParallelism, 2)
-    val est = base.queryExecution.optimizedPlan.stats.sizeInBytes
-    // ONE probe pass, TWO bounded exact aggregates per column (r15):
-    // the value histogram (broadcast rank-stats path, unchanged) and
-    // the counts of the FIXED order-preserving 18-bit bucket
-    // ([[graft.functions.SortableBucket]]). The fixed mapping needs no
-    // cut points, so for a high-NDV column the probe itself yields the
-    // EXACT per-bucket counts the midrank window needs for its offsets
-    // — the former plan re-evaluated the whole base a second time
-    // inside the main job just to aggregate those counts (guide §2.4:
-    // remove the pass outright), and paid a percentile_approx sketch
-    // per column here for cut points the fixed mapping obsoletes.
-    val aggs = (0 until k).flatMap { i =>
-      Seq(Reductions.boundedHistogram(col(s"__c$i")).as(s"h$i"),
-        Reductions.boundedHistogram(graft.functions.SortableBucket
-          .sortableBucket(col(s"__c$i")).cast("double")).as(s"b$i"))
-    }
-    val st = base.agg(aggs.head, aggs.tail: _*).collect()(0)
-    // volume-sized sort width WITHOUT a count() job (r15): the base is
-    // listwise-complete, so any column's surviving histogram sums to
-    // the exact row count; a dedicated count pass only runs in the
-    // (pathological) case where every histogram poisoned
-    lazy val probedRows: Long = (0 until 2 * k).iterator
-      .map(st.getMap[Double, Long](_))
-      .collectFirst { case m if m != null => m.values.sum }
-      .getOrElse(base.count())
-    val sortW =
-      if (est < BigInt(bigBytes)) 0
-      else {
-        val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        // sorted frame carries k values + k ranks + bucket id + offset
-        Reductions.sortWidth(probedRows, 2 * k + 2, session)
-      }
-    var ranked = base
-    for (i <- 0 until k) {
-      val hi = st.fieldIndex(s"h$i"); val bi = st.fieldIndex(s"b$i")
-      val hist: Seq[(Double, Long)] =
-        if (st.isNullAt(hi)) null else st.getMap[Double, Long](hi).toSeq
-      val bcnt: Seq[(Double, Long)] =
-        if (st.isNullAt(bi)) null else st.getMap[Double, Long](bi).toSeq
-      ranked =
-        if (hist != null) {
-          val stt = Reductions.rankStatsFromCounts(spark, hist, s"__p$i")
-          ranked.join(stt, col(s"__c$i") === col(s"__p${i}v"), "left")
-            .withColumn(s"__r$i",
-              col(s"__p${i}_before") + (col(s"__p${i}_cnt") + 1) / 2.0)
-            .drop(s"__p${i}v", s"__p${i}_cnt", s"__p${i}_before",
-              s"__p${i}_dense")
-        } else if (Reductions.fixedBucketsBalanced(bcnt)) {
-          // driver-built per-bucket offsets (exact counts from the
-          // probe) broadcast back; the window sorts within buckets
-          // only. A column too concentrated for fixed buckets (>20% of
-          // rows in one — ≲2⁻⁶ relative width) takes the quantile-cut
-          // fallback below, which CAN split such a cluster (placement
-          // only, never rank values).
-          Reductions.withMidrankFixed(ranked, s"__c$i", s"__r$i", bcnt,
-            width = sortW)
-        } else Reductions.withMidrank(ranked, s"__c$i", s"__r$i",
-          buckets = if (sortW > 0) math.max(dp, math.min(2 * sortW, 4096))
-                    else dp,
-          statsSource = Some(base.select(col(s"__c$i"))), width = sortW)
-    }
+    val p = Rank.probe(base, Nil, base.columns.toSeq)
+    val ranked = Rank.midrank(p, (0 until k).map(i => s"__r$i"),
+      rankWidth(p, bigBytes))
     val pairs = for { i <- 0 until k; j <- (i + 1) until k } yield (i, j)
     (ranked, pairs)
   }
@@ -642,98 +403,42 @@ object Corr {
     * null-free frames and ~k× cheaper — use them there; this is the
     * exact form for data with holes.
     *
-    * Scale shape: TWO jobs at any column count. Probe: all k(k-1)/2
-    * pearson cells, their pair counts, AND the bounded exact histogram
-    * of each column masked to each pair's complete rows ride ONE
-    * aggregate pass (Spark's `corr` masks null pairs natively; the
-    * masked histograms are the batched form of [[spearman]]'s per-pair
-    * probe — map-side combinable, no shuffle of the frame). Main: each
-    * masked midrank is attached via a broadcast rank-stats join built
-    * from its histogram (the frame is never shuffled or sorted) and one
-    * final aggregate evaluates every rank correlation. A pair whose
-    * masked column exceeds the histogram's cardinality bound (65536
-    * distinct) falls back to the single-pair [[spearman]] —
-    * distributed bucketed midrank, one bounded extra job per such
-    * pair. Long form (c1, c2, pearson, spearman, n), upper
+    * Scale shape: TWO jobs at any column count. Each column i masked to
+    * each partner j's present rows is one [[Rank]] column, so ONE probe
+    * job covers all k(k-1) masked columns and its midrank is exactly
+    * pandas' re-ranking of the pair's complete rows. The main job
+    * attaches every masked midrank (broadcast stats joins while the
+    * masked column fits the histogram cap, bucket windows above it) and
+    * ONE aggregate evaluates every pearson cell, pair count and rank
+    * correlation. Long form (c1, c2, pearson, spearman, n), upper
     * triangle. */
   def corrMatrixPairwise(df: DataFrame, cols: Seq[String],
                          minPeriods: Int = 1): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
-      StructField, StructType}
-    val spark = df.sparkSession
     val k = cols.size
     require(k >= 2, "corr matrix: need at least two columns")
+    val pairs = for { i <- 0 until k; j <- (i + 1) until k } yield (i, j)
+    val ordered = pairs.flatMap { case (i, j) => Seq((i, j), (j, i)) }
     val base = df.select(cols.zipWithIndex.map { case (c, i) =>
       val d = col(c).cast("double")
       when(!isnan(d), d).as(s"__c$i")
     }: _*)
-    val pairs = for { i <- 0 until k; j <- (i + 1) until k } yield (i, j)
-    val ordered = pairs.flatMap { case (i, j) => Seq((i, j), (j, i)) }
-    // ---- probe: pearson + count + per-pair masked histograms, one pass
-    val probeAggs = pairs.flatMap { case (i, j) => Seq(
-        Core.safeCorr(col(s"__c$i"), col(s"__c$j")).as(s"p${i}_$j"),
-        count(when(col(s"__c$i").isNotNull && col(s"__c$j").isNotNull, 1))
-          .as(s"n${i}_$j")) } ++
-      ordered.map { case (i, j) =>
-        Reductions.boundedHistogram(
-          when(col(s"__c$j").isNotNull, col(s"__c$i"))).as(s"h${i}_$j") }
-    val st = base.agg(probeAggs.head, probeAggs.tail: _*).collect()(0)
-    def histOf(i: Int, j: Int): Seq[(Double, Long)] = {
-      val f = st.fieldIndex(s"h${i}_$j")
-      if (st.isNullAt(f)) null else st.getMap[Double, Long](f).toSeq
-    }
-    val (batched, overflow) = pairs.partition { case (i, j) =>
-      histOf(i, j) != null && histOf(j, i) != null }
-    // ---- main (LAZY): broadcast-join every masked midrank onto one
-    //      frame, evaluate all rank correlations in one aggregate
-    val batchedCells: Option[DataFrame] =
-      if (batched.isEmpty) None
-      else {
-        var ranked = base
-        batched.flatMap { case (i, j) => Seq((i, j), (j, i)) }
-          .foreach { case (i, j) =>
-            val p = s"__p${i}_$j"
-            ranked = ranked
-              .join(Reductions.rankStatsFromCounts(spark, histOf(i, j), p),
-                col(s"__c$i") === col(s"${p}v"), "left")
-              .withColumn(s"__r${i}_$j",
-                when(col(s"__c$j").isNotNull,
-                  col(s"${p}_before") + (col(s"${p}_cnt") + 1) / 2.0))
-              .drop(s"${p}v", s"${p}_cnt", s"${p}_before", s"${p}_dense")
-          }
-        val cellAggs = batched.map { case (i, j) =>
-          Core.safeCorr(col(s"__r${i}_$j"), col(s"__r${j}_$i")).as(s"s${i}_$j") }
-        val one = ranked.agg(cellAggs.head, cellAggs.tail: _*)
-        val stacked = batched.map { case (i, j) =>
-          s"'${cols(i)}', '${cols(j)}', `s${i}_$j`" }
-          .mkString(s"stack(${batched.size}, ", ", ", ") as (c1, c2, __s)")
-        Some(one.select(expr(stacked)))
-      }
-    val fallbackCells = overflow.map { case (i, j) =>
-      spearman(base, s"__c$i", s"__c$j")
-        .select(lit(cols(i)).as("c1"), lit(cols(j)).as("c2"),
-          col("spearman").as("__s"))
-    }
-    val sp = (batchedCells.toSeq ++ fallbackCells).reduce(_ unionByName _)
-    // pearson + n are already on the driver from the probe: a
-    // |pairs|-row LocalRelation joined to the lazy spearman cells
-    val pe = spark.createDataFrame(
-      java.util.Arrays.asList(pairs.map { case (i, j) =>
-        val pf = st.fieldIndex(s"p${i}_$j")
-        Row(cols(i), cols(j),
-          if (st.isNullAt(pf)) null else st.getDouble(pf),
-          st.getLong(st.fieldIndex(s"n${i}_$j")))
-      }: _*),
-      StructType(Seq(
-        StructField("c1", StringType), StructField("c2", StringType),
-        StructField("__p", DoubleType),
-        StructField("n", LongType, nullable = false))))
-    pe.join(sp, Seq("c1", "c2"), "left")
-      .select(col("c1"), col("c2"),
-        when(col("n") >= minPeriods, col("__p")).as("pearson"),
-        when(col("n") >= minPeriods, col("__s")).as("spearman"),
-        col("n"))
+    val masked = base.select(base.columns.map(col) ++ ordered.map { case (i, j) =>
+      when(col(s"__c$j").isNotNull, col(s"__c$i")).as(s"__m${i}_$j") }: _*)
+    val ranked = Rank.midrank(
+      Rank.probe(masked, Nil, ordered.map { case (i, j) => s"__m${i}_$j" }),
+      ordered.map { case (i, j) => s"__r${i}_$j" })
+    val aggs = pairs.flatMap { case (i, j) => Seq(
+      Core.safeCorr(col(s"__c$i"), col(s"__c$j")).as(s"p${i}_$j"),
+      Core.safeCorr(col(s"__r${i}_$j"), col(s"__r${j}_$i")).as(s"s${i}_$j"),
+      count(when(col(s"__c$i").isNotNull && col(s"__c$j").isNotNull, 1))
+        .as(s"n${i}_$j")) }
+    val stacked = pairs.map { case (i, j) =>
+      s"'${cols(i)}', '${cols(j)}', " +
+        s"CASE WHEN n${i}_$j >= $minPeriods THEN p${i}_$j END, " +
+        s"CASE WHEN n${i}_$j >= $minPeriods THEN s${i}_$j END, n${i}_$j" }
+      .mkString(s"stack(${pairs.size}, ", ", ",
+        ") as (c1, c2, pearson, spearman, n)")
+    ranked.agg(aggs.head, aggs.tail: _*).select(expr(stacked))
   }
 
   /** PAIRWISE-complete kendall tau-b matrix — pandas

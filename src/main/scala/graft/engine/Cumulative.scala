@@ -134,7 +134,7 @@ object Cumulative {
             else df.sparkSession.sparkContext.defaultParallelism
     val cuts = df.stat.approxQuantile(
       lead, (1 until n).map(_.toDouble / n).toArray, 0.01).distinct.sorted
-    // native binary-search bucket expression (see Reductions.withMidrank)
+    // native binary-search bucket expression (graft.functions.BucketBin)
     def bucketOf(v: Column): Column =
       coalesce(graft.functions.BucketBin.bucketBin(v, cuts), lit(0))
     val sums = values.zipWithIndex.map { case ((v, _), i) =>

@@ -1,0 +1,245 @@
+package graft.engine
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+/** The rank kernel: pandas `rank(method='average')` midranks of one or
+  * more columns within the groups of `keys`; an empty key list ranks
+  * the whole frame. It is the one rank path of the engine: `p_rank`
+  * (reference `parallel_dataframe.py:571-595`) is
+  * [[Reductions.withRankAvg]] on top of it, and spearman is pearson
+  * over these ranks (`:297-299`) in [[Corr.spearman]],
+  * [[Corr.rankedFrame]], [[Corr.corrMatrixPairwise]] and
+  * [[Corr.corrMatrixBy]].
+  *
+  * probe → gate → attach:
+  *   - [[probe]]: ONE aggregate job returns, per key and column, the
+  *     bounded exact value histogram, the exact fixed-bucket counts
+  *     ([[graft.functions.SortableBucket]]) and the non-null count
+  *     (whose excess over the histogram is the NaN count), plus each
+  *     key's row count. A grouped probe first runs one approx-NDV job;
+  *     above [[GroupedProbeMaxKeys]] keys it skips the per-key collect
+  *     and the NDVs size the in-plan gate instead.
+  *   - [[midrank]] chooses once per column: a stats join when the
+  *     (key, value) table fits the broadcast gate
+  *     ([[Reductions.groupRankStatsMaxRows]]), else a window over fixed
+  *     buckets when no (key, bucket) holds more than 20% of the rows,
+  *     else a window over quantile-cut buckets (one batched
+  *     approxQuantile job for all such columns).
+  *   - both attach paths read a `(keys, value-or-bucket, cnt, before)`
+  *     table as a DataFrame, so a driver LocalRelation built from the
+  *     probe and an in-plan aggregate (above the key bound) feed the
+  *     same code. Stats join: rank = before + (cnt + 1) / 2. Bucket
+  *     window, partitioned by (keys, bucket) and ordered by the value:
+  *     rank = offset + cum − tie + (tie + 1) / 2, where cum counts the
+  *     default RANGE frame (up to and including the tie group) and tie
+  *     the RANGE(0, 0) frame. No window is ever partitioned by the keys
+  *     alone over the frame, so a low-cardinality key never sorts a
+  *     whole group in one task.
+  *
+  * Domain: grouped columns must be exact as doubles (double, float and
+  * the ≤32-bit integers); callers cast to double first, which is
+  * pandas' own float64 domain for corr. An ungrouped column of any
+  * other orderable type (long, decimal, string, timestamp) takes its
+  * stats table from [[Reductions.rankStatsTable]]'s typed counts
+  * collect, so a long ranks exactly above 2^53. NaN ranks greatest
+  * (Spark's order) and -0.0 ties 0.0 on every path; null values get
+  * null ranks; keys match null-safely, so a null key is a group like
+  * any other. The regime moves work placement, never rank values. */
+object Rank {
+
+  /** Key-NDV bound of the per-key probe collect (r15): at or below it
+    * the collect is bounded by ~cols × 2 × the broadcast gate (the
+    * per-key histogram cap divides the gate); above it every table is
+    * an in-plan aggregate. */
+  private[graft] val GroupedProbeMaxKeys: Long = 1024L
+
+  /** One key's probe counts, one entry per probed column. A null
+    * histogram overflowed its cap; columns that are not exact as
+    * doubles carry no histograms. */
+  final case class Group(key: Seq[Any], rows: Long, n: IndexedSeq[Long],
+      hist: IndexedSeq[Map[Double, Long]],
+      bkt: IndexedSeq[Map[Double, Long]])
+
+  /** What [[probe]] learned about `df`: `groups` is None above
+    * [[GroupedProbeMaxKeys]] keys, and `colNdv` (approximate, grouped
+    * probes only) then sizes the in-plan stats gate
+    * keyNdv × colNdv ≤ `gate`. */
+  final case class Probe(df: DataFrame, keys: Seq[String], cols: Seq[String],
+      gate: Long, keyNdv: Long, colNdv: IndexedSeq[Long],
+      groups: Option[Seq[Group]])
+
+  private def exact(dt: DataType): Boolean = dt match {
+    case DoubleType | FloatType | IntegerType | ShortType | ByteType => true
+    case _ => false
+  }
+
+  private def keyName(i: Int): String = if (i == 0) "__gk" else s"__gk$i"
+
+  /** Probe `cols` of `df` within `keys` (see the object doc). The
+    * histogram cap per key is the broadcast gate divided by the key
+    * NDV (floor 16), so the whole collect stays within the gate. */
+  def probe(df: DataFrame, keys: Seq[String], cols: Seq[String]): Probe = {
+    val gate = Reductions.groupRankStatsMaxRows(df.sparkSession)
+    val (keyNdv, colNdv) =
+      if (keys.isEmpty) (1L, IndexedSeq.empty[Long])
+      else {
+        val k = if (keys.size == 1) col(keys.head) else struct(keys.map(col): _*)
+        val aggs = approx_count_distinct(k) +:
+          cols.map(c => approx_count_distinct(col(c)))
+        val r = df.agg(aggs.head, aggs.tail: _*).head()
+        (r.getLong(0), cols.indices.map(i => r.getLong(i + 1)))
+      }
+    val groups =
+      if (keyNdv > GroupedProbeMaxKeys) None
+      else {
+        val cap = math.max(16L, gate / math.max(keyNdv, 1L)).toInt
+        val aggs = count(lit(1)) +: cols.zipWithIndex.flatMap { case (c, i) =>
+          val v = col(c).cast("double")
+          count(col(c)).as(s"__n$i") +: (
+            if (!exact(df.schema(c).dataType)) Nil
+            else Seq(Reductions.boundedHistogram(v, cap).as(s"__h$i"),
+              Reductions.boundedHistogram(graft.functions.SortableBucket
+                .sortableBucket(v).cast("double"), cap).as(s"__b$i")))
+        }
+        val rows = df.groupBy(keys.map(col): _*)
+          .agg(aggs.head, aggs.tail: _*).collect().toSeq
+        def hists(r: Row, p: String): IndexedSeq[Map[Double, Long]] =
+          cols.indices.map { i =>
+            val f = r.schema.fieldNames.indexOf(s"$p$i")
+            if (f < 0 || r.isNullAt(f)) null
+            else r.getMap[Double, Long](f).toMap
+          }
+        Some(rows.map(r => Group(keys.indices.map(r.get), r.getLong(keys.size),
+          cols.indices.map(i => r.getLong(r.fieldIndex(s"__n$i"))),
+          hists(r, "__h"), hists(r, "__b"))))
+      }
+    Probe(df, keys, cols, gate, keyNdv, colNdv, groups)
+  }
+
+  /** How one column attaches: a stats join on the value when `bucket`
+    * is None, else the midrank window over `bucket`. */
+  private case class Attach(bucket: Option[Column], table: DataFrame)
+
+  /** Attach the midrank of each probed column `p.cols(i)` as `outs(i)`
+    * to the probed frame. `width` > 0 repartitions each bucket window
+    * to that many partitions (the caller sized it from volume via
+    * [[Reductions.sortWidth]]) and raises the quantile bucket count to
+    * match; it moves placement only. */
+  def midrank(p: Probe, outs: Seq[String], width: Int = 0): DataFrame = {
+    val Probe(df, keys, cols, gate, keyNdv, colNdv, groups) = p
+    val chosen: IndexedSeq[Option[Attach]] = cols.indices.map { i =>
+      val c = cols(i)
+      if (!exact(df.schema(c).dataType)) {
+        require(keys.isEmpty, s"rank: cast grouped column $c to double")
+        Some(Attach(None, Reductions.rankStatsTable(df, c)))
+      } else groups match {
+        case Some(gs) =>
+          val hs = gs.map(_.hist(i)); val bs = gs.map(_.bkt(i))
+          // NaN is absent from the value histogram but not from n
+          lazy val withNaN = gs.map { g =>
+            val nan = g.n(i) - g.hist(i).values.sum
+            g.key -> (if (nan > 0) g.hist(i) + (Double.NaN -> nan) else g.hist(i))
+          }
+          lazy val bcounts = bs.flatMap(_.values)
+          if (hs.forall(_ != null) && withNaN.map(_._2.size).sum <= gate)
+            Some(Attach(None, table(df, keys, withNaN)))
+          else if (bs.forall(_ != null) && bcounts.size <= gate &&
+              (bcounts.isEmpty ||
+                bcounts.max.toDouble / bcounts.sum <= 0.2))
+            Some(Attach(Some(graft.functions.SortableBucket
+              .sortableBucket(col(c))), table(df, keys, gs.map(_.key).zip(bs))))
+          else None
+        case None =>
+          if (keyNdv * colNdv(i) <= gate)
+            Some(Attach(None, inPlanTable(df, keys, c, col(c))))
+          else None
+      }
+    }
+    val need = cols.indices.filter(chosen(_).isEmpty)
+    val cuts: Map[Int, Array[Double]] =
+      if (need.isEmpty) Map.empty
+      else {
+        // floor 2: a one-core session would otherwise get one bucket
+        val dp = math.max(df.sparkSession.sparkContext.defaultParallelism, 2)
+        val nb = if (width > 0) math.max(dp, math.min(2 * width, 4096)) else dp
+        val qs = df.select(need.map(i => col(cols(i)).cast("double")
+            .as(s"__q$i")): _*)
+          .stat.approxQuantile(need.map(i => s"__q$i").toArray,
+            (1 until nb).map(_.toDouble / nb).toArray, 0.01)
+        need.zip(qs.map(_.distinct.sorted)).toMap
+      }
+    cols.indices.foldLeft(df) { (d, i) =>
+      val a = chosen(i).getOrElse {
+        val b = coalesce(graft.functions.BucketBin.bucketBin(col(cols(i)),
+          cuts(i)), lit(0))
+        Attach(Some(b), inPlanTable(df, keys, cols(i), b))
+      }
+      attach(d, keys, cols(i), outs(i), a, width)
+    }
+  }
+
+  /** Driver-built `(keys, value, cnt, before)` table from per-key counts,
+    * in ascending value order with NaN greatest. A Scala map holds -0.0
+    * and 0.0 as one key, so no value has two rows (Spark joins them
+    * equal; two rows would duplicate every 0.0-valued frame row). */
+  private def table(df: DataFrame, keys: Seq[String],
+                    counts: Seq[(Seq[Any], Map[Double, Long])]): DataFrame = {
+    val rows = counts.flatMap { case (key, m) =>
+      var before = 0.0
+      m.toSeq.sortBy(_._1)(Ordering.Double.TotalOrdering).map {
+        case (v, cnt) =>
+          val r = Row.fromSeq(key ++ Seq(v, cnt.toDouble, before))
+          before += cnt; r
+      }
+    }
+    val schema = StructType(keys.zipWithIndex.map { case (k, i) =>
+        StructField(keyName(i), df.schema(k).dataType) } ++ Seq(
+      StructField("__gv", DoubleType),
+      StructField("__gc", DoubleType, nullable = false),
+      StructField("__gb", DoubleType, nullable = false)))
+    broadcast(df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema))
+  }
+
+  /** In-plan `(keys, x, cnt, before)` table: per-(keys, x) counts of the
+    * non-null `c` rows, then a running sum per key over that aggregate
+    * (bounded by the caller's gate, never the frame). */
+  private def inPlanTable(df: DataFrame, keys: Seq[String], c: String,
+                          x: Column): DataFrame = {
+    val before = Window.partitionBy(keys.indices.map(i => col(keyName(i))): _*)
+      .orderBy("__gv").rowsBetween(Window.unboundedPreceding, -1)
+    broadcast(df.filter(col(c).isNotNull)
+      .groupBy(keys.indices.map(i => col(keys(i)).as(keyName(i))) :+
+        x.as("__gv"): _*)
+      .agg(count(lit(1)).cast("double").as("__gc"))
+      .withColumn("__gb", coalesce(sum(col("__gc")).over(before), lit(0.0))))
+  }
+
+  private def attach(df: DataFrame, keys: Seq[String], c: String,
+                     out: String, a: Attach, width: Int): DataFrame = {
+    val d = a.bucket.fold(df)(b => df.withColumn("__bk", b))
+    val on = if (a.bucket.isEmpty) col(c) else col("__bk")
+    val joined = d.join(a.table, (keys.indices.map(i =>
+      col(keys(i)) <=> col(keyName(i))) :+ (on === col("__gv"))).reduce(_ && _),
+      "left")
+    val ranked =
+      if (a.bucket.isEmpty)
+        joined.withColumn(out, col("__gb") + (col("__gc") + 1) / 2.0)
+      else {
+        val parts = keys.map(col) :+ col("__bk")
+        val placed =
+          if (width > 0) joined.repartition(width, parts: _*) else joined
+        val cum = Window.partitionBy(parts: _*).orderBy(col(c))
+        val tie = count(col(c))
+          .over(cum.rangeBetween(Window.currentRow, Window.currentRow))
+        placed.withColumn(out, when(col(c).isNotNull,
+          col("__gb") + count(col(c)).over(cum).cast("double") - tie +
+            (tie + 1) / 2.0))
+      }
+    ranked.drop(Seq("__bk", "__gv", "__gc", "__gb", "__gd") ++
+      keys.indices.map(keyName): _*)
+  }
+}

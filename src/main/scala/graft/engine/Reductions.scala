@@ -103,97 +103,42 @@ object Reductions {
       .select(col(c)).orderBy(col(c))
   }
 
-  /** pandas `rank(method='average', na_option=…, ascending=…)` over one
-    * column: min-rank + (ties-1)/2.
-    *
-    * SMALL-FRAME form: the partition-less window serializes into one
-    * task. For whole-frame rank at scale use [[withRankAvg]] /
-    * [[withRankStats]] (distributed stats-join, same semantics).
-    *
-    * na_option: 'keep' (default) leaves null ranks null and `pct`
-    * divides by the non-null count; 'top'/'bottom' rank the null block
-    * first/last as ONE tie group (nulls compare equal in the ordering,
-    * so the same average-of-ties formula covers them) and `pct` divides
-    * by the total row count — all matching pandas. */
-  def rankAvg(c: Column, pct: Boolean = false,
-              ascending: Boolean = true,
-              naOption: String = "keep"): Column = {
-    val ord = (ascending, naOption) match {
-      case (true, "top")  => c.asc_nulls_first
-      case (false, "top") => c.desc_nulls_first
-      case (true, _)      => c.asc_nulls_last
-      case (false, _)     => c.desc_nulls_last
-    }
-    val w = Window.orderBy(ord)
-    val ties = count(lit(1)).over(Window.partitionBy(c))
-    val r = rank().over(w) + (ties - 1) / 2.0
-    naOption match {
-      case "keep" =>
-        val out = when(c.isNull, lit(null)).otherwise(r)
-        if (pct) {
-          val n = count(c).over(Window.partitionBy())
-          when(c.isNull, lit(null)).otherwise(r / n)
-        } else out
-      case _ =>
-        if (pct) r / count(lit(1)).over(Window.partitionBy()) else r
-    }
-  }
-
-  /** Per-VALUE rank statistics table for column `c` — the shared prestep
-    * of the distributed ungrouped rank family. Output columns (keyed by
-    * `<p>v`, the distinct value):
-    *   - `<p>_cnt`    tie-group size of the value
-    *   - `<p>_before` count of values strictly before it (in `ascending`
-    *                  order) — min rank = before+1, max = before+cnt,
-    *                  average = before+(cnt+1)/2
-    *   - `<p>_dense`  1-based dense rank of the value
+  /** Per-VALUE rank statistics of column `c` in ascending order, for any
+    * orderable type: `__gv` the distinct value (original type), `__gc`
+    * its tie-group size, `__gb` the count of values strictly before it
+    * (min rank = before+1, max = before+cnt, average =
+    * before+(cnt+1)/2) and `__gd` its 1-based dense rank. It is the
+    * stats source of [[Rank]] for columns whose double cast is not
+    * exact (strings, timestamps, longs above 2^53).
     *
     * Shape: ONE probe job — the value-counts aggregate (map-side
-    * combinable), sorted, with `limit(threshold+1)` bounding what can
-    * reach the driver. Then:
-    *   - counts ≤ `smallThreshold` (the common case: categorical /
-    *     low-cardinality keys): prefix sums run on the driver over the
-    *     bounded sorted counts and ship back as a broadcast
-    *     LocalRelation for the join-back. Scale-safe — the frame itself
-    *     never serializes, only its (bounded) distinct values do.
-    *   - counts above threshold (near-unique doubles at 100 TB): the
-    *     two-pass [[Cumulative.globalCumsumMulti]] range-partitioned
-    *     prefix sum over the re-aggregated counts — every stage
-    *     partitions, nothing driver-sized.
-    * Ties never straddle partitions because the prefix sum runs
-    * per-value. */
-  def rankStatsTable(df: DataFrame, c: String, ascending: Boolean = true,
-                     prefix: String = "__rk",
-                     smallThreshold: Int = 1000000,
-                     weight: Option[Column] = None): DataFrame = {
-    val spark = df.sparkSession
-    val key = s"${prefix}v"
-    // `weight` lets pre-aggregated (value, multiplicity) inputs reuse
-    // this path: the tie-group size is then sum(weight), not count(*).
-    val cntAgg = weight.map(sum).getOrElse(count(lit(1)))
+    * combinable), sorted, with a limit bounding what can reach the
+    * driver. Up to 1,000,000 distinct values the prefix sums run on
+    * the driver and ship back as a broadcast LocalRelation; above it
+    * the two-pass [[Cumulative.globalCumsumMulti]] range-partitioned
+    * prefix sum runs over the re-aggregated counts, so nothing
+    * driver-sized is built. Ties never straddle partitions because the
+    * prefix sum runs per value. */
+  def rankStatsTable(df: DataFrame, c: String): DataFrame = {
+    val maxDriverRows = 1000000
     val cnts = df.filter(col(c).isNotNull)
-      .groupBy(col(c).as(key))
-      .agg(cntAgg.cast("double").as(s"${prefix}_cnt"))
-    val ord = if (ascending) col(key).asc else col(key).desc
-    val sorted = cnts.orderBy(ord).limit(smallThreshold + 1).collect()
-    if (sorted.length <= smallThreshold) {
+      .groupBy(col(c).as("__gv"))
+      .agg(count(lit(1)).cast("double").as("__gc"))
+    val sorted = cnts.orderBy(col("__gv")).limit(maxDriverRows + 1).collect()
+    if (sorted.length <= maxDriverRows) {
       var before = 0.0
-      val rows = new Array[org.apache.spark.sql.Row](sorted.length)
-      var i = 0
-      while (i < sorted.length) {
-        val r = sorted(i)
+      val rows = sorted.zipWithIndex.map { case (r, i) =>
         val cnt = r.getDouble(1)
-        rows(i) = org.apache.spark.sql.Row(r.get(0), cnt, before, (i + 1).toDouble)
-        before += cnt
-        i += 1
+        val out = org.apache.spark.sql.Row(r.get(0), cnt, before, (i + 1).toDouble)
+        before += cnt; out
       }
       import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
       val schema = StructType(Seq(
         cnts.schema.head, // key field keeps the original value type
-        StructField(s"${prefix}_cnt", DoubleType),
-        StructField(s"${prefix}_before", DoubleType),
-        StructField(s"${prefix}_dense", DoubleType)))
-      broadcast(spark.createDataFrame(
+        StructField("__gc", DoubleType),
+        StructField("__gb", DoubleType),
+        StructField("__gd", DoubleType)))
+      broadcast(df.sparkSession.createDataFrame(
         java.util.Arrays.asList(rows: _*), schema))
     } else {
       // Large path re-runs the counts aggregate (one extra map-side-
@@ -202,203 +147,52 @@ object Reductions {
       // Counts/dense indices ride as Double (rank callers cast back to
       // long): exact only below 2^53 rows / distinct values — fine for
       // row counts, not for 64-bit id-like payloads.
-      val ck = cnts.localCheckpoint()
-      Cumulative.globalCumsumMulti(ck.withColumn("__one", lit(1.0)),
-          Seq(ord),
-          Seq(col(s"${prefix}_cnt") -> s"${prefix}_cum",
-              col("__one") -> s"${prefix}_dense"))
-        .drop("__one")
-        .withColumn(s"${prefix}_before",
-          col(s"${prefix}_cum") - col(s"${prefix}_cnt"))
-        .drop(s"${prefix}_cum")
+      Cumulative.globalCumsumMulti(
+          cnts.localCheckpoint().withColumn("__one", lit(1.0)),
+          Seq(col("__gv").asc),
+          Seq(col("__gc") -> "__cum", col("__one") -> "__gd"))
+        .withColumn("__gb", col("__cum") - col("__gc"))
+        .drop("__one", "__cum")
     }
   }
 
-  /** DISTRIBUTED global rank statistics — the 100 TB path for ungrouped
-    * rank, replacing the `Window.orderBy()`-without-partitionBy form
-    * (which serializes the whole frame into one task). Joins each row to
-    * the [[rankStatsTable]] of its column on the value; null values
-    * left-join to null stats; callers apply na_option. */
-  def withRankStats(df: DataFrame, c: String, ascending: Boolean = true,
-                    prefix: String = "__rk"): DataFrame = {
-    val st = rankStatsTable(df, c, ascending, prefix)
-    df.join(st, df(c) === col(s"${prefix}v"), "left").drop(s"${prefix}v")
-  }
-
-  /** pandas `rank(method='average', pct, na_option)` over the WHOLE
-    * frame, scale-safe: adds the requested rank columns via
-    * [[withRankStats]] + a broadcast 1-row total. `outs` is
-    * (outputColumn, pct?) so average rank and its pct form share one
-    * stats join. Semantics identical to [[rankAvg]]. */
+  /** pandas `rank(method='average', pct, na_option, ascending)` over the
+    * WHOLE frame: the [[Rank]] kernel's midrank plus pandas' options on
+    * top. `outs` is (outputColumn, pct?) so average rank and its pct
+    * form share one rank attachment. The probe's exact counts become
+    * literals: the non-null count (NaN included — Spark orders it as
+    * the greatest value) and the row count.
+    *
+    * na_option: 'keep' (default) leaves null ranks null and `pct`
+    * divides by the non-null count; 'top'/'bottom' rank the null block
+    * first/last as ONE tie group and `pct` divides by the row count —
+    * all matching pandas. Descending is the mirror of the ascending
+    * average rank: nVal + 1 − rank. */
   def withRankAvg(df: DataFrame, c: String, outs: Seq[(String, Boolean)],
                   ascending: Boolean = true,
                   naOption: String = "keep"): DataFrame = {
-    val st0 = rankStatsTable(df, c, ascending)
-    // the non-null count is the sum of the (tiny) per-value counts — no
-    // second scan of the frame; only top/bottom need the all-rows count
-    val nVal = st0.agg(coalesce(sum(col("__rk_cnt")), lit(0.0)).as("__n_val"))
-    val tot = if (naOption == "keep") nVal
-      else df.agg(count(lit(1)).cast("double").as("__n_all")).crossJoin(nVal)
-    val st = df.join(st0, df(c) === col("__rkv"), "left").drop("__rkv")
-      .crossJoin(broadcast(tot))
-    val nNull = col("__n_all") - col("__n_val")
-    val base = col("__rk_before") + (col("__rk_cnt") + 1) / 2.0
+    val p = Rank.probe(df, Nil, Seq(c))
+    val g = p.groups.get.head
+    val nVal = g.n(0).toDouble
+    val nAll = g.rows.toDouble
+    val nNull = nAll - nVal
+    val asc = col("__rk")
+    val base = if (ascending) asc else lit(nVal + 1) - asc
     val v = col(c)
     def rankExpr(pct: Boolean): Column = naOption match {
-      case "keep" =>
-        val r = when(v.isNull, lit(null)).otherwise(base)
-        if (pct) r / col("__n_val") else r
+      case "keep" => if (pct) base / nVal else base
       case "top" =>
-        val r = when(v.isNull, (nNull + 1) / 2.0).otherwise(nNull + base)
-        if (pct) r / col("__n_all") else r
+        val r = when(v.isNull, (nNull + 1) / 2.0).otherwise(base + nNull)
+        if (pct) r / nAll else r
       case "bottom" =>
-        val r = when(v.isNull, col("__n_val") + (nNull + 1) / 2.0).otherwise(base)
-        if (pct) r / col("__n_all") else r
+        val r = when(v.isNull, nVal + (nNull + 1) / 2.0).otherwise(base)
+        if (pct) r / nAll else r
       case other => throw new IllegalArgumentException(s"na_option: $other")
     }
-    outs.foldLeft(st) { case (acc, (out, pct)) =>
+    outs.foldLeft(Rank.midrank(p, Seq("__rk"))) { case (acc, (out, pct)) =>
       acc.withColumn(out, rankExpr(pct))
-    }.drop("__rk_cnt", "__rk_before", "__rk_dense", "__n_all", "__n_val")
+    }.drop("__rk")
   }
-
-  /** Exact global midrank (pandas `rank(method='average')`) of a NUMERIC
-    * column, attached per row — the scale path for CONTINUOUS /
-    * near-unique columns where a per-value stats table would be
-    * frame-sized.
-    *
-    * Design: one light job fetches ~`buckets` approximate quantile cut
-    * points; the bucket id is then a PURE FUNCTION OF THE VALUE
-    * (indicator-sum over the cuts), so every plan branch that computes
-    * it agrees by construction — no checkpoint, no sampled range
-    * partitioning to keep aligned (a sampled `repartitionByRange`
-    * evaluated in two branches picks different bounds and silently
-    * mis-offsets ranks). The main job then:
-    *   - per-bucket counts from a slim re-scan (map-side combinable) →
-    *     running offsets via a window over the ~`buckets`-row table,
-    *     broadcast back;
-    *   - within-bucket cumulative + tie counts via windows partitioned
-    *     by bucket (the default ordered-window RANGE frame spans the
-    *     whole tie group; equal values share a bucket by construction);
-    *   - midrank = offset + cum − tie + (tie+1)/2; null values → null.
-    *
-    * `statsSource`: when `df` is itself an expensive plan, pass the
-    * underlying slim frame the cuts/offsets should be computed from (it
-    * must contain the same `c` distribution). Ties all land in one
-    * bucket, so a single dominant value skews its bucket — inherent to
-    * exact tie-aware ranking; bucket counts otherwise balance to ~n/buckets.
-    *
-    * `width`: when > 0, the bucket-partitioned window's shuffle is
-    * explicitly repartitioned to this many partitions (the caller sized
-    * it from input volume via [[sortWidth]]) instead of inheriting the
-    * session width — the window's ClusteredDistribution is satisfied by
-    * the explicit hash exchange, so it is still ONE shuffle, just wide
-    * enough that the per-task sort does not spill. Width only moves
-    * work placement, never values. */
-  def withMidrank(df: DataFrame, c: String, out: String, buckets: Int = 0,
-                  statsSource: Option[DataFrame] = None,
-                  knownCuts: Option[Array[Double]] = None,
-                  width: Int = 0): DataFrame = {
-    val src = statsSource.getOrElse(df).select(col(c))
-    val n = if (buckets > 0) buckets
-            else df.sparkSession.sparkContext.defaultParallelism
-    // `knownCuts` lets callers batch several columns' cut points into
-    // one aggregation job; cut quality only affects balance, not
-    // correctness.
-    val cuts = knownCuts.getOrElse(src.stat.approxQuantile(
-      c, (1 until n).map(_.toDouble / n).toArray, 0.01)).distinct.sorted
-    // native binary-search expression — O(log cuts)/row in codegen,
-    // same value as the Σ(v > cut) indicator sum
-    def bucketOf(v: Column): Column =
-      coalesce(graft.functions.BucketBin.bucketBin(v, cuts), lit(0))
-    val offs = {
-      val partials = src.filter(col(c).isNotNull)
-        .groupBy(bucketOf(col(c)).as("__bkt"))
-        .agg(count(lit(1)).cast("double").as("__pn"))
-      val wOff = Window.orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      partials
-        .withColumn("__off", coalesce(sum(col("__pn")).over(wOff), lit(0.0)))
-        .select(col("__bkt"), col("__off"))
-    }
-    // Both frames share ONE window (same partitioning + ordering -> one
-    // shuffle, one sort, one WindowExec): the default RANGE frame spans
-    // up to and INCLUDING the current tie group; RANGE(0,0) is exactly
-    // the tie group.
-    val wCum = Window.partitionBy("__bkt").orderBy(col(c))
-    val wTie = wCum.rangeBetween(Window.currentRow, Window.currentRow)
-    val joined = df.withColumn("__bkt", bucketOf(col(c)))
-      .join(broadcast(offs), Seq("__bkt"), "left")
-    val placed =
-      if (width > 0) joined.repartition(width, col("__bkt")) else joined
-    placed
-      .withColumn(out, when(col(c).isNotNull,
-        col("__off") + count(col(c)).over(wCum).cast("double")
-          - count(col(c)).over(wTie)
-          + (count(col(c)).over(wTie) + 1) / 2.0))
-      .drop("__bkt", "__off")
-  }
-
-  /** Midrank via the FIXED order-preserving bucket
-    * ([[graft.functions.SortableBucket]], r15) with EXACT per-bucket
-    * counts the caller already probed: a driver prefix sum turns the
-    * counts into per-bucket offsets (LocalRelation, broadcast), the
-    * frame attaches its bucket with one codegen bit-twiddle (no cut
-    * array, no binary search) and one (bucket)-partitioned window adds
-    * the within-bucket midrank. Unlike [[withMidrank]] there is NO
-    * in-plan offsets subtree re-evaluating the source and NO quantile
-    * probe — the caller's single probe pass feeds everything.
-    * `bucketCounts` MUST be the exact (bucketOf(c) → count) histogram
-    * of `df`'s non-null `c` (callers probe it with
-    * [[boundedHistogram]] over the bucket expression); callers gate on
-    * [[fixedBucketsBalanced]] first and fall back to [[withMidrank]]
-    * when a single bucket would dominate the window. Values are exact
-    * and identical to [[withMidrank]]'s on any input — bucket choice
-    * moves placement, never ranks. */
-  def withMidrankFixed(df: DataFrame, c: String, out: String,
-                       bucketCounts: Seq[(Double, Long)],
-                       width: Int = 0): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, IntegerType,
-      StructField, StructType}
-    val spark = df.sparkSession
-    val sorted = bucketCounts.sortBy(_._1)
-    var before = 0.0
-    val rows = sorted.map { case (b, cnt) =>
-      val r = org.apache.spark.sql.Row(b.toInt, before)
-      before += cnt; r
-    }
-    val offs = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("__fbk", IntegerType, nullable = false),
-        StructField("__foff", DoubleType, nullable = false)))))
-    val withBkt = df
-      .withColumn("__fbkt",
-        graft.functions.SortableBucket.sortableBucket(col(c)))
-      .join(offs, col("__fbkt") === col("__fbk"), "left")
-    val placed =
-      if (width > 0) withBkt.repartition(width, col("__fbkt"))
-      else withBkt
-    val wCum = Window.partitionBy("__fbkt").orderBy(col(c))
-    val wTie = wCum.rangeBetween(Window.currentRow, Window.currentRow)
-    placed
-      .withColumn(out, when(col(c).isNotNull,
-        col("__foff") + count(col(c)).over(wCum).cast("double")
-          - count(col(c)).over(wTie)
-          + (count(col(c)).over(wTie) + 1) / 2.0))
-      .drop("__fbkt", "__fbk", "__foff")
-  }
-
-  /** Balance gate for [[withMidrankFixed]]: fixed buckets are usable
-    * when no single bucket holds more than `maxShare` of the rows (the
-    * same 20% share bound the PlanGuard skew test enforces on
-    * corpus-sized windows). A null histogram (probe overflowed: values
-    * span > cap active buckets) also fails the gate. */
-  def fixedBucketsBalanced(bucketCounts: Seq[(Double, Long)],
-                           maxShare: Double = 0.2): Boolean =
-    bucketCounts != null && {
-      val total = bucketCounts.map(_._2).sum
-      total == 0 || bucketCounts.map(_._2).max.toDouble / total <= maxShare
-    }
 
   /** Volume-based shuffle width for a bucket-partitioned sort stage
     * (VERDICT r13 item 1). A `Window.partitionBy(bucket).orderBy(value)`
@@ -426,69 +220,16 @@ object Reductions {
     * measured spill decade), so 64 MB splits the decades cleanly. */
   private[graft] val SortBigBytes: Long = 64L << 20
 
-  /** GROUPED analogue of [[withMidrank]]: per-group average midranks of
-    * `c` without a `Window.partitionBy(key).orderBy(c)` — which puts a
-    * whole group (~n/NDV(key) rows) on ONE task when the group key is
-    * low-cardinality (`l_returnflag` has 3 values; at 100 TB that is a
-    * third of the corpus through one sorter). Instead the value axis is
-    * cut into ~`buckets` GLOBAL quantile buckets (shared across groups —
-    * cut quality affects only balance, never correctness) and the
-    * window partitions by (key, bucket):
-    *   - per-(key,bucket) row counts → per-key running offsets, a
-    *     window over the (NDV(key) × buckets)-row AGGREGATE — bounded;
-    *   - one (key,bucket)-partitioned window gives within-bucket
-    *     cumulative and tie counts (RANGE(0,0) = the tie group);
-    *   - midrank = offset + cum − tie + (tie+1)/2, WITHIN the group.
-    * NULL cells get a NULL midrank (never a numeric rank), so
-    * downstream pairwise-complete correlation masks them like pandas —
-    * the partitionBy(key).orderBy(c) form ranked nulls first.
-    * `knownCuts` lets callers batch several columns' cut probes into
-    * one aggregation job. */
-  def withMidrankBy(df: DataFrame, key: String, c: String, out: String,
-                    buckets: Int = 0,
-                    knownCuts: Option[Array[Double]] = None,
-                    statsSource: Option[DataFrame] = None): DataFrame = {
-    val n = if (buckets > 0) buckets
-            else df.sparkSession.sparkContext.defaultParallelism
-    // `statsSource` (same contract as [[withMidrank]]): the per-(key,
-    // bucket) counts only need (key, c) — pass the slim base frame when
-    // `df` is itself an expensive plan (e.g. already joined to earlier
-    // columns' rank stats), so the offsets aggregate never re-evaluates
-    // those joins. Row multiplicity is identical by construction (rank
-    // joins are 1:1 on (key, value)), so offsets are unchanged.
-    val src = statsSource.getOrElse(df)
-    val cuts = knownCuts.getOrElse(src.select(col(c)).stat.approxQuantile(
-      c, (1 until n).map(_.toDouble / n).toArray, 0.01)).distinct.sorted
-    def bucketOf(v: Column): Column =
-      coalesce(graft.functions.BucketBin.bucketBin(v, cuts), lit(0))
-    val offs = src.filter(col(c).isNotNull)
-      .groupBy(col(key), bucketOf(col(c)).as("__bkt"))
-      .agg(count(lit(1)).cast("double").as("__pn"))
-      .withColumn("__off", coalesce(sum(col("__pn")).over(
-        Window.partitionBy(col(key)).orderBy("__bkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0.0)))
-      .select(col(key), col("__bkt"), col("__off"))
-    val wCum = Window.partitionBy(col(key), col("__bkt")).orderBy(col(c))
-    val wTie = wCum.rangeBetween(Window.currentRow, Window.currentRow)
-    df.withColumn("__bkt", bucketOf(col(c)))
-      .join(broadcast(offs), Seq(key, "__bkt"), "left")
-      .withColumn(out, when(col(c).isNotNull,
-        col("__off") + count(col(c)).over(wCum).cast("double")
-          - count(col(c)).over(wTie)
-          + (count(col(c)).over(wTie) + 1) / 2.0))
-      .drop("__bkt", "__off")
-  }
-
-  /** Default counts-table cap for [[withGroupRankStats]]: the grouped
-    * rank-stats frame has one row per (group, distinct value) and is
+  /** Default row cap of the [[Rank]] kernel's broadcast tables: a
+    * rank-stats table has one row per (group, distinct value) and is
     * BROADCAST, so the per-column gate is NDV(key) × NDV(c) ≤ this
-    * (≈1.5 MB of (key, value, cnt, before) doubles — same order as the
-    * [[boundedHistogram]] cap the ungrouped matrix path uses). Callers
-    * compare approx_count_distinct PRODUCTS against it (default ~5% rsd
-    * per estimate), so the realized table can exceed the cap by the
-    * combined estimation error — the cap is a sizing target with that
-    * headroom, not a hard bound; the 160 B/row footprint model in
-    * [[groupRankStatsMaxRows]] absorbs it. */
+    * (≈1.5 MB of (key, value, cnt, before) doubles). Above the probe's
+    * key bound the kernel compares approx_count_distinct PRODUCTS
+    * against it (default ~5% rsd per estimate), so the realized table
+    * can exceed the cap by the combined estimation error — the cap is
+    * a sizing target with that headroom, not a hard bound; the
+    * 160 B/row footprint model in [[groupRankStatsMaxRows]] absorbs
+    * it. */
   private[graft] val GroupRankStatsMaxRows: Long = 65536L
 
   /** Session-adaptive form of the gate (VERDICT r14 item 6): size the
@@ -515,48 +256,6 @@ object Reductions {
     if (thr <= 0) GroupRankStatsMaxRows else thr / 160L
   }
 
-  /** GROUPED low-cardinality midrank: per-(key, value) counts — ONE
-    * map-side-combinable aggregate whose exchange moves at most
-    * NDV(key) × NDV(c) partial rows, NOT the frame — a per-key running
-    * offset over that tiny table, and a BROADCAST join-back attaching
-    * `rank = offset + (cnt + 1) / 2`. The frame itself is never
-    * shuffled or sorted: this is the grouped twin of the ungrouped
-    * matrix path's rank-stats join ([[rankStatsFromCounts]]), built
-    * distributedly so no driver collect is needed. Midranks are EXACT
-    * and identical to [[withMidrankBy]]'s (counts are exact; Spark
-    * groups NaN with NaN and orders it greatest, same as the window
-    * sort; -0.0/0.0 normalize in both); NULL cells get NULL (spec +
-    * oracle pin equality). Callers gate on the counts-table size
-    * ([[groupRankStatsMaxRows]]) — above it, fall back to the bucketed
-    * window ([[withMidrankBy]]).
-    * `statsSource`: slim (key, c) frame for the counts when `df` is an
-    * expensive plan (same contract as [[withMidrank]]). CONTRACT: the
-    * frame passed MUST be row-for-row equivalent to `df`'s (key, c)
-    * projection — same multiset of (key, c) rows — or the counts (and
-    * therefore every offset and rank) are silently wrong; the callers
-    * here pass the exact slim base the ranked frame was built from
-    * (rank joins are 1:1 on (key, value), so multiplicity is preserved
-    * by construction). */
-  def withGroupRankStats(df: DataFrame, key: String, c: String,
-                         out: String,
-                         statsSource: Option[DataFrame] = None): DataFrame = {
-    val src = statsSource.getOrElse(df)
-    val cnts = src.filter(col(c).isNotNull)
-      .groupBy(col(key).as("__gk"), col(c).as("__gv"))
-      .agg(count(lit(1)).cast("double").as("__gc"))
-    // running offset within each key, over the aggregate only (bounded
-    // by the caller's gate — never the frame)
-    val wKey = Window.partitionBy(col("__gk")).orderBy(col("__gv"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val stats = cnts
-      .withColumn("__gb", coalesce(sum(col("__gc")).over(wKey), lit(0.0)))
-    df.join(broadcast(stats),
-        col(key) === col("__gk") && col(c) === col("__gv"), "left")
-      .withColumn(out, when(col(c).isNotNull,
-        col("__gb") + (col("__gc") + 1) / 2.0))
-      .drop("__gk", "__gv", "__gc", "__gb")
-  }
-
   /** Within-tie ordinal — the 1-based position of each row inside its
     * value's tie group under `tiebreak` ordering (what pandas
     * `rank(method='first')` adds on top of the min rank) — WITHOUT a
@@ -564,47 +263,38 @@ object Reductions {
     * whole tie group (~n/distinct rows) on one task when the column is
     * LOW-cardinality (exactly the case where ties matter).
     *
-    * Design: the FIRST tiebreak column is cut into ~`buckets` quantile
-    * buckets via the same value-deterministic binary-search expression
-    * as [[withMidrank]] (bucket id is a pure function of the value, so
-    * plan branches agree by construction, and bucket order == tiebreak
-    * order because equal values always share a bucket). Then:
+    * Design: the FIRST tiebreak column is cut into ~defaultParallelism
+    * quantile buckets (one approxQuantile job) via the value-
+    * deterministic binary-search expression (bucket id is a pure
+    * function of the value, so plan branches agree by construction,
+    * and bucket order == tiebreak order because equal values always
+    * share a bucket). Then:
     *   - per-(value, bucket) counts (map-side combinable) → running
     *     offsets via a window over the (distinct × buckets)-row counts
     *     table, broadcast back;
     *   - `row_number` within a `(value, bucket)` window ordered by the
     *     full tiebreak — the largest partition any task holds is
-    *     ~tieGroup/buckets, and `buckets` grows with the cluster.
+    *     ~tieGroup/buckets, and the bucket count grows with the cluster.
     * Null values get a null ordinal (na_option='keep').
     *
     * Contract: intended for LOW-cardinality value columns (the counts
     * table is O(distinct × buckets) and is broadcast); for near-unique
     * columns tie groups are tiny and a plain per-value window is already
     * skew-free. The first tiebreak column must be numeric and ordered
-    * ascending (it dominates the composite ordering). */
+    * ascending (it dominates the composite ordering). `df` should be a
+    * slim source plan: the cuts and counts re-read it. */
   def withinTieOrdinal(df: DataFrame, c: String, tiebreak: Seq[Column],
-                       out: String, buckets: Int = 0,
-                       statsSource: Option[DataFrame] = None,
-                       knownCuts: Option[Array[Double]] = None): DataFrame = {
-    val n = if (buckets > 0) buckets
-            else df.sparkSession.sparkContext.defaultParallelism
+                       out: String): DataFrame = {
+    val n = df.sparkSession.sparkContext.defaultParallelism
     val tb = tiebreak.head
-    // Both the cut probe and the (value, bucket) counts run on the SLIM
-    // source frame (pass `statsSource` when `df` is itself an expensive
-    // plan — e.g. already joined to its rank stats): they only need
-    // (c, tiebreak.head), never the joined row. `knownCuts` (cut points
-    // of the FIRST tiebreak column) lets callers batch the probe into
-    // an existing stats job; cut quality affects balance only.
-    val slim = statsSource.getOrElse(df)
-    val cuts = knownCuts.getOrElse(
-      slim.select(tb.cast("double").as("__tbv")).stat
-        .approxQuantile("__tbv",
-          (1 until n).map(_.toDouble / n).toArray, 0.01)).distinct.sorted
+    val cuts = df.select(tb.cast("double").as("__tbv")).stat
+      .approxQuantile("__tbv", (1 until n).map(_.toDouble / n).toArray, 0.01)
+      .distinct.sorted
     def bucketOf(v: Column): Column =
       coalesce(graft.functions.BucketBin.bucketBin(v.cast("double"), cuts),
         lit(0))
     val withB = df.withColumn("__tb", bucketOf(tb))
-    val cnts = slim.filter(col(c).isNotNull)
+    val cnts = df.filter(col(c).isNotNull)
       .groupBy(col(c).as("__tv"), bucketOf(tb).as("__tbb"))
       .agg(count(lit(1)).as("__tn"))
     // running offset of each bucket within its value's tie group; the
@@ -715,17 +405,21 @@ object Reductions {
           b1
         }
       }
+      // A Scala map key-compares Doubles numerically, so -0.0 and 0.0
+      // (two keys of the Java buffer) are one key here: sum them under
+      // 0.0 rather than let one count overwrite the other.
       def finish(b: java.util.HashMap[java.lang.Double, java.lang.Long])
         : Map[Double, Long] =
         if (overflowed(b)) null
         else {
-          val out = Map.newBuilder[Double, Long]
+          val out = scala.collection.mutable.HashMap.empty[Double, Long]
           val it = b.entrySet().iterator()
           while (it.hasNext) {
             val e = it.next()
-            out += (e.getKey.doubleValue() -> e.getValue.longValue())
+            val k = if (e.getKey == 0.0) 0.0 else e.getKey.doubleValue()
+            out(k) = out.getOrElse(k, 0L) + e.getValue
           }
-          out.result()
+          out.toMap
         }
       def bufferEncoder: Encoder[java.util.HashMap[java.lang.Double, java.lang.Long]] =
         Encoders.kryo[java.util.HashMap[java.lang.Double, java.lang.Long]]
@@ -734,7 +428,7 @@ object Reductions {
     }
 
   /** [[boundedHistAgg]] as a Column. */
-  def boundedHistogram(c: Column, cap: Int = 65536): Column =
+  def boundedHistogram(c: Column, cap: Int): Column =
     udaf(boundedHistAgg(cap)).apply(c)
 
   /** Misra-Gries heavy-hitter summary: at most `k` (item -> estimated
@@ -832,131 +526,6 @@ object Reductions {
     df.agg(udaf(misraGriesAgg(k)).apply(col(c).cast("string")).as("__mg"))
       .select(explode(col("__mg")).as(Seq("item", "est_count")))
       .orderBy(col("est_count").desc, col("item"))
-
-  /** Rank-stats LocalRelation from DRIVER-SIDE value counts (the shared
-    * finish of [[rankStatsTable]]'s small path and [[boundedHistogram]]
-    * consumers): sorted values -> cnt/before/dense, broadcast for the
-    * join-back. */
-  def rankStatsFromCounts(spark: org.apache.spark.sql.SparkSession,
-                          counts: Seq[(Double, Long)], prefix: String,
-                          ascending: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    // merge -0.0 into 0.0 first: the histogram's boxed-Double keys
-    // distinguish them, but Spark's join normalizes them EQUAL — two
-    // stats rows for one join key would duplicate every 0.0-valued
-    // frame row through the join-back (r15 hardening)
-    val counts0 =
-      if (counts.exists(t => t._1 == 0.0 &&
-          (java.lang.Double.doubleToRawLongBits(t._1) != 0L)))
-        counts.groupBy(t => if (t._1 == 0.0) 0.0 else t._1)
-          .map { case (v, ts) => (v, ts.map(_._2).sum) }.toSeq
-      else counts
-    val sorted = if (ascending) counts0.sortBy(_._1) else counts0.sortBy(-_._1)
-    var before = 0.0
-    val rows = new Array[org.apache.spark.sql.Row](sorted.length)
-    var i = 0
-    while (i < sorted.length) {
-      val (v, cnt) = sorted(i)
-      rows(i) = org.apache.spark.sql.Row(v, cnt.toDouble, before, (i + 1).toDouble)
-      before += cnt
-      i += 1
-    }
-    val schema = StructType(Seq(
-      StructField(s"${prefix}v", DoubleType),
-      StructField(s"${prefix}_cnt", DoubleType),
-      StructField(s"${prefix}_before", DoubleType),
-      StructField(s"${prefix}_dense", DoubleType)))
-    broadcast(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
-  }
-
-  /** GROUPED analogue of [[rankStatsFromCounts]] (r15): driver-built
-    * per-(key, value) midrank stats from per-key exact value
-    * histograms plus per-key NaN counts, broadcast as a LocalRelation
-    * with [[withGroupRankStats]]'s exact join-back columns
-    * (`__gk` key, `__gv` value, `__gc` count, `__gb` before). Within
-    * each key, before-counts accumulate in ascending value order with
-    * NaN greatest (Spark's sort order; Spark's `===` matches NaN to
-    * NaN, so the NaN stats row joins back) and -0.0 merges into 0.0
-    * (Spark groups/joins them equal — two rows would duplicate
-    * 0.0-valued frame rows through the join). Rank attachment is the
-    * caller's `__gb + (__gc + 1) / 2`, identical to
-    * [[withGroupRankStats]] — but with ZERO in-plan aggregate subtree:
-    * the caller's single probe pass already paid for the counts. */
-  def rankStatsFromGroupCounts(spark: org.apache.spark.sql.SparkSession,
-      keyType: org.apache.spark.sql.types.DataType,
-      perKey: Seq[(Any, Seq[(Double, Long)], Long)]): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val rows = perKey.flatMap { case (k, hist, nanCnt) =>
-      val merged =
-        if (hist.exists(t => t._1 == 0.0 &&
-            java.lang.Double.doubleToRawLongBits(t._1) != 0L))
-          hist.groupBy(t => if (t._1 == 0.0) 0.0 else t._1)
-            .map { case (v, ts) => (v, ts.map(_._2).sum) }.toSeq
-        else hist
-      val sorted = merged.sortBy(_._1) // hist never holds NaN keys
-      var before = 0.0
-      val base = sorted.map { case (v, cnt) =>
-        val r = org.apache.spark.sql.Row(k, v, cnt.toDouble, before)
-        before += cnt; r
-      }
-      if (nanCnt > 0)
-        base :+ org.apache.spark.sql.Row(k, Double.NaN, nanCnt.toDouble, before)
-      else base
-    }
-    broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("__gk", keyType),
-        StructField("__gv", DoubleType),
-        StructField("__gc", DoubleType, nullable = false),
-        StructField("__gb", DoubleType, nullable = false)))))
-  }
-
-  /** GROUPED analogue of [[withMidrankFixed]] (r15): per-group midrank
-    * of `c` from the caller-probed exact per-(key, fixed-bucket)
-    * counts — driver prefix sum per key → broadcast offsets → ONE
-    * (key, bucket)-partitioned window. Replaces [[withMidrankBy]]'s
-    * in-plan offsets aggregate (a full pass over the source) and its
-    * quantile-cut probe. Values identical to [[withMidrankBy]]: NaN
-    * buckets greatest (SortableBucket order = Spark sort order), null
-    * cells rank to null, equal values never split buckets. */
-  def withGroupMidrankFixed(df: DataFrame, key: String, c: String,
-      out: String, perKey: Seq[(Any, Seq[(Double, Long)])],
-      width: Int = 0): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, IntegerType,
-      StructField, StructType}
-    val spark = df.sparkSession
-    val rows = perKey.flatMap { case (k, bcnt) =>
-      val sorted = bcnt.sortBy(_._1)
-      var before = 0.0
-      sorted.map { case (b, cnt) =>
-        val r = org.apache.spark.sql.Row(k, b.toInt, before)
-        before += cnt; r
-      }
-    }
-    val offs = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("__fk", df.schema(key).dataType),
-        StructField("__fbk", IntegerType, nullable = false),
-        StructField("__foff", DoubleType, nullable = false)))))
-    val withBkt = df
-      .withColumn("__fbkt",
-        graft.functions.SortableBucket.sortableBucket(col(c)))
-      .join(offs, col(key) === col("__fk") &&
-        col("__fbkt") === col("__fbk"), "left")
-    val placed =
-      if (width > 0) withBkt.repartition(width, col(key), col("__fbkt"))
-      else withBkt
-    val wCum = Window.partitionBy(col(key), col("__fbkt")).orderBy(col(c))
-    val wTie = wCum.rangeBetween(Window.currentRow, Window.currentRow)
-    placed
-      .withColumn(out, when(col(c).isNotNull,
-        col("__foff") + count(col(c)).over(wCum).cast("double")
-          - count(col(c)).over(wTie)
-          + (count(col(c)).over(wTie) + 1) / 2.0))
-      .drop("__fbkt", "__fk", "__fbk", "__foff")
-  }
 
   /** pandas' percentile row label: 0.25 -> "25%", 0.025 -> "2.5%".
     * `private[graft]` so label-addressed consumers (q_describe_approx's

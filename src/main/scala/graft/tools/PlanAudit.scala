@@ -36,7 +36,7 @@ object PlanAudit {
     "q_semdedup" -> "SemDeDup: zero-shuffle literal-centroid assignment (no id join-back), ONE cluster-keyed shuffle feeds the in-cluster pair join, native codegen dot per pair",
     "q_pq_topk" -> "PQ/ADC: zero-shuffle native-kernel encode (graft_nearest_centroid, r15 — no slice/struct trees), queries broadcast WITH their precomputed ADC lookup tables so scoring reads m cells per pair, WindowGroupLimit top-k",
     "q_resample" -> "resample: ONE map-side-combinable hash aggregate on the period label; calendar-spine gap fill is a broadcast join of bucket-sized frames",
-    "q_corr_pairwise" -> "pairwise-complete corr, 2 jobs total: ONE probe aggregate (pearson cells + pair counts + per-pair masked histograms), then ONE main aggregate over broadcast rank-stats joins evaluates every spearman cell — no per-pair jobs",
+    "q_corr_pairwise" -> "pairwise-complete corr, 2 jobs total: ONE rank-kernel probe over every per-pair masked column, then ONE main aggregate over broadcast rank-stats joins evaluates every pearson cell, pair count and spearman cell — no per-pair jobs",
     "q_dedup_minhash_incr" -> "incremental LSH: batch signatures map-side, ONE (band,key) equi-join against persisted state — state text never re-shingled",
     "q_nlargest" -> "nlargest/nsmallest: TakeOrderedAndProject (per-task top-n + driver merge), never a global sort",
     "q_bigram_lp" -> "bigram LM: sentinel rows carry unigrams, so uni/tot re-aggregate the vocab-sized bigram table (no extra corpus pass); big-count agg combines map-side (exchange moves distinct bigrams); ONE raw-pair shuffle total (the scoring join)",

@@ -748,6 +748,31 @@ class GroupCorrSpec extends SparkSpec {
     }
   }
 
+  test("spearman (single pair) on NaN-bearing input: NaN rows drop like " +
+    "pandas, the forced sort width agrees, and the probe counts every row") {
+    import graft.engine.Rank
+    // pandas: Series([1, nan, 2, 3]).corr(Series([4, 3, 1, 2]),
+    //   method='spearman') -> -0.5 (the NaN pair is dropped)
+    val small = Seq((1.0, 4.0), (Double.NaN, 3.0), (2.0, 1.0), (3.0, 2.0))
+      .toDF("a", "b")
+    assertApprox(d1(Corr.spearman(small, "a", "b")), Some(-0.5), 1e-12)
+    // > 65536 distinct values: the bucket windows run, sized from the
+    // probe's row count when forced
+    val df = (1 to 70000).map { i =>
+      val a = if (i % 97 == 0) Double.NaN
+        else (i * 2654435761L % 100003).toDouble + i * 1e-7
+      (a, (i * 40503L % 99991).toDouble + i * 1e-7)
+    }.toDF("a", "b")
+    def rho(bigBytes: Long): Double =
+      Corr.spearman(df, "a", "b", bigBytes).collect()(0).getDouble(0)
+    assert(math.abs(rho(Long.MaxValue) - rho(0L)) < 1e-12)
+    // the probe's row count includes NaN rows (the value histograms
+    // skip NaN; the count does not)
+    val p = Rank.probe(df, Nil, Seq("a", "b"))
+    assert(p.groups.get.map(_.rows).sum == df.count())
+    assert(p.groups.get.head.n(0) == 70000L)
+  }
+
   test("spearman (single pair): forced volume-sized sort path computes " +
     "the same rho as the session-width path") {
     // continuous values (> 65536 distinct) so the midrank WINDOW path
@@ -765,31 +790,75 @@ class GroupCorrSpec extends SparkSpec {
       s"single-pair spearman diverged: session-width $small vs forced $big")
   }
 
-  test("withGroupRankStats == withMidrankBy midranks exactly (r14 " +
-    "grouped rank-stats broadcast path): ties, nulls, per-group ranks") {
-    import graft.engine.Reductions
-    // multi-group frame with heavy ties, nulls, and uneven group sizes
+  test("Rank kernel: every regime gives the same exact midranks") {
+    import graft.engine.Rank
+    // multi-group frame with heavy ties, null values, NaN, -0.0/0.0,
+    // uneven group sizes and a NULL key group (ranked like any other
+    // key when the kernel is called directly)
     val rows = (1 to 5000).map { i =>
-      val k = s"g${i % 7}"
+      val k = if (i % 9 == 0) null else s"g${i % 7}"
       val v: java.lang.Double =
-        if (i % 41 == 0) null else (i * 131 % 23).toDouble
+        if (i % 41 == 0) null else if (i % 53 == 0) Double.NaN
+        else if (i % 23 == 0) -0.0 else (i * 131 % 23).toDouble
       (k, v, i.toLong)
     }
     val df = rows.toDF("k", "v", "id")
-    val a = Reductions.withGroupRankStats(df, "k", "v", "r")
-      .select("id", "r").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      .toMap
-    val b = Reductions.withMidrankBy(df, "k", "v", "r", buckets = 8)
-      .select("id", "r").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      .toMap
-    assert(a.size == 5000 && b.size == 5000)
-    a.foreach { case (id, ra) =>
-      assert(ra == b(id), s"midrank mismatch at id=$id: $ra vs ${b(id)}")
+    // driver truth: per-key average ranks, NaN greatest, -0.0 == 0.0
+    val truth: Map[Long, Option[Double]] = rows.groupBy(_._1).values.flatMap { g =>
+      val vs = g.flatMap(r => Option(r._2).map(_.doubleValue + 0.0))
+      def mid(v: Double): Double = {
+        val before = vs.count(w => java.lang.Double.compare(w, v) < 0)
+        val ties = vs.count(w => java.lang.Double.compare(w, v) == 0)
+        before + (ties + 1) / 2.0
+      }
+      g.map(r => r._3 -> Option(r._2).map(v => mid(v.doubleValue + 0.0)))
+    }.toMap
+    val p = Rank.probe(df, Seq("k"), Seq("v"))
+    assert(p.groups.exists(_.size == 8), "expected the per-key probe regime")
+    val noHist = p.copy(groups = p.groups.map(_.map(g =>
+      g.copy(hist = IndexedSeq(null)))))
+    val regimes = Seq(
+      "driver stats join" -> p,
+      "fixed-bucket window" -> noHist,
+      "quantile-cut window" -> noHist.copy(groups = noHist.groups.map(_.map(g =>
+        g.copy(bkt = IndexedSeq(null))))),
+      "in-plan stats join" -> p.copy(groups = None),
+      "in-plan quantile-cut window" -> p.copy(groups = None, gate = 0L))
+    for ((name, q) <- regimes) {
+      val got = Rank.midrank(q, Seq("r")).select("id", "r").collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+        .toMap
+      assert(got.size == 5000, s"$name: ${got.size} rows")
+      truth.foreach { case (id, want) =>
+        assert(got(id) == want, s"$name: midrank at id=$id: ${got(id)} vs $want")
+      }
     }
-    // nulls rank to null on both paths
-    assert(rows.filter(_._2 == null).forall { case (_, _, id) => a(id).isEmpty })
+    // the null-key group really is ranked, and null values rank null
+    assert(rows.exists(r => r._1 == null && r._2 != null && !r._2.isNaN))
+    assert(rows.filter(_._2 == null).forall { case (_, _, id) => truth(id).isEmpty })
+  }
+
+  test("corrMatrixBy spearman ranks longs above 2^53 as float64 on both " +
+    "sides of the 1024-key bound (pandas groupby.corr)") {
+    import graft.engine.Rank
+    // as float64, x = [2^53, 2^53+1, 2^53+2] is [2^53, 2^53, 2^53+2]:
+    // ranks [1.5, 1.5, 3] vs y ranks [3, 1, 2] -> pandas 2.2.2 gives 0.0
+    // (exact int64 ranks [1, 2, 3] would give -0.5)
+    val big = 1L << 53
+    val one = Seq(("a", big, 3L), ("a", big + 1, 1L), ("a", big + 2, 2L))
+    val padded = one ++ (1 to 2047).flatMap(i =>
+      Seq((s"p$i", i.toLong, 1L), (s"p$i", i + 1L, 2L), (s"p$i", i + 2L, 3L)))
+    def rho(rows: Seq[(String, Long, Long)]): Double =
+      Corr.corrMatrixBy(rows.toDF("g", "x", "y"), "g", Seq("x", "y"), "spearman")
+        .filter(col("g") === "a" && col("c1") === "x" && col("c2") === "y")
+        .head().getDouble(3)
+    assert(math.abs(rho(one)) < 1e-12, s"per-key probe regime: ${rho(one)}")
+    val wide = padded.toDF("g", "x", "y")
+      .select(col("g"), col("x").cast("double").as("x"),
+        col("y").cast("double").as("y"))
+    assert(Rank.probe(wide, Seq("g"), Seq("x", "y")).groups.isEmpty,
+      "padding must take the in-plan regime above the key bound")
+    assert(math.abs(rho(padded)) < 1e-12, s"in-plan regime: ${rho(padded)}")
   }
 
   test("corrMatrixBy spearman: low-NDV columns take the broadcast " +

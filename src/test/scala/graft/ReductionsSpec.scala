@@ -74,8 +74,8 @@ class ReductionsSpec extends SparkSpec {
   test("rank method=average with ties and pct") {
     val df = Seq(5.0, 1.0, 3.0, 1.0, 4.0).toDF("v")
       .withColumn("i", monotonically_increasing_id())
-    val out = df.select(col("i"), Reductions.rankAvg(col("v")).as("r"),
-      Reductions.rankAvg(col("v"), pct = true).as("p")).orderBy("i")
+    val out = Reductions.withRankAvg(df, "v", Seq("r" -> false, "p" -> true))
+      .orderBy("i")
     assertSeqApprox(colD(out, "r"),
       Seq(5.0, 1.5, 3.0, 1.5, 4.0).map(Some(_)))
     assertSeqApprox(colD(out, "p"),
@@ -85,8 +85,8 @@ class ReductionsSpec extends SparkSpec {
   test("rank descending and null keeping") {
     val df = Seq(Some(5.0), Some(1.0), None, Some(4.0)).toDF("v")
       .withColumn("i", monotonically_increasing_id())
-    val out = df.select(col("i"),
-      Reductions.rankAvg(col("v"), ascending = false).as("r")).orderBy("i")
+    val out = Reductions.withRankAvg(df, "v", Seq("r" -> false),
+      ascending = false).orderBy("i")
     assertSeqApprox(colD(out, "r"), Seq(Some(1.0), Some(3.0), None, Some(2.0)))
   }
 
@@ -95,11 +95,10 @@ class ReductionsSpec extends SparkSpec {
     //   -> [5.0, 3.0, 1.5, 4.0, 1.5]; 'bottom' -> [3.0, 1.0, 4.5, 2.0, 4.5]
     val df = Seq(Some(5.0), Some(1.0), None, Some(4.0), None).toDF("v")
       .withColumn("i", monotonically_increasing_id())
-    val out = df.select(col("i"),
-      Reductions.rankAvg(col("v"), naOption = "top").as("t"),
-      Reductions.rankAvg(col("v"), naOption = "bottom").as("b"),
-      Reductions.rankAvg(col("v"), pct = true, naOption = "top").as("tp"))
-      .orderBy("i")
+    val top = Reductions.withRankAvg(df, "v", Seq("t" -> false, "tp" -> true),
+      naOption = "top")
+    val out = Reductions.withRankAvg(top, "v", Seq("b" -> false),
+      naOption = "bottom").orderBy("i")
     assertSeqApprox(colD(out, "t"), Seq(5.0, 3.0, 1.5, 4.0, 1.5).map(Some(_)))
     assertSeqApprox(colD(out, "b"), Seq(3.0, 1.0, 4.5, 2.0, 4.5).map(Some(_)))
     assertSeqApprox(colD(out, "tp"), Seq(1.0, 0.6, 0.3, 0.8, 0.3).map(Some(_)))
@@ -267,15 +266,42 @@ class ReductionsSpec extends SparkSpec {
     // 1..1000 % 7: residue r in 1..6 appears 143 times; 0 appears 142
     assert(h(0.0) == 142L && h(1.0) == 143L && h(6.0) == 143L)
     assert(row.isNullAt(1)) // 7 distinct > cap=5 -> null
+    // -0.0 and 0.0 are one value: their counts add up, none is lost
+    val z = Seq(-0.0, 0.0, 0.0, -0.0, 1.0).toDF("v").repartition(2)
+      .agg(Reductions.boundedHistogram(col("v"), cap = 10).as("h"))
+      .collect()(0).getMap[Double, Long](0)
+    assert(z.toMap == Map(0.0 -> 4L, 1.0 -> 1L))
   }
 
-  test("rankStatsFromCounts: before/cnt/dense from driver counts") {
-    val stt = Reductions.rankStatsFromCounts(spark,
-      Seq(5.0 -> 2L, 1.0 -> 3L, 9.0 -> 1L), "__rk")
-    val rows = stt.collect().map(r =>
-      (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-    assert(rows.toSeq == Seq((1.0, 3.0, 0.0, 1.0), (5.0, 2.0, 3.0, 2.0),
-      (9.0, 1.0, 5.0, 3.0)))
+  test("Rank stats from driver counts: before/cnt, -0.0 is 0.0, NaN last") {
+    import graft.engine.Rank
+    // a hand-built probe feeds the kernel's driver stats builder:
+    // the 0.0 tie group (-0.0 joins 0.0) -> before 0, cnt 3 -> 2.0;
+    // 5.0 -> before 3, cnt 2 -> 4.5; 9.0 -> 6.0; the two NaN rows
+    // (n minus the histogram) -> before 6, cnt 2 -> 7.5
+    val vs = Seq(5.0, -0.0, 0.0, 5.0, 0.0, 9.0, Double.NaN, Double.NaN)
+    val df = vs.toDF("v")
+    val hist = Map(5.0 -> 2L, 0.0 -> 3L, 9.0 -> 1L)
+    val p = Rank.Probe(df, Nil, Seq("v"), gate = 65536L, keyNdv = 1L,
+      colNdv = IndexedSeq.empty, groups = Some(Seq(Rank.Group(Nil, 8L,
+        IndexedSeq(8L), IndexedSeq(hist), IndexedSeq(null)))))
+    val got = Rank.midrank(p, Seq("r")).collect()
+      .map(r => (r.getDouble(0), r.getDouble(1))).toSeq
+    assert(got.size == 8)
+    got.foreach { case (v, r) =>
+      val want = if (v.isNaN) 7.5 else if (v == 0.0) 2.0
+        else if (v == 5.0) 4.5 else 6.0
+      assert(r == want, s"v=$v: $r vs $want")
+    }
+  }
+
+  test("withRankAvg ranks longs above 2^53 exactly (pandas Series.rank " +
+    "is exact on int64)") {
+    val big = 1L << 53
+    val df = Seq(big + 2, big, big + 1).toDF("x")
+    val out = Reductions.withRankAvg(df, "x", Seq("r" -> false))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(out == Map(big -> 1.0, (big + 1) -> 2.0, (big + 2) -> 3.0))
   }
 
   test("nuniqueApprox: HLL within rsd of exact") {
