@@ -18,8 +18,7 @@ object Bench {
   val benchOnly: Map[String, (SparkSession, String) => DataFrame] =
     Map("bench_kendall_dist_full" -> { (s, d) =>
       import org.apache.spark.sql.functions._
-      val ev = graft.engine.Core.normalizeTs(
-        s.read.parquet(s"$d/events.parquet"))
+      val ev = Query.T(s, d, "events")
         .withColumn("tsu", unix_micros(col("ts")))
       graft.engine.Corr.kendallDistributed(ev, "value", "tsu")
     },
@@ -211,32 +210,7 @@ object Bench {
           "(supported: --sf <dir|sfN>, --only <q1,q2|hot10>)")
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle width defaults to the core count (right at sf0.1, the
-    // driver's scale) but is independently overridable: at sf10 the
-    // sort/exchange-heavy rows want ~4-8x more partitions than cores
-    // so spills stay bounded (see BASELINE.md sf10 notes)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // AQE repartitioning experiment knob (sf10 investigation): start
-    // shuffles at N partitions and let AQE coalesce small ones back —
-    // the production posture for inputs that outgrow a fixed width
-    val initPartNum = sys.env.get("SPARK_GRAFT_INIT_PARTITIONS")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-    val builder = initPartNum.fold(builder0)(n => builder0
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", n))
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // let AQE re-plan INSIDE cached-plan materialization (off by
-      // default): iterative ops persist their invariants, and without
-      // this the cached subtree runs with static 32-partition shuffles
-      // — measured 7.5 -> 5.7 s on the q_pagerank row alone
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val sfDir = sfOpt.map(resolveSf(spark, _))
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     // Warm up JIT/codegen/shuffle machinery so the first timed query is

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Core.r
 import graft.pipeline._
+import graft.Query.T
 
 /** Training-data pipeline query surface: dedup, similarity search, text
   * analysis, multimodal plumbing. Hash-bearing ops use md5 so the DuckDB
@@ -11,162 +11,6 @@ import graft.pipeline._
   * the xxhash64 production variant).
   */
 object PipelineQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.engine.Core.normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- exact dedup ----
-    "q_dedup_exact" -> ((s, d) =>
-      Dedup.exact(T(s, d, "documents"), "doc_id", "text")
-        .orderBy("keep_id")),
-
-    // ---- incremental dedup of an ingest batch against the persisted
-    //      digest state, bloom-prefiltered scale path (results are
-    //      exact at any fpp — the bloom only routes the plan). The
-    //      fixture has no exact dupes, so the batch is docs + an
-    //      id-shifted copy; "seen" is every doc_id % 5 == 0 digest ----
-    "q_dedup_incr" -> ((s, d) => {
-      val docs = T(s, d, "documents")
-      val batch = docs.select(col("doc_id"), col("text"))
-        .unionByName(docs.select((col("doc_id") + 10000).as("doc_id"),
-          col("text")))
-      val seen = docs.filter(col("doc_id") % 5 === 0)
-        .select(md5(col("text").cast("binary")).as("digest"))
-      Dedup.incremental(batch, seen, "doc_id", "text",
-          bloomExpectedItems = 1000)
-        .orderBy("doc_id")
-    }),
-
-    // ---- MinHash + LSH candidate pairs ----
-    "q_dedup_minhash" -> ((s, d) =>
-      Dedup.minhashLshPairs(T(s, d, "documents"), "doc_id", "text",
-        k = 3, bands = 4, rowsPerBand = 2)
-        .orderBy("doc1", "doc2")),
-
-    // ---- incremental fuzzy dedup: today's batch against yesterday's
-    //      persisted band-key state (doc_id%5==0 plays the state) —
-    //      the state's text is never re-shingled, matching is ONE
-    //      (band,key) equi-join; fuzzy analogue of q_dedup_incr ----
-    "q_dedup_minhash_incr" -> ((s, d) => {
-      val docs = T(s, d, "documents")
-      val state = Dedup.minhashBandKeys(docs.filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", k = 3, bands = 4, rowsPerBand = 2)
-      Dedup.minhashLshIncrementalPairs(docs.filter(col("doc_id") % 5 =!= 0),
-        "doc_id", "text", state, k = 3, bands = 4, rowsPerBand = 2)
-        .orderBy("doc_new", "doc_match")
-    }),
-
-    // ---- dedup clusters: connected components over minhash pairs ----
-    "q_dedup_clusters" -> ((s, d) =>
-      Dedup.clusters(
-        Dedup.minhashLshPairs(T(s, d, "documents"), "doc_id", "text",
-          k = 3, bands = 4, rowsPerBand = 2))
-        .orderBy("doc")),
-
-    // ---- end-to-end fuzzy dedup: pairs -> clusters -> canonical
-    //      survivor per cluster, one row per corpus doc ----
-    "q_dedup_fuzzy" -> ((s, d) =>
-      Dedup.fuzzy(T(s, d, "documents"), "doc_id", "text",
-          k = 3, bands = 4, rowsPerBand = 2)
-        .select(col("doc_id"), col("cluster_rep"),
-          col("keep").cast("int").as("keep"))
-        .orderBy("doc_id")),
-
-    // ---- SimHash fingerprints ----
-    "q_dedup_simhash" -> ((s, d) =>
-      Dedup.simhash32(T(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc")),
-
-    // ---- SimHash near-dup pairs (hamming <= 2; 4 byte-bands make the
-    //      candidate set provably complete by pigeonhole) ----
-    "q_simhash_pairs" -> ((s, d) =>
-      Dedup.simhashPairs(T(s, d, "documents"), "doc_id", "text", maxHamming = 2)
-        .orderBy("doc1", "doc2")),
-
-    // ---- n-gram Jaccard near-dup pairs ----
-    "q_ngram_jaccard" -> ((s, d) =>
-      Dedup.ngramJaccardPairs(T(s, d, "documents"), "doc_id", "text",
-        k = 3, minJaccard = 0.2)
-        .select(col("doc1"), col("doc2"), r(col("jaccard"), 6).as("jaccard"))
-        .orderBy("doc1", "doc2")),
-
-    // ---- text quality / language-ID / fingerprinting ----
-    "q_text_quality" -> ((s, d) => {
-      val t = col("text")
-      T(s, d, "documents").select(
-        col("doc_id"),
-        TextAnalysis.tokenCount(t).as("n_tokens"),
-        TextAnalysis.tokenCountBpe(t).as("n_tokens_bpe"),
-        r(TextAnalysis.punctRatio(t), 6).as("punct_ratio"),
-        r(TextAnalysis.meanWordLen(t), 6).as("mean_word_len"),
-        r(TextAnalysis.stopwordRatio(t, TextAnalysis.EnStops), 6).as("stop_ratio"),
-        r(TextAnalysis.qualityScore(t), 4).as("quality"),
-        TextAnalysis.langId(t).as("lang_guess"),
-        TextAnalysis.fingerprint(t).as("fingerprint"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- order-sensitive rolling-hash fingerprint (native codegen
-    //      expression graft.functions.RollingHash) ----
-    "q_fingerprint_roll" -> ((s, d) =>
-      T(s, d, "documents").select(
-        col("doc_id"),
-        TextAnalysis.rollingFingerprint(col("text")).as("rh"))
-        .orderBy("doc_id")),
-
-    // ---- brute-force cosine top-k (exact ANN baseline) ----
-    "q_ann_cosine" -> ((s, d) => {
-      val emb = T(s, d, "embeddings")
-      Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5)
-        .select(col("query_id"), col("neighbor_id"), r(col("cos"), 6).as("cos"),
-          col("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- LSH-bucketed ANN (scale path): multi-table OR-amplified form
-    //      (8 tables x 4 planes — single-table recall@5 measured 0.26,
-    //      amplified ~0.8+). The seeded hyperplanes are deterministic
-    //      constants, emitted as a VALUES table in the oracle SQL, so
-    //      DuckDB reproduces the buckets bit-for-bit -> full
-    //      rows/schema/hash check ----
-    "q_ann_lsh" -> ((s, d) => {
-      val emb = T(s, d, "embeddings")
-      Similarity.lshTopKMulti(emb.filter(col("vec_id") < 10), emb, k = 5,
-        planes = 4, tables = 8, dim = 64)
-        .select(col("query_id"), col("neighbor_id"), r(col("cos"), 6).as("cos"),
-          col("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- recall@5 of the LSH scale path vs the exact baseline — the
-    //      quality gate for the bucketed ANN ----
-    "q_ann_lsh_recall" -> ((s, d) => {
-      val emb = T(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      Similarity.recallAtK(
-        Similarity.lshTopKMulti(q, emb, k = 5, planes = 4, tables = 8, dim = 64),
-        Similarity.bruteForceTopK(q, emb, k = 5), k = 5)
-        .orderBy("query_id")
-    }),
-
-    // ---- embedding near-dup pairs (exact threshold search) ----
-    "q_embed_near_dup" -> ((s, d) =>
-      Similarity.nearDupPairsExact(T(s, d, "embeddings"), threshold = 0.4)
-        .select(col("id1"), col("id2"), r(col("cos"), 6).as("cos"))
-        .orderBy("id1", "id2")),
-
-    // ---- multimodal plumbing: binary column + stub decode ----
-    "q_multimodal" -> ((s, d) => {
-      val media = Multimodal.fromText(T(s, d, "documents"), "doc_id", "text")
-      Multimodal.decodeImages(media)
-        .toDF()
-        .select(col("id").as("doc_id"), col("byteLen").as("byte_len"),
-          col("width"), col("height"), col("channels"), col("decoded"))
-        .orderBy("doc_id")
-    })
-  )
 
   /** Shared shingle CTE (word 3-grams, distinct) mirroring
     * Dedup.shingles(k=3). */
@@ -225,12 +69,31 @@ object PipelineQueries {
          SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.doc
        )"""
 
-  val oracle: Map[String, String] = Map(
-    "q_dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_dups
-         FROM documents GROUP BY md5(text) ORDER BY keep_id""",
+  val queries: Seq[Query] = Seq(
 
-    "q_dedup_incr" ->
+    // ---- exact dedup ----
+    Query("q_dedup_exact", (s, d) =>
+      Dedup.exact(T(s, d, "documents"), "doc_id", "text")
+        .orderBy("keep_id"),
+      """SELECT min(doc_id) AS keep_id, count(*) AS n_dups
+         FROM documents GROUP BY md5(text) ORDER BY keep_id"""),
+
+    // ---- incremental dedup of an ingest batch against the persisted
+    //      digest state, bloom-prefiltered scale path (results are
+    //      exact at any fpp — the bloom only routes the plan). The
+    //      fixture has no exact dupes, so the batch is docs + an
+    //      id-shifted copy; "seen" is every doc_id % 5 == 0 digest ----
+    Query("q_dedup_incr", (s, d) => {
+      val docs = T(s, d, "documents")
+      val batch = docs.select(col("doc_id"), col("text"))
+        .unionByName(docs.select((col("doc_id") + 10000).as("doc_id"),
+          col("text")))
+      val seen = docs.filter(col("doc_id") % 5 === 0)
+        .select(md5(col("text").cast("binary")).as("digest"))
+      Dedup.incremental(batch, seen, "doc_id", "text",
+          bloomExpectedItems = 1000)
+        .orderBy("doc_id")
+    },
       """WITH batch AS (SELECT doc_id, text FROM documents
                         UNION ALL
                         SELECT doc_id + 10000, text FROM documents),
@@ -241,11 +104,15 @@ object PipelineQueries {
          SELECT d.doc_id, d.digest
          FROM d JOIN fst ON d.digest = fst.digest AND d.doc_id = fst.keep
          WHERE d.digest NOT IN (SELECT digest FROM seen)
-         ORDER BY d.doc_id""",
+         ORDER BY d.doc_id"""),
 
-    // mirrors minhashLshPairs: one md5 per shingle, 60-bit halves a/b,
-    // hash i = a + i*b, band i holds hashes (2i, 2i+1)
-    "q_dedup_minhash" ->
+    // ---- MinHash + LSH candidate pairs ----
+    Query("q_dedup_minhash", (s, d) =>
+      Dedup.minhashLshPairs(T(s, d, "documents"), "doc_id", "text",
+        k = 3, bands = 4, rowsPerBand = 2)
+        .orderBy("doc1", "doc2"),
+      // mirrors minhashLshPairs: one md5 per shingle, 60-bit halves a/b,
+      // hash i = a + i*b, band i holds hashes (2i, 2i+1)
       s"""WITH $ShingleCte,
          hh AS (SELECT doc_id,
                   ('0x' || substr(md5(s), 1, 15))::BIGINT AS a,
@@ -260,12 +127,23 @@ object PipelineQueries {
          FROM mh a JOIN mh c
            ON a.band = c.band AND a.h0 = c.h0 AND a.h1 = c.h1
           AND a.doc_id < c.doc_id
-         ORDER BY doc1, doc2""",
+         ORDER BY doc1, doc2"""),
 
-    // same mh CTE split into state (doc_id%5==0) and batch; state
-    // matches keep any id relation, within-batch pairs surface as
-    // (larger, smaller) — the earlier doc is the match target
-    "q_dedup_minhash_incr" ->
+    // ---- incremental fuzzy dedup: today's batch against yesterday's
+    //      persisted band-key state (doc_id%5==0 plays the state) —
+    //      the state's text is never re-shingled, matching is ONE
+    //      (band,key) equi-join; fuzzy analogue of q_dedup_incr ----
+    Query("q_dedup_minhash_incr", (s, d) => {
+      val docs = T(s, d, "documents")
+      val state = Dedup.minhashBandKeys(docs.filter(col("doc_id") % 5 === 0),
+        "doc_id", "text", k = 3, bands = 4, rowsPerBand = 2)
+      Dedup.minhashLshIncrementalPairs(docs.filter(col("doc_id") % 5 =!= 0),
+        "doc_id", "text", state, k = 3, bands = 4, rowsPerBand = 2)
+        .orderBy("doc_new", "doc_match")
+    },
+      // same mh CTE split into state (doc_id%5==0) and batch; state
+      // matches keep any id relation, within-batch pairs surface as
+      // (larger, smaller) — the earlier doc is the match target
       s"""WITH $ShingleCte,
          hh AS (SELECT doc_id,
                   ('0x' || substr(md5(s), 1, 15))::BIGINT AS a,
@@ -287,38 +165,62 @@ object PipelineQueries {
            FROM newm a JOIN newm c
              ON a.band = c.band AND a.h0 = c.h0 AND a.h1 = c.h1
             AND a.doc_id < c.doc_id)
-         ORDER BY doc_new, doc_match""",
+         ORDER BY doc_new, doc_match"""),
 
-    // transitive closure of the minhash candidate graph; min reachable id
-    // per doc mirrors Dedup.clusters' min-label propagation fixpoint
-    "q_dedup_clusters" ->
+    // ---- dedup clusters: connected components over minhash pairs ----
+    Query("q_dedup_clusters", (s, d) =>
+      Dedup.clusters(
+        Dedup.minhashLshPairs(T(s, d, "documents"), "doc_id", "text",
+          k = 3, bands = 4, rowsPerBand = 2))
+        .orderBy("doc"),
+      // transitive closure of the minhash candidate graph; min reachable id
+      // per doc mirrors Dedup.clusters' min-label propagation fixpoint
       s"""WITH RECURSIVE $ClustersCte
          SELECT doc, min(r) AS cluster_rep FROM reach GROUP BY doc
-         ORDER BY doc""",
+         ORDER BY doc"""),
 
-    "q_dedup_fuzzy" ->
+    // ---- end-to-end fuzzy dedup: pairs -> clusters -> canonical
+    //      survivor per cluster, one row per corpus doc ----
+    Query("q_dedup_fuzzy", (s, d) =>
+      Dedup.fuzzy(T(s, d, "documents"), "doc_id", "text",
+          k = 3, bands = 4, rowsPerBand = 2)
+        .select(col("doc_id"), col("cluster_rep"),
+          col("keep").cast("int").as("keep"))
+        .orderBy("doc_id"),
       s"""WITH RECURSIVE $ClustersCte,
          cl AS (SELECT doc, min(r) AS rep FROM reach GROUP BY doc)
          SELECT d.doc_id, coalesce(cl.rep, d.doc_id) AS cluster_rep,
            CASE WHEN coalesce(cl.rep, d.doc_id) = d.doc_id
                 THEN 1 ELSE 0 END AS keep
          FROM documents d LEFT JOIN cl ON cl.doc = d.doc_id
-         ORDER BY d.doc_id""",
+         ORDER BY d.doc_id"""),
 
-    "q_dedup_simhash" ->
+    // ---- SimHash fingerprints ----
+    Query("q_dedup_simhash", (s, d) =>
+      Dedup.simhash32(T(s, d, "documents"), "doc_id", "text")
+        .orderBy("doc"),
       s"""WITH $SimhashCte
-         SELECT doc_id AS doc, simhash FROM fp ORDER BY doc""",
+         SELECT doc_id AS doc, simhash FROM fp ORDER BY doc"""),
 
-    "q_simhash_pairs" ->
+    // ---- SimHash near-dup pairs (hamming <= 2; 4 byte-bands make the
+    //      candidate set provably complete by pigeonhole) ----
+    Query("q_simhash_pairs", (s, d) =>
+      Dedup.simhashPairs(T(s, d, "documents"), "doc_id", "text", maxHamming = 2)
+        .orderBy("doc1", "doc2"),
       s"""WITH $SimhashCte
          SELECT a.doc_id AS doc1, c.doc_id AS doc2,
                 bit_count(xor(a.simhash, c.simhash)) AS hamming
          FROM fp a JOIN fp c ON a.doc_id < c.doc_id
          WHERE bit_count(xor(a.simhash, c.simhash)) <= 2
-         ORDER BY doc1, doc2""",
+         ORDER BY doc1, doc2"""),
 
-    // mirrors ngramJaccardPairs incl. the maxShingleDf=1000 skew cap
-    "q_ngram_jaccard" ->
+    // ---- n-gram Jaccard near-dup pairs ----
+    Query("q_ngram_jaccard", (s, d) =>
+      Dedup.ngramJaccardPairs(T(s, d, "documents"), "doc_id", "text",
+        k = 3, minJaccard = 0.2)
+        .select(col("doc1"), col("doc2"), r(col("jaccard"), 6).as("jaccard"))
+        .orderBy("doc1", "doc2"),
+      // mirrors ngramJaccardPairs incl. the maxShingleDf=1000 skew cap
       s"""WITH $ShingleCte,
          shf AS (SELECT * FROM sh WHERE s IN
                    (SELECT s FROM sh GROUP BY s HAVING count(*) <= 1000)),
@@ -332,9 +234,23 @@ object PipelineQueries {
          JOIN sizes s1 ON doc1 = s1.doc_id
          JOIN sizes s2 ON doc2 = s2.doc_id
          WHERE inter * 1.0 / (s1.sz + s2.sz - inter) >= 0.2
-         ORDER BY doc1, doc2""",
+         ORDER BY doc1, doc2"""),
 
-    "q_text_quality" -> {
+    // ---- text quality / language-ID / fingerprinting ----
+    Query("q_text_quality", (s, d) => {
+      val t = col("text")
+      T(s, d, "documents").select(
+        col("doc_id"),
+        TextAnalysis.tokenCount(t).as("n_tokens"),
+        TextAnalysis.tokenCountBpe(t).as("n_tokens_bpe"),
+        r(TextAnalysis.punctRatio(t), 6).as("punct_ratio"),
+        r(TextAnalysis.meanWordLen(t), 6).as("mean_word_len"),
+        r(TextAnalysis.stopwordRatio(t, TextAnalysis.EnStops), 6).as("stop_ratio"),
+        r(TextAnalysis.qualityScore(t), 4).as("quality"),
+        TextAnalysis.langId(t).as("lang_guess"),
+        TextAnalysis.fingerprint(t).as("fingerprint"))
+        .orderBy("doc_id")
+    }, {
       val toks = """string_split_regex(lower(trim(text)), '\s+')"""
       def langSet(lang: String) = TextAnalysis.LangStops.toMap.apply(lang)
         .map(s => s"'$s'").mkString("[", ",", "]")
@@ -372,20 +288,33 @@ object PipelineQueries {
          $lang AS lang_guess,
          md5(array_to_string(list_sort(list_distinct($toks)), ' ')) AS fingerprint
          FROM documents ORDER BY doc_id"""
-    },
+    }),
 
-    // mirrors RollingHash: h = (h*1000003 + md5prefix32(tok)) % (2^31-1)
-    // over the in-order (non-distinct) token stream
-    "q_fingerprint_roll" ->
+    // ---- order-sensitive rolling-hash fingerprint (native codegen
+    //      expression graft.functions.RollingHash) ----
+    Query("q_fingerprint_roll", (s, d) =>
+      T(s, d, "documents").select(
+        col("doc_id"),
+        TextAnalysis.rollingFingerprint(col("text")).as("rh"))
+        .orderBy("doc_id"),
+      // mirrors RollingHash: h = (h*1000003 + md5prefix32(tok)) % (2^31-1)
+      // over the in-order (non-distinct) token stream
       """SELECT doc_id,
          list_reduce(
            list_prepend(0::BIGINT,
              list_transform(string_split_regex(lower(trim(text)), '\s+'),
                tok -> ('0x' || substr(md5(tok), 1, 8))::BIGINT)),
            (acc, x) -> (acc * 1000003 + x) % 2147483647) AS rh
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
 
-    "q_ann_cosine" ->
+    // ---- brute-force cosine top-k (exact ANN baseline) ----
+    Query("q_ann_cosine", (s, d) => {
+      val emb = T(s, d, "embeddings")
+      Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5)
+        .select(col("query_id"), col("neighbor_id"), r(col("cos"), 6).as("cos"),
+          col("rank"))
+        .orderBy("query_id", "rank")
+    },
       """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
                     FROM embeddings WHERE vec_id < 10),
          scored AS (SELECT q.qid, c.vec_id AS nid,
@@ -395,31 +324,37 @@ object PipelineQueries {
                       row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank
                     FROM scored)
          SELECT qid AS query_id, nid AS neighbor_id, round(cos + 1e-9, 6) AS cos, rank
-         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
+         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""),
 
-    "q_embed_near_dup" ->
-      """SELECT a.vec_id AS id1, c.vec_id AS id2,
-           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(c.embedding AS DOUBLE[])) + 1e-9, 6) AS cos
-         FROM embeddings a JOIN embeddings c ON a.vec_id < c.vec_id
-         WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                      CAST(c.embedding AS DOUBLE[])) >= 0.4
-         ORDER BY id1, id2""",
-
-    "q_multimodal" ->
-      """SELECT doc_id, octet_length(CAST(text AS BLOB)) AS byte_len,
-         64 + (octet_length(CAST(text AS BLOB)) % 512) AS width,
-         64 + (ascii(text) * 4) % 512 AS height,
-         3 AS channels, FALSE AS decoded
-         FROM documents ORDER BY doc_id""",
-
-    "q_ann_lsh" ->
+    // ---- LSH-bucketed ANN (scale path): multi-table OR-amplified form
+    //      (8 tables x 4 planes — single-table recall@5 measured 0.26,
+    //      amplified ~0.8+). The seeded hyperplanes are deterministic
+    //      constants, emitted as a VALUES table in the oracle SQL, so
+    //      DuckDB reproduces the buckets bit-for-bit -> full
+    //      rows/schema/hash check ----
+    Query("q_ann_lsh", (s, d) => {
+      val emb = T(s, d, "embeddings")
+      Similarity.lshTopKMulti(emb.filter(col("vec_id") < 10), emb, k = 5,
+        planes = 4, tables = 8, dim = 64)
+        .select(col("query_id"), col("neighbor_id"), r(col("cos"), 6).as("cos"),
+          col("rank"))
+        .orderBy("query_id", "rank")
+    },
       s"""WITH $LshCte
          SELECT qid AS query_id, nid AS neighbor_id,
            round(cos + 1e-9, 6) AS cos, rank
-         FROM lshranked WHERE rank <= 5 ORDER BY query_id, rank""",
+         FROM lshranked WHERE rank <= 5 ORDER BY query_id, rank"""),
 
-    "q_ann_lsh_recall" ->
+    // ---- recall@5 of the LSH scale path vs the exact baseline — the
+    //      quality gate for the bucketed ANN ----
+    Query("q_ann_lsh_recall", (s, d) => {
+      val emb = T(s, d, "embeddings")
+      val q = emb.filter(col("vec_id") < 10)
+      Similarity.recallAtK(
+        Similarity.lshTopKMulti(q, emb, k = 5, planes = 4, tables = 8, dim = 64),
+        Similarity.bruteForceTopK(q, emb, k = 5), k = 5)
+        .orderBy("query_id")
+    },
       s"""WITH $LshCte,
          ann AS (SELECT qid, nid FROM lshranked WHERE rank <= 5),
          bf AS (SELECT qid, nid FROM (
@@ -434,8 +369,35 @@ object PipelineQueries {
                   GROUP BY 1)
          SELECT b.qid AS query_id, coalesce(h, 0) / 5.0 AS recall
          FROM (SELECT DISTINCT qid FROM bf) b
-         LEFT JOIN hits USING (qid) ORDER BY query_id"""
-  )
+         LEFT JOIN hits USING (qid) ORDER BY query_id"""),
+
+    // ---- embedding near-dup pairs (exact threshold search) ----
+    Query("q_embed_near_dup", (s, d) =>
+      Similarity.nearDupPairsExact(T(s, d, "embeddings"), threshold = 0.4)
+        .select(col("id1"), col("id2"), r(col("cos"), 6).as("cos"))
+        .orderBy("id1", "id2"),
+      """SELECT a.vec_id AS id1, c.vec_id AS id2,
+           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                                        CAST(c.embedding AS DOUBLE[])) + 1e-9, 6) AS cos
+         FROM embeddings a JOIN embeddings c ON a.vec_id < c.vec_id
+         WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                                      CAST(c.embedding AS DOUBLE[])) >= 0.4
+         ORDER BY id1, id2"""),
+
+    // ---- multimodal plumbing: binary column + stub decode ----
+    Query("q_multimodal", (s, d) => {
+      val media = Multimodal.fromText(T(s, d, "documents"), "doc_id", "text")
+      Multimodal.decodeImages(media)
+        .toDF()
+        .select(col("id").as("doc_id"), col("byteLen").as("byte_len"),
+          col("width"), col("height"), col("channels"), col("decoded"))
+        .orderBy("doc_id")
+    },
+      """SELECT doc_id, octet_length(CAST(text AS BLOB)) AS byte_len,
+         64 + (octet_length(CAST(text AS BLOB)) % 512) AS width,
+         64 + (ascii(text) * 4) % 512 AS height,
+         3 AS channels, FALSE AS decoded
+         FROM documents ORDER BY doc_id"""))
 
   /** The 8x4 seeded LSH hyperplanes as a SQL VALUES table — SAME
     * generator as Similarity.lshTopKMulti's (multiPlanes(4, 64, 8,

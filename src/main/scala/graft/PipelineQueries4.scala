@@ -1,20 +1,22 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Core
 import graft.engine.Core.r
 import graft.pipeline._
+import graft.Query.T
 
 /** Fourth pipeline tranche (round 11): corpus-operations additions —
   * quality-weighted per-stratum quotas and snapshot diffing. Same
   * conventions as [[PipelineQueries]]. */
 object PipelineQueries4 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Core.normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
+  /** q_heavy_hitters' oracle, also q_stream_heavy_hitters'. */
+  private[graft] val HeavyHittersSql =
+    """SELECT lang AS item, count(*) AS est_count
+         FROM documents WHERE lang IS NOT NULL
+         GROUP BY 1 ORDER BY est_count DESC, item"""
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
 
     // ---- weighted per-stratum quota: keep <=50 docs per lang with
     //      inclusion odds proportional to n_chars (longer docs
@@ -23,80 +25,12 @@ object PipelineQueries4 {
     //      the under-cap bypass (fr/de). The oracle recomputes the
     //      log-space exponential-clock key ln(-ln(u)) - ln(w) from
     //      md5(doc_id) independently ----
-    "q_weighted_cap" -> ((s, d) =>
+    Query("q_weighted_cap", (s, d) =>
       Curation.weightedCapPerStratum(T(s, d, "documents"),
           "doc_id", "lang", "n_chars", cap = 50)
         .select(col("doc_id"), col("lang"), col("n_chars"),
           col("n_stratum"), col("wkey"))
-        .orderBy("doc_id")),
-
-    // ---- snapshot diff: old = docs minus every 7th id, with every
-    //      5th id's text mutated; new = docs minus every 3rd id. All
-    //      four statuses occur: added (7|id, 3∤id), removed (3|id,
-    //      7∤id), changed (5|id, surviving both), unchanged (rest).
-    //      The oracle diffs the raw columns directly — no digest — so
-    //      a digest-encoding collision on the Spark side would show up
-    //      as a status mismatch ----
-    "q_snapshot_diff" -> ((s, d) => {
-      val docs = T(s, d, "documents")
-      val old = docs.filter(col("doc_id") % 7 =!= 0)
-        .withColumn("text", when(col("doc_id") % 5 === 0,
-          concat(col("text"), lit(" v1"))).otherwise(col("text")))
-      val nw = docs.filter(col("doc_id") % 3 =!= 0)
-      Curation.snapshotDiff(old, nw, "doc_id",
-          Seq("text", "lang", "source"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- sliding-window chunking: 32-token windows advancing by 24
-    //      (8-token overlap), tails under 8 tokens dropped unless the
-    //      doc's only window. chunk_text joins the slice so the oracle
-    //      compares content, not engine-specific array encodings ----
-    "q_chunk_sliding" -> ((s, d) => {
-      val toks = T(s, d, "documents").select(col("doc_id"),
-        TextAnalysis.tokens(col("text")).as("toks"))
-      Curation.chunkSliding(toks, "doc_id", "toks",
-          chunkLen = 32, stride = 24, minTail = 8)
-        .select(col("doc_id"), col("chunk_idx"), col("start"),
-          concat_ws(" ", col("chunk")).as("chunk_text"), col("n_chunk"))
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // ---- Misra-Gries heavy hitters in the EXACT regime (distinct
-    //      langs << k=64): the one-pass bounded-state summary must
-    //      equal the full groupBy counts; the decayed regime's error
-    //      bound is spec-tested (ReductionsSpec) ----
-    "q_heavy_hitters" -> ((s, d) =>
-      graft.engine.Reductions.heavyHitters(
-        T(s, d, "documents"), "lang", k = 64)),
-
-    // ---- int8 scalar quantization: floor(x*127/scale + 0.5) is
-    //      engine-portable (round()'s half-case direction is not);
-    //      the code vector rides as CSV so the compare covers every
-    //      element without cross-engine array-encoding concerns ----
-    "q_quantize_int8" -> ((s, d) =>
-      Similarity.quantizeInt8(T(s, d, "embeddings"))
-        .select(col("vec_id"), r(col("scale"), 6).as("scale"),
-          concat_ws(",", col("qvec")).as("qvec_csv"))
-        .orderBy("vec_id")),
-
-    // ---- the int8 story end-to-end: top-k over the DEQUANTIZED store
-    //      vs exact top-k — the oracle recomputes quantize, dequantize,
-    //      both rankings, and the recall join independently ----
-    "q_quant_recall" -> ((s, d) => {
-      val emb = T(s, d, "embeddings")
-      val deq = Similarity.dequantizeInt8(Similarity.quantizeInt8(emb))
-      Similarity.recallAtK(
-          Similarity.bruteForceTopK(deq.filter(col("vec_id") < 10),
-            deq, k = 5),
-          Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10),
-            emb, k = 5), k = 5)
-        .orderBy("query_id")
-    }))
-
-  val oracle: Map[String, String] = Map(
-
-    "q_weighted_cap" ->
+        .orderBy("doc_id"),
       """WITH e AS (SELECT doc_id, lang, n_chars,
              round(ln(-ln((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT + 0.5)
                           / 4294967296.0))
@@ -109,9 +43,25 @@ object PipelineQueries4 {
                FROM e)
          SELECT doc_id, lang, n_chars, n_stratum, wkey
          FROM r JOIN c USING (lang)
-         WHERE rn <= 50 ORDER BY doc_id""",
+         WHERE rn <= 50 ORDER BY doc_id"""),
 
-    "q_snapshot_diff" ->
+    // ---- snapshot diff: old = docs minus every 7th id, with every
+    //      5th id's text mutated; new = docs minus every 3rd id. All
+    //      four statuses occur: added (7|id, 3∤id), removed (3|id,
+    //      7∤id), changed (5|id, surviving both), unchanged (rest).
+    //      The oracle diffs the raw columns directly — no digest — so
+    //      a digest-encoding collision on the Spark side would show up
+    //      as a status mismatch ----
+    Query("q_snapshot_diff", (s, d) => {
+      val docs = T(s, d, "documents")
+      val old = docs.filter(col("doc_id") % 7 =!= 0)
+        .withColumn("text", when(col("doc_id") % 5 === 0,
+          concat(col("text"), lit(" v1"))).otherwise(col("text")))
+      val nw = docs.filter(col("doc_id") % 3 =!= 0)
+      Curation.snapshotDiff(old, nw, "doc_id",
+          Seq("text", "lang", "source"))
+        .orderBy("doc_id")
+    },
       """WITH o AS (SELECT doc_id,
              CASE WHEN doc_id % 5 = 0 THEN text || ' v1' ELSE text END AS text,
              lang, source
@@ -127,9 +77,21 @@ object PipelineQueries4 {
                   THEN 'unchanged'
                 ELSE 'changed' END AS status
          FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-         ORDER BY 1""",
+         ORDER BY 1"""),
 
-    "q_chunk_sliding" ->
+    // ---- sliding-window chunking: 32-token windows advancing by 24
+    //      (8-token overlap), tails under 8 tokens dropped unless the
+    //      doc's only window. chunk_text joins the slice so the oracle
+    //      compares content, not engine-specific array encodings ----
+    Query("q_chunk_sliding", (s, d) => {
+      val toks = T(s, d, "documents").select(col("doc_id"),
+        TextAnalysis.tokens(col("text")).as("toks"))
+      Curation.chunkSliding(toks, "doc_id", "toks",
+          chunkLen = 32, stride = 24, minTail = 8)
+        .select(col("doc_id"), col("chunk_idx"), col("start"),
+          concat_ws(" ", col("chunk")).as("chunk_text"), col("n_chunk"))
+        .orderBy("doc_id", "chunk_idx")
+    },
       """WITH words AS (SELECT doc_id,
              string_split_regex(lower(trim(text)), '\s+') AS w
            FROM documents),
@@ -143,14 +105,26 @@ object PipelineQueries4 {
            len(w[start + 1 : start + 32]) AS n_chunk
          FROM s
          WHERE start = 0 OR len(w[start + 1 : start + 32]) >= 8
-         ORDER BY doc_id, chunk_idx""",
+         ORDER BY doc_id, chunk_idx"""),
 
-    "q_heavy_hitters" ->
-      """SELECT lang AS item, count(*) AS est_count
-         FROM documents WHERE lang IS NOT NULL
-         GROUP BY 1 ORDER BY est_count DESC, item""",
+    // ---- Misra-Gries heavy hitters in the EXACT regime (distinct
+    //      langs << k=64): the one-pass bounded-state summary must
+    //      equal the full groupBy counts; the decayed regime's error
+    //      bound is spec-tested (ReductionsSpec) ----
+    Query("q_heavy_hitters", (s, d) =>
+      graft.engine.Reductions.heavyHitters(
+        T(s, d, "documents"), "lang", k = 64),
+      HeavyHittersSql),
 
-    "q_quantize_int8" ->
+    // ---- int8 scalar quantization: floor(x*127/scale + 0.5) is
+    //      engine-portable (round()'s half-case direction is not);
+    //      the code vector rides as CSV so the compare covers every
+    //      element without cross-engine array-encoding concerns ----
+    Query("q_quantize_int8", (s, d) =>
+      Similarity.quantizeInt8(T(s, d, "embeddings"))
+        .select(col("vec_id"), r(col("scale"), 6).as("scale"),
+          concat_ws(",", col("qvec")).as("qvec_csv"))
+        .orderBy("vec_id"),
       """WITH v AS (SELECT vec_id,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
            FROM embeddings),
@@ -164,9 +138,21 @@ object PipelineQueries4 {
              CASE WHEN isfinite(scale) AND scale > 0
                THEN CAST(floor(x * 127.0 / scale + 0.5) AS TINYINT)
                ELSE CAST(0 AS TINYINT) END), ',') AS qvec_csv
-         FROM s ORDER BY vec_id""",
+         FROM s ORDER BY vec_id"""),
 
-    "q_quant_recall" ->
+    // ---- the int8 story end-to-end: top-k over the DEQUANTIZED store
+    //      vs exact top-k — the oracle recomputes quantize, dequantize,
+    //      both rankings, and the recall join independently ----
+    Query("q_quant_recall", (s, d) => {
+      val emb = T(s, d, "embeddings")
+      val deq = Similarity.dequantizeInt8(Similarity.quantizeInt8(emb))
+      Similarity.recallAtK(
+          Similarity.bruteForceTopK(deq.filter(col("vec_id") < 10),
+            deq, k = 5),
+          Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10),
+            emb, k = 5), k = 5)
+        .orderBy("query_id")
+    },
       """WITH v0 AS (SELECT vec_id,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
            FROM embeddings),
@@ -217,5 +203,5 @@ object PipelineQueries4 {
                   GROUP BY 1)
          SELECT b.qid AS query_id, coalesce(h, 0) / 5.0 AS recall
          FROM (SELECT DISTINCT qid FROM bf) b
-         LEFT JOIN hits USING (qid) ORDER BY query_id""")
+         LEFT JOIN hits USING (qid) ORDER BY query_id"""))
 }

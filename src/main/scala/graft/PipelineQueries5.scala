@@ -4,13 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Core
 import graft.pipeline._
+import graft.Query.T
 
 /** Fifth pipeline tranche (round 12): connectivity-only (spanning-edge)
   * dedup emission modes. Same conventions as [[PipelineQueries]]. */
 object PipelineQueries5 {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Core.normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
 
   /** Every stage frame of the 9-stage text-leg composition, shared by
     * q_pipeline_e2e (which consumes `bud` downstream) and
@@ -236,18 +234,23 @@ object PipelineQueries5 {
                      AS cum_tokens
                    FROM mixed m) WHERE cum_tokens <= 500)"""
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
 
     // ---- clusters over the spanning-edge (path-per-bucket) minhash
     //      emission: the edge SET is iterator-order-dependent, but the
     //      COMPONENTS must equal the all-pairs graph's — so this row
     //      runs the full cluster extraction over star-mode edges
     //      against the SAME oracle as q_dedup_clusters ----
-    "q_dedup_clusters_star" -> ((s, d) =>
+    Query("q_dedup_clusters_star", (s, d) =>
       Dedup.clusters(
         Dedup.minhashLshEdges(T(s, d, "documents"), "doc_id", "text",
           k = 3, bands = 4, rowsPerBand = 2))
-        .orderBy("doc")),
+        .orderBy("doc"),
+      // identical closure to q_dedup_clusters: star-mode edges must not
+      // change a single component
+      s"""WITH RECURSIVE ${PipelineQueries.ClustersCte}
+         SELECT doc, min(r) AS cluster_rep FROM reach GROUP BY doc
+         ORDER BY doc"""),
 
     // ---- END-TO-END pipeline composition (VERDICT r11 item 5): every
     //      stage below is oracle-green individually, but composition is
@@ -259,7 +262,7 @@ object PipelineQueries5 {
     //      order -> 32/24 sliding windows. Deterministic at every
     //      stage (every sampler is hash-keyed), so the DuckDB oracle
     //      recomputes the full chain independently ----
-    "q_pipeline_e2e" -> ((s, d) => {
+    Query("q_pipeline_e2e", (s, d) => {
       // stage frames + persisted boundaries come from the shared
       // e2eChain builder (also the q_pipeline_funnel spine); the
       // composition rationale lives on the builder
@@ -279,14 +282,8 @@ object PipelineQueries5 {
       // a 5.1 s zero-jobs driver gap planning the final collect at
       // sf0.1). One bounded eager collect truncates the plan; the
       // 100k cap keeps the harness loud if the bound ever breaks.
-      val budRows = ch.bud.limit(100001).collect().toIndexedSeq
-      require(budRows.length <= 100000,
-        "q_pipeline_e2e: token-budget stage exceeds the 100k-row " +
-          "verification cap — run the stages with per-stage storage " +
-          "writes instead")
-      val bud = s.createDataFrame(
-        new java.util.ArrayList(scala.jdk.CollectionConverters
-          .SeqHasAsJava(budRows).asJava), ch.bud.schema)
+      val bud = Core.reroot(ch.bud, 100000,
+        "q_pipeline_e2e token-budget stage")
       val pk = Curation.packGreedy(
           bud.select(col("doc_id"), col("n_tokens")),
           "doc_id", "n_tokens", ctxLen = 512)
@@ -315,56 +312,19 @@ object PipelineQueries5 {
       // of materializing an unbounded result on the driver (this row is
       // a verification harness; a production pipeline writes each stage
       // to storage instead of collecting anything)
-      val rows = out.limit(100001).collect().toIndexedSeq
-      require(rows.length <= 100000,
-        "q_pipeline_e2e: output exceeds the 100k-row verification " +
-          "cap — run the stages with per-stage storage writes instead")
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
+      Core.reroot(out, 100000, "q_pipeline_e2e output")
       } finally
         // release on EVERY exit — construction failure, cap trip, or
         // failed collect must not leak cached blocks into the rest of
         // the shared Verify/Bench session
         ch.caches.foreach(_.unpersist(blocking = false))
-    }),
-
-    // ---- substring-dedup APPLIED: excise every duplicated >=30-char
-    //      window span and return the spliced text (aggressive policy,
-    //      all occurrences removed). The oracle re-derives the spans
-    //      from RAW window text (any Spark-side hash collision would
-    //      surface as a text diff) and rebuilds the remainder with
-    //      lag()-gap segments + string_agg ----
-    "q_substring_excise" -> ((s, d) =>
-      Dedup.substringDedupText(T(s, d, "documents"), "doc_id", "text",
-          win = 30)
-        // n_chars/kept_chars are the op's own UTF-16 counts (r13);
-        // the oracle's length() counts code points — identical here
-        // because the corpus is ASCII/BMP (the unit-system caveat is
-        // documented on substringDedupText and pinned by spec)
-        .select(col("doc_id"), col("n_chars"), col("n_spans"),
-          col("dup_chars"), col("kept_chars"),
-          md5(col("text_dedup").cast("binary")).as("dedup_md5"))
-        .orderBy("doc_id")),
-
-    // ---- clusters over spanning edges of the shares-a-retained-
-    //      shingle graph (ngram star mode, the sf1 blowup lever): the
-    //      oracle recomputes the transitive closure over the FULL
-    //      all-pairs share-a-shingle graph — equality proves spanning
-    //      emission preserved every component ----
-    "q_ngram_star_clusters" -> ((s, d) =>
-      Dedup.clusters(
-        Dedup.ngramShingleEdges(T(s, d, "documents"), "doc_id", "text",
-          k = 3, maxShingleDf = 1000))
-        .orderBy("doc")))
-
-  val oracle: Map[String, String] = Map(
-
-    // the full chain, stage formulas identical to the individually-
-    // gated oracles (q_clean / q_quality_gate / q_dedup_fuzzy /
-    // q_decontam / q_mixture / q_token_budget / q_pack /
-    // q_shuffle_order / q_chunk_sliding), re-rooted on each previous
-    // stage's CTE instead of the raw table; the cl..bud spine is the
-    // shared E2eCte (also the q_pipeline_funnel oracle's spine)
-    "q_pipeline_e2e" ->
+    },
+      // the full chain, stage formulas identical to the individually-
+      // gated oracles (q_clean / q_quality_gate / q_dedup_fuzzy /
+      // q_decontam / q_mixture / q_token_budget / q_pack /
+      // q_shuffle_order / q_chunk_sliding), re-rooted on each previous
+      // stage's CTE instead of the raw table; the cl..bud spine is the
+      // shared E2eCte (also the q_pipeline_funnel oracle's spine)
       ("WITH RECURSIVE " + E2eCte + """,
          pk AS (SELECT doc_id,
                   CAST(floor((cum2 - n_tokens) / 512.0) AS BIGINT)
@@ -389,12 +349,28 @@ object PipelineQueries5 {
          FROM sw s2 JOIN bud b USING (doc_id) JOIN pk USING (doc_id)
            JOIN sk USING (doc_id)
          WHERE start = 0 OR len(s2.w[start + 1 : start + 32]) >= 8
-         ORDER BY doc_id, chunk_idx"""),
+         ORDER BY doc_id, chunk_idx""")),
 
-    // spans re-derived from RAW window text (SubstringSpanCte), then
-    // the remainder rebuilt from lag()-gap segments + the tail,
-    // string_agg'd in position order; docs with no spans pass through
-    "q_substring_excise" ->
+    // ---- substring-dedup APPLIED: excise every duplicated >=30-char
+    //      window span and return the spliced text (aggressive policy,
+    //      all occurrences removed). The oracle re-derives the spans
+    //      from RAW window text (any Spark-side hash collision would
+    //      surface as a text diff) and rebuilds the remainder with
+    //      lag()-gap segments + string_agg ----
+    Query("q_substring_excise", (s, d) =>
+      Dedup.substringDedupText(T(s, d, "documents"), "doc_id", "text",
+          win = 30)
+        // n_chars/kept_chars are the op's own UTF-16 counts (r13);
+        // the oracle's length() counts code points — identical here
+        // because the corpus is ASCII/BMP (the unit-system caveat is
+        // documented on substringDedupText and pinned by spec)
+        .select(col("doc_id"), col("n_chars"), col("n_spans"),
+          col("dup_chars"), col("kept_chars"),
+          md5(col("text_dedup").cast("binary")).as("dedup_md5"))
+        .orderBy("doc_id"),
+      // spans re-derived from RAW window text (SubstringSpanCte), then
+      // the remainder rebuilt from lag()-gap segments + the tail,
+      // string_agg'd in position order; docs with no spans pass through
       s"""WITH ${PipelineQueries2.SubstringSpanCte},
          sp AS (SELECT doc_id, min(pos) AS s, max(e) AS e2
                 FROM isl GROUP BY doc_id, i),
@@ -427,19 +403,21 @@ object PipelineQueries5 {
            md5(coalesce(t.td, d.text)) AS dedup_md5
          FROM documents d LEFT JOIN txt t USING (doc_id)
            LEFT JOIN stats st USING (doc_id)
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
 
-    // identical closure to q_dedup_clusters: star-mode edges must not
-    // change a single component
-    "q_dedup_clusters_star" ->
-      s"""WITH RECURSIVE ${PipelineQueries.ClustersCte}
-         SELECT doc, min(r) AS cluster_rep FROM reach GROUP BY doc
-         ORDER BY doc""",
-
-    // transitive closure over ALL pairs sharing >= 1 retained shingle
-    // (df cap mirrors maxShingleDf=1000); the Spark side only ever
-    // materializes spanning paths of this graph
-    "q_ngram_star_clusters" ->
+    // ---- clusters over spanning edges of the shares-a-retained-
+    //      shingle graph (ngram star mode, the sf1 blowup lever): the
+    //      oracle recomputes the transitive closure over the FULL
+    //      all-pairs share-a-shingle graph — equality proves spanning
+    //      emission preserved every component ----
+    Query("q_ngram_star_clusters", (s, d) =>
+      Dedup.clusters(
+        Dedup.ngramShingleEdges(T(s, d, "documents"), "doc_id", "text",
+          k = 3, maxShingleDf = 1000))
+        .orderBy("doc"),
+      // transitive closure over ALL pairs sharing >= 1 retained shingle
+      // (df cap mirrors maxShingleDf=1000); the Spark side only ever
+      // materializes spanning paths of this graph
       s"""WITH RECURSIVE ${PipelineQueries.ShingleCte},
          shf AS (SELECT * FROM sh WHERE s IN
                    (SELECT s FROM sh GROUP BY s HAVING count(*) <= 1000)),
@@ -454,5 +432,5 @@ object PipelineQueries5 {
            SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.doc
          )
          SELECT doc, min(r) AS cluster_rep FROM reach GROUP BY doc
-         ORDER BY doc""")
+         ORDER BY doc"""))
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline._
+import graft.Query.T
 
 /** Sixth pipeline tranche (round 13): per-stage auditability of the
   * composed pipelines — the funnel/lineage report a production
@@ -22,8 +23,7 @@ object PipelineQueries6 {
     * side of the downstream search. */
   private def semanticStore(s: SparkSession, d: String)
       : (DataFrame, Seq[DataFrame]) = {
-    val emb = graft.engine.Core.normalizeTs(
-      s.read.parquet(s"$d/embeddings.parquet"))
+    val emb = T(s, d, "embeddings")
     val bench = emb.filter(col("vec_id") < 16)
     val corpus = emb.filter(col("vec_id") >= 16)
     val sem = corpus.join(
@@ -44,108 +44,6 @@ object PipelineQueries6 {
       throw t
     }
   }
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- pipeline FUNNEL report (VERDICT r12 item 5): one row per
-    //      stage of the q_pipeline_e2e chain — stage, rows in, rows
-    //      out, dropped — plus per-reason tallies for the gopher gate
-    //      (how many docs trip each gate; reasons OVERLAP, so reason
-    //      drops can sum past the gate row's dropped). The oracle
-    //      recomputes every count from the same CTE spine the e2e
-    //      oracle uses, so each stage's survivor count is verified
-    //      independently of the Spark chain ----
-    "q_pipeline_funnel" -> ((s, d) => {
-      // observe mode (r14, VERDICT r13 item 3): every boundary carries
-      // a CollectMetrics node (gate_reasons also carries the six
-      // per-reason trip sums — thresholds still stated ONCE, inside
-      // gopherFilter; flag names single-sourced in GateReasons), so ONE
-      // action on the final stage evaluates the chain once and every
-      // funnel count arrives as a byproduct — replacing r13's eight
-      // in-order count() jobs + reason aggregate. Harvested counts are
-      // spec-pinned equal to the recounted form (PipelineSpec).
-      val ch = PipelineQueries5.e2eChain(s, d, observeBoundaries = true)
-      try {
-        ch.bud.count() // the ONE action; metrics fire as caches fill
-        def rowsOf(stage: String): Long =
-          ch.obs(stage).get("rows").asInstanceOf[Long]
-        val stages = Seq("input", "clean", "gopher_gate", "fuzzy_dedup",
-          "bench_split", "decontaminate", "mixture", "token_budget")
-        val funnel = Curation.funnelRows(stages.map(st => st -> rowsOf(st)))
-        // rows_out = docs that SURVIVE the reason alone, so
-        // rows_in - rows_out = dropped stays the row invariant.
-        val g = ch.obs("gate_reasons").get
-        val gateIn = rowsOf("clean")
-        val reasonRows = Curation.GateReasons.zipWithIndex.map {
-          case (name, j) =>
-            val trips = g(name).asInstanceOf[Long]
-            org.apache.spark.sql.Row(10 + j, s"gate_$name", gateIn,
-              gateIn - trips, trips)
-        }
-        s.createDataFrame(
-            s.sparkContext.parallelize(funnel ++ reasonRows, 1),
-            Curation.FunnelSchema)
-          .orderBy("stage_idx")
-      } finally
-        ch.caches.foreach(_.unpersist(blocking = false))
-    }),
-
-    // ---- SEMANTIC-leg composition (VERDICT r12 item 6): the
-    //      embeddings counterpart of q_pipeline_e2e. Composition bugs
-    //      are leg-specific (column collisions between semDedup's
-    //      vec_id outputs and the store, literal-matrix sizes, the
-    //      quantize->dequantize round trip feeding a ranking), so the
-    //      whole chain runs as ONE plan: SemDeDup (k-means + in-cluster
-    //      cosine, min-id survivor) -> semantic decontamination vs the
-    //      vec_id<16 bench matrix -> int8 quantization of the curated
-    //      store -> exact top-3 cosine search over the DEQUANTIZED
-    //      store with every 10th surviving vector as a query. Each
-    //      stage is individually oracle-green (q_semdedup,
-    //      q_semantic_decontam, q_quantize_int8, q_quant_recall); the
-    //      oracle below recomputes the full chain independently ----
-    "q_pipeline_semantic" -> ((s, d) => {
-      val (deq, caches) = semanticStore(s, d)
-      try {
-        val out = Similarity.bruteForceTopK(
-            deq.filter(col("vec_id") % 10 === 0), deq, k = 3)
-          .select(col("query_id"), col("neighbor_id"),
-            graft.engine.Core.r(col("cos"), 6).as("cos"), col("rank"))
-          .orderBy("query_id", "rank")
-        // bounded: (survivors/10) queries x 3 neighbors
-        val rows = out.collect().toIndexedSeq
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-      } finally caches.foreach(_.unpersist(blocking = false))
-    }),
-
-    // ---- the PRODUCTION ANN path composed (VERDICT r13 item 2): the
-    //      row above deliberately finishes with exact bruteForceTopK
-    //      (the verification shape); this one feeds the SAME
-    //      SemDeDup -> decontam -> quantize -> dequantize store into
-    //      ivfPqTopK — the scale path, with its pinned cells/codebooks
-    //      from the raw embeddings table — and emits measured recall@5
-    //      against the exact L2 top-5 over the SAME composed store.
-    //      Column collisions between the chain's vec_id outputs and the
-    //      IVF-PQ machinery, and the quantize round trip feeding the
-    //      residual encoder, have never run composed before this row.
-    //      The oracle recomputes chain, IVF-PQ and exact search ----
-    "q_pipeline_semantic_ann" -> ((s, d) => {
-      val emb = graft.engine.Core.normalizeTs(
-        s.read.parquet(s"$d/embeddings.parquet"))
-      val (cells, books) = Queries9.ivfPqTables(emb)
-      val (deq, caches) = semanticStore(s, d)
-      try {
-        val q = deq.filter(col("vec_id") % 10 === 0)
-        val out = Similarity.recallAtK(
-            Similarity.ivfPqTopK(q, deq, cells, books, k = 5, nprobe = 2),
-            Similarity.bruteForceTopKL2(q, deq, 5), 5)
-          .select(col("query_id"),
-            graft.engine.Core.r(col("recall"), 6).as("recall"))
-          .orderBy("query_id")
-        // bounded: one row per query (survivors/10)
-        val rows = out.collect().toIndexedSeq
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-      } finally caches.foreach(_.unpersist(blocking = false))
-    }))
 
   /** Shared CTE spine of the two semantic-leg oracles: k-means (2
     * Lloyd iterations, first-4-by-id init, same blocks as the
@@ -203,11 +101,52 @@ object PipelineQueries6 {
                      AS dv
                  FROM qs)"""
 
-  val oracle: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
 
-    // same cl..bud spine as the e2e oracle; each stage count and each
-    // gate-reason tally recomputed from the CTEs
-    "q_pipeline_funnel" ->
+    // ---- pipeline FUNNEL report (VERDICT r12 item 5): one row per
+    //      stage of the q_pipeline_e2e chain — stage, rows in, rows
+    //      out, dropped — plus per-reason tallies for the gopher gate
+    //      (how many docs trip each gate; reasons OVERLAP, so reason
+    //      drops can sum past the gate row's dropped). The oracle
+    //      recomputes every count from the same CTE spine the e2e
+    //      oracle uses, so each stage's survivor count is verified
+    //      independently of the Spark chain ----
+    Query("q_pipeline_funnel", (s, d) => {
+      // observe mode (r14, VERDICT r13 item 3): every boundary carries
+      // a CollectMetrics node (gate_reasons also carries the six
+      // per-reason trip sums — thresholds still stated ONCE, inside
+      // gopherFilter; flag names single-sourced in GateReasons), so ONE
+      // action on the final stage evaluates the chain once and every
+      // funnel count arrives as a byproduct — replacing r13's eight
+      // in-order count() jobs + reason aggregate. Harvested counts are
+      // spec-pinned equal to the recounted form (PipelineSpec).
+      val ch = PipelineQueries5.e2eChain(s, d, observeBoundaries = true)
+      try {
+        ch.bud.count() // the ONE action; metrics fire as caches fill
+        def rowsOf(stage: String): Long =
+          ch.obs(stage).get("rows").asInstanceOf[Long]
+        val stages = Seq("input", "clean", "gopher_gate", "fuzzy_dedup",
+          "bench_split", "decontaminate", "mixture", "token_budget")
+        val funnel = Curation.funnelRows(stages.map(st => st -> rowsOf(st)))
+        // rows_out = docs that SURVIVE the reason alone, so
+        // rows_in - rows_out = dropped stays the row invariant.
+        val g = ch.obs("gate_reasons").get
+        val gateIn = rowsOf("clean")
+        val reasonRows = Curation.GateReasons.zipWithIndex.map {
+          case (name, j) =>
+            val trips = g(name).asInstanceOf[Long]
+            org.apache.spark.sql.Row(10 + j, s"gate_$name", gateIn,
+              gateIn - trips, trips)
+        }
+        s.createDataFrame(
+            s.sparkContext.parallelize(funnel ++ reasonRows, 1),
+            Curation.FunnelSchema)
+          .orderBy("stage_idx")
+      } finally
+        ch.caches.foreach(_.unpersist(blocking = false))
+    },
+      // same cl..bud spine as the e2e oracle; each stage count and each
+      // gate-reason tally recomputed from the CTEs
       ("WITH RECURSIVE " + PipelineQueries5.E2eCte + """,
          n0 AS (SELECT count(*) AS c FROM documents),
          n1 AS (SELECT count(*) AS c FROM cl),
@@ -254,14 +193,38 @@ object PipelineQueries6 {
              n1.c - rs.dupw, rs.dupw FROM n1, rs
            UNION ALL SELECT 15, 'gate_fail_top_bigram', n1.c,
              n1.c - rs.topbg, rs.topbg FROM n1, rs
-         ) ORDER BY stage_idx"""),
+         ) ORDER BY stage_idx""")),
 
-    // the full semantic chain recomputed: k-means (2 Lloyd iterations,
-    // first-4-by-id init, same CTE blocks as the q_semdedup oracle) ->
-    // in-cluster cosine dedup -> max-cos decontamination vs the bench
-    // matrix (same formula as q_semantic_decontam) -> int8 quantize /
-    // dequantize (same as q_quant_recall) -> guarded cosine top-3
-    "q_pipeline_semantic" ->
+    // ---- SEMANTIC-leg composition (VERDICT r12 item 6): the
+    //      embeddings counterpart of q_pipeline_e2e. Composition bugs
+    //      are leg-specific (column collisions between semDedup's
+    //      vec_id outputs and the store, literal-matrix sizes, the
+    //      quantize->dequantize round trip feeding a ranking), so the
+    //      whole chain runs as ONE plan: SemDeDup (k-means + in-cluster
+    //      cosine, min-id survivor) -> semantic decontamination vs the
+    //      vec_id<16 bench matrix -> int8 quantization of the curated
+    //      store -> exact top-3 cosine search over the DEQUANTIZED
+    //      store with every 10th surviving vector as a query. Each
+    //      stage is individually oracle-green (q_semdedup,
+    //      q_semantic_decontam, q_quantize_int8, q_quant_recall); the
+    //      oracle below recomputes the full chain independently ----
+    Query("q_pipeline_semantic", (s, d) => {
+      val (deq, caches) = semanticStore(s, d)
+      try {
+        val out = Similarity.bruteForceTopK(
+            deq.filter(col("vec_id") % 10 === 0), deq, k = 3)
+          .select(col("query_id"), col("neighbor_id"),
+            graft.engine.Core.r(col("cos"), 6).as("cos"), col("rank"))
+          .orderBy("query_id", "rank")
+        // bounded: (survivors/10) queries x 3 neighbors
+        graft.engine.Core.reroot(out, 100000, "q_pipeline_semantic output")
+      } finally caches.foreach(_.unpersist(blocking = false))
+    },
+      // the full semantic chain recomputed: k-means (2 Lloyd iterations,
+      // first-4-by-id init, same CTE blocks as the q_semdedup oracle) ->
+      // in-cluster cosine dedup -> max-cos decontamination vs the bench
+      // matrix (same formula as q_semantic_decontam) -> int8 quantize /
+      // dequantize (same as q_quant_recall) -> guarded cosine top-3
       s"""WITH $SemanticCte,
          dq AS (SELECT vec_id, dv,
                   sqrt(list_sum(list_transform(dv, v -> v * v))) AS nn
@@ -284,14 +247,41 @@ object PipelineQueries6 {
                  WHERE rank <= 3)
          SELECT query_id, neighbor_id,
            round(cos + 1e-9, 6) + 0.0 AS cos, rank
-         FROM ann ORDER BY query_id, rank""",
+         FROM ann ORDER BY query_id, rank"""),
 
-    // the SAME chain spine, then the production IVF-PQ machinery
-    // (Queries9.ivfPqCte — cells/codebooks pinned to the raw embeddings
-    // table exactly like the Spark side) over the dequantized survivor
-    // store, and recall@5 against the exact L2 top-5 over that store —
-    // the composed twin of q_ivfpq_recall
-    "q_pipeline_semantic_ann" ->
+    // ---- the PRODUCTION ANN path composed (VERDICT r13 item 2): the
+    //      row above deliberately finishes with exact bruteForceTopK
+    //      (the verification shape); this one feeds the SAME
+    //      SemDeDup -> decontam -> quantize -> dequantize store into
+    //      ivfPqTopK — the scale path, with its pinned cells/codebooks
+    //      from the raw embeddings table — and emits measured recall@5
+    //      against the exact L2 top-5 over the SAME composed store.
+    //      Column collisions between the chain's vec_id outputs and the
+    //      IVF-PQ machinery, and the quantize round trip feeding the
+    //      residual encoder, have never run composed before this row.
+    //      The oracle recomputes chain, IVF-PQ and exact search ----
+    Query("q_pipeline_semantic_ann", (s, d) => {
+      val emb = T(s, d, "embeddings")
+      val (cells, books) = Queries9.ivfPqTables(emb)
+      val (deq, caches) = semanticStore(s, d)
+      try {
+        val q = deq.filter(col("vec_id") % 10 === 0)
+        val out = Similarity.recallAtK(
+            Similarity.ivfPqTopK(q, deq, cells, books, k = 5, nprobe = 2),
+            Similarity.bruteForceTopKL2(q, deq, 5), 5)
+          .select(col("query_id"),
+            graft.engine.Core.r(col("recall"), 6).as("recall"))
+          .orderBy("query_id")
+        // bounded: one row per query (survivors/10)
+        graft.engine.Core.reroot(out, 100000,
+          "q_pipeline_semantic_ann output")
+      } finally caches.foreach(_.unpersist(blocking = false))
+    },
+      // the SAME chain spine, then the production IVF-PQ machinery
+      // (Queries9.ivfPqCte — cells/codebooks pinned to the raw embeddings
+      // table exactly like the Spark side) over the dequantized survivor
+      // store, and recall@5 against the exact L2 top-5 over that store —
+      // the composed twin of q_ivfpq_recall
       (s"""WITH $SemanticCte,
          ${Queries9.ivfPqCte(
         "SELECT vec_id AS id, dv AS x FROM dq0",
@@ -310,5 +300,5 @@ object PipelineQueries6 {
          SELECT b.qid AS query_id,
            round(coalesce(h, 0) / 5.0 + 1e-9, 6) AS recall
          FROM (SELECT DISTINCT qid FROM bf) b
-         LEFT JOIN hits USING (qid) ORDER BY query_id"""))
+         LEFT JOIN hits USING (qid) ORDER BY query_id""")))
 }

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine._
 import graft.engine.Core.r
+import graft.Query.T
 
 /** Tenth tranche (round 9) — the long tail of pandas signatures the
   * reference inherits through its dynamic proxies (VERDICT r8 "What's
@@ -18,10 +19,12 @@ import graft.engine.Core.r
   * Same conventions as [[Queries]]. */
 object Queries10 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Core.normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
+  /** Columns of the q_corr_callable matrix, in matrix order (pair
+    * orientation (i, j), i<j follows this order on BOTH sides). */
+  private val CallableCols =
+    Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
 
     // ---- §2.7 merge on index: the engine materializes the pandas
     //      index as a column (IO.withRowId at ingest; o_orderkey plays
@@ -29,7 +32,7 @@ object Queries10 {
     //      mergeOn(leftOn=index-col). Exercises the asymmetric-name
     //      join (BOTH key columns kept, pandas left_on/right_on
     //      contract) and the flag-based indicator. ----
-    "q_merge_index" -> ((s, d) => {
+    Query("q_merge_index", (s, d) => {
       val left = T(s, d, "orders")
         .select(col("o_orderkey").as("row_id"), col("o_custkey"),
           r(col("o_totalprice"), 2).as("total"))
@@ -43,20 +46,48 @@ object Queries10 {
         .select(col("row_id"), col("o_custkey"), col("total"),
           col("l_orderkey"), col("n_hi"), col("hi_price"), col("_merge"))
         .orderBy("row_id")
-    }),
+    },
+      """SELECT o.o_orderkey AS row_id, o.o_custkey,
+           round(o.o_totalprice + 1e-9, 2) AS total,
+           rr.l_orderkey, rr.n_hi, rr.hi_price,
+           CASE WHEN rr.l_orderkey IS NULL THEN 'left_only'
+                ELSE 'both' END AS _merge
+         FROM orders o LEFT JOIN (
+           SELECT l_orderkey, count(*) AS n_hi,
+             round(sum(l_extendedprice) + 1e-9, 2) AS hi_price
+           FROM lineitem WHERE l_quantity > 45 GROUP BY 1) rr
+         ON o.o_orderkey = rr.l_orderkey
+         ORDER BY row_id"""),
 
     // ---- §2.9 ewm(times=, halflife=Timedelta).mean(): weights decay
     //      by ACTUAL timestamp deltas (0.5^(Δt/halflife)), not row
     //      position — the irregular-series decay the reference's EWM
     //      proxy forwards. One running-window Aggregator per group;
     //      the oracle is the closed form over each row's history. ----
-    "q_ewm_times" -> ((s, d) => {
+    Query("q_ewm_times", (s, d) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       T(s, d, "events").select(col("event_id"), col("user_id"),
           r(Ewm.meanTimes(col("value"), col("ts"), w,
             halflifeMicros = 7.0 * 24 * 3600 * 1000000), 4).as("ewm_t"))
         .orderBy("user_id", "event_id")
-    }),
+    },
+      // closed-form time-decay: w_j = 0.5^((t_i - t_j)/halflife) over the
+      // row's (ts, event_id)-ordered history; null values contribute
+      // nothing and don't matter to the clock (weights are pure time
+      // functions). O(n²) per user — oracle-only shape.
+      """SELECT e1.event_id, e1.user_id, round(
+           (SELECT sum(e2.value *
+              pow(0.5, (epoch_us(e1.ts) - epoch_us(e2.ts)) / 604800000000.0))
+            FROM events e2
+            WHERE e2.user_id = e1.user_id AND e2.value IS NOT NULL
+              AND (e2.ts < e1.ts OR (e2.ts = e1.ts AND e2.event_id <= e1.event_id))) /
+           (SELECT sum(
+              pow(0.5, (epoch_us(e1.ts) - epoch_us(e2.ts)) / 604800000000.0))
+            FROM events e2
+            WHERE e2.user_id = e1.user_id AND e2.value IS NOT NULL
+              AND (e2.ts < e1.ts OR (e2.ts = e1.ts AND e2.event_id <= e1.event_id)))
+           + 1e-9, 4) + 0.0 AS ewm_t
+         FROM events e1 ORDER BY e1.user_id, e1.event_id"""),
 
     // ---- §2.6 corr(method=callable) (`parallel_dataframe.py:285,310`,
     //      exercised by tests/test_apply_corr.py's callable case): the
@@ -67,7 +98,7 @@ object Queries10 {
     //      pair to np.isfinite rows. The frame punches deterministic
     //      NULL holes in one column and +Inf holes in another to prove
     //      both legs of the mask. ----
-    "q_corr_callable" -> ((s, d) => {
+    Query("q_corr_callable", (s, d) => {
       val li = T(s, d, "lineitem").filter(col("l_partkey") < 200)
       val holed = li.select(
         when(col("l_orderkey") % 7 =!= 0, col("l_quantity"))
@@ -81,79 +112,7 @@ object Queries10 {
       Corr.corrMatrixWith(holed, CallableCols, cosine)
         .select(col("c1"), col("c2"), r(col("corr"), 6).as("corr"))
         .orderBy("c1", "c2")
-    }),
-
-    // ---- pandas groupby.corr(method='kendall') — per-group tau-b via
-    //      ONE key-shuffled flatMapGroups running Knight's O(n log n)
-    //      per pair (group-sized memory, pandas' own per-group
-    //      contract). Bounded slice: the ORACLE's pairwise tau is
-    //      O(n²) per group. ----
-    "q_groupby_kendall" -> ((s, d) => {
-      val li = T(s, d, "lineitem").filter(col("l_partkey") < 200)
-      Corr.kendallMatrixBy(li, "l_returnflag",
-          Seq("l_quantity", "l_discount"))
-        .select(col("l_returnflag"), col("c1"), col("c2"),
-          r(col("kendall"), 6).as("kendall"))
-        .orderBy("l_returnflag", "c1", "c2")
-    }),
-
-    // ---- §2.10 str accessor, tranche 9 — the LAST proxy names:
-    //      wrap (native greedy-fold kernel, see TextWrapKernel's
-    //      contract), rpartition head/tail (last-occurrence split,
-    //      absent sep -> whole string in the tail), index/rindex
-    //      (find/rfind that fail the job when absent; p_name always
-    //      contains a space so the oracle row never trips it) ----
-    "q_str_ops9" -> ((s, d) => {
-      T(s, d, "part").select(
-        col("p_partkey"),
-        StrDt.strWrap(col("p_name"), 12).as("wr"),
-        StrDt.strRpartitionBefore(col("p_name"), " ").as("rp_head"),
-        StrDt.strRpartitionAfter(col("p_name"), " ").as("rp_tail"),
-        StrDt.strIndex(col("p_name"), " ").as("ix"),
-        StrDt.strRindex(col("p_name"), " ").as("rix"))
-        .orderBy("p_partkey")
-    }))
-
-  /** Columns of the q_corr_callable matrix, in matrix order (pair
-    * orientation (i, j), i<j follows this order on BOTH sides). */
-  private val CallableCols =
-    Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-
-  val oracle: Map[String, String] = Map(
-
-    "q_merge_index" ->
-      """SELECT o.o_orderkey AS row_id, o.o_custkey,
-           round(o.o_totalprice + 1e-9, 2) AS total,
-           rr.l_orderkey, rr.n_hi, rr.hi_price,
-           CASE WHEN rr.l_orderkey IS NULL THEN 'left_only'
-                ELSE 'both' END AS _merge
-         FROM orders o LEFT JOIN (
-           SELECT l_orderkey, count(*) AS n_hi,
-             round(sum(l_extendedprice) + 1e-9, 2) AS hi_price
-           FROM lineitem WHERE l_quantity > 45 GROUP BY 1) rr
-         ON o.o_orderkey = rr.l_orderkey
-         ORDER BY row_id""",
-
-    // closed-form time-decay: w_j = 0.5^((t_i - t_j)/halflife) over the
-    // row's (ts, event_id)-ordered history; null values contribute
-    // nothing and don't matter to the clock (weights are pure time
-    // functions). O(n²) per user — oracle-only shape.
-    "q_ewm_times" ->
-      """SELECT e1.event_id, e1.user_id, round(
-           (SELECT sum(e2.value *
-              pow(0.5, (epoch_us(e1.ts) - epoch_us(e2.ts)) / 604800000000.0))
-            FROM events e2
-            WHERE e2.user_id = e1.user_id AND e2.value IS NOT NULL
-              AND (e2.ts < e1.ts OR (e2.ts = e1.ts AND e2.event_id <= e1.event_id))) /
-           (SELECT sum(
-              pow(0.5, (epoch_us(e1.ts) - epoch_us(e2.ts)) / 604800000000.0))
-            FROM events e2
-            WHERE e2.user_id = e1.user_id AND e2.value IS NOT NULL
-              AND (e2.ts < e1.ts OR (e2.ts = e1.ts AND e2.event_id <= e1.event_id)))
-           + 1e-9, 4) + 0.0 AS ewm_t
-         FROM events e1 ORDER BY e1.user_id, e1.event_id""",
-
-    "q_corr_callable" -> {
+    }, {
       val diag = CallableCols.map(c =>
         s"SELECT '$c' AS c1, '$c' AS c2, round(1.0 + 1e-9, 6) + 0.0 AS corr")
       val off = for {
@@ -173,36 +132,24 @@ object Queries10 {
           FROM lineitem WHERE l_partkey < 200)
           SELECT * FROM (${(diag ++ off).mkString(" UNION ALL ")})
           ORDER BY c1, c2"""
+    }),
+
+    // ---- pandas groupby.corr(method='kendall') — per-group tau-b via
+    //      ONE key-shuffled flatMapGroups running Knight's O(n log n)
+    //      per pair (group-sized memory, pandas' own per-group
+    //      contract). Bounded slice: the ORACLE's pairwise tau is
+    //      O(n²) per group. ----
+    Query("q_groupby_kendall", (s, d) => {
+      val li = T(s, d, "lineitem").filter(col("l_partkey") < 200)
+      Corr.kendallMatrixBy(li, "l_returnflag",
+          Seq("l_quantity", "l_discount"))
+        .select(col("l_returnflag"), col("c1"), col("c2"),
+          r(col("kendall"), 6).as("kendall"))
+        .orderBy("l_returnflag", "c1", "c2")
     },
-
-    // wrap: the same greedy token fold as TextWrapKernel, as a
-    // list_reduce over single-spaced words (p_name words are all
-    // shorter than the width, so break_long_words never fires — that
-    // leg is covered by StrDtSpec's CPython-generated differentials)
-    "q_str_ops9" ->
-      """SELECT p_partkey,
-           list_reduce(string_split(p_name, ' '), (acc, w) ->
-             CASE WHEN length(string_split(acc, chr(10))[-1])
-                       + 1 + length(w) <= 12
-               THEN acc || ' ' || w
-               ELSE acc || chr(10) || w END) AS wr,
-           CASE WHEN strpos(reverse(p_name), ' ') > 0
-             THEN substr(p_name, 1,
-                    length(p_name) - strpos(reverse(p_name), ' '))
-             ELSE '' END AS rp_head,
-           CASE WHEN strpos(reverse(p_name), ' ') > 0
-             THEN substr(p_name,
-                    length(p_name) - strpos(reverse(p_name), ' ') + 2)
-             ELSE p_name END AS rp_tail,
-           CAST(strpos(p_name, ' ') - 1 AS INTEGER) AS ix,
-           CAST(length(p_name) - strpos(reverse(p_name), ' ')
-             AS INTEGER) AS rix
-         FROM part ORDER BY p_partkey""",
-
-    // per-group tau-b from the O(n²) pair definition: concordant-minus-
-    // discordant sign sum over within-group pairs, tie-pair counts per
-    // column; diagonal cells are 1 (both columns vary in every group)
-    "q_groupby_kendall" ->
+      // per-group tau-b from the O(n²) pair definition: concordant-minus-
+      // discordant sign sum over within-group pairs, tie-pair counts per
+      // column; diagonal cells are 1 (both columns vary in every group)
       """WITH base AS (SELECT l_returnflag AS g, l_quantity AS a0,
              l_discount AS a1
            FROM lineitem WHERE l_partkey < 200),
@@ -224,5 +171,44 @@ object Queries10 {
            UNION ALL
            SELECT g, 'l_discount', 'l_discount',
              round(1.0 + 1e-9, 6) + 0.0 FROM kd)
-         ORDER BY l_returnflag, c1, c2""")
+         ORDER BY l_returnflag, c1, c2"""),
+
+    // ---- §2.10 str accessor, tranche 9 — the LAST proxy names:
+    //      wrap (native greedy-fold kernel, see TextWrapKernel's
+    //      contract), rpartition head/tail (last-occurrence split,
+    //      absent sep -> whole string in the tail), index/rindex
+    //      (find/rfind that fail the job when absent; p_name always
+    //      contains a space so the oracle row never trips it) ----
+    Query("q_str_ops9", (s, d) => {
+      T(s, d, "part").select(
+        col("p_partkey"),
+        StrDt.strWrap(col("p_name"), 12).as("wr"),
+        StrDt.strRpartitionBefore(col("p_name"), " ").as("rp_head"),
+        StrDt.strRpartitionAfter(col("p_name"), " ").as("rp_tail"),
+        StrDt.strIndex(col("p_name"), " ").as("ix"),
+        StrDt.strRindex(col("p_name"), " ").as("rix"))
+        .orderBy("p_partkey")
+    },
+      // wrap: the same greedy token fold as TextWrapKernel, as a
+      // list_reduce over single-spaced words (p_name words are all
+      // shorter than the width, so break_long_words never fires — that
+      // leg is covered by StrDtSpec's CPython-generated differentials)
+      """SELECT p_partkey,
+           list_reduce(string_split(p_name, ' '), (acc, w) ->
+             CASE WHEN length(string_split(acc, chr(10))[-1])
+                       + 1 + length(w) <= 12
+               THEN acc || ' ' || w
+               ELSE acc || chr(10) || w END) AS wr,
+           CASE WHEN strpos(reverse(p_name), ' ') > 0
+             THEN substr(p_name, 1,
+                    length(p_name) - strpos(reverse(p_name), ' '))
+             ELSE '' END AS rp_head,
+           CASE WHEN strpos(reverse(p_name), ' ') > 0
+             THEN substr(p_name,
+                    length(p_name) - strpos(reverse(p_name), ' ') + 2)
+             ELSE p_name END AS rp_tail,
+           CAST(strpos(p_name, ' ') - 1 AS INTEGER) AS ix,
+           CAST(length(p_name) - strpos(reverse(p_name), ' ')
+             AS INTEGER) AS rix
+         FROM part ORDER BY p_partkey"""))
 }

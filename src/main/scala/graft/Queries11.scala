@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine._
 import graft.engine.Core.r
+import graft.Query.T
 
 /** Eleventh tranche (round 11) — the last proxy names plus oracle rows
   * for the 100 TB sketch modes (VERDICT r10 "Next round" items 4, 5, 8):
@@ -18,10 +18,7 @@ import graft.engine.Core.r
   * Same conventions as [[Queries]]. */
 object Queries11 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Core.normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
 
     // ---- §2.10 str accessor, tranche 10: extractall (EVERY match,
     //      0-based match index ≙ the pandas MultiIndex level; rows
@@ -29,7 +26,7 @@ object Queries11 {
     //      substitution vs pandas' default whole-result NaN
     //      propagation (bare concat_ws would silently SKIP null cells
     //      and their separators — wrong on both legs) ----
-    "q_str_ops10" -> ((s, d) => {
+    Query("q_str_ops10", (s, d) => {
       val base = T(s, d, "part").select(
         col("p_partkey"), col("p_name"),
         when(col("p_size") % 3 === 0, lit(null).cast("string"))
@@ -45,13 +42,29 @@ object Queries11 {
         .select(col("p_partkey"), col("cat_na"), col("cat_null"),
           col("match"), col("g1"), col("g2"))
         .orderBy("p_partkey", "match")
-    }),
+    },
+      """WITH base AS (SELECT p_partkey, p_name,
+           CASE WHEN p_size % 3 = 0 THEN NULL ELSE p_brand END AS holed
+         FROM part),
+         cat AS (SELECT p_partkey, p_name,
+           concat_ws('_', p_name, coalesce(holed, 'NA')) AS cat_na,
+           CASE WHEN holed IS NULL THEN NULL
+                ELSE p_name || '_' || holed END AS cat_null
+         FROM base)
+         SELECT p_partkey, cat_na, cat_null,
+           CAST(generate_subscripts(a1, 1) - 1 AS INTEGER) AS match,
+           unnest(a1) AS g1, unnest(a2) AS g2
+         FROM (SELECT p_partkey, cat_na, cat_null,
+             regexp_extract_all(p_name, '([a-z])([a-z]*)', 1) AS a1,
+             regexp_extract_all(p_name, '([a-z])([a-z]*)', 2) AS a2
+           FROM cat)
+         ORDER BY p_partkey, match"""),
 
     // ---- nunique 100 TB mode (HLL++, rsd=0.01): exact counts are the
     //      hash-compared surface; each `*_ok` flag pins the sketch to
     //      ±5% of exact (5x the configured rsd — drift, not noise,
     //      trips it) ----
-    "q_nunique_approx" -> ((s, d) => {
+    Query("q_nunique_approx", (s, d) => {
       val li = T(s, d, "lineitem")
       val cols = Seq("l_partkey", "l_suppkey", "l_quantity")
       val approx = Reductions.nuniqueApprox(li, cols)
@@ -63,7 +76,13 @@ object Queries11 {
         cols.map(c => col(c).as(s"${c}_nd")) ++
           cols.map(c => (abs(col(s"__a_$c") - col(c)) <=
             ceil(col(c) * 0.05)).as(s"${c}_ok")): _*)
-    }),
+    },
+      """SELECT count(DISTINCT l_partkey) AS l_partkey_nd,
+           count(DISTINCT l_suppkey) AS l_suppkey_nd,
+           count(DISTINCT l_quantity) AS l_quantity_nd,
+           TRUE AS l_partkey_ok, TRUE AS l_suppkey_ok,
+           TRUE AS l_quantity_ok
+         FROM lineitem"""),
 
     // ---- describe 100 TB mode (ONE pass, percentile_approx sketch,
     //      accuracy=10000): exact describe rides the hash compare. `ok`
@@ -80,7 +99,7 @@ object Queries11 {
     //      but a 4% value error. Non-percentile stats are computed
     //      exactly by both forms and keep the tight 1%-of-(|exact|+1)
     //      band ----
-    "q_describe_approx" -> ((s, d) => {
+    Query("q_describe_approx", (s, d) => {
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount",
         "l_tax")
       val li = T(s, d, "lineitem")
@@ -154,55 +173,7 @@ object Queries11 {
         .select(col("stat") +:
           (cols.map(c => r(col(c), 4).as(c)) :+ col("ok")): _*)
         .orderBy("stat")
-    }),
-
-    // ---- kendall 100 TB sampling mode: deterministic hash-ordered
-    //      sample of 1000 of the ~2000 slice rows. The exact tau rides
-    //      the hash compare (vs the O(n²) SQL pair definition); `ok`
-    //      pins the sampled estimate within 0.2 of exact (≈3 standard
-    //      errors at n=1000 — drift or a broken sampler trips it, the
-    //      seed's luck doesn't) ----
-    "q_kendall_approx" -> ((s, d) => {
-      val ev = T(s, d, "events").filter(col("user_id") < 30)
-        .withColumn("tsu", Core.usOf(col("ts")))
-      val exact = Corr.kendallFast(ev, "value", "tsu")
-        .select(col("kendall").as("__e"))
-      val approx = Corr.kendallApprox(ev, "value", "tsu", maxRows = 1000)
-        .select(col("kendall").as("__a"))
-      exact.crossJoin(approx).select(
-        r(col("__e"), 6).as("kendall"),
-        (abs(col("__a") - col("__e")) <= 0.2).as("ok"))
-    }))
-
-  val oracle: Map[String, String] = Map(
-
-    "q_str_ops10" ->
-      """WITH base AS (SELECT p_partkey, p_name,
-           CASE WHEN p_size % 3 = 0 THEN NULL ELSE p_brand END AS holed
-         FROM part),
-         cat AS (SELECT p_partkey, p_name,
-           concat_ws('_', p_name, coalesce(holed, 'NA')) AS cat_na,
-           CASE WHEN holed IS NULL THEN NULL
-                ELSE p_name || '_' || holed END AS cat_null
-         FROM base)
-         SELECT p_partkey, cat_na, cat_null,
-           CAST(generate_subscripts(a1, 1) - 1 AS INTEGER) AS match,
-           unnest(a1) AS g1, unnest(a2) AS g2
-         FROM (SELECT p_partkey, cat_na, cat_null,
-             regexp_extract_all(p_name, '([a-z])([a-z]*)', 1) AS a1,
-             regexp_extract_all(p_name, '([a-z])([a-z]*)', 2) AS a2
-           FROM cat)
-         ORDER BY p_partkey, match""",
-
-    "q_nunique_approx" ->
-      """SELECT count(DISTINCT l_partkey) AS l_partkey_nd,
-           count(DISTINCT l_suppkey) AS l_suppkey_nd,
-           count(DISTINCT l_quantity) AS l_quantity_nd,
-           TRUE AS l_partkey_ok, TRUE AS l_suppkey_ok,
-           TRUE AS l_quantity_ok
-         FROM lineitem""",
-
-    "q_describe_approx" -> {
+    }, {
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount",
         "l_tax")
       val rows = Seq(
@@ -219,9 +190,25 @@ object Queries11 {
           cols.map(c => s"round(${f(c)} + 1e-9,4) AS $c").mkString(", ") +
           ", TRUE AS ok FROM lineitem"
       }.mkString("", " UNION ALL ", " ORDER BY stat")
-    },
+    }),
 
-    "q_kendall_approx" ->
+    // ---- kendall 100 TB sampling mode: deterministic hash-ordered
+    //      sample of 1000 of the ~2000 slice rows. The exact tau rides
+    //      the hash compare (vs the O(n²) SQL pair definition); `ok`
+    //      pins the sampled estimate within 0.2 of exact (≈3 standard
+    //      errors at n=1000 — drift or a broken sampler trips it, the
+    //      seed's luck doesn't) ----
+    Query("q_kendall_approx", (s, d) => {
+      val ev = T(s, d, "events").filter(col("user_id") < 30)
+        .withColumn("tsu", Core.usOf(col("ts")))
+      val exact = Corr.kendallFast(ev, "value", "tsu")
+        .select(col("kendall").as("__e"))
+      val approx = Corr.kendallApprox(ev, "value", "tsu", maxRows = 1000)
+        .select(col("kendall").as("__a"))
+      exact.crossJoin(approx).select(
+        r(col("__e"), 6).as("kendall"),
+        (abs(col("__a") - col("__e")) <= 0.2).as("ok"))
+    },
       """WITH b AS (SELECT value AS x, epoch_us(ts) AS y,
            row_number() OVER (ORDER BY event_id) AS i
            FROM events WHERE user_id < 30),
@@ -233,5 +220,5 @@ object Queries11 {
                 * (count(*) - sum(CASE WHEN y1 = y2 THEN 1 ELSE 0 END)))
            + 1e-9, 6) AS kendall,
            TRUE AS ok
-         FROM p""")
+         FROM p"""))
 }

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine._
 import graft.engine.Core.r
+import graft.Query.T
 
 /** Fourth tranche (round 5): full col×col correlation matrices for all
   * three methods (the last registered-surface gap — reference
@@ -12,13 +12,14 @@ import graft.engine.Core.r
   * Same conventions as [[Queries]]. */
 object Queries4 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Core.normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
-
   /** The 4 numeric lineitem columns every matrix query correlates. */
   private val MatCols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Upper-triangle (i, j) index pairs over [[MatCols]]. */
+  private val Pairs: Seq[(Int, Int)] =
+    for { i <- MatCols.indices; j <- (i + 1) until MatCols.size } yield (i, j)
+
+  val queries: Seq[Query] = Seq(
 
     // ---- §2.6 p_corr(method=…) FULL MATRIX, all three methods.
     //      spearman: ONE batched stats job for all 4 columns (bounded
@@ -28,7 +29,7 @@ object Queries4 {
     //      pair. The frame is a bounded slice (l_partkey < 200, ~6k rows
     //      at every SF) because the ORACLE's pairwise tau is O(n²) —
     //      the engine paths themselves run the scale plans. ----
-    "q_corr_matrix" -> ((s, d) => {
+    Query("q_corr_matrix", (s, d) => {
       val li = T(s, d, "lineitem").filter(col("l_partkey") < 200)
       Corr.corrMatrixAll(li, MatCols, withKendall = true)
         .select(col("c1"), col("c2"),
@@ -36,68 +37,7 @@ object Queries4 {
           r(col("spearman"), 6).as("spearman"),
           r(col("kendall"), 6).as("kendall"))
         .orderBy("c1", "c2")
-    }),
-
-    // ---- the same two-method matrix at FULL scale (no kendall — the
-    //      oracle's pairwise tau is O(n²); pearson+spearman cost one
-    //      probe + one aggregate regardless of row count) ----
-    "q_corr_matrix_full" -> ((s, d) => {
-      Corr.corrMatrixAll(T(s, d, "lineitem"), MatCols)
-        .select(col("c1"), col("c2"),
-          r(col("pearson"), 6).as("pearson"),
-          r(col("spearman"), 6).as("spearman"))
-        .orderBy("c1", "c2")
-    }),
-
-    // ---- §2.6 wide-frame pearson matrix via the NATIVE one-pass
-    //      Gramian aggregate (one O(k²)-state Aggregator instead of
-    //      k²/2 co-moment aggregates or the MLlib RDD detour) — the
-    //      scale path for hundreds of columns, oracled against plain
-    //      corr on the full frame. MLlib variant spec-tested. ----
-    "q_corr_wide" -> ((s, d) => {
-      Corr.pearsonLongGramian(T(s, d, "lineitem"), MatCols)
-        .select(col("c1"), col("c2"), r(col("corr"), 6).as("corr"))
-        .orderBy("c1", "c2")
-    }),
-
-    // ---- §2.6 PAIRWISE-complete corr matrix — pandas df.corr()
-    //      semantics on NaN-laden frames (reference
-    //      parallel_dataframe.py:266-275 and its 10%-NaN fixture
-    //      tests/test_apply_corr.py): each cell masks ITS OWN pair of
-    //      columns, so cells see different row subsets. The frame is
-    //      the q_corr_matrix bounded slice with deterministic hash
-    //      holes punched per column (testdata is null-free); all 6
-    //      pearson cells + pair counts ride ONE aggregate, spearman
-    //      re-ranks inside each pair's mask exactly as pandas does. ----
-    "q_corr_pairwise" -> ((s, d) => {
-      val li = T(s, d, "lineitem").filter(col("l_partkey") < 200)
-      val holed = li.select(
-        when(col("l_orderkey") % 7 =!= 0, col("l_quantity")).as("l_quantity"),
-        when(col("l_orderkey") % 5 =!= 1, col("l_extendedprice")).as("l_extendedprice"),
-        when(col("l_partkey") % 6 =!= 2, col("l_discount")).as("l_discount"),
-        when(col("l_suppkey") % 4 =!= 3, col("l_tax")).as("l_tax"))
-      Corr.corrMatrixPairwise(holed, MatCols)
-        .select(col("c1"), col("c2"),
-          r(col("pearson"), 6).as("pearson"),
-          r(col("spearman"), 6).as("spearman"), col("n"))
-        .orderBy("c1", "c2")
-    }),
-
-    // ---- §2.5 describe() on DATETIME columns (pandas ≥2 shape):
-    //      count/mean/min/quartiles/max over epoch-micros, exact
-    //      integer mean, distributed quantile sort — via the
-    //      describeAuto include= selector. ----
-    "q_describe_dt" -> ((s, d) => {
-      Reductions.describeAuto(T(s, d, "orders"), include = Seq("datetime"))
-    })
-  )
-
-  /** Upper-triangle (i, j) index pairs over [[MatCols]]. */
-  private val Pairs: Seq[(Int, Int)] =
-    for { i <- MatCols.indices; j <- (i + 1) until MatCols.size } yield (i, j)
-
-  val oracle: Map[String, String] = Map(
-    "q_corr_matrix" -> {
+    }, {
       // a0..a3 alias the matrix columns; rank/pearson/spearman are one
       // CTE each, kendall tau-b comes from ONE aggregate over the rid
       // self-join (sign-product sums + per-column tie-pair counts).
@@ -127,18 +67,18 @@ object Queries4 {
           kd AS (SELECT count(*) AS n0, $cd, $ties
                  FROM b2 x JOIN b2 y ON x.rid < y.rid)
           SELECT * FROM ($rows) ORDER BY c1, c2"""
-    },
+    }),
 
-    "q_corr_wide" -> {
-      val rows = Pairs.map { case (i, j) =>
-        s"""SELECT '${MatCols(i)}' AS c1, '${MatCols(j)}' AS c2,
-           round(corr(${MatCols(i)}, ${MatCols(j)}) + 1e-9, 6) AS corr
-           FROM lineitem"""
-      }.mkString(" UNION ALL ")
-      s"SELECT * FROM ($rows) ORDER BY c1, c2"
-    },
-
-    "q_corr_matrix_full" -> {
+    // ---- the same two-method matrix at FULL scale (no kendall — the
+    //      oracle's pairwise tau is O(n²); pearson+spearman cost one
+    //      probe + one aggregate regardless of row count) ----
+    Query("q_corr_matrix_full", (s, d) => {
+      Corr.corrMatrixAll(T(s, d, "lineitem"), MatCols)
+        .select(col("c1"), col("c2"),
+          r(col("pearson"), 6).as("pearson"),
+          r(col("spearman"), 6).as("spearman"))
+        .orderBy("c1", "c2")
+    }, {
       val a = MatCols.indices.map(i => s"a$i")
       val rk = MatCols.indices.map(i =>
         s"rank() OVER (ORDER BY a$i) + (count(*) OVER (PARTITION BY a$i)-1)/2.0 AS r$i")
@@ -157,9 +97,48 @@ object Queries4 {
           pe AS (SELECT $pe FROM base),
           sp AS (SELECT $sp FROM rk)
           SELECT * FROM ($rows) ORDER BY c1, c2"""
-    },
+    }),
 
-    "q_corr_pairwise" -> {
+    // ---- §2.6 wide-frame pearson matrix via the NATIVE one-pass
+    //      Gramian aggregate (one O(k²)-state Aggregator instead of
+    //      k²/2 co-moment aggregates or the MLlib RDD detour) — the
+    //      scale path for hundreds of columns, oracled against plain
+    //      corr on the full frame. MLlib variant spec-tested. ----
+    Query("q_corr_wide", (s, d) => {
+      Corr.pearsonLongGramian(T(s, d, "lineitem"), MatCols)
+        .select(col("c1"), col("c2"), r(col("corr"), 6).as("corr"))
+        .orderBy("c1", "c2")
+    }, {
+      val rows = Pairs.map { case (i, j) =>
+        s"""SELECT '${MatCols(i)}' AS c1, '${MatCols(j)}' AS c2,
+           round(corr(${MatCols(i)}, ${MatCols(j)}) + 1e-9, 6) AS corr
+           FROM lineitem"""
+      }.mkString(" UNION ALL ")
+      s"SELECT * FROM ($rows) ORDER BY c1, c2"
+    }),
+
+    // ---- §2.6 PAIRWISE-complete corr matrix — pandas df.corr()
+    //      semantics on NaN-laden frames (reference
+    //      parallel_dataframe.py:266-275 and its 10%-NaN fixture
+    //      tests/test_apply_corr.py): each cell masks ITS OWN pair of
+    //      columns, so cells see different row subsets. The frame is
+    //      the q_corr_matrix bounded slice with deterministic hash
+    //      holes punched per column (testdata is null-free); all 6
+    //      pearson cells + pair counts ride ONE aggregate, spearman
+    //      re-ranks inside each pair's mask exactly as pandas does. ----
+    Query("q_corr_pairwise", (s, d) => {
+      val li = T(s, d, "lineitem").filter(col("l_partkey") < 200)
+      val holed = li.select(
+        when(col("l_orderkey") % 7 =!= 0, col("l_quantity")).as("l_quantity"),
+        when(col("l_orderkey") % 5 =!= 1, col("l_extendedprice")).as("l_extendedprice"),
+        when(col("l_partkey") % 6 =!= 2, col("l_discount")).as("l_discount"),
+        when(col("l_suppkey") % 4 =!= 3, col("l_tax")).as("l_tax"))
+      Corr.corrMatrixPairwise(holed, MatCols)
+        .select(col("c1"), col("c2"),
+          r(col("pearson"), 6).as("pearson"),
+          r(col("spearman"), 6).as("spearman"), col("n"))
+        .orderBy("c1", "c2")
+    }, {
       // per-pair mask + per-pair re-rank: each UNION ALL branch filters
       // to ITS pair's non-null rows, midranks inside that mask, and
       // aggregates — literally pandas' pairwise deletion.
@@ -180,9 +159,15 @@ object Queries4 {
       }.mkString(" UNION ALL ")
       s"""WITH base AS (SELECT $holes FROM lineitem WHERE l_partkey < 200)
           SELECT * FROM ($rows) ORDER BY c1, c2"""
-    },
+    }),
 
-    "q_describe_dt" ->
+    // ---- §2.5 describe() on DATETIME columns (pandas ≥2 shape):
+    //      count/mean/min/quartiles/max over epoch-micros, exact
+    //      integer mean, distributed quantile sort — via the
+    //      describeAuto include= selector. ----
+    Query("q_describe_dt", (s, d) => {
+      Reductions.describeAuto(T(s, d, "orders"), include = Seq("datetime"))
+    },
       // exact integer mean: HUGEINT sum + half-up integer division,
       // mirroring the engine's decimal-sum arithmetic bit for bit
       """WITH us AS (SELECT epoch_us(o_orderdate) AS u FROM orders),
@@ -199,6 +184,5 @@ object Queries4 {
          UNION ALL SELECT '25%', strftime(make_timestamp(CAST(round(q25) AS BIGINT)), '%Y-%m-%d %H:%M:%S.%f') FROM agg
          UNION ALL SELECT '50%', strftime(make_timestamp(CAST(round(q50) AS BIGINT)), '%Y-%m-%d %H:%M:%S.%f') FROM agg
          UNION ALL SELECT '75%', strftime(make_timestamp(CAST(round(q75) AS BIGINT)), '%Y-%m-%d %H:%M:%S.%f') FROM agg
-         UNION ALL SELECT 'max', strftime(make_timestamp(CAST(round(mx) AS BIGINT)), '%Y-%m-%d %H:%M:%S.%f') FROM agg"""
-  )
+         UNION ALL SELECT 'max', strftime(make_timestamp(CAST(round(mx) AS BIGINT)), '%Y-%m-%d %H:%M:%S.%f') FROM agg"""))
 }

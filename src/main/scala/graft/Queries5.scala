@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine._
 import graft.engine.Core.r
 import graft.pipeline.Similarity
+import graft.Query.T
 
 /** Fifth tranche (round 6): the judge's round-5 fine-print list — str/dt
   * accessor tranche 5 (findall / translate / isalnum / get_dummies /
@@ -15,9 +15,6 @@ import graft.pipeline.Similarity
   * Same conventions as [[Queries]]. */
 object Queries5 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Core.normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
-
   private val byUser = Window.partitionBy("user_id").orderBy("event_id")
 
   /** Same matrix columns as [[Queries4]]'s corr family. */
@@ -25,181 +22,6 @@ object Queries5 {
 
   private val Pairs: Seq[(Int, Int)] =
     for { i <- MatCols.indices; j <- (i + 1) until MatCols.size } yield (i, j)
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- §2.10 str accessor, tranche 5: findall / translate /
-    //      isalnum / get_dummies. get_dummies' one bounded driver
-    //      collect is the data-dependent dummy-schema discovery pandas
-    //      does too; the indicator columns are map-side codegen. ----
-    "q_str_ops5" -> ((s, d) => {
-      val p = T(s, d, "part")
-      val dummies = StrDt.strGetDummies(p, "p_name", " ")
-      p.select(Seq(
-        col("p_partkey"),
-        array_join(StrDt.strFindall(col("p_brand"), "[0-9]+"), ",").as("nums"),
-        StrDt.strTranslate(col("p_type"), "AEO", "aeo").as("tr"),
-        StrDt.strIsAlnum(StrDt.strSplitItem(col("p_brand"), "#", 1)).as("alnum"))
-        ++ dummies: _*)
-        .orderBy("p_partkey")
-    }),
-
-    // ---- §2.10 dt accessor, tranche 5: to_period labels for all five
-    //      supported freqs (pure date arithmetic + format, codegen) ----
-    "q_dt_ops5" -> ((s, d) => {
-      val ts = col("o_orderdate")
-      T(s, d, "orders").select(
-        col("o_orderkey"),
-        StrDt.dtToPeriod(ts, "M").as("per_m"),
-        StrDt.dtToPeriod(ts, "Q").as("per_q"),
-        StrDt.dtToPeriod(ts, "Y").as("per_y"),
-        StrDt.dtToPeriod(ts, "W").as("per_w"))
-        .orderBy("o_orderkey")
-    }),
-
-    // ---- §2.10 str accessor, tranche 6: swapcase / title / istitle /
-    //      isnumeric / match / rfind / cat / lstrip / rstrip — all
-    //      codegen over the scan ----
-    "q_str_ops6" -> ((s, d) => {
-      val p = T(s, d, "part")
-      val padded = concat(lit("  "), col("p_name"), lit("  "))
-      p.select(
-        col("p_partkey"),
-        StrDt.strSwapcase(col("p_name")).as("sw"),
-        StrDt.strTitle(col("p_name")).as("ti"),
-        StrDt.strIsTitle(col("p_name")).as("ist"),
-        StrDt.strIsNumeric(StrDt.strSplitItem(col("p_brand"), "#", 1))
-          .as("isnum"),
-        StrDt.strMatch(col("p_type"), "PRO").as("m"),
-        StrDt.strRfind(col("p_name"), "e").as("rf"),
-        StrDt.strCat(col("p_brand"), col("p_type"), "|").as("cat"),
-        StrDt.strLstrip(padded).as("ls"),
-        StrDt.strRstrip(padded).as("rs"))
-        .orderBy("p_partkey")
-    }),
-
-    // ---- §2.10 dt accessor, tranche 6: round (half-to-even, exact
-    //      integer micros), month_name, second/microsecond, tz convert
-    //      + localize on a fixed-offset zone (DST-table-free, so both
-    //      engines agree) ----
-    "q_dt_ops6" -> ((s, d) => {
-      val ts = col("ts")
-      T(s, d, "events").select(
-        col("event_id"),
-        StrDt.dtRound(ts, 3600).as("rh"),
-        StrDt.dtRound(ts, 60).as("rm"),
-        StrDt.dtMonthName(ts).as("mn"),
-        StrDt.dtSecond(ts).as("sec"),
-        StrDt.dtMicrosecond(ts).as("us"),
-        StrDt.dtTzConvert(ts, "UTC+05:30").as("tzc"),
-        StrDt.dtTzLocalize(ts, "UTC+05:30").as("tzl"))
-        .orderBy("event_id")
-    }),
-
-    // ---- §2.6 PAIRWISE-complete kendall matrix — completes the
-    //      pairwise family (q_corr_pairwise covers pearson+spearman):
-    //      pandas df.corr(method='kendall') on NaN-laden frames. Same
-    //      bounded slice + deterministic holes; ONE bounded collect,
-    //      each cell compacts its own pair mask before Knight's
-    //      O(n log n) tau on the driver pool. ----
-    "q_kendall_pairwise" -> ((s, d) => {
-      val li = T(s, d, "lineitem").filter(col("l_partkey") < 200)
-      val holed = li.select(
-        when(col("l_orderkey") % 7 =!= 0, col("l_quantity")).as("l_quantity"),
-        when(col("l_orderkey") % 5 =!= 1, col("l_extendedprice")).as("l_extendedprice"),
-        when(col("l_partkey") % 6 =!= 2, col("l_discount")).as("l_discount"),
-        when(col("l_suppkey") % 4 =!= 3, col("l_tax")).as("l_tax"))
-      Corr.kendallMatrixPairwise(holed, MatCols)
-        .select(col("c1"), col("c2"),
-          r(col("kendall"), 6).as("kendall"), col("n"))
-        .orderBy("c1", "c2")
-    }),
-
-    // ---- fill family: ffill(limit)/bfill(limit) are single bounded-
-    //      frame window exprs; interpolate('linear') is two stacked
-    //      selects over ONE user_id shuffle (row index can't nest
-    //      inside another window expr). Deterministic holes again. ----
-    "q_fill_interp" -> ((s, d) => {
-      val holed = when(col("event_id") % 4 =!= 1, col("value"))
-      val ev = T(s, d, "events")
-        .select(col("event_id"), col("user_id"), holed.as("v"))
-      Fill.interpolate(ev, "v", "vi", byUser)
-        .select(col("event_id"), col("user_id"),
-          r(Fill.ffill(col("v"), byUser, Some(1)), 6).as("ff"),
-          r(Fill.bfill(col("v"), byUser, Some(2)), 6).as("bf"),
-          r(col("vi"), 6).as("vi"))
-        .orderBy("user_id", "event_id")
-    }),
-
-    // ---- resample('M').agg(...): one map-side-combinable hash
-    //      aggregate on the period label; gap periods ride a generated
-    //      calendar spine joined broadcast (bucket-sized both sides,
-    //      the corpus shuffles exactly once) ----
-    "q_resample" -> ((s, d) => {
-      Resample.resampleAgg(T(s, d, "events"), "ts", "M",
-        Seq(("value", "sum"), ("value", "mean"), ("value", "count")))
-        .select(col("period"),
-          r(col("value_sum"), 6).as("value_sum"),
-          r(col("value_mean"), 6).as("value_mean"),
-          col("value_count"))
-    }),
-
-    // ---- product-quantized ANN (ADC): the compressed scale path —
-    //      codes are m small ints per vector (64x smaller than the
-    //      float vectors), encode is zero-shuffle literal-centroid
-    //      argmin, scoring reads ONLY (id, codes). Codebooks are
-    //      PINNED to sub-slices of vec_id<16 so the oracle can
-    //      replicate them verbatim (the Lloyd trainer itself is
-    //      oracled by q_kmeans and spec-tested for PQ). ----
-    "q_pq_topk" -> ((s, d) => {
-      val emb = T(s, d, "embeddings")
-      val src = emb.filter(col("vec_id") < 16).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0).toArray)
-      val books = Array.tabulate(4)(sub =>
-        src.map(v => v.slice(sub * 16, sub * 16 + 16)))
-      val codes = Similarity.pqEncode(emb, "vec_id", "embedding", books)
-      Similarity.pqTopK(emb.filter(col("vec_id") < 10), codes, books, 5)
-        .select(col("query_id"), col("neighbor_id"),
-          r(col("dist"), 6).as("dist"), col("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- measured recall@5 of the PQ path vs the exact-L2 baseline —
-    //      the approximation is a FIRST-CLASS measured output, same
-    //      gate shape as q_ann_ivf_recall. Values are modest (~0.2-0.8
-    //      per query at sf0.01) BECAUSE the codebooks are pinned
-    //      untrained for oracle-ability; the trained path's quality is
-    //      spec-asserted (PipelineSpec blob precision). ----
-    "q_pq_recall" -> ((s, d) => {
-      val emb = T(s, d, "embeddings")
-      val src = emb.filter(col("vec_id") < 16).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0).toArray)
-      val books = Array.tabulate(4)(sub =>
-        src.map(v => v.slice(sub * 16, sub * 16 + 16)))
-      val codes = Similarity.pqEncode(emb, "vec_id", "embedding", books)
-      val q = emb.filter(col("vec_id") < 10)
-      Similarity.recallAtK(
-          Similarity.pqTopK(q, codes, books, 5),
-          Similarity.bruteForceTopKL2(q, emb, 5), 5)
-        .select(col("query_id"), r(col("recall"), 6).as("recall"))
-        .orderBy("query_id")
-    }),
-
-    // ---- §2.7 pct_change(fill_method='pad', limit=1) — the pad stops
-    //      propagating after `limit` consecutive nulls (a BOUNDED
-    //      trailing frame, so state stays bounded at any scale). Holes
-    //      are punched deterministically (testdata is null-free). ----
-    "q_pct_change_limit" -> ((s, d) => {
-      val holed = when(col("event_id") % 4 =!= 1, col("value"))
-      T(s, d, "events").select(
-        col("event_id"), col("user_id"),
-        r(Cumulative.pctChange(holed, byUser, limit = Some(1)), 6)
-          .as("pct_change"))
-        .orderBy("user_id", "event_id")
-    })
-  )
 
   /** PQ encode + ADC scoring in SQL, mirroring q_pq_topk's pinned
     * codebooks (sub-slices of vec_id<16, m=4, w=16). enc0's argmin
@@ -253,8 +75,23 @@ object Queries5 {
     "anvil", "blue", "bolt", "cold", "gear", "gizmo", "hot", "large",
     "new", "old", "plate", "red", "ring", "rod", "small", "widget")
 
-  val oracle: Map[String, String] = Map(
-    "q_str_ops5" -> {
+  val queries: Seq[Query] = Seq(
+
+    // ---- §2.10 str accessor, tranche 5: findall / translate /
+    //      isalnum / get_dummies. get_dummies' one bounded driver
+    //      collect is the data-dependent dummy-schema discovery pandas
+    //      does too; the indicator columns are map-side codegen. ----
+    Query("q_str_ops5", (s, d) => {
+      val p = T(s, d, "part")
+      val dummies = StrDt.strGetDummies(p, "p_name", " ")
+      p.select(Seq(
+        col("p_partkey"),
+        array_join(StrDt.strFindall(col("p_brand"), "[0-9]+"), ",").as("nums"),
+        StrDt.strTranslate(col("p_type"), "AEO", "aeo").as("tr"),
+        StrDt.strIsAlnum(StrDt.strSplitItem(col("p_brand"), "#", 1)).as("alnum"))
+        ++ dummies: _*)
+        .orderBy("p_partkey")
+    }, {
       val dummies = NameTokens.map(t =>
         s"CASE WHEN list_contains(string_split(p_name, ' '), '$t') THEN 1 ELSE 0 END AS $t")
         .mkString(", ")
@@ -264,18 +101,48 @@ object Queries5 {
          regexp_full_match(split_part(p_brand, '#', 2), '[A-Za-z0-9]+') AS alnum,
          $dummies
          FROM part ORDER BY p_partkey"""
-    },
+    }),
 
-    "q_dt_ops5" ->
+    // ---- §2.10 dt accessor, tranche 5: to_period labels for all five
+    //      supported freqs (pure date arithmetic + format, codegen) ----
+    Query("q_dt_ops5", (s, d) => {
+      val ts = col("o_orderdate")
+      T(s, d, "orders").select(
+        col("o_orderkey"),
+        StrDt.dtToPeriod(ts, "M").as("per_m"),
+        StrDt.dtToPeriod(ts, "Q").as("per_q"),
+        StrDt.dtToPeriod(ts, "Y").as("per_y"),
+        StrDt.dtToPeriod(ts, "W").as("per_w"))
+        .orderBy("o_orderkey")
+    },
       """SELECT o_orderkey,
          strftime(o_orderdate, '%Y-%m') AS per_m,
          year(o_orderdate) || 'Q' || quarter(o_orderdate) AS per_q,
          strftime(o_orderdate, '%Y') AS per_y,
          strftime(date_trunc('week', o_orderdate), '%Y-%m-%d') || '/' ||
            strftime(date_trunc('week', o_orderdate) + INTERVAL 6 DAY, '%Y-%m-%d') AS per_w
-         FROM orders ORDER BY o_orderkey""",
+         FROM orders ORDER BY o_orderkey"""),
 
-    "q_str_ops6" -> {
+    // ---- §2.10 str accessor, tranche 6: swapcase / title / istitle /
+    //      isnumeric / match / rfind / cat / lstrip / rstrip — all
+    //      codegen over the scan ----
+    Query("q_str_ops6", (s, d) => {
+      val p = T(s, d, "part")
+      val padded = concat(lit("  "), col("p_name"), lit("  "))
+      p.select(
+        col("p_partkey"),
+        StrDt.strSwapcase(col("p_name")).as("sw"),
+        StrDt.strTitle(col("p_name")).as("ti"),
+        StrDt.strIsTitle(col("p_name")).as("ist"),
+        StrDt.strIsNumeric(StrDt.strSplitItem(col("p_brand"), "#", 1))
+          .as("isnum"),
+        StrDt.strMatch(col("p_type"), "PRO").as("m"),
+        StrDt.strRfind(col("p_name"), "e").as("rf"),
+        StrDt.strCat(col("p_brand"), col("p_type"), "|").as("cat"),
+        StrDt.strLstrip(padded).as("ls"),
+        StrDt.strRstrip(padded).as("rs"))
+        .orderBy("p_partkey")
+    }, {
       // whitespace-word title-case, mirroring initcap: first char
       // uppered, rest lowered, per space-split token
       val title = "array_to_string(list_transform(string_split(p_name, ' '), " +
@@ -295,9 +162,25 @@ object Queries5 {
          ltrim('  ' || p_name || '  ') AS ls,
          rtrim('  ' || p_name || '  ') AS rs
          FROM part ORDER BY p_partkey"""
-    },
+    }),
 
-    "q_dt_ops6" -> {
+    // ---- §2.10 dt accessor, tranche 6: round (half-to-even, exact
+    //      integer micros), month_name, second/microsecond, tz convert
+    //      + localize on a fixed-offset zone (DST-table-free, so both
+    //      engines agree) ----
+    Query("q_dt_ops6", (s, d) => {
+      val ts = col("ts")
+      T(s, d, "events").select(
+        col("event_id"),
+        StrDt.dtRound(ts, 3600).as("rh"),
+        StrDt.dtRound(ts, 60).as("rm"),
+        StrDt.dtMonthName(ts).as("mn"),
+        StrDt.dtSecond(ts).as("sec"),
+        StrDt.dtMicrosecond(ts).as("us"),
+        StrDt.dtTzConvert(ts, "UTC+05:30").as("tzc"),
+        StrDt.dtTzLocalize(ts, "UTC+05:30").as("tzl"))
+        .orderBy("event_id")
+    }, {
       // round-half-to-even on the bucket index, exact integer micros —
       // mirrors StrDt.dtRound
       def rnd(unitUs: Long, out: String) =
@@ -321,9 +204,26 @@ object Queries5 {
          ts::TIMESTAMP + INTERVAL 330 MINUTE AS tzc,
          ts::TIMESTAMP - INTERVAL 330 MINUTE AS tzl
          FROM events ORDER BY event_id"""
-    },
+    }),
 
-    "q_kendall_pairwise" -> {
+    // ---- §2.6 PAIRWISE-complete kendall matrix — completes the
+    //      pairwise family (q_corr_pairwise covers pearson+spearman):
+    //      pandas df.corr(method='kendall') on NaN-laden frames. Same
+    //      bounded slice + deterministic holes; ONE bounded collect,
+    //      each cell compacts its own pair mask before Knight's
+    //      O(n log n) tau on the driver pool. ----
+    Query("q_kendall_pairwise", (s, d) => {
+      val li = T(s, d, "lineitem").filter(col("l_partkey") < 200)
+      val holed = li.select(
+        when(col("l_orderkey") % 7 =!= 0, col("l_quantity")).as("l_quantity"),
+        when(col("l_orderkey") % 5 =!= 1, col("l_extendedprice")).as("l_extendedprice"),
+        when(col("l_partkey") % 6 =!= 2, col("l_discount")).as("l_discount"),
+        when(col("l_suppkey") % 4 =!= 3, col("l_tax")).as("l_tax"))
+      Corr.kendallMatrixPairwise(holed, MatCols)
+        .select(col("c1"), col("c2"),
+          r(col("kendall"), 6).as("kendall"), col("n"))
+        .orderBy("c1", "c2")
+    }, {
       // per-pair mask -> rid -> one self-join aggregate per pair
       // (sign-product sum + per-column tie-pair counts = tau-b).
       val holes = Seq(
@@ -350,9 +250,23 @@ object Queries5 {
       s"""WITH base AS (SELECT $holes FROM lineitem WHERE l_partkey < 200),
           $ctes
           SELECT * FROM ($rows) ORDER BY c1, c2"""
-    },
+    }),
 
-    "q_fill_interp" ->
+    // ---- fill family: ffill(limit)/bfill(limit) are single bounded-
+    //      frame window exprs; interpolate('linear') is two stacked
+    //      selects over ONE user_id shuffle (row index can't nest
+    //      inside another window expr). Deterministic holes again. ----
+    Query("q_fill_interp", (s, d) => {
+      val holed = when(col("event_id") % 4 =!= 1, col("value"))
+      val ev = T(s, d, "events")
+        .select(col("event_id"), col("user_id"), holed.as("v"))
+      Fill.interpolate(ev, "v", "vi", byUser)
+        .select(col("event_id"), col("user_id"),
+          r(Fill.ffill(col("v"), byUser, Some(1)), 6).as("ff"),
+          r(Fill.bfill(col("v"), byUser, Some(2)), 6).as("bf"),
+          r(col("vi"), 6).as("vi"))
+        .orderBy("user_id", "event_id")
+    },
       """WITH holed AS (
            SELECT event_id, user_id,
              CASE WHEN event_id % 4 <> 1 THEN value END AS v
@@ -388,9 +302,20 @@ object Queries5 {
                       WHEN nv IS NULL THEN pv
                       ELSE pv + (nv - pv) * (rn - pi) / (ni - pi)
                  END + 1e-9, 6) AS vi
-         FROM s2 ORDER BY user_id, event_id""",
+         FROM s2 ORDER BY user_id, event_id"""),
 
-    "q_resample" ->
+    // ---- resample('M').agg(...): one map-side-combinable hash
+    //      aggregate on the period label; gap periods ride a generated
+    //      calendar spine joined broadcast (bucket-sized both sides,
+    //      the corpus shuffles exactly once) ----
+    Query("q_resample", (s, d) => {
+      Resample.resampleAgg(T(s, d, "events"), "ts", "M",
+        Seq(("value", "sum"), ("value", "mean"), ("value", "count")))
+        .select(col("period"),
+          r(col("value_sum"), 6).as("value_sum"),
+          r(col("value_mean"), 6).as("value_mean"),
+          col("value_count"))
+    },
       """WITH agg AS (
            SELECT strftime(ts, '%Y-%m') AS period,
              sum(value) AS s, avg(value) AS m, count(value) AS c
@@ -405,15 +330,54 @@ object Queries5 {
            round(coalesce(s, 0) + 1e-9, 6) AS value_sum,
            round(m + 1e-9, 6) AS value_mean,
            coalesce(c, 0) AS value_count
-         FROM spine LEFT JOIN agg USING (period) ORDER BY period""",
+         FROM spine LEFT JOIN agg USING (period) ORDER BY period"""),
 
-    "q_pq_topk" ->
+    // ---- product-quantized ANN (ADC): the compressed scale path —
+    //      codes are m small ints per vector (64x smaller than the
+    //      float vectors), encode is zero-shuffle literal-centroid
+    //      argmin, scoring reads ONLY (id, codes). Codebooks are
+    //      PINNED to sub-slices of vec_id<16 so the oracle can
+    //      replicate them verbatim (the Lloyd trainer itself is
+    //      oracled by q_kmeans and spec-tested for PQ). ----
+    Query("q_pq_topk", (s, d) => {
+      val emb = T(s, d, "embeddings")
+      val src = emb.filter(col("vec_id") < 16).orderBy("vec_id")
+        .select(col("embedding").cast("array<double>")).collect()
+        .map(_.getSeq[Double](0).toArray)
+      val books = Array.tabulate(4)(sub =>
+        src.map(v => v.slice(sub * 16, sub * 16 + 16)))
+      val codes = Similarity.pqEncode(emb, "vec_id", "embedding", books)
+      Similarity.pqTopK(emb.filter(col("vec_id") < 10), codes, books, 5)
+        .select(col("query_id"), col("neighbor_id"),
+          r(col("dist"), 6).as("dist"), col("rank"))
+        .orderBy("query_id", "rank")
+    },
       s"""WITH $PqCte
          SELECT qid AS query_id, id AS neighbor_id,
            round(dist + 1e-9, 6) AS dist, rank
-         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
+         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""),
 
-    "q_pq_recall" ->
+    // ---- measured recall@5 of the PQ path vs the exact-L2 baseline —
+    //      the approximation is a FIRST-CLASS measured output, same
+    //      gate shape as q_ann_ivf_recall. Values are modest (~0.2-0.8
+    //      per query at sf0.01) BECAUSE the codebooks are pinned
+    //      untrained for oracle-ability; the trained path's quality is
+    //      spec-asserted (PipelineSpec blob precision). ----
+    Query("q_pq_recall", (s, d) => {
+      val emb = T(s, d, "embeddings")
+      val src = emb.filter(col("vec_id") < 16).orderBy("vec_id")
+        .select(col("embedding").cast("array<double>")).collect()
+        .map(_.getSeq[Double](0).toArray)
+      val books = Array.tabulate(4)(sub =>
+        src.map(v => v.slice(sub * 16, sub * 16 + 16)))
+      val codes = Similarity.pqEncode(emb, "vec_id", "embedding", books)
+      val q = emb.filter(col("vec_id") < 10)
+      Similarity.recallAtK(
+          Similarity.pqTopK(q, codes, books, 5),
+          Similarity.bruteForceTopKL2(q, emb, 5), 5)
+        .select(col("query_id"), r(col("recall"), 6).as("recall"))
+        .orderBy("query_id")
+    },
       // measured approximation quality of the compressed path vs the
       // exact-L2 baseline (same gate shape as q_ann_ivf_recall)
       s"""WITH $PqCte,
@@ -431,9 +395,20 @@ object Queries5 {
                   GROUP BY 1)
          SELECT b.qid AS query_id, round(coalesce(h, 0) / 5.0 + 1e-9, 6) AS recall
          FROM (SELECT DISTINCT qid FROM bf) b
-         LEFT JOIN hits USING (qid) ORDER BY query_id""",
+         LEFT JOIN hits USING (qid) ORDER BY query_id"""),
 
-    "q_pct_change_limit" ->
+    // ---- §2.7 pct_change(fill_method='pad', limit=1) — the pad stops
+    //      propagating after `limit` consecutive nulls (a BOUNDED
+    //      trailing frame, so state stays bounded at any scale). Holes
+    //      are punched deterministically (testdata is null-free). ----
+    Query("q_pct_change_limit", (s, d) => {
+      val holed = when(col("event_id") % 4 =!= 1, col("value"))
+      T(s, d, "events").select(
+        col("event_id"), col("user_id"),
+        r(Cumulative.pctChange(holed, byUser, limit = Some(1)), 6)
+          .as("pct_change"))
+        .orderBy("user_id", "event_id")
+    },
       """WITH holed AS (
            SELECT event_id, user_id,
              CASE WHEN event_id % 4 <> 1 THEN value END AS v
@@ -447,6 +422,5 @@ object Queries5 {
          SELECT event_id, user_id,
            round(f / lag(f, 1) OVER (PARTITION BY user_id ORDER BY event_id)
                  - 1 + 1e-9, 6) AS pct_change
-         FROM filled ORDER BY user_id, event_id"""
-  )
+         FROM filled ORDER BY user_id, event_id"""))
 }

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine._
 import graft.engine.Core.r
+import graft.Query.T
 
 /** Sixth tranche (round 6, second batch): the pandas-core reshaping /
   * binning / positional family ([[graft.engine.Reshape]]) — melt,
@@ -11,81 +11,48 @@ import graft.engine.Core.r
   * Same conventions as [[Queries]]. */
 object Queries6 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Core.normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
 
     // ---- melt: wide -> long, a stack Generate over the scan (zero
     //      shuffle; the plan never materializes the wide frame) ----
-    "q_melt" -> ((s, d) => {
+    Query("q_melt", (s, d) => {
       Reshape.melt(T(s, d, "part"), Seq("p_partkey"),
           Seq("p_size", "p_retailprice"))
         .select(col("p_partkey"), col("variable"),
           r(col("value"), 6).as("value"))
         .orderBy("p_partkey", "variable")
-    }),
-
-    // ---- crosstab: bounded distinct collect discovers the column
-    //      set (pandas does the same), then ONE hash aggregate ----
-    "q_crosstab" -> ((s, d) => {
-      Reshape.crosstab(T(s, d, "lineitem"), "l_returnflag", "l_linestatus")
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- cut (static edges, pure codegen when-chain) + qcut (ONE
-    //      exact-quantile probe, then the same chain) ----
-    "q_cut_qcut" -> ((s, d) => {
-      val li = T(s, d, "lineitem")
-      Reshape.qcut(li, "l_extendedprice", 4, out = "qc")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          Reshape.cut(col("l_quantity"), Seq(0.0, 10.0, 25.0, 50.0)).as("c"),
-          col("qc"))
-        .orderBy("l_orderkey", "l_linenumber", "c", "qc")
-    }),
-
-    // ---- drop_duplicates(subset, keep='first') under an explicit
-    //      deterministic order — one window shuffle on the subset ----
-    "q_drop_dup" -> ((s, d) => {
-      val ev = T(s, d, "events")
-        .select("event_id", "user_id", "event_type", "value")
-      Reshape.dropDuplicates(ev, Seq("user_id", "event_type"), "event_id")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          r(col("value"), 6).as("value"))
-        .orderBy("event_id")
-    }),
-
-    // ---- groupby positional: head(3) per group (WindowGroupLimit
-    //      bounds state) + cumcount ----
-    "q_groupby_pos" -> ((s, d) => {
-      val ev = T(s, d, "events").select("event_id", "user_id", "value")
-      Reshape.headPerGroup(ev, Seq("user_id"), "event_id", 3)
-        .withColumn("cc", Reshape.cumcount(Seq("user_id"), "event_id"))
-        .select(col("event_id"), col("user_id"),
-          r(col("value"), 6).as("value"), col("cc"))
-        .orderBy("user_id", "event_id")
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_melt" ->
+    },
       """SELECT * FROM (
            SELECT p_partkey, 'p_size' AS variable,
              round(CAST(p_size AS DOUBLE) + 1e-9, 6) AS value FROM part
            UNION ALL
            SELECT p_partkey, 'p_retailprice',
              round(p_retailprice + 1e-9, 6) FROM part)
-         ORDER BY p_partkey, variable""",
+         ORDER BY p_partkey, variable"""),
 
-    "q_crosstab" ->
+    // ---- crosstab: bounded distinct collect discovers the column
+    //      set (pandas does the same), then ONE hash aggregate ----
+    Query("q_crosstab", (s, d) => {
+      Reshape.crosstab(T(s, d, "lineitem"), "l_returnflag", "l_linestatus")
+        .orderBy("l_returnflag")
+    },
       // count FILTER, not sum(CASE): DuckDB's sum yields HUGEINT,
       // which pandas reads as float64 and the dtype check rejects
       """SELECT l_returnflag,
          count(*) FILTER (WHERE l_linestatus = 'F') AS F,
          count(*) FILTER (WHERE l_linestatus = 'O') AS O
-         FROM lineitem GROUP BY 1 ORDER BY l_returnflag""",
+         FROM lineitem GROUP BY 1 ORDER BY l_returnflag"""),
 
-    "q_cut_qcut" ->
+    // ---- cut (static edges, pure codegen when-chain) + qcut (ONE
+    //      exact-quantile probe, then the same chain) ----
+    Query("q_cut_qcut", (s, d) => {
+      val li = T(s, d, "lineitem")
+      Reshape.qcut(li, "l_extendedprice", 4, out = "qc")
+        .select(col("l_orderkey"), col("l_linenumber"),
+          Reshape.cut(col("l_quantity"), Seq(0.0, 10.0, 25.0, 50.0)).as("c"),
+          col("qc"))
+        .orderBy("l_orderkey", "l_linenumber", "c", "qc")
+    },
       // qcut edges: exact quantiles rounded to 6 decimals (both
       // engines' interpolation can differ by an ulp); (lo, hi]
       // buckets, lowest edge included — mirrors Reshape.cut/qcut
@@ -106,21 +73,39 @@ object Queries6 {
                 WHEN l_extendedprice > e3 AND l_extendedprice <= e4 THEN 3
            END AS qc
          FROM lineitem, e
-         ORDER BY l_orderkey, l_linenumber, c, qc""",
+         ORDER BY l_orderkey, l_linenumber, c, qc"""),
 
-    "q_drop_dup" ->
+    // ---- drop_duplicates(subset, keep='first') under an explicit
+    //      deterministic order — one window shuffle on the subset ----
+    Query("q_drop_dup", (s, d) => {
+      val ev = T(s, d, "events")
+        .select("event_id", "user_id", "event_type", "value")
+      Reshape.dropDuplicates(ev, Seq("user_id", "event_type"), "event_id")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          r(col("value"), 6).as("value"))
+        .orderBy("event_id")
+    },
       """SELECT event_id, user_id, event_type,
          round(value + 1e-9, 6) AS value
          FROM (SELECT *, row_number() OVER
                  (PARTITION BY user_id, event_type ORDER BY event_id) AS rn
                FROM events)
-         WHERE rn = 1 ORDER BY event_id""",
+         WHERE rn = 1 ORDER BY event_id"""),
 
-    "q_groupby_pos" ->
+    // ---- groupby positional: head(3) per group (WindowGroupLimit
+    //      bounds state) + cumcount ----
+    Query("q_groupby_pos", (s, d) => {
+      val ev = T(s, d, "events").select("event_id", "user_id", "value")
+      Reshape.headPerGroup(ev, Seq("user_id"), "event_id", 3)
+        .withColumn("cc", Reshape.cumcount(Seq("user_id"), "event_id"))
+        .select(col("event_id"), col("user_id"),
+          r(col("value"), 6).as("value"), col("cc"))
+        .orderBy("user_id", "event_id")
+    },
       """SELECT event_id, user_id, round(value + 1e-9, 6) AS value,
          rn - 1 AS cc
          FROM (SELECT event_id, user_id, value, row_number() OVER
                  (PARTITION BY user_id ORDER BY event_id) AS rn
                FROM events)
-         WHERE rn <= 3 ORDER BY user_id, event_id""")
+         WHERE rn <= 3 ORDER BY user_id, event_id"""))
 }

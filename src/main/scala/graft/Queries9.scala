@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine._
 import graft.engine.Core.r
 import graft.pipeline.{Curation, Dedup, Similarity, TextAnalysis}
+import graft.Query.T
 
 /** Ninth tranche (round 8):
   *   - the pairwise-covariance family the reference's generic window
@@ -19,218 +20,12 @@ import graft.pipeline.{Curation, Dedup, Similarity, TextAnalysis}
   * Same conventions as [[Queries]]. */
 object Queries9 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Core.normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
-
   private val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
   private val evWin = "PARTITION BY user_id ORDER BY ts, event_id"
 
   // second series for the pairwise ops: a deterministic per-row rescale
   // of `value` — varying multiplier keeps corr strictly inside (0, 1)
   private val yExpr = "value * (event_id % 5 + 1)"
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- §2.9 rolling.cov / rolling.corr / expanding.cov: builtin
-    //      covar_samp/corr as frame aggregates — one window shuffle for
-    //      all three, WholeStageCodegen'd co-moment updates, pairwise
-    //      min_periods gates ----
-    "q_rolling_covcorr" -> ((s, d) => {
-      val w10 = WindowOps.rollingSpec(byUser, 10)
-      val we = WindowOps.expandingSpec(byUser)
-      T(s, d, "events")
-        .withColumn("y", expr(yExpr))
-        .select(col("event_id"), col("user_id"),
-          r(WindowOps.rCov(col("value"), col("y"), w10, 10), 2)
-            .as("roll_cov"),
-          r(WindowOps.rCorr(col("value"), col("y"), w10, 10), 4)
-            .as("roll_corr"),
-          r(WindowOps.rCov(col("value"), col("y"), we, 2), 2)
-            .as("exp_cov"))
-        .orderBy("user_id", "event_id")
-    }),
-
-    // ---- rolling(window, step=k): step is a row-number FILTER in the
-    //      same WindowExec pass — no extra shuffle ----
-    "q_rolling_step" -> ((s, d) => {
-      val w5 = WindowOps.rollingSpec(byUser, 5)
-      T(s, d, "events").select(col("event_id"), col("user_id"),
-          r(WindowOps.rMean(col("value"), w5, 5), 4).as("roll_mean"),
-          r(WindowOps.rSum(col("value"), w5, 1), 4).as("roll_sum"),
-          WindowOps.stepKeep(byUser, 3).as("__keep"))
-        .filter(col("__keep")).drop("__keep")
-        .orderBy("user_id", "event_id")
-    }),
-
-    // ---- DataFrame.cov matrix (upper triangle + variance diagonal):
-    //      ONE aggregate pass, all co-moments map-side combinable ----
-    "q_cov_matrix" -> ((s, d) => {
-      Corr.covLong(T(s, d, "lineitem"),
-          Seq("l_quantity", "l_discount", "l_tax"))
-        .select(col("c1"), col("c2"), r(col("cov"), 6).as("cov"))
-        .orderBy("c1", "c2")
-    }),
-
-    // ---- IVF-PQ combined ANN (FAISS IVFPQ shape): coarse cells bound
-    //      candidates (ONE cell-keyed equi-join, ~corpus*nprobe/nlist
-    //      per query, NO corpus broadcast), residual PQ codes bound
-    //      bytes per candidate. Cells pinned to vec_id<8, codebooks to
-    //      sub-slices of vec_id in [16,32) so the oracle replicates
-    //      both verbatim (trained-path quality is spec-gated). ----
-    "q_ivfpq_topk" -> ((s, d) => {
-      val emb = T(s, d, "embeddings")
-      val (cells, books) = ivfPqTables(emb)
-      Similarity.ivfPqTopK(emb.filter(col("vec_id") < 10), emb,
-          cells, books, k = 5, nprobe = 2)
-        .select(col("query_id"), col("neighbor_id"),
-          r(col("dist"), 6).as("dist"), col("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- measured recall@5 of the IVF-PQ path vs exact L2 — the
-    //      coarse-probe miss rate is a first-class measured output ----
-    "q_ivfpq_recall" -> ((s, d) => {
-      val emb = T(s, d, "embeddings")
-      val (cells, books) = ivfPqTables(emb)
-      val q = emb.filter(col("vec_id") < 10)
-      Similarity.recallAtK(
-          Similarity.ivfPqTopK(q, emb, cells, books, k = 5, nprobe = 2),
-          Similarity.bruteForceTopKL2(q, emb, 5), 5)
-        .select(col("query_id"), r(col("recall"), 6).as("recall"))
-        .orderBy("query_id")
-    }),
-
-    // ---- semantic decontamination: map-side max-cosine of every
-    //      corpus vector against the literal benchmark matrix (native
-    //      dot kernel), ZERO shuffle — the embedding-space complement
-    //      of the k-gram q_decontam ----
-    "q_semantic_decontam" -> ((s, d) => {
-      val emb = T(s, d, "embeddings")
-      Similarity.semanticDecontaminate(
-          emb.filter(col("vec_id") >= 16),
-          emb.filter(col("vec_id") < 16), threshold = 0.4)
-        .select(col("id"), r(col("max_cos"), 6).as("max_cos"),
-          col("contaminated"))
-        .orderBy("id")
-    }),
-
-    // ---- pandas groupby.corr(): per-group correlation matrix, ONE
-    //      grouped aggregate for all cells (pearson) / group-windowed
-    //      midranks feeding the same aggregate (spearman) ----
-    "q_groupby_corr" -> ((s, d) => {
-      Corr.corrMatrixBy(T(s, d, "lineitem"), "l_returnflag",
-          Seq("l_quantity", "l_extendedprice", "l_discount"))
-        .select(col("l_returnflag"), col("c1"), col("c2"),
-          r(col("corr"), 6).as("corr"))
-        .orderBy("l_returnflag", "c1", "c2")
-    }),
-
-    "q_groupby_cov" -> ((s, d) => {
-      Corr.covMatrixBy(T(s, d, "lineitem"), "l_returnflag",
-          Seq("l_quantity", "l_discount", "l_tax"))
-        .select(col("l_returnflag"), col("c1"), col("c2"),
-          r(col("cov"), 6).as("cov"))
-        .orderBy("l_returnflag", "c1", "c2")
-    }),
-
-    "q_groupby_corr_spearman" -> ((s, d) => {
-      Corr.corrMatrixBy(T(s, d, "lineitem"), "l_returnflag",
-          Seq("l_quantity", "l_extendedprice", "l_discount"), "spearman")
-        .select(col("l_returnflag"), col("c1"), col("c2"),
-          r(col("corr"), 6).as("corr"))
-        .orderBy("l_returnflag", "c1", "c2")
-    }),
-
-    // ---- BPE tokenizer training (Sennrich'16): per merge, ONE
-    //      map-side pair explode + ONE combinable hash aggregate + a
-    //      1-row argmax collect (the merge rule IS the model); the
-    //      tokenized corpus persists between rounds ----
-    "q_bpe_train" -> ((s, d) => {
-      TextAnalysis.bpeTrain(T(s, d, "documents"), "doc_id", "text", 6)
-        .orderBy("merge_idx")
-    }),
-
-    // ---- applying the learned merges is a zero-shuffle chain of
-    //      literal replacements; per-doc token counts under the
-    //      trained vocab ----
-    "q_bpe_apply" -> ((s, d) => {
-      val m = TextAnalysis.bpeTrain(T(s, d, "documents"), "doc_id",
-          "text", 6)
-        .orderBy("merge_idx").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      TextAnalysis.bpeApply(T(s, d, "documents"), "doc_id", "text", m)
-        .orderBy("doc_id")
-    }),
-
-    // ---- §2.3 cumsum/cummax(axis=1): running accumulation ACROSS
-    //      columns — zero shuffle, plain codegen, pandas null
-    //      passthrough (null cell stays null, accumulation skips) ----
-    "q_rowwise_cum" -> ((s, d) => {
-      val li = T(s, d, "lineitem").withColumn("price_h",
-        when(col("l_linenumber") % 3 =!= 0, col("l_extendedprice")))
-      val cols = Seq(col("l_quantity"), col("price_h"), col("l_discount"))
-      val names = Seq("qty", "price", "disc")
-      val cum = Frame.rowCumsum(cols, names).zip(names).map {
-        case (c, n) => r(c, 6).as(s"${n}_cumsum") }
-      val cmx = Frame.rowCummax(cols, names).zip(names).map {
-        case (c, n) => r(c, 6).as(s"${n}_cummax") }
-      li.select(Seq(col("l_orderkey"), col("l_linenumber")) ++
-          cum ++ cmx: _*)
-        .orderBy("l_orderkey", "l_linenumber", "qty_cumsum", "price_cumsum")
-    }),
-
-    // ---- exact edit-distance similarity join (record linkage):
-    //      q-gram prefix filtering — global gram-frequency order, each
-    //      string joins on only its maxDist*q+1 RAREST (gram,occ) keys,
-    //      then levenshtein verifies distinct candidates. Never an
-    //      all-pairs join ----
-    "q_edit_join" -> ((s, d) => {
-      Dedup.editDistanceJoin(T(s, d, "supplier"), "s_suppkey", "s_name",
-          maxDist = 1)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- Series.autocorr(lag) per group: ONE window shuffle feeds
-    //      both lags and the map-side-combinable corr aggregates ----
-    "q_autocorr" -> ((s, d) => {
-      Frame.autocorr(T(s, d, "events"), "value", byUser,
-          Seq("user_id"), lags = Seq(1, 3))
-        .select(col("user_id"),
-          r(col("autocorr_1"), 6).as("ac1"),
-          r(col("autocorr_3"), 6).as("ac3"))
-        .orderBy("user_id")
-    }),
-
-    // ---- PageRank domain/source quality ranking (corpus-curation
-    //      signal): customer -> supplier edges from orders x lineitem;
-    //      2 damped iterations, dangling-mass redistribution. The rank
-    //      frame is node-sized, so each iteration AQE-broadcasts it
-    //      into the edge join — the edge table shuffles once, in the
-    //      contrib aggregate only ----
-    "q_pagerank" -> ((s, d) => {
-      val edges = T(s, d, "orders").select("o_orderkey", "o_custkey")
-        .join(T(s, d, "lineitem").select("l_orderkey", "l_suppkey"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 1000000000L).as("dst"))
-      Curation.pageRank(edges, "src", "dst", iters = 2)
-        .select(col("node"), r(col("rank"), 6).as("rank"))
-        .orderBy("node")
-    }),
-
-    // ---- §2.9 ewm.cov / ewm.corr (adjust=True, bias=False):
-    //      mergeable pairwise Aggregators as running window fns ----
-    "q_ewm_cov" -> ((s, d) => {
-      T(s, d, "events")
-        .withColumn("y", expr(yExpr))
-        .select(col("event_id"), col("user_id"),
-          // scale 2 / 4: same oracle closed-form pow-sum error budget
-          // as q_ewm (ewm_var at 2); corr is O(1) so 4 holds
-          r(Ewm.cov(col("value"), col("y"), byUser, 0.2), 2).as("ewm_cov"),
-          r(Ewm.corr(col("value"), col("y"), byUser, 0.2), 4)
-            .as("ewm_corr"))
-        .orderBy("user_id", "event_id")
-    }))
 
   /** Pinned IVF-PQ tables: 8 coarse cells = full vectors of vec_id<8
     * (vec_id order = cell index), 4x16 residual codebooks = 16-wide
@@ -396,12 +191,51 @@ object Queries9 {
        FROM documents, mm ORDER BY doc_id"""
   }
 
-  val oracle: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
 
-    "q_bpe_train" -> bpeTrainOracle(6),
-    "q_bpe_apply" -> bpeApplyOracle(6),
+    // ---- §2.9 rolling.cov / rolling.corr / expanding.cov: builtin
+    //      covar_samp/corr as frame aggregates — one window shuffle for
+    //      all three, WholeStageCodegen'd co-moment updates, pairwise
+    //      min_periods gates ----
+    Query("q_rolling_covcorr", (s, d) => {
+      val w10 = WindowOps.rollingSpec(byUser, 10)
+      val we = WindowOps.expandingSpec(byUser)
+      T(s, d, "events")
+        .withColumn("y", expr(yExpr))
+        .select(col("event_id"), col("user_id"),
+          r(WindowOps.rCov(col("value"), col("y"), w10, 10), 2)
+            .as("roll_cov"),
+          r(WindowOps.rCorr(col("value"), col("y"), w10, 10), 4)
+            .as("roll_corr"),
+          r(WindowOps.rCov(col("value"), col("y"), we, 2), 2)
+            .as("exp_cov"))
+        .orderBy("user_id", "event_id")
+    },
+      s"""WITH o AS (SELECT event_id, ts, user_id, value,
+           value * (event_id % 5 + 1) AS y FROM events)
+         SELECT event_id, user_id,
+           round(CASE WHEN count(*) OVER w10 >= 10
+             THEN covar_samp(value, y) OVER w10 END + 1e-9, 2) AS roll_cov,
+           round(CASE WHEN count(*) OVER w10 >= 10
+             THEN corr(value, y) OVER w10 END + 1e-9, 4) AS roll_corr,
+           round(CASE WHEN count(*) OVER we >= 2
+             THEN covar_samp(value, y) OVER we END + 1e-9, 2) AS exp_cov
+         FROM o WINDOW
+           w10 AS ($evWin ROWS BETWEEN 9 PRECEDING AND CURRENT ROW),
+           we AS ($evWin ROWS UNBOUNDED PRECEDING)
+         ORDER BY user_id, event_id"""),
 
-    "q_rolling_step" ->
+    // ---- rolling(window, step=k): step is a row-number FILTER in the
+    //      same WindowExec pass — no extra shuffle ----
+    Query("q_rolling_step", (s, d) => {
+      val w5 = WindowOps.rollingSpec(byUser, 5)
+      T(s, d, "events").select(col("event_id"), col("user_id"),
+          r(WindowOps.rMean(col("value"), w5, 5), 4).as("roll_mean"),
+          r(WindowOps.rSum(col("value"), w5, 1), 4).as("roll_sum"),
+          WindowOps.stepKeep(byUser, 3).as("__keep"))
+        .filter(col("__keep")).drop("__keep")
+        .orderBy("user_id", "event_id")
+    },
       s"""WITH o AS (SELECT event_id, user_id, value,
            row_number() OVER ($evWin) AS rn,
            CASE WHEN count(value) OVER w >= 5
@@ -411,9 +245,99 @@ object Queries9 {
                                     AND CURRENT ROW))
          SELECT event_id, user_id, roll_mean, roll_sum
          FROM o WHERE (rn - 1) % 3 = 0
-         ORDER BY user_id, event_id""",
+         ORDER BY user_id, event_id"""),
 
-    "q_semantic_decontam" ->
+    // ---- DataFrame.cov matrix (upper triangle + variance diagonal):
+    //      ONE aggregate pass, all co-moments map-side combinable ----
+    Query("q_cov_matrix", (s, d) => {
+      Corr.covLong(T(s, d, "lineitem"),
+          Seq("l_quantity", "l_discount", "l_tax"))
+        .select(col("c1"), col("c2"), r(col("cov"), 6).as("cov"))
+        .orderBy("c1", "c2")
+    },
+      """SELECT c1, c2, round(cov + 1e-9, 6) AS cov FROM (
+           SELECT 'l_quantity' AS c1, 'l_quantity' AS c2,
+                  covar_samp(l_quantity, l_quantity) AS cov FROM lineitem
+           UNION ALL
+           SELECT 'l_quantity', 'l_discount',
+                  covar_samp(l_quantity, l_discount) FROM lineitem
+           UNION ALL
+           SELECT 'l_quantity', 'l_tax',
+                  covar_samp(l_quantity, l_tax) FROM lineitem
+           UNION ALL
+           SELECT 'l_discount', 'l_discount',
+                  covar_samp(l_discount, l_discount) FROM lineitem
+           UNION ALL
+           SELECT 'l_discount', 'l_tax',
+                  covar_samp(l_discount, l_tax) FROM lineitem
+           UNION ALL
+           SELECT 'l_tax', 'l_tax',
+                  covar_samp(l_tax, l_tax) FROM lineitem)
+         ORDER BY c1, c2"""),
+
+    // ---- IVF-PQ combined ANN (FAISS IVFPQ shape): coarse cells bound
+    //      candidates (ONE cell-keyed equi-join, ~corpus*nprobe/nlist
+    //      per query, NO corpus broadcast), residual PQ codes bound
+    //      bytes per candidate. Cells pinned to vec_id<8, codebooks to
+    //      sub-slices of vec_id in [16,32) so the oracle replicates
+    //      both verbatim (trained-path quality is spec-gated). ----
+    Query("q_ivfpq_topk", (s, d) => {
+      val emb = T(s, d, "embeddings")
+      val (cells, books) = ivfPqTables(emb)
+      Similarity.ivfPqTopK(emb.filter(col("vec_id") < 10), emb,
+          cells, books, k = 5, nprobe = 2)
+        .select(col("query_id"), col("neighbor_id"),
+          r(col("dist"), 6).as("dist"), col("rank"))
+        .orderBy("query_id", "rank")
+    },
+      s"""WITH $IvfPqCte
+         SELECT qid AS query_id, id AS neighbor_id,
+           round(dist + 1e-9, 6) AS dist, rank
+         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""),
+
+    // ---- measured recall@5 of the IVF-PQ path vs exact L2 — the
+    //      coarse-probe miss rate is a first-class measured output ----
+    Query("q_ivfpq_recall", (s, d) => {
+      val emb = T(s, d, "embeddings")
+      val (cells, books) = ivfPqTables(emb)
+      val q = emb.filter(col("vec_id") < 10)
+      Similarity.recallAtK(
+          Similarity.ivfPqTopK(q, emb, cells, books, k = 5, nprobe = 2),
+          Similarity.bruteForceTopKL2(q, emb, 5), 5)
+        .select(col("query_id"), r(col("recall"), 6).as("recall"))
+        .orderBy("query_id")
+    },
+      s"""WITH $IvfPqCte,
+         ann AS (SELECT qid, id AS nid FROM ranked WHERE rank <= 5),
+         qfull AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
+                   FROM embeddings WHERE vec_id < 10),
+         bf AS (SELECT qid, nid FROM (
+                  SELECT q.qid, c.vec_id AS nid,
+                    row_number() OVER (PARTITION BY q.qid ORDER BY
+                      list_distance(qv, c.embedding::DOUBLE[]), c.vec_id) AS rank
+                  FROM qfull q, embeddings c WHERE c.vec_id <> q.qid)
+                WHERE rank <= 5),
+         hits AS (SELECT a.qid, count(*) AS h
+                  FROM ann a JOIN bf b ON a.qid = b.qid AND a.nid = b.nid
+                  GROUP BY 1)
+         SELECT b.qid AS query_id,
+           round(coalesce(h, 0) / 5.0 + 1e-9, 6) AS recall
+         FROM (SELECT DISTINCT qid FROM bf) b
+         LEFT JOIN hits USING (qid) ORDER BY query_id"""),
+
+    // ---- semantic decontamination: map-side max-cosine of every
+    //      corpus vector against the literal benchmark matrix (native
+    //      dot kernel), ZERO shuffle — the embedding-space complement
+    //      of the k-gram q_decontam ----
+    Query("q_semantic_decontam", (s, d) => {
+      val emb = T(s, d, "embeddings")
+      Similarity.semanticDecontaminate(
+          emb.filter(col("vec_id") >= 16),
+          emb.filter(col("vec_id") < 16), threshold = 0.4)
+        .select(col("id"), r(col("max_cos"), 6).as("max_cos"),
+          col("contaminated"))
+        .orderBy("id")
+    },
       """WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS bv
                     FROM embeddings WHERE vec_id < 16),
          m AS (SELECT c.vec_id AS id,
@@ -422,9 +346,18 @@ object Queries9 {
                FROM embeddings c, b WHERE c.vec_id >= 16 GROUP BY 1)
          SELECT id, round(mc + 1e-9, 6) AS max_cos,
            coalesce(mc >= 0.4, false) AS contaminated
-         FROM m ORDER BY id""",
+         FROM m ORDER BY id"""),
 
-    "q_groupby_corr" -> {
+    // ---- pandas groupby.corr(): per-group correlation matrix, ONE
+    //      grouped aggregate for all cells (pearson) / group-windowed
+    //      midranks feeding the same aggregate (spearman) ----
+    Query("q_groupby_corr", (s, d) => {
+      Corr.corrMatrixBy(T(s, d, "lineitem"), "l_returnflag",
+          Seq("l_quantity", "l_extendedprice", "l_discount"))
+        .select(col("l_returnflag"), col("c1"), col("c2"),
+          r(col("corr"), 6).as("corr"))
+        .orderBy("l_returnflag", "c1", "c2")
+    }, {
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount")
       val cells = (for {
         i <- cols.indices; j <- i until cols.size
@@ -433,9 +366,15 @@ object Queries9 {
         .mkString("\n         UNION ALL ")
       s"""SELECT l_returnflag, c1, c2, round(c + 1e-9, 6) AS corr FROM (
          $cells) ORDER BY l_returnflag, c1, c2"""
-    },
+    }),
 
-    "q_groupby_cov" -> {
+    Query("q_groupby_cov", (s, d) => {
+      Corr.covMatrixBy(T(s, d, "lineitem"), "l_returnflag",
+          Seq("l_quantity", "l_discount", "l_tax"))
+        .select(col("l_returnflag"), col("c1"), col("c2"),
+          r(col("cov"), 6).as("cov"))
+        .orderBy("l_returnflag", "c1", "c2")
+    }, {
       val cols = Seq("l_quantity", "l_discount", "l_tax")
       val cells = (for {
         i <- cols.indices; j <- i until cols.size
@@ -448,9 +387,15 @@ object Queries9 {
       // the r8 q_groupby_cov red row).
       s"""SELECT l_returnflag, c1, c2, round(c + 1e-9, 6) + 0.0 AS cov FROM (
          $cells) ORDER BY l_returnflag, c1, c2"""
-    },
+    }),
 
-    "q_groupby_corr_spearman" -> {
+    Query("q_groupby_corr_spearman", (s, d) => {
+      Corr.corrMatrixBy(T(s, d, "lineitem"), "l_returnflag",
+          Seq("l_quantity", "l_extendedprice", "l_discount"), "spearman")
+        .select(col("l_returnflag"), col("c1"), col("c2"),
+          r(col("corr"), 6).as("corr"))
+        .orderBy("l_returnflag", "c1", "c2")
+    }, {
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount")
       val ranked = cols.map(c =>
         s"rank() OVER (PARTITION BY l_returnflag ORDER BY $c) + " +
@@ -464,9 +409,45 @@ object Queries9 {
       s"""WITH rk AS (SELECT l_returnflag, $ranked FROM lineitem)
          SELECT l_returnflag, c1, c2, round(c + 1e-9, 6) AS corr FROM (
          $cells) ORDER BY l_returnflag, c1, c2"""
-    },
+    }),
 
-    "q_rowwise_cum" ->
+    // ---- BPE tokenizer training (Sennrich'16): per merge, ONE
+    //      map-side pair explode + ONE combinable hash aggregate + a
+    //      1-row argmax collect (the merge rule IS the model); the
+    //      tokenized corpus persists between rounds ----
+    Query("q_bpe_train", (s, d) => {
+      TextAnalysis.bpeTrain(T(s, d, "documents"), "doc_id", "text", 6)
+        .orderBy("merge_idx")
+    }, bpeTrainOracle(6)),
+
+    // ---- applying the learned merges is a zero-shuffle chain of
+    //      literal replacements; per-doc token counts under the
+    //      trained vocab ----
+    Query("q_bpe_apply", (s, d) => {
+      val m = TextAnalysis.bpeTrain(T(s, d, "documents"), "doc_id",
+          "text", 6)
+        .orderBy("merge_idx").collect()
+        .map(r => (r.getString(1), r.getString(2))).toSeq
+      TextAnalysis.bpeApply(T(s, d, "documents"), "doc_id", "text", m)
+        .orderBy("doc_id")
+    }, bpeApplyOracle(6)),
+
+    // ---- §2.3 cumsum/cummax(axis=1): running accumulation ACROSS
+    //      columns — zero shuffle, plain codegen, pandas null
+    //      passthrough (null cell stays null, accumulation skips) ----
+    Query("q_rowwise_cum", (s, d) => {
+      val li = T(s, d, "lineitem").withColumn("price_h",
+        when(col("l_linenumber") % 3 =!= 0, col("l_extendedprice")))
+      val cols = Seq(col("l_quantity"), col("price_h"), col("l_discount"))
+      val names = Seq("qty", "price", "disc")
+      val cum = Frame.rowCumsum(cols, names).zip(names).map {
+        case (c, n) => r(c, 6).as(s"${n}_cumsum") }
+      val cmx = Frame.rowCummax(cols, names).zip(names).map {
+        case (c, n) => r(c, 6).as(s"${n}_cummax") }
+      li.select(Seq(col("l_orderkey"), col("l_linenumber")) ++
+          cum ++ cmx: _*)
+        .orderBy("l_orderkey", "l_linenumber", "qty_cumsum", "price_cumsum")
+    },
       """WITH h AS (SELECT l_orderkey, l_linenumber, l_quantity,
            CASE WHEN l_linenumber % 3 <> 0 THEN l_extendedprice END AS price_h,
            l_discount
@@ -483,19 +464,37 @@ object Queries9 {
            round(greatest(l_quantity, coalesce(price_h, l_quantity),
              l_discount) + 1e-9, 6) AS disc_cummax
          FROM h
-         ORDER BY l_orderkey, l_linenumber, qty_cumsum, price_cumsum""",
+         ORDER BY l_orderkey, l_linenumber, qty_cumsum, price_cumsum"""),
 
-    // brute force is the oracle's privilege: bench-scale n^2 verifies
-    // the engine's filtered plan
-    "q_edit_join" ->
+    // ---- exact edit-distance similarity join (record linkage):
+    //      q-gram prefix filtering — global gram-frequency order, each
+    //      string joins on only its maxDist*q+1 RAREST (gram,occ) keys,
+    //      then levenshtein verifies distinct candidates. Never an
+    //      all-pairs join ----
+    Query("q_edit_join", (s, d) => {
+      Dedup.editDistanceJoin(T(s, d, "supplier"), "s_suppkey", "s_name",
+          maxDist = 1)
+        .orderBy("id_a", "id_b")
+    },
+      // brute force is the oracle's privilege: bench-scale n^2 verifies
+      // the engine's filtered plan
       """SELECT a.s_suppkey AS id_a, b.s_suppkey AS id_b,
          levenshtein(a.s_name, b.s_name) AS dist
          FROM supplier a, supplier b
          WHERE a.s_suppkey < b.s_suppkey
            AND levenshtein(a.s_name, b.s_name) <= 1
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
-    "q_autocorr" ->
+    // ---- Series.autocorr(lag) per group: ONE window shuffle feeds
+    //      both lags and the map-side-combinable corr aggregates ----
+    Query("q_autocorr", (s, d) => {
+      Frame.autocorr(T(s, d, "events"), "value", byUser,
+          Seq("user_id"), lags = Seq(1, 3))
+        .select(col("user_id"),
+          r(col("autocorr_1"), 6).as("ac1"),
+          r(col("autocorr_3"), 6).as("ac3"))
+        .orderBy("user_id")
+    },
       s"""WITH l AS (SELECT user_id, value,
            lag(value, 1) OVER ($evWin) AS l1,
            lag(value, 3) OVER ($evWin) AS l3
@@ -503,11 +502,26 @@ object Queries9 {
          SELECT user_id,
            round(corr(value, l1) + 1e-9, 6) AS ac1,
            round(corr(value, l3) + 1e-9, 6) AS ac3
-         FROM l GROUP BY user_id ORDER BY user_id""",
+         FROM l GROUP BY user_id ORDER BY user_id"""),
 
-    // two unrolled damped power iterations, dangling mass folded back
-    // uniformly — mirrors Curation.pageRank exactly
-    "q_pagerank" ->
+    // ---- PageRank domain/source quality ranking (corpus-curation
+    //      signal): customer -> supplier edges from orders x lineitem;
+    //      2 damped iterations, dangling-mass redistribution. The rank
+    //      frame is node-sized, so each iteration AQE-broadcasts it
+    //      into the edge join — the edge table shuffles once, in the
+    //      contrib aggregate only ----
+    Query("q_pagerank", (s, d) => {
+      val edges = T(s, d, "orders").select("o_orderkey", "o_custkey")
+        .join(T(s, d, "lineitem").select("l_orderkey", "l_suppkey"),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey").as("src"),
+          (col("l_suppkey") + 1000000000L).as("dst"))
+      Curation.pageRank(edges, "src", "dst", iters = 2)
+        .select(col("node"), r(col("rank"), 6).as("rank"))
+        .orderBy("node")
+    },
+      // two unrolled damped power iterations, dangling mass folded back
+      // uniformly — mirrors Curation.pageRank exactly
       """WITH e AS (
            SELECT DISTINCT o.o_custkey AS src,
              l.l_suppkey + 1000000000 AS dst
@@ -535,73 +549,24 @@ object Queries9 {
                     + (SELECT dm FROM d2) / (SELECT n FROM nn)) AS rank
                 FROM nodes LEFT JOIN c2 USING (node))
          SELECT node, round(rank + 1e-9, 6) AS rank
-         FROM r2 ORDER BY node""",
+         FROM r2 ORDER BY node"""),
 
-    "q_ivfpq_topk" ->
-      s"""WITH $IvfPqCte
-         SELECT qid AS query_id, id AS neighbor_id,
-           round(dist + 1e-9, 6) AS dist, rank
-         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    "q_ivfpq_recall" ->
-      s"""WITH $IvfPqCte,
-         ann AS (SELECT qid, id AS nid FROM ranked WHERE rank <= 5),
-         qfull AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-                   FROM embeddings WHERE vec_id < 10),
-         bf AS (SELECT qid, nid FROM (
-                  SELECT q.qid, c.vec_id AS nid,
-                    row_number() OVER (PARTITION BY q.qid ORDER BY
-                      list_distance(qv, c.embedding::DOUBLE[]), c.vec_id) AS rank
-                  FROM qfull q, embeddings c WHERE c.vec_id <> q.qid)
-                WHERE rank <= 5),
-         hits AS (SELECT a.qid, count(*) AS h
-                  FROM ann a JOIN bf b ON a.qid = b.qid AND a.nid = b.nid
-                  GROUP BY 1)
-         SELECT b.qid AS query_id,
-           round(coalesce(h, 0) / 5.0 + 1e-9, 6) AS recall
-         FROM (SELECT DISTINCT qid FROM bf) b
-         LEFT JOIN hits USING (qid) ORDER BY query_id""",
-
-    "q_rolling_covcorr" ->
-      s"""WITH o AS (SELECT event_id, ts, user_id, value,
-           value * (event_id % 5 + 1) AS y FROM events)
-         SELECT event_id, user_id,
-           round(CASE WHEN count(*) OVER w10 >= 10
-             THEN covar_samp(value, y) OVER w10 END + 1e-9, 2) AS roll_cov,
-           round(CASE WHEN count(*) OVER w10 >= 10
-             THEN corr(value, y) OVER w10 END + 1e-9, 4) AS roll_corr,
-           round(CASE WHEN count(*) OVER we >= 2
-             THEN covar_samp(value, y) OVER we END + 1e-9, 2) AS exp_cov
-         FROM o WINDOW
-           w10 AS ($evWin ROWS BETWEEN 9 PRECEDING AND CURRENT ROW),
-           we AS ($evWin ROWS UNBOUNDED PRECEDING)
-         ORDER BY user_id, event_id""",
-
-    "q_cov_matrix" ->
-      """SELECT c1, c2, round(cov + 1e-9, 6) AS cov FROM (
-           SELECT 'l_quantity' AS c1, 'l_quantity' AS c2,
-                  covar_samp(l_quantity, l_quantity) AS cov FROM lineitem
-           UNION ALL
-           SELECT 'l_quantity', 'l_discount',
-                  covar_samp(l_quantity, l_discount) FROM lineitem
-           UNION ALL
-           SELECT 'l_quantity', 'l_tax',
-                  covar_samp(l_quantity, l_tax) FROM lineitem
-           UNION ALL
-           SELECT 'l_discount', 'l_discount',
-                  covar_samp(l_discount, l_discount) FROM lineitem
-           UNION ALL
-           SELECT 'l_discount', 'l_tax',
-                  covar_samp(l_discount, l_tax) FROM lineitem
-           UNION ALL
-           SELECT 'l_tax', 'l_tax',
-                  covar_samp(l_tax, l_tax) FROM lineitem)
-         ORDER BY c1, c2""",
-
-    // same analytic-weight-sum construction as q_ewm (valid because
-    // events.value has no NULL/NaN so the decay clock == row_number);
-    // the debias factor swc^2/(swc^2 - sw2c) cancels out of corr
-    "q_ewm_cov" ->
+    // ---- §2.9 ewm.cov / ewm.corr (adjust=True, bias=False):
+    //      mergeable pairwise Aggregators as running window fns ----
+    Query("q_ewm_cov", (s, d) => {
+      T(s, d, "events")
+        .withColumn("y", expr(yExpr))
+        .select(col("event_id"), col("user_id"),
+          // scale 2 / 4: same oracle closed-form pow-sum error budget
+          // as q_ewm (ewm_var at 2); corr is O(1) so 4 holds
+          r(Ewm.cov(col("value"), col("y"), byUser, 0.2), 2).as("ewm_cov"),
+          r(Ewm.corr(col("value"), col("y"), byUser, 0.2), 4)
+            .as("ewm_corr"))
+        .orderBy("user_id", "event_id")
+    },
+      // same analytic-weight-sum construction as q_ewm (valid because
+      // events.value has no NULL/NaN so the decay clock == row_number);
+      // the debias factor swc^2/(swc^2 - sw2c) cancels out of corr
       """WITH o AS (SELECT event_id, user_id, value,
            value * (event_id % 5 + 1) AS y,
            row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
@@ -625,5 +590,5 @@ object Queries9 {
              (sxy/sw - (sx/sw)*(sy/sw)) /
              sqrt((sxx/sw - (sx/sw)*(sx/sw)) * (syy/sw - (sy/sw)*(sy/sw)))
              END + 1e-9, 4) AS ewm_corr
-         FROM c ORDER BY user_id, event_id""")
+         FROM c ORDER BY user_id, event_id"""))
 }

@@ -1,32 +1,37 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Query definitions live in [[Queries]] (reference-parity surface) and
-  * [[PipelineQueries]] (training-data pipeline ops). */
+/** Driver contract — see SURVEY.md §7. Every query file declares its
+  * rows as [[Query]] values; this object is the one registry of them. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Queries.all("q_groupby_agg")(spark, "/root/testdata/sf0.001")
+    queries("q_groupby_agg")(spark, "/root/testdata/sf0.001")
+
+  /** Every registered query, in declaration order. */
+  val all: Seq[Query] = requireDistinct(Seq(
+    Queries.queries, Queries2.queries, Queries3.queries, Queries4.queries,
+    Queries5.queries, Queries6.queries, Queries7.queries, Queries8.queries,
+    Queries9.queries, Queries10.queries, Queries11.queries,
+    PipelineQueries.queries, PipelineQueries2.queries,
+    PipelineQueries3.queries, PipelineQueries4.queries,
+    PipelineQueries5.queries, PipelineQueries6.queries,
+    StreamQueries.queries).flatten)
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all ++ Queries2.all ++ Queries3.all ++ Queries4.all ++
-      Queries5.all ++ Queries6.all ++ Queries7.all ++ Queries8.all ++
-      Queries9.all ++ Queries10.all ++ Queries11.all ++
-      PipelineQueries.all ++ PipelineQueries2.all ++ PipelineQueries3.all ++
-      PipelineQueries4.all ++ PipelineQueries5.all ++
-      PipelineQueries6.all ++ StreamQueries.all
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Queries.oracle ++ Queries2.oracle ++ Queries3.oracle ++ Queries4.oracle ++
-      Queries5.oracle ++ Queries6.oracle ++ Queries7.oracle ++
-      Queries8.oracle ++ Queries9.oracle ++ Queries10.oracle ++
-      Queries11.oracle ++
-      PipelineQueries.oracle ++ PipelineQueries2.oracle ++
-      PipelineQueries3.oracle ++ PipelineQueries4.oracle ++
-      PipelineQueries5.oracle ++ PipelineQueries6.oracle ++
-      StreamQueries.oracle
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] = all.map(q => q.name -> q.oracle).toMap
+
+  /** `qs` unchanged, after checking that no name is declared twice (a
+    * map built from them would silently keep only the last). */
+  def requireDistinct(qs: Seq[Query]): Seq[Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.engine.Core
 import graft.streaming.Streams
+import graft.Query.T
 
 /** Driver-verifiable streaming rows (VERDICT r6/r7: Streams.scala was the
   * only component with zero DuckDB-anchored evidence).
@@ -28,21 +29,10 @@ import graft.streaming.Streams
   */
 object StreamQueries {
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_stream_sessionize" -> ((s, d) => streamSessionize(s, d)),
-    "q_stream_dedup" -> ((s, d) => streamDedup(s, d)),
-    "q_stream_dedup_fuzzy" -> ((s, d) => streamDedupFuzzy(s, d)),
-    "q_stream_window" -> ((s, d) => streamWindow(s, d)),
-    "q_stream_runmean" -> ((s, d) => streamRunMean(s, d)),
-    "q_stream_interval_join" -> ((s, d) => streamIntervalJoin(s, d)),
-    "q_stream_token_budget" -> ((s, d) => streamTokenBudget(s, d)),
-    "q_stream_decontam" -> ((s, d) => streamDecontam(s, d)),
-    "q_stream_heavy_hitters" -> ((s, d) => streamHeavyHitters(s, d)))
-
-  val oracle: Map[String, String] = Map(
-    // batch gap-sessionization (same 30-min gap as q_sessionize),
-    // aggregated per session
-    "q_stream_sessionize" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_stream_sessionize", streamSessionize,
+      // batch gap-sessionization (same 30-min gap as q_sessionize),
+      // aggregated per session
       """WITH o AS (SELECT user_id, event_id, ts, value,
            CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w
                      > 30*60*1000000
@@ -56,21 +46,21 @@ object StreamQueries {
          count(*) AS n_events,
          round(sum(value) + 1e-9, 4) AS sum_value
        FROM s GROUP BY user_id, sid
-       ORDER BY user_id, session_start""",
+       ORDER BY user_id, session_start"""),
 
-    // streaming dedup survivors == batch exact dedup (min doc_id per
-    // content group)
-    "q_stream_dedup" ->
+    Query("q_stream_dedup", streamDedup,
+      // streaming dedup survivors == batch exact dedup (min doc_id per
+      // content group)
       """SELECT min(doc_id) AS doc_id, md5(text) AS fp
-       FROM documents GROUP BY text ORDER BY doc_id""",
+       FROM documents GROUP BY text ORDER BY doc_id"""),
 
-    // streaming fuzzy dedup decisions == the batch LSH candidate
-    // relation: doc d is a near-dup iff an EARLIER doc (ids are
-    // time-ordered in the replay) shares any minhash band key. The
-    // minhash arithmetic mirrors q_dedup_minhash's oracle: one md5 per
-    // distinct 3-shingle, 60-bit halves a/b, hash i = a + i*b, band i
-    // holds hashes (2i, 2i+1).
-    "q_stream_dedup_fuzzy" ->
+    Query("q_stream_dedup_fuzzy", streamDedupFuzzy,
+      // streaming fuzzy dedup decisions == the batch LSH candidate
+      // relation: doc d is a near-dup iff an EARLIER doc (ids are
+      // time-ordered in the replay) shares any minhash band key. The
+      // minhash arithmetic mirrors q_dedup_minhash's oracle: one md5 per
+      // distinct 3-shingle, 60-bit halves a/b, hash i = a + i*b, band i
+      // holds hashes (2i, 2i+1).
       """WITH words AS (SELECT doc_id,
              string_split_regex(lower(trim(text)), '\s+') AS w
            FROM documents WHERE text IS NOT NULL),
@@ -96,36 +86,36 @@ object StreamQueries {
                   AND a.doc_id < c.doc_id)
          SELECT m.doc_id,
            m.doc_id IN (SELECT doc_id FROM dup) AS is_dup
-         FROM (SELECT DISTINCT doc_id FROM mh) m ORDER BY doc_id""",
+         FROM (SELECT DISTINCT doc_id FROM mh) m ORDER BY doc_id"""),
 
-    // finalized tumbling windows == batch hour-truncated aggregate
-    "q_stream_window" ->
+    Query("q_stream_window", streamWindow,
+      // finalized tumbling windows == batch hour-truncated aggregate
       """SELECT date_trunc('hour', ts) AS wstart, user_id,
          count(*) AS n, round(sum(value) + 1e-9, 4) AS sum_value,
          round(avg(value) + 1e-9, 4) AS mean_value
-       FROM events GROUP BY 1, 2 ORDER BY wstart, user_id""",
+       FROM events GROUP BY 1, 2 ORDER BY wstart, user_id"""),
 
-    // final running-mean state per key == batch per-user mean
-    "q_stream_runmean" ->
+    Query("q_stream_runmean", streamRunMean,
+      // final running-mean state per key == batch per-user mean
       """SELECT user_id, count(*) AS n,
          round(sum(value) / count(*) + 1e-9, 4) AS mean_value
-       FROM events GROUP BY user_id ORDER BY user_id""",
+       FROM events GROUP BY user_id ORDER BY user_id"""),
 
-    // stream-stream interval join == the batch attribution join:
-    // every purchase matched to same-user clicks in the trailing hour
-    "q_stream_interval_join" ->
+    Query("q_stream_interval_join", streamIntervalJoin,
+      // stream-stream interval join == the batch attribution join:
+      // every purchase matched to same-user clicks in the trailing hour
       """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
          p.user_id AS user_id
        FROM events p JOIN events c
          ON p.event_type = 'purchase' AND c.event_type = 'click'
         AND p.user_id = c.user_id
         AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 1 HOUR
-       ORDER BY purchase_id, click_id""",
+       ORDER BY purchase_id, click_id"""),
 
-    // streaming budget fill == the batch prefix rule in arrival
-    // (= doc_id) order: kept iff the per-lang running total incl.
-    // self stays <= 10000
-    "q_stream_token_budget" ->
+    Query("q_stream_token_budget", streamTokenBudget,
+      // streaming budget fill == the batch prefix rule in arrival
+      // (= doc_id) order: kept iff the per-lang running total incl.
+      // self stays <= 10000
       """SELECT doc_id, lang AS stratum,
          CAST(sum(n_chars) OVER (PARTITION BY lang ORDER BY doc_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
@@ -133,17 +123,19 @@ object StreamQueries {
          CASE WHEN sum(n_chars) OVER (PARTITION BY lang ORDER BY doc_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) <= 10000
            THEN 1 ELSE 0 END AS kept
-       FROM documents ORDER BY doc_id""",
+       FROM documents ORDER BY doc_id"""),
 
-    // stateless streaming decontamination == the batch operator: the
-    // oracle IS q_decontam's, shared by reference so the shingle
-    // definition can never desynchronize between the two rows
-    "q_stream_decontam" -> PipelineQueries2.oracle("q_decontam"),
+    Query("q_stream_decontam", streamDecontam,
+      // stateless streaming decontamination == the batch operator: the
+      // oracle IS q_decontam's, shared by reference so the shingle
+      // definition can never desynchronize between the two rows
+      PipelineQueries2.DecontamSql),
 
-    // streaming bucket-sharded Misra-Gries in the EXACT regime
-    // (5 langs << k): final summaries == the batch groupBy counts,
-    // same oracle as the batch q_heavy_hitters row
-    "q_stream_heavy_hitters" -> PipelineQueries4.oracle("q_heavy_hitters"))
+    Query("q_stream_heavy_hitters", streamHeavyHitters,
+      // streaming bucket-sharded Misra-Gries in the EXACT regime
+      // (5 langs << k): final summaries == the batch groupBy counts,
+      // same oracle as the batch q_heavy_hitters row
+      PipelineQueries4.HeavyHittersSql))
 
   /** Phase timing for the replay harness, printed only when
     * GRAFT_STREAM_PROFILE is set — the rows are harness-dominated, so
@@ -262,7 +254,7 @@ object StreamQueries {
 
   private def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ev = Core.normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
+    val ev = T(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("value"))
 
     val base = scratchDir("q_stream_sessionize")
@@ -305,7 +297,7 @@ object StreamQueries {
     * aggregate exactly. */
   private def streamWindow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ev = Core.normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
+    val ev = T(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("value"))
     val base = scratchDir("q_stream_window")
     val row = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi")).head()
@@ -342,7 +334,7 @@ object StreamQueries {
     * since every batch emits current state. */
   private def streamRunMean(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ev = Core.normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
+    val ev = T(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("value"))
     val base = scratchDir("q_stream_runmean")
     val row = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi")).head()
@@ -431,7 +423,7 @@ object StreamQueries {
     * present; the result must equal the batch attribution join. */
   private def streamIntervalJoin(spark: SparkSession, dir: String)
       : DataFrame = {
-    val ev = Core.normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
+    val ev = T(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts"),
         col("event_type"))
     val base = scratchDir("q_stream_ivj")
@@ -510,7 +502,7 @@ object StreamQueries {
     * batch groupBy count as q_heavy_hitters. */
   private def streamHeavyHitters(spark: SparkSession,
                                  dir: String): DataFrame = {
-    val docs = Core.normalizeTs(spark.read.parquet(s"$dir/documents.parquet"))
+    val docs = T(spark, dir, "documents")
       .select(col("doc_id"), col("lang"))
     val base = scratchDir("q_stream_hh")
     val src = replayByIdHalves(base, docs)

@@ -170,6 +170,21 @@ object Core {
       finally if (failed) pool.shutdownNow() else pool.shutdown()
     }
 
+  /** Re-root a frame that is BOUNDED by construction on a driver-side
+    * LocalRelation: one capped collect, then a local scan in place of
+    * the whole upstream lineage, so later plans neither re-analyze nor
+    * re-run it. More than `cap` rows fails loudly, naming `what`; row
+    * order is kept. Only for verification-sized results — a production
+    * pipeline writes such a stage to storage instead. */
+  def reroot(df: DataFrame, cap: Int, what: String): DataFrame = {
+    val rows = df.limit(cap + 1).collect()
+    require(rows.length <= cap,
+      s"$what: more than $cap rows, over the driver re-root cap — " +
+        "run the stages with per-stage storage writes instead")
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      df.schema)
+  }
+
   /** A lineage-truncated frame plus the handle to free its storage.
     * `release()` drops the checkpointed blocks — call it only after the
     * NEXT iteration's state is materialized; the frame is unusable

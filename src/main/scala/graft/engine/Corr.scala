@@ -14,9 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: pearson over k columns is one aggregate pass with
   * k*(k-1)/2 `corr` expressions (map-side combinable — fine for the
-  * reference's <=100-column frames; for very wide frames use
-  * `ml.stat.Correlation` on an assembled vector, which computes the
-  * Gramian once). Spearman's rank prestep is the [[Rank]] kernel —
+  * reference's <=100-column frames; for very wide frames
+  * [[pearsonLongGramian]] computes the Gramian once). Spearman's rank prestep is the [[Rank]] kernel —
   * one probe job, then broadcast stats joins or bucketed midrank
   * windows, no global window at any scale. Kendall (the reference's
   * numba kernel is O(n²) pairwise, `_numba.py:106-146`) has three
@@ -688,26 +687,6 @@ object Corr {
     df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(Seq(StructField("c1", StringType),
         StructField("c2", StringType), StructField("corr", DoubleType))))
-  }
-
-  /** Full pearson matrix via MLlib for WIDE frames (hundreds of
-    * columns): assembles a vector column and computes the Gramian once,
-    * instead of k^2/2 separate co-moment aggregates. Returns long form
-    * (c1, c2, corr), upper triangle — same shape as [[pearsonLong]]. */
-  def pearsonLongWide(df: DataFrame, cols: Seq[String]): DataFrame = {
-    import org.apache.spark.ml.feature.VectorAssembler
-    import org.apache.spark.ml.linalg.Matrix
-    import org.apache.spark.ml.stat.Correlation
-    val assembled = new VectorAssembler()
-      .setInputCols(cols.toArray).setOutputCol("__v")
-      .setHandleInvalid("skip")
-      .transform(df.select(cols.map(col): _*))
-    val m = Correlation.corr(assembled, "__v", "pearson")
-      .head().getAs[Matrix](0)
-    val rows = for {
-      i <- cols.indices; j <- (i + 1) until cols.size
-    } yield (cols(i), cols(j), m(i, j))
-    df.sparkSession.createDataFrame(rows).toDF("c1", "c2", "corr")
   }
 
   /** Kendall tau-b over a BOUNDED frame: self-join pairwise counting.

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-time attribution for one query (optimization-round
   * measurement aid, guide §1/§7.1 with the UI disabled): runs a named
@@ -18,16 +17,8 @@ object JobProfile {
     require(args.length >= 2, "JobProfile: <sfDir> <query> [reps]")
     val sfDir = args(0); val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val all = graft.SparkEntry.queries ++ graft.Bench.benchOnly
     val fn = all.getOrElse(name, sys.error(s"unknown query $name"))
     // warm-up like Bench's session warmer

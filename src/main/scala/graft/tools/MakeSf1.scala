@@ -91,13 +91,7 @@ object MakeSf1 {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "target/sf1"
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(32)
     ensure(spark, src, out)
     spark.stop()
   }

@@ -1,11 +1,20 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
-/** Regenerates PLANS.md: the physical plan of each flagship query, as
-  * evidence for the shapes claimed in SCALE.md. Run after plan-affecting
-  * changes: `sbt "runMain graft.tools.PlanAudit"`. */
+/** Physical-plan evidence, in two modes.
+  *
+  * `sbt "runMain graft.tools.PlanAudit [sfDir]"` regenerates PLANS.md:
+  * the physical plan of each flagship query, as evidence for the shapes
+  * claimed in SCALE.md. Run it after plan-affecting changes.
+  *
+  * `sbt "runMain graft.tools.PlanAudit <sfDir> <outDir> <suffix>
+  * q1,q2,..."` writes `.explain("formatted")` of each named query into
+  * `<outDir>/<query>_<suffix>.txt` — the before/after plan evidence the
+  * optimization rounds commit under `plans/rNN/`. Bench-only rows
+  * (graft.Bench.benchOnly) resolve too, and the session takes Bench's
+  * core count (SPARK_GRAFT_CPUS, default 32), so the dumped plan is the
+  * one the bench actually runs. */
 object PlanAudit {
   val Flagship: Seq[(String, String)] = Seq(
     "q_groupby_agg" -> "partial+final hash aggregate on a pruned scan",
@@ -60,14 +69,16 @@ object PlanAudit {
     "q_pipeline_semantic" -> "semantic-leg composition (SemDeDup -> semantic decontam -> int8 quantize -> dequantized top-3): zero-shuffle literal-centroid assignment + one cluster-keyed pair shuffle + literal bench matrix + broadcast query cross join, boundaries persisted and released; the returned plan is the local result scan",
     "q_pipeline_semantic_ann" -> "the production ANN path composed (r14): the same semantic store feeds ivfPqTopK (literal cells/codebooks map-side, ONE cell-keyed equi-join, WindowGroupLimit top-k) with recall@5 measured against the exact L2 top-5 over that store; the returned plan is the local recall scan")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit = args match {
+    case Array(sfDir, outDir, suffix, list) => dump(sfDir, outDir, suffix, list)
+    case Array(sfDir) => plansMd(sfDir)
+    case Array() => plansMd("/root/testdata/sf0.001")
+    case _ => sys.error(
+      "PlanAudit: [sfDir] | <sfDir> <outDir> <suffix> <q1,q2,...>")
+  }
+
+  private def plansMd(sfDir: String): Unit = {
+    val spark = graft.Session.local(4)
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the flagship queries\n\n")
     sb.append("Generated by `graft.tools.PlanAudit` (sf=" + sfDir + "). Read\n")
@@ -85,6 +96,22 @@ object PlanAudit {
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("[planaudit] wrote PLANS.md")
+    spark.stop()
+  }
+
+  private def dump(sfDir: String, outDir: String, suffix: String,
+                   list: String): Unit = {
+    val spark = graft.Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    Files.createDirectories(Paths.get(outDir))
+    val all = graft.SparkEntry.queries ++ graft.Bench.benchOnly
+    list.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
+      val df = all(name)(spark, sfDir)
+      val txt = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
+      println(s"[planaudit] wrote $outDir/${name}_$suffix.txt")
+    }
     spark.stop()
   }
 }

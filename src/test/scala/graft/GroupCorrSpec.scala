@@ -161,16 +161,6 @@ class GroupCorrSpec extends SparkSpec {
     assertApprox(optD(r, 2), Some(-0.6324555320336759), 1e-9)
   }
 
-  test("wide (MLlib Gramian) pearson matrix agrees with pairwise corr") {
-    val df = Seq((1.0, 4.0, 2.0), (2.0, 1.0, 5.0), (2.0, 3.0, 1.0), (3.0, 2.0, 4.0))
-      .toDF("x", "y", "z")
-    val wide = Corr.pearsonLongWide(df, Seq("x", "y", "z"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    val pair = Corr.pearsonLong(df, Seq("x", "y", "z"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    pair.foreach { case (k, v) => assertApprox(Some(wide(k)), Some(v), 1e-12) }
-  }
-
   test("native Gramian pearson matrix agrees with pairwise corr; skips null rows") {
     val df = Seq(
       (Some(1.0), Some(4.0), Some(2.0)), (Some(2.0), Some(1.0), Some(5.0)),
