@@ -21,17 +21,19 @@ import org.apache.spark.sql.types._
   *     (whose excess over the histogram is the NaN count), plus each
   *     key's row count. A grouped probe first runs one approx-NDV job;
   *     above [[GroupedProbeMaxKeys]] keys it skips the per-key collect
-  *     and the NDVs size the in-plan gate instead.
+  *     and the NDVs size the gate instead.
   *   - [[midrank]] chooses once per column: a stats join when the
   *     (key, value) table fits the broadcast gate
   *     ([[Reductions.groupRankStatsMaxRows]]), else a window over fixed
   *     buckets when no (key, bucket) holds more than 20% of the rows,
   *     else a window over quantile-cut buckets (one batched
   *     approxQuantile job for all such columns).
-  *   - both attach paths read a `(keys, value-or-bucket, cnt, before)`
-  *     table as a DataFrame, so a driver LocalRelation built from the
-  *     probe and an in-plan aggregate (above the key bound) feed the
-  *     same code. Stats join: rank = before + (cnt + 1) / 2. Bucket
+  *   - every table is one `(keys, value-or-bucket, cnt, before)`
+  *     LocalRelation built on the driver by [[table]] from per-key
+  *     counts: the probe's, or, for the columns the probe could not
+  *     count (value counts above the key bound, quantile-cut buckets),
+  *     those of ONE counts job over all of them ([[countTables]]).
+  *     Stats join: rank = before + (cnt + 1) / 2. Bucket
   *     window, partitioned by (keys, bucket) and ordered by the value:
   *     rank = offset + cum − tie + (tie + 1) / 2, where cum counts the
   *     default RANGE frame (up to and including the tie group) and tie
@@ -52,8 +54,8 @@ object Rank {
 
   /** Key-NDV bound of the per-key probe collect (r15): at or below it
     * the collect is bounded by ~cols × 2 × the broadcast gate (the
-    * per-key histogram cap divides the gate); above it every table is
-    * an in-plan aggregate. */
+    * per-key histogram cap divides the gate); above it every table comes
+    * from the counts job. */
   private[graft] val GroupedProbeMaxKeys: Long = 1024L
 
   /** One key's probe counts, one entry per probed column. A null
@@ -65,8 +67,8 @@ object Rank {
 
   /** What [[probe]] learned about `df`: `groups` is None above
     * [[GroupedProbeMaxKeys]] keys, and `colNdv` (approximate, grouped
-    * probes only) then sizes the in-plan stats gate
-    * keyNdv × colNdv ≤ `gate`. */
+    * probes only) then sizes the value-count gate
+    * keyNdv × colNdv ≤ `gate`; both NDVs also bound the counts job. */
   final case class Probe(df: DataFrame, keys: Seq[String], cols: Seq[String],
       gate: Long, keyNdv: Long, colNdv: IndexedSeq[Long],
       groups: Option[Seq[Group]])
@@ -130,7 +132,10 @@ object Rank {
     * match; it moves placement only. */
   def midrank(p: Probe, outs: Seq[String], width: Int = 0): DataFrame = {
     val Probe(df, keys, cols, gate, keyNdv, colNdv, groups) = p
-    val chosen: IndexedSeq[Option[Attach]] = cols.indices.map { i =>
+    // Some: attached from the probe alone; None: counted by the counts
+    // job, by value while the (key, value) table fits the gate, else by
+    // quantile-cut bucket
+    val fromProbe: IndexedSeq[Option[Attach]] = cols.indices.map { i =>
       val c = cols(i)
       if (!exact(df.schema(c).dataType)) {
         require(keys.isEmpty, s"rank: cast grouped column $c to double")
@@ -152,34 +157,45 @@ object Rank {
             Some(Attach(Some(graft.functions.SortableBucket
               .sortableBucket(col(c))), table(df, keys, gs.map(_.key).zip(bs))))
           else None
-        case None =>
-          if (keyNdv * colNdv(i) <= gate)
-            Some(Attach(None, inPlanTable(df, keys, c, col(c))))
-          else None
+        case None => None
       }
     }
-    val need = cols.indices.filter(chosen(_).isEmpty)
+    val byValue = cols.indices.filter(i => fromProbe(i).isEmpty &&
+      groups.isEmpty && keyNdv * colNdv(i) <= gate)
+    val cut = cols.indices.filter(i => fromProbe(i).isEmpty && !byValue.contains(i))
     val cuts: Map[Int, Array[Double]] =
-      if (need.isEmpty) Map.empty
+      if (cut.isEmpty) Map.empty
       else {
         // floor 2: a one-core session would otherwise get one bucket
         val dp = math.max(df.sparkSession.sparkContext.defaultParallelism, 2)
         val nb = if (width > 0) math.max(dp, math.min(2 * width, 4096)) else dp
-        val qs = df.select(need.map(i => col(cols(i)).cast("double")
+        val qs = df.select(cut.map(i => col(cols(i)).cast("double")
             .as(s"__q$i")): _*)
-          .stat.approxQuantile(need.map(i => s"__q$i").toArray,
+          .stat.approxQuantile(cut.map(i => s"__q$i").toArray,
             (1 until nb).map(_.toDouble / nb).toArray, 0.01)
-        need.zip(qs.map(_.distinct.sorted)).toMap
+        cut.zip(qs.map(_.distinct.sorted)).toMap
       }
+    val bucket: Map[Int, Column] = cuts.map { case (i, cs) =>
+      i -> coalesce(graft.functions.BucketBin.bucketBin(col(cols(i)), cs), lit(0))
+    }
+    // row bound of the counts: the keys the gate saw (exact from the
+    // grouped probe, else the estimate with its headroom) times each
+    // column's values (estimated) or buckets (exact)
+    def est(ndv: Long): Long = math.ceil(ndv * NdvHeadroom).toLong + 1
+    val nKeys = groups.fold(est(keyNdv))(_.size.toLong)
+    val counted = (byValue ++ cut).sorted
+    val cap = counted.map(i => nKeys * cuts.get(i).fold(est(colNdv(i)))(_.length + 1L)).sum
+    val tables = counted.zip(countTables(df, keys,
+      counted.map(i => cols(i) -> bucket.getOrElse(i, col(cols(i)))), cap)).toMap
     cols.indices.foldLeft(df) { (d, i) =>
-      val a = chosen(i).getOrElse {
-        val b = coalesce(graft.functions.BucketBin.bucketBin(col(cols(i)),
-          cuts(i)), lit(0))
-        Attach(Some(b), inPlanTable(df, keys, cols(i), b))
-      }
+      val a = fromProbe(i).getOrElse(Attach(bucket.get(i), tables(i)))
       attach(d, keys, cols(i), outs(i), a, width)
     }
   }
+
+  /** Headroom of an approx_count_distinct estimate (default 5% rsd):
+    * five standard errors. */
+  private val NdvHeadroom = 1.25
 
   /** Driver-built `(keys, value, cnt, before)` table from per-key counts,
     * in ascending value order with NaN greatest. A Scala map holds -0.0
@@ -204,19 +220,42 @@ object Rank {
       java.util.Arrays.asList(rows: _*), schema))
   }
 
-  /** In-plan `(keys, x, cnt, before)` table: per-(keys, x) counts of the
-    * non-null `c` rows, then a running sum per key over that aggregate
-    * (bounded by the caller's gate, never the frame). */
-  private def inPlanTable(df: DataFrame, keys: Seq[String], c: String,
-                          x: Column): DataFrame = {
-    val before = Window.partitionBy(keys.indices.map(i => col(keyName(i))): _*)
-      .orderBy("__gv").rowsBetween(Window.unboundedPreceding, -1)
-    broadcast(df.filter(col(c).isNotNull)
-      .groupBy(keys.indices.map(i => col(keys(i)).as(keyName(i))) :+
-        x.as("__gv"): _*)
-      .agg(count(lit(1)).cast("double").as("__gc"))
-      .withColumn("__gb", coalesce(sum(col("__gc")).over(before), lit(0.0))))
-  }
+  /** The `(keys, x, cnt, before)` tables of every `(column, x)` in
+    * `counted` from ONE aggregate job: each row explodes into one
+    * `(column index, x)` per non-null column, grouped by
+    * `(keys, index, x)`. The collect fails loudly, naming the columns,
+    * above `cap` rows rather than build a truncated table. */
+  private def countTables(df: DataFrame, keys: Seq[String],
+      counted: Seq[(String, Column)], cap: Long): Seq[DataFrame] =
+    if (counted.isEmpty) Nil
+    else {
+      val lim = math.min(cap, Int.MaxValue - 1L).toInt
+      val e = explode(array(counted.zipWithIndex.map { case ((c, x), j) =>
+        when(col(c).isNotNull, struct(lit(j).as("i"), x.cast("double").as("v")))
+      }: _*)).as("__e")
+      val rows = df.select(keys.indices.map(i => col(keys(i)).as(keyName(i))) :+ e: _*)
+        .filter(col("__e").isNotNull)
+        .groupBy(keys.indices.map(i => col(keyName(i))) ++
+          Seq(col("__e.i"), col("__e.v")): _*)
+        .count().limit(lim + 1).collect()
+      require(rows.length <= lim, s"rank: the counts of " +
+        s"${counted.map(_._1).mkString(", ")} exceed their bound of $lim rows")
+      val nk = keys.size
+      val byCol = rows.groupBy(_.getInt(nk))
+      counted.indices.map { j =>
+        val perKey = byCol.getOrElse(j, Array.empty[Row]).groupBy(keyOf(_, nk))
+        table(df, keys, perKey.values.toSeq.map(rs => (0 until nk).map(rs.head.get) ->
+          rs.map(r => r.getDouble(nk + 1) -> r.getLong(nk + 2)).toMap))
+      }
+    }
+
+  /** A collected key as a driver map key: Row equality holds NaN equal
+    * to itself, as Spark's grouping does; a binary key compares by
+    * content. */
+  private def keyOf(r: Row, nk: Int): Row = Row.fromSeq((0 until nk).map(i => r.get(i) match {
+    case b: Array[Byte] => b.toSeq
+    case v => v
+  }))
 
   private def attach(df: DataFrame, keys: Seq[String], c: String,
                      out: String, a: Attach, width: Int): DataFrame = {

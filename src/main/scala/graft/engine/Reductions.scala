@@ -358,82 +358,16 @@ object Reductions {
     } finally vals.unpersist(blocking = false)
   }
 
-  /** Bounded EXACT histogram aggregate: (value -> count) while the
-    * distinct count stays ≤ `cap`; returns null the moment it would
-    * exceed it. Mergeable (map-side combinable, one small map per
-    * partial), state bounded by `cap` entries — so a single aggregation
-    * pass answers "give me the exact value counts IF the column is
-    * low-cardinality, else tell me it isn't", without a second scan and
-    * without unbounded collect_list state. Overflow is flagged with a
-    * null map key so merged partials stay poisoned. */
-  def boundedHistAgg(cap: Int): Aggregator[java.lang.Double,
-      java.util.HashMap[java.lang.Double, java.lang.Long],
-      Map[Double, Long]] =
-    new Aggregator[java.lang.Double,
-        java.util.HashMap[java.lang.Double, java.lang.Long],
-        Map[Double, Long]] {
-      private def overflowed(
-          b: java.util.HashMap[java.lang.Double, java.lang.Long]) =
-        b.containsKey(null)
-      private def poison(
-          b: java.util.HashMap[java.lang.Double, java.lang.Long]) = {
-        b.clear(); b.put(null, 0L); b
-      }
-      def zero = new java.util.HashMap[java.lang.Double, java.lang.Long]
-      def reduce(b: java.util.HashMap[java.lang.Double, java.lang.Long],
-                 a: java.lang.Double) = {
-        if (a == null || a.isNaN || overflowed(b)) b
-        else {
-          val prev = b.get(a)
-          if (prev != null) { b.put(a, prev + 1L); b }
-          else if (b.size >= cap) poison(b)
-          else { b.put(a, 1L); b }
-        }
-      }
-      def merge(b1: java.util.HashMap[java.lang.Double, java.lang.Long],
-                b2: java.util.HashMap[java.lang.Double, java.lang.Long]) = {
-        if (overflowed(b1) || overflowed(b2)) poison(b1)
-        else {
-          val it = b2.entrySet().iterator()
-          while (it.hasNext && !overflowed(b1)) {
-            val e = it.next()
-            val prev = b1.get(e.getKey)
-            if (prev != null) b1.put(e.getKey, prev + e.getValue)
-            else if (b1.size >= cap) poison(b1)
-            else b1.put(e.getKey, e.getValue)
-          }
-          b1
-        }
-      }
-      // A Scala map key-compares Doubles numerically, so -0.0 and 0.0
-      // (two keys of the Java buffer) are one key here: sum them under
-      // 0.0 rather than let one count overwrite the other.
-      def finish(b: java.util.HashMap[java.lang.Double, java.lang.Long])
-        : Map[Double, Long] =
-        if (overflowed(b)) null
-        else {
-          val out = scala.collection.mutable.HashMap.empty[Double, Long]
-          val it = b.entrySet().iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            val k = if (e.getKey == 0.0) 0.0 else e.getKey.doubleValue()
-            out(k) = out.getOrElse(k, 0L) + e.getValue
-          }
-          out.toMap
-        }
-      def bufferEncoder: Encoder[java.util.HashMap[java.lang.Double, java.lang.Long]] =
-        Encoders.kryo[java.util.HashMap[java.lang.Double, java.lang.Long]]
-      def outputEncoder: Encoder[Map[Double, Long]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[Double, Long]]()
-    }
-
-  /** [[boundedHistAgg]] as a Column. */
+  /** Bounded exact histogram: (value -> count) while the column holds
+    * at most `cap` distinct values, else null; null and NaN are
+    * skipped, -0.0 counts as 0.0. A native aggregate
+    * ([[graft.functions.BoundedHistogram]]). */
   def boundedHistogram(c: Column, cap: Int): Column =
-    udaf(boundedHistAgg(cap)).apply(c)
+    graft.functions.BoundedHistogram.boundedHistogram(c, cap)
 
   /** Misra-Gries heavy-hitter summary: at most `k` (item -> estimated
     * count) entries from ONE mergeable aggregation pass — the
-    * fail-soft sibling of [[boundedHistAgg]] (which poisons itself
+    * fail-soft sibling of [[boundedHistogram]] (which poisons itself
     * above its cap). Classic guarantees, preserved under partial merge
     * (Agarwal et al., "Mergeable Summaries", PODS 2012): estimates
     * never exceed true counts, undercount by at most n/(k+1), and

@@ -270,4 +270,103 @@ class FunctionsSpec extends SparkSpec {
         s"codegen/eval disagree at ${r.getDouble(0)}")
     }
   }
+
+  private def hist(r: org.apache.spark.sql.Row, i: Int): Map[Double, Long] =
+    if (r.isNullAt(i)) null else r.getMap[Double, Long](i).toMap
+
+  test("BoundedHistogram: -0.0 and 0.0 are one key with summed counts; " +
+    "NaN and null are skipped") {
+    import graft.engine.Reductions.boundedHistogram
+    val vs = Seq[java.lang.Double](-0.0, 0.0, null, Double.NaN, -0.0, 2.0,
+      java.lang.Double.longBitsToDouble(0x7ff0000000000001L), 0.0)
+    val r = vs.toDF("v").repartition(3)
+      .agg(boundedHistogram(col("v"), 2).as("h")).head()
+    assert(hist(r, 0) == Map(0.0 -> 4L, 2.0 -> 1L))
+    // the one zero key is +0.0
+    assert(hist(r, 0).keys.forall(k =>
+      java.lang.Double.doubleToRawLongBits(k) != java.lang.Double.doubleToRawLongBits(-0.0)))
+    // only null and NaN: an empty histogram, not an overflow
+    val none = Seq[java.lang.Double](null, Double.NaN).toDF("v")
+      .agg(boundedHistogram(col("v"), 1)).head()
+    assert(hist(none, 0) == Map.empty)
+  }
+
+  test("BoundedHistogram: an overflow poisons the result through merges " +
+    "in both orders and through serialization") {
+    import graft.functions.BoundedHistogram
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.MapData
+    import org.apache.spark.sql.types.DoubleType
+    val agg = BoundedHistogram(BoundReference(0, DoubleType, nullable = true), cap = 3)
+    def buf(vs: Double*): BoundedHistogram.Counts =
+      vs.foldLeft(agg.createAggregationBuffer())((b, v) => agg.update(b, InternalRow(v)))
+    def out(b: BoundedHistogram.Counts): Map[Double, Long] = agg.eval(b) match {
+      case null => null
+      case m: MapData =>
+        m.keyArray.toDoubleArray().zip(m.valueArray.toLongArray()).toMap
+    }
+    // each partial is under the cap, their union is over it
+    assert(out(agg.merge(buf(1, 2), buf(3, 4))) == null)
+    assert(out(agg.merge(buf(3, 4), buf(1, 2))) == null)
+    // a poisoned partial poisons any merge it enters, on either side
+    val over = buf(1, 2, 3, 4)
+    assert(out(over) == null)
+    assert(out(agg.merge(buf(), buf(1, 2, 3, 4))) == null)
+    assert(out(agg.merge(buf(1, 2, 3, 4), buf())) == null)
+    assert(out(agg.merge(buf(1), over)) == null)
+    assert(out(agg.deserialize(agg.serialize(over))) == null)
+    // under the cap, shared keys add up, in either order
+    val want = Map(1.0 -> 3L, 2.0 -> 2L, 0.0 -> 2L)
+    assert(out(agg.merge(buf(1, 1, -0.0), buf(2, 1, 2, 0.0))) == want)
+    assert(out(agg.merge(buf(2, 1, 2, 0.0), buf(1, 1, -0.0))) == want)
+    assert(out(agg.deserialize(agg.serialize(buf(1, 1, -0.0, 2)))) ==
+      Map(1.0 -> 2L, 0.0 -> 1L, 2.0 -> 1L))
+    // in a plan: two partitions of two values each, merged over cap 3
+    val r = spark.range(0, 4, 1, 2).select(col("id").cast("double").as("v"))
+      .agg(graft.engine.Reductions.boundedHistogram(col("v"), 3),
+        graft.engine.Reductions.boundedHistogram(col("v"), 4)).head()
+    assert(r.isNullAt(0))
+    assert(hist(r, 1) == Map(0.0 -> 1L, 1.0 -> 1L, 2.0 -> 1L, 3.0 -> 1L))
+  }
+
+  test("BoundedHistogram: a grouped histogram over > 128 keys (the " +
+    "sort-based ObjectHashAggregate fallback) equals exact groupBy counts") {
+    import graft.engine.Reductions.boundedHistogram
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // every partition sees all 300 keys: past the 128-key fallback
+    // threshold, so partial buffers are serialized for the sort
+    val df = spark.range(0, 20000, 1, 4).select((col("id") % 300).as("k"),
+      (col("id") * 7 % 13).cast("double").as("v"))
+    val grouped = df.groupBy("k").agg(boundedHistogram(col("v"), 16).as("h"))
+    val got = grouped.collect().flatMap { r =>
+      hist(r, 1).map { case (v, n) => (r.getLong(0), v, n) }
+    }.toSet
+    val want = df.groupBy("k", "v").count().collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
+    assert(got.size == want.size && got == want)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val fellBack = helper.collect(grouped.queryExecution.executedPlan) {
+      case o: ObjectHashAggregateExec => o.metrics("numTasksFallBacked").value
+    }
+    assert(fellBack.sum > 0, "expected the sort-based fallback to run")
+  }
+
+  test("BoundedHistogram runs with codegen fallback off and CODEGEN_ONLY " +
+    "projections") {
+    import graft.engine.Reductions.boundedHistogram
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    val df = s.range(0, 5000, 1, 4).select((col("id") % 5).as("k"),
+      (col("id") % 11).cast("double").as("v"))
+    val got = df.groupBy("k").agg(count(lit(1)).as("n"),
+        boundedHistogram(col("v"), 64).as("h"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), hist(r, 2))).toMap
+    assert(got.size == 5)
+    got.foreach { case (k, (n, h)) =>
+      assert(n == 1000L && h.values.sum == 1000L && h.size == 11, s"key $k")
+    }
+  }
 }

@@ -851,13 +851,94 @@ class GroupCorrSpec extends SparkSpec {
     assert(math.abs(rho(padded)) < 1e-12, s"in-plan regime: ${rho(padded)}")
   }
 
+  /** 2048 keys of three rows each, above the 1024-key probe bound: x
+    * (~2050 values) is counted by quantile-cut bucket, y (3 values) by
+    * value; every group's spearman is 1. */
+  private def padded2048 = (0 until 2048).flatMap(i => Seq(
+      (s"p$i", i.toDouble, 1.0), (s"p$i", i + 1.0, 2.0), (s"p$i", i + 2.0, 3.0)))
+    .toDF("g", "x", "y")
+
+  test("corrMatrixBy(spearman) above the key bound builds every rank " +
+    "table with one counts job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val df = padded2048
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marker = "rank-counts-test-marker"
+    @volatile var seen = false
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties.getProperty("spark.job.description") == marker) seen = true
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    val out = try {
+      val o = Corr.corrMatrixBy(df, "g", Seq("x", "y"), "spearman")
+      // one listener queue delivers in order: once the marker job is
+      // seen, every event of the call above has been too
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val until = System.nanoTime() + 30000000000L
+      while (!seen && System.nanoTime() < until) Thread.sleep(20)
+      assert(seen, "listener never saw the marker job")
+      o
+    } finally sc.removeSparkListener(l)
+    // the call ran the approx-NDV probe, the quantile cuts (whose
+    // posexplode is not this) and ONE counts aggregate for both columns
+    val counts = plans.toArray.map(_.toString)
+      .filter(_.contains("explode(array(struct("))
+    assert(counts.length == 1, s"${counts.length} counts jobs")
+    assert(counts.head.contains("graft_bucket_bin"), counts.head)
+    assert(plans.size <= 3, s"${plans.size} queries ran during the call")
+    // every table is a driver LocalRelation: the only aggregate left in
+    // the plan is the per-key corr
+    val lp = out.queryExecution.optimizedPlan
+    assert(lp.collect { case a: Aggregate => a }.length == 1, lp.toString)
+    val cells = out.filter(col("c1") === "x" && col("c2") === "y").collect()
+    assert(cells.length == 2048 && cells.forall(_.getDouble(3) == 1.0))
+  }
+
+  test("Rank counts job: a keyNdv that understates the keys fails " +
+    "loudly at the cap instead of building a truncated table") {
+    import graft.engine.Rank
+    val df = padded2048
+    val p = Rank.probe(df, Seq("g"), Seq("x", "y"))
+    assert(p.groups.isEmpty, "expected the regime above the key bound")
+    assert(Rank.midrank(p, Seq("rx", "ry")).count() == 3 * 2048)
+    // one key claimed: both columns now count by value, and their
+    // 2 × 6144 (key, value) rows exceed the bound of ~1 key
+    val e = intercept[IllegalArgumentException](
+      Rank.midrank(p.copy(keyNdv = 1L), Seq("rx", "ry")))
+    assert(e.getMessage.contains("x, y"), e.getMessage)
+  }
+
+  test("Rank counts job: a NaN key and a binary key each rank as one " +
+    "group, as in the per-key probe regime") {
+    import graft.engine.Rank
+    val df = (1 to 600).map { i =>
+      val d = if (i % 3 == 0) Double.NaN else (i % 2).toDouble
+      (d, Array((i % 5).toByte), (i * 7 % 13).toDouble, i.toLong)
+    }.toDF("d", "b", "v", "id")
+    val p = Rank.probe(df, Seq("d", "b"), Seq("v"))
+    def ranks(q: Rank.Probe): Map[Long, Double] = Rank.midrank(q, Seq("r"))
+      .select("id", "r").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val want = ranks(p)
+    assert(want.size == 600)
+    assert(ranks(p.copy(groups = None)) == want, "counted by value")
+    assert(ranks(p.copy(groups = None, gate = 0L)) == want, "counted by bucket")
+  }
+
   test("corrMatrixBy spearman: low-NDV columns take the broadcast " +
     "rank-stats path (no corpus-sized WindowExec), values unchanged") {
     import org.apache.spark.sql.execution.window.WindowExec
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    // x, y both low-NDV: the ranked frame must carry NO window over
-    // non-aggregated input (the offset window over the counts agg is
-    // the only legitimate one)
+    // x, y both low-NDV: every rank attaches by a join on a driver-built
+    // stats table, so the ranked frame carries no window at all
     val df = (1 to 2000).map { i =>
       (s"g${i % 3}", (i % 5).toDouble, (i * 7 % 11).toDouble)
     }.toDF("g", "x", "y")
@@ -867,10 +948,7 @@ class GroupCorrSpec extends SparkSpec {
       p +: (p.children ++ p.subqueries).flatMap(walk)
     val wins = walk(out.queryExecution.executedPlan)
       .collect { case w: WindowExec => w }
-    wins.foreach { w =>
-      assert(walk(w.child).exists(_.isInstanceOf[BaseAggregateExec]),
-        "corpus-sized WindowExec survived the grouped rank-stats path")
-    }
+    assert(wins.isEmpty, s"${wins.size} WindowExec in the rank-stats path")
     // and the coefficient matches the direct per-group computation
     val cells = out.filter(col("c1") === "x" && col("c2") === "y")
       .collect().map(r => r.getString(0) -> r.getDouble(3)).toMap

@@ -78,25 +78,8 @@ class PlanGuardSpec extends SparkSpec {
       .filterNot { case (name, _) => ScalesWithParallelism.contains(name) }
       .flatMap { case (name, fn) =>
         val lp = fn(spark, sfDir).queryExecution.optimizedPlan
-        // the grouped rank-stats running-offset window (r14) partitions
-        // its per-(key, value) COUNTS table by `__gk`: the table is
-        // ≤ GroupRankStatsMaxRows rows BY THE CALLER'S NDV GATE at any
-        // corpus size, so one task holding a whole key's slice is
-        // bounded work by construction — but at sf0.001 a near-unique
-        // column's counts table happens to be corpus-sized and trips
-        // the relative-share check. Bounded-by-construction is the same
-        // exemption class as the row floor below. The exemption
-        // requires BOTH the `__gk` key AND an aggregate in the window's
-        // child subtree (ADVICE r14: name-only matching would let any
-        // future corpus-sized window evade the check by picking the
-        // name) — bounded-by-aggregation is what actually justifies it.
-        import org.apache.spark.sql.catalyst.plans.logical.Aggregate
         val wins = lp.collect {
-          case w: LWindow if w.partitionSpec.nonEmpty &&
-            !(w.partitionSpec.exists(_.references.exists(
-                _.name == "__gk")) &&
-              w.child.collectFirst { case a: Aggregate => a }.nonEmpty)
-            => w }
+          case w: LWindow if w.partitionSpec.nonEmpty => w }
         wins.flatMap { w =>
           val key = (w.partitionSpec.map(_.canonicalized.toString),
             w.child.canonicalized.toString)
