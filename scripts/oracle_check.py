@@ -2,14 +2,23 @@
 """Local mirror of the driver's correctness gate: run graft.Verify output
 against the DuckDB oracle (oracle_sql.json) on the same parquet tables.
 
-Usage: python3 scripts/oracle_check.py [sf_dir] [verify_out]
+Usage: python3 scripts/oracle_check.py [sf_dir] [verify_out] [--only q1,q2]
 (run `sbt "runMain graft.Verify <sf_dir> <verify_out>"` first)
+
+Prints one line per query as it finishes: status, name, the seconds the
+oracle SQL took in DuckDB, the seconds the compare took, and the Spark
+row count; then the failures again and the total.
 """
-import sys, os, json, glob
+import argparse, sys, os, json, glob, time
 import duckdb
 
-sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+ap = argparse.ArgumentParser()
+ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+ap.add_argument("out_dir", nargs="?", default="/tmp/verify_out")
+ap.add_argument("--only", default=None,
+                help="comma-separated query names to check (default: all)")
+args = ap.parse_args()
+sf_dir, out_dir = args.sf_dir, args.out_dir
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -20,30 +29,15 @@ for t in TABLES:
     if os.path.exists(p):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-results = {}
-for name in sorted(oracle):
-    spark_dir = f"{out_dir}/{name}"
-    files = glob.glob(f"{spark_dir}/*.parquet")
-    if not files:
-        results[name] = "MISSING_SPARK_OUTPUT"
-        continue
-    try:
-        sdf = con.execute(
-            f"SELECT * FROM read_parquet({files!r})").fetchdf()
-        odf = con.execute(oracle[name]).fetchdf()
-    except Exception as e:
-        results[name] = f"SQL_ERROR: {str(e)[:200]}"
-        continue
+def compare(sdf, odf):
+    """Status of Spark's rows against the oracle's: OK or the first mismatch."""
     # driver semantics: sort columns by name, then compare values
     sdf = sdf.reindex(sorted(sdf.columns), axis=1)
     odf = odf.reindex(sorted(odf.columns), axis=1)
     if list(sdf.columns) != list(odf.columns):
-        results[name] = f"SCHEMA: spark={list(sdf.columns)} oracle={list(odf.columns)}"
-        continue
+        return f"SCHEMA: spark={list(sdf.columns)} oracle={list(odf.columns)}"
     if len(sdf) != len(odf):
-        results[name] = f"ROWS: spark={len(sdf)} oracle={len(odf)}"
-        continue
+        return f"ROWS: spark={len(sdf)} oracle={len(odf)}"
     # row-order-insensitive compare (sort rows by all columns)
     cols = list(sdf.columns)
     s2 = sdf.sort_values(cols, na_position="first").reset_index(drop=True)
@@ -86,11 +80,44 @@ for name in sorted(oracle):
         except Exception as e:
             mismatch = f"COL {c}: compare error {str(e)[:120]}"
             break
-    results[name] = mismatch or "OK"
+    return mismatch or "OK"
+
+
+oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+only = set(args.only.split(",")) if args.only else None
+results = {}
+for name in sorted(oracle):
+    if only is not None and name not in only:
+        continue
+    spark_dir = f"{out_dir}/{name}"
+    files = glob.glob(f"{spark_dir}/*.parquet")
+    duck_s = cmp_s = 0.0
+    rows = "-"
+    if not files:
+        results[name] = "MISSING_SPARK_OUTPUT"
+    else:
+        try:
+            sdf = con.execute(
+                f"SELECT * FROM read_parquet({files!r})").fetchdf()
+            t0 = time.perf_counter()
+            odf = con.execute(oracle[name]).fetchdf()
+            duck_s = time.perf_counter() - t0
+        except Exception as e:
+            results[name] = f"SQL_ERROR: {str(e)[:200]}"
+        else:
+            rows = len(sdf)
+            t0 = time.perf_counter()
+            results[name] = compare(sdf, odf)
+            cmp_s = time.perf_counter() - t0
+    v = results[name]
+    print(f"{'PASS' if v == 'OK' else 'FAIL'} {name}  duckdb {duck_s:.2f}s  "
+          f"compare {cmp_s:.2f}s  rows {rows}" + ("" if v == "OK" else "  " + v),
+          flush=True)
 
 n_ok = sum(1 for v in results.values() if v == "OK")
 for k, v in results.items():
-    print(("PASS " if v == "OK" else "FAIL ") + k + ("" if v == "OK" else "  " + v))
+    if v != "OK":
+        print("FAIL " + k + "  " + v)
 print(f"\n{n_ok}/{len(results)} queries match (+ rows-only: "
       f"{sorted(set(os.path.basename(p) for p in glob.glob(out_dir + '/q_*')) - set(oracle))})")
 sys.exit(0 if n_ok == len(results) else 1)

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 object Bench {
   /** Bench-only rows (no oracle; never part of the Verify contract).
@@ -296,7 +297,7 @@ object Bench {
         if (cycle <= repsFor(name) && !errors.contains(name)) {
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count() } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               errors(name) = e.toString.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(300)
               System.err.println(s"[bench] FAILED $name (cycle $cycle)")
               e.printStackTrace()
@@ -388,7 +389,7 @@ object Bench {
         "BENCH.json" else "BENCH_partial.json"
       val w = new java.io.PrintWriter(out)
       try w.println(full) finally w.close()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // One COMPACT line per query (VERDICT r14 item 2): the driver's
     // tail capture truncates the giant single-line record above
     // mid-map, which left PERF.per_query and the scaling block empty

@@ -98,35 +98,34 @@ object Queries3 {
          ORDER BY purchase_id, click_id"""),
 
     // ---- §2.5 rank method variants: min / dense / first / max / pct —
-    //      all derived from the per-value rank stats
-    //      (Reductions.rankStatsTable: one bounded counts collect,
-    //      broadcast back). method='first' adds the within-tie ordinal
-    //      via Reductions.withinTieOrdinal: the tiebreak column is
-    //      bucketed by value-deterministic quantile cuts, so NO window
-    //      is partitioned by the value alone — l_quantity has ~50
-    //      distinct values and a by-value window would put a whole
-    //      ~N/50-row tie group on one task at 100 TB. The largest
-    //      partition anywhere is ~tieGroup/buckets.
+    //      all read from the Rank kernel's by-value table of
+    //      l_quantity (Rank.valueTable: the probe's histogram, broadcast
+    //      back) and the probe's non-null count. method='first' adds the
+    //      within-tie ordinal via Reductions.withinTieOrdinal: the
+    //      tiebreak column is bucketed by value-deterministic quantile
+    //      cuts, so NO window is partitioned by the value alone —
+    //      l_quantity has ~50 distinct values and a by-value window would
+    //      put a whole ~N/50-row tie group on one task at 100 TB. The
+    //      largest partition anywhere is ~tieGroup/buckets.
     //      Null values left-join to null stats -> null ranks
     //      (pandas na_option='keep', intentional), unlike a nulls-last
     //      window which would assign them trailing ranks. ----
     Query("q_rank_methods", (s, d) => {
       val q = col("l_quantity")
       val li = T(s, d, "lineitem")
-      val stats = Reductions.rankStatsTable(li, "l_quantity")
-      val tot = stats.agg(sum(col("__gc")).as("__tot"))
+      val p = Rank.probe(li, Nil, Seq("l_quantity"))
+      val tot = p.groups.get.head.n(0).toDouble
       val tiebreak = Seq(col("l_orderkey"), col("l_linenumber"),
         col("l_extendedprice"), col("l_discount"))
       Reductions.withinTieOrdinal(li, "l_quantity", tiebreak, "__tie_ord")
-        .join(stats, q === col("__gv"), "left")
-        .crossJoin(broadcast(tot))
+        .join(Rank.valueTable(p, 0), q === col("__gv"), "left")
         .select(
           col("l_orderkey"), col("l_linenumber"), q,
           (col("__gb") + 1).cast("long").as("rk_min"),
           col("__gd").cast("long").as("rk_dense"),
           (col("__gb") + col("__tie_ord")).cast("long").as("rk_first"),
           (col("__gb") + col("__gc")).cast("long").as("rk_max"),
-          r((col("__gb") + 1) / col("__tot"), 6).as("rk_min_pct"))
+          r((col("__gb") + 1) / tot, 6).as("rk_min_pct"))
         .orderBy(col("l_orderkey"), col("l_linenumber"), q,
           col("l_extendedprice"), col("rk_first"))
     },

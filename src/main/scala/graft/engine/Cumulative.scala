@@ -45,12 +45,8 @@ object Cumulative {
       lit(null)).otherwise(out)
   def cumsumNoSkip(c: Column, w: WindowSpec): Column =
     poisoned(c, w, sum(c).over(running(w)))
-  def cumminNoSkip(c: Column, w: WindowSpec): Column =
-    poisoned(c, w, min(c).over(running(w)))
   def cummaxNoSkip(c: Column, w: WindowSpec): Column =
     poisoned(c, w, max(c).over(running(w)))
-  def cumprodNoSkip(c: Column, w: WindowSpec): Column =
-    poisoned(c, w, udaf(Reductions.productAgg).apply(c).over(running(w)))
 
   /** cumprod via the product Aggregator as a running window function
     * (exact, handles zeros/negatives; WindowExec evaluates the growing
@@ -69,16 +65,10 @@ object Cumulative {
     * to pick bounds, so re-evaluating it for the second pass could assign
     * rows to different partitions than the offsets were computed from.
     * `order` must be a total order (unique keys) for a well-defined
-    * result — same requirement as any running sum. */
-  def globalCumsum(df: org.apache.spark.sql.DataFrame, order: Seq[Column],
-                   value: Column, out: String,
-                   partitions: Int = 0): org.apache.spark.sql.DataFrame =
-    globalCumsumMulti(df, order, Seq(value -> out), partitions)
-
-  /** [[globalCumsum]] over SEVERAL value columns in one pass: one range
-    * shuffle, one partials job (all sums together), one broadcast of the
-    * per-partition offsets. Used by the distributed rank, which needs
-    * both a count prefix sum and a dense index in the same ordering.
+    * result — same requirement as any running sum. Every value column
+    * shares the one range shuffle, partials job and offsets broadcast;
+    * the rank kernel's in-plan ungrouped tables sum a count and a dense
+    * index in the same ordering.
     *
     * Precision: partials and offsets are carried as Double — prefix
     * sums are exact only up to 2^53. Fine for counts/measures; do NOT

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The rank kernel: pandas `rank(method='average')` midranks of one or
   * more columns within the groups of `keys`; an empty key list ranks
@@ -28,28 +29,32 @@ import org.apache.spark.sql.types._
   *     buckets when no (key, bucket) holds more than 20% of the rows,
   *     else a window over quantile-cut buckets (one batched
   *     approxQuantile job for all such columns).
-  *   - every table is one `(keys, value-or-bucket, cnt, before)`
-  *     LocalRelation built on the driver by [[table]] from per-key
-  *     counts: the probe's, or, for the columns the probe could not
-  *     count (value counts above the key bound, quantile-cut buckets),
-  *     those of ONE counts job over all of them ([[countTables]]).
-  *     Stats join: rank = before + (cnt + 1) / 2. Bucket
-  *     window, partitioned by (keys, bucket) and ordered by the value:
-  *     rank = offset + cum − tie + (tie + 1) / 2, where cum counts the
-  *     default RANGE frame (up to and including the tie group) and tie
-  *     the RANGE(0, 0) frame. No window is ever partitioned by the keys
-  *     alone over the frame, so a low-cardinality key never sorts a
-  *     whole group in one task.
+  *   - every table is one `(keys, value-or-bucket, cnt, before, dense)`
+  *     table of per-key counts: the probe's, or, for the columns the
+  *     probe could not count (value counts above the key bound,
+  *     quantile-cut buckets, columns not exact as doubles), those of
+  *     ONE exploded counts aggregate ([[countTables]]). One rule places
+  *     a counted table: when its row bound (keys × values, or keys ×
+  *     buckets) fits the same gate it is collected and built on the
+  *     driver by [[table]] and broadcast; otherwise it stays in the
+  *     plan, its `before` a running sum over the counts, and joins back
+  *     by a shuffle join. Stats join: rank = before + (cnt + 1) / 2.
+  *     Bucket window, partitioned by (keys, bucket) and ordered by the
+  *     value: rank = offset + cum − tie + (tie + 1) / 2, where cum
+  *     counts the default RANGE frame (up to and including the tie
+  *     group) and tie the RANGE(0, 0) frame. No window is ever
+  *     partitioned by the keys alone over the frame, so a
+  *     low-cardinality key never sorts a whole group in one task.
   *
   * Domain: grouped columns must be exact as doubles (double, float and
   * the ≤32-bit integers); callers cast to double first, which is
   * pandas' own float64 domain for corr. An ungrouped column of any
-  * other orderable type (long, decimal, string, timestamp) takes its
-  * stats table from [[Reductions.rankStatsTable]]'s typed counts
-  * collect, so a long ranks exactly above 2^53. NaN ranks greatest
-  * (Spark's order) and -0.0 ties 0.0 on every path; null values get
-  * null ranks; keys match null-safely, so a null key is a group like
-  * any other. The regime moves work placement, never rank values. */
+  * other orderable type (long, decimal, string, timestamp) is counted
+  * by its raw value, so a long ranks exactly above 2^53. NaN ranks
+  * greatest (Spark's order) and -0.0 ties 0.0 on every path; null
+  * values get null ranks; keys match null-safely, so a null key is a
+  * group like any other. The regime moves work placement, never rank
+  * values. */
 object Rank {
 
   /** Key-NDV bound of the per-key probe collect (r15): at or below it
@@ -66,9 +71,11 @@ object Rank {
       bkt: IndexedSeq[Map[Double, Long]])
 
   /** What [[probe]] learned about `df`: `groups` is None above
-    * [[GroupedProbeMaxKeys]] keys, and `colNdv` (approximate, grouped
-    * probes only) then sizes the value-count gate
-    * keyNdv × colNdv ≤ `gate`; both NDVs also bound the counts job. */
+    * [[GroupedProbeMaxKeys]] keys. `colNdv` bounds each column's
+    * by-value counts: grouped, the approximate NDV, which also sizes
+    * the value-count gate keyNdv × colNdv ≤ `gate`; ungrouped, the
+    * approximate NDV of a column not exact as a double and the
+    * non-null count (an upper bound) of any other. */
   final case class Probe(df: DataFrame, keys: Seq[String], cols: Seq[String],
       gate: Long, keyNdv: Long, colNdv: IndexedSeq[Long],
       groups: Option[Seq[Group]])
@@ -94,36 +101,71 @@ object Rank {
         val r = df.agg(aggs.head, aggs.tail: _*).head()
         (r.getLong(0), cols.indices.map(i => r.getLong(i + 1)))
       }
-    val groups =
-      if (keyNdv > GroupedProbeMaxKeys) None
-      else {
-        val cap = math.max(16L, gate / math.max(keyNdv, 1L)).toInt
-        val aggs = count(lit(1)) +: cols.zipWithIndex.flatMap { case (c, i) =>
-          val v = col(c).cast("double")
-          count(col(c)).as(s"__n$i") +: (
-            if (!exact(df.schema(c).dataType)) Nil
-            else Seq(Reductions.boundedHistogram(v, cap).as(s"__h$i"),
-              Reductions.boundedHistogram(graft.functions.SortableBucket
-                .sortableBucket(v).cast("double"), cap).as(s"__b$i")))
-        }
-        val rows = df.groupBy(keys.map(col): _*)
-          .agg(aggs.head, aggs.tail: _*).collect().toSeq
-        def hists(r: Row, p: String): IndexedSeq[Map[Double, Long]] =
-          cols.indices.map { i =>
-            val f = r.schema.fieldNames.indexOf(s"$p$i")
-            if (f < 0 || r.isNullAt(f)) null
-            else r.getMap[Double, Long](f).toMap
-          }
-        Some(rows.map(r => Group(keys.indices.map(r.get), r.getLong(keys.size),
-          cols.indices.map(i => r.getLong(r.fieldIndex(s"__n$i"))),
-          hists(r, "__h"), hists(r, "__b"))))
+    if (keyNdv > GroupedProbeMaxKeys) Probe(df, keys, cols, gate, keyNdv, colNdv, None)
+    else {
+      val cap = math.max(16L, gate / math.max(keyNdv, 1L)).toInt
+      val aggs = count(lit(1)) +: cols.zipWithIndex.flatMap { case (c, i) =>
+        val v = col(c).cast("double")
+        count(col(c)).as(s"__n$i") +: (
+          if (!exact(df.schema(c).dataType)) Seq(approx_count_distinct(col(c)).as(s"__d$i"))
+          else Seq(Reductions.boundedHistogram(v, cap).as(s"__h$i"),
+            Reductions.boundedHistogram(graft.functions.SortableBucket
+              .sortableBucket(v).cast("double"), cap).as(s"__b$i")))
       }
-    Probe(df, keys, cols, gate, keyNdv, colNdv, groups)
+      val rows = df.groupBy(keys.map(col): _*)
+        .agg(aggs.head, aggs.tail: _*).collect().toSeq
+      def hists(r: Row, p: String): IndexedSeq[Map[Double, Long]] =
+        cols.indices.map { i =>
+          val f = r.schema.fieldNames.indexOf(s"$p$i")
+          if (f < 0 || r.isNullAt(f)) null
+          else r.getMap[Double, Long](f).toMap
+        }
+      val groups = rows.map(r => Group(keys.indices.map(r.get), r.getLong(keys.size),
+        cols.indices.map(i => r.getLong(r.fieldIndex(s"__n$i"))),
+        hists(r, "__h"), hists(r, "__b")))
+      val ndv = if (keys.nonEmpty) colNdv else cols.indices.map(i =>
+        if (exact(df.schema(cols(i)).dataType)) groups.head.n(i) else rows.head.getAs[Long](s"__d$i"))
+      Probe(df, keys, cols, gate, keyNdv, ndv, Some(groups))
+    }
   }
 
   /** How one column attaches: a stats join on the value when `bucket`
     * is None, else the midrank window over `bucket`. */
   private case class Attach(bucket: Option[Column], table: DataFrame)
+
+  /** Column `i`'s attachment from the probe alone, if its counts fit:
+    * the value histogram (NaN added back), else the fixed buckets when
+    * no (key, bucket) holds more than 20% of the rows. */
+  private def probed(p: Probe, i: Int): Option[Attach] = {
+    val c = p.cols(i)
+    if (!exact(p.df.schema(c).dataType)) {
+      require(p.keys.isEmpty, s"rank: cast grouped column $c to double")
+      None
+    } else p.groups.flatMap { gs =>
+      val hs = gs.map(_.hist(i)); val bs = gs.map(_.bkt(i))
+      // NaN is absent from the value histogram but not from n
+      lazy val withNaN = gs.map { g =>
+        val nan = g.n(i) - g.hist(i).values.sum
+        g.key -> (if (nan > 0) g.hist(i) + (Double.NaN -> nan) else g.hist(i))
+      }
+      lazy val bcounts = bs.flatMap(_.values)
+      if (hs.forall(_ != null) && withNaN.map(_._2.size).sum <= p.gate)
+        Some(Attach(None, table(p.df, p.keys, DoubleType, withNaN)))
+      else if (bs.forall(_ != null) && bcounts.size <= p.gate &&
+          (bcounts.isEmpty || bcounts.max.toDouble / bcounts.sum <= 0.2))
+        Some(Attach(Some(graft.functions.SortableBucket.sortableBucket(col(c))),
+          table(p.df, p.keys, DoubleType, gs.map(_.key).zip(bs))))
+      else None
+    }
+  }
+
+  /** Column `i`'s by-value `(keys, __gv, __gc, __gb, __gd)` table, the
+    * one its stats join reads: pandas' min, max and dense ranks are
+    * `__gb + 1`, `__gb + __gc` and `__gd`. */
+  def valueTable(p: Probe, i: Int): DataFrame = probed(p, i) match {
+    case Some(Attach(None, t)) => t
+    case _ => countTables(p, Seq(i), Map.empty).head
+  }
 
   /** Attach the midrank of each probed column `p.cols(i)` as `outs(i)`
     * to the probed frame. `width` > 0 repartitions each bucket window
@@ -132,36 +174,12 @@ object Rank {
     * match; it moves placement only. */
   def midrank(p: Probe, outs: Seq[String], width: Int = 0): DataFrame = {
     val Probe(df, keys, cols, gate, keyNdv, colNdv, groups) = p
-    // Some: attached from the probe alone; None: counted by the counts
-    // job, by value while the (key, value) table fits the gate, else by
-    // quantile-cut bucket
-    val fromProbe: IndexedSeq[Option[Attach]] = cols.indices.map { i =>
-      val c = cols(i)
-      if (!exact(df.schema(c).dataType)) {
-        require(keys.isEmpty, s"rank: cast grouped column $c to double")
-        Some(Attach(None, Reductions.rankStatsTable(df, c)))
-      } else groups match {
-        case Some(gs) =>
-          val hs = gs.map(_.hist(i)); val bs = gs.map(_.bkt(i))
-          // NaN is absent from the value histogram but not from n
-          lazy val withNaN = gs.map { g =>
-            val nan = g.n(i) - g.hist(i).values.sum
-            g.key -> (if (nan > 0) g.hist(i) + (Double.NaN -> nan) else g.hist(i))
-          }
-          lazy val bcounts = bs.flatMap(_.values)
-          if (hs.forall(_ != null) && withNaN.map(_._2.size).sum <= gate)
-            Some(Attach(None, table(df, keys, withNaN)))
-          else if (bs.forall(_ != null) && bcounts.size <= gate &&
-              (bcounts.isEmpty ||
-                bcounts.max.toDouble / bcounts.sum <= 0.2))
-            Some(Attach(Some(graft.functions.SortableBucket
-              .sortableBucket(col(c))), table(df, keys, gs.map(_.key).zip(bs))))
-          else None
-        case None => None
-      }
-    }
+    // Some: attached from the probe alone; None: counted, by value while
+    // the (key, value) table fits the gate (always for a column not
+    // exact as a double), else by quantile-cut bucket
+    val fromProbe = cols.indices.map(probed(p, _))
     val byValue = cols.indices.filter(i => fromProbe(i).isEmpty &&
-      groups.isEmpty && keyNdv * colNdv(i) <= gate)
+      (!exact(df.schema(cols(i)).dataType) || groups.isEmpty && keyNdv * colNdv(i) <= gate))
     val cut = cols.indices.filter(i => fromProbe(i).isEmpty && !byValue.contains(i))
     val cuts: Map[Int, Array[Double]] =
       if (cut.isEmpty) Map.empty
@@ -175,79 +193,124 @@ object Rank {
             (1 until nb).map(_.toDouble / nb).toArray, 0.01)
         cut.zip(qs.map(_.distinct.sorted)).toMap
       }
-    val bucket: Map[Int, Column] = cuts.map { case (i, cs) =>
-      i -> coalesce(graft.functions.BucketBin.bucketBin(col(cols(i)), cs), lit(0))
-    }
-    // row bound of the counts: the keys the gate saw (exact from the
-    // grouped probe, else the estimate with its headroom) times each
-    // column's values (estimated) or buckets (exact)
-    def est(ndv: Long): Long = math.ceil(ndv * NdvHeadroom).toLong + 1
-    val nKeys = groups.fold(est(keyNdv))(_.size.toLong)
     val counted = (byValue ++ cut).sorted
-    val cap = counted.map(i => nKeys * cuts.get(i).fold(est(colNdv(i)))(_.length + 1L)).sum
-    val tables = counted.zip(countTables(df, keys,
-      counted.map(i => cols(i) -> bucket.getOrElse(i, col(cols(i)))), cap)).toMap
+    val tables = counted.zip(countTables(p, counted, cuts)).toMap
     cols.indices.foldLeft(df) { (d, i) =>
-      val a = fromProbe(i).getOrElse(Attach(bucket.get(i), tables(i)))
+      val a = fromProbe(i).getOrElse(
+        Attach(cuts.get(i).map(bucketOf(col(cols(i)), _)), tables(i)))
       attach(d, keys, cols(i), outs(i), a, width)
     }
   }
+
+  private def bucketOf(c: Column, cuts: Array[Double]): Column =
+    coalesce(graft.functions.BucketBin.bucketBin(c, cuts), lit(0))
 
   /** Headroom of an approx_count_distinct estimate (default 5% rsd):
     * five standard errors. */
   private val NdvHeadroom = 1.25
 
-  /** Driver-built `(keys, value, cnt, before)` table from per-key counts,
-    * in ascending value order with NaN greatest. A Scala map holds -0.0
-    * and 0.0 as one key, so no value has two rows (Spark joins them
-    * equal; two rows would duplicate every 0.0-valued frame row). */
-  private def table(df: DataFrame, keys: Seq[String],
-                    counts: Seq[(Seq[Any], Map[Double, Long])]): DataFrame = {
+  /** Spark's ascending order of collected values: NaN greatest, strings
+    * by their UTF-8 bytes (code points, as pandas orders them). */
+  private val valueOrder: Ordering[Any] = (a: Any, b: Any) => (a, b) match {
+    case (x: Double, y: Double) => java.lang.Double.compare(x, y)
+    case (x: String, y: String) =>
+      UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+    case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+  }
+
+  /** Driver-built `(keys, value, cnt, before, dense)` table from per-key
+    * counts, in ascending value order. A Scala map holds -0.0 and 0.0
+    * as one key and Spark's grouping normalizes them, so no value has
+    * two rows (Spark joins them equal; two rows would duplicate every
+    * 0.0-valued frame row). */
+  private def table(df: DataFrame, keys: Seq[String], vt: DataType,
+                    counts: Seq[(Seq[Any], Iterable[(Any, Long)])]): DataFrame = {
     val rows = counts.flatMap { case (key, m) =>
       var before = 0.0
-      m.toSeq.sortBy(_._1)(Ordering.Double.TotalOrdering).map {
-        case (v, cnt) =>
-          val r = Row.fromSeq(key ++ Seq(v, cnt.toDouble, before))
-          before += cnt; r
+      m.toSeq.sortBy(_._1)(valueOrder).zipWithIndex.map { case ((v, cnt), d) =>
+        val r = Row.fromSeq(key ++ Seq(v, cnt.toDouble, before, d + 1.0))
+        before += cnt; r
       }
     }
     val schema = StructType(keys.zipWithIndex.map { case (k, i) =>
-        StructField(keyName(i), df.schema(k).dataType) } ++ Seq(
-      StructField("__gv", DoubleType),
-      StructField("__gc", DoubleType, nullable = false),
-      StructField("__gb", DoubleType, nullable = false)))
+        StructField(keyName(i), df.schema(k).dataType) } ++
+      (StructField("__gv", vt) +: Seq("__gc", "__gb", "__gd").map(
+        StructField(_, DoubleType, nullable = false))))
     broadcast(df.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), schema))
   }
 
-  /** The `(keys, x, cnt, before)` tables of every `(column, x)` in
-    * `counted` from ONE aggregate job: each row explodes into one
-    * `(column index, x)` per non-null column, grouped by
-    * `(keys, index, x)`. The collect fails loudly, naming the columns,
-    * above `cap` rows rather than build a truncated table. */
-  private def countTables(df: DataFrame, keys: Seq[String],
-      counted: Seq[(String, Column)], cap: Long): Seq[DataFrame] =
-    if (counted.isEmpty) Nil
-    else {
-      val lim = math.min(cap, Int.MaxValue - 1L).toInt
-      val e = explode(array(counted.zipWithIndex.map { case ((c, x), j) =>
-        when(col(c).isNotNull, struct(lit(j).as("i"), x.cast("double").as("v")))
+  /** The `(keys, x, cnt, before, dense)` tables of the columns
+    * `counted`, x being the value or, for a column in `cuts`, its
+    * bucket. Each row explodes into one `(column, x)` per non-null
+    * column, grouped by `(keys, column, x)`; a value not exact as a
+    * double keeps its type in a field of its own. THE driver-or-plan
+    * rule of the kernel: a table whose row bound fits the gate comes
+    * from ONE collect of all such tables, which fails loudly, naming
+    * the columns, above their summed bounds rather than build a
+    * truncated table; any other stays in the plan ([[planTable]]). */
+  private def countTables(p: Probe, counted: Seq[Int],
+      cuts: Map[Int, Array[Double]]): Seq[DataFrame] = {
+    val Probe(df, keys, cols, gate, keyNdv, colNdv, groups) = p
+    // the keys the gate saw (exact from the grouped probe, else the
+    // estimate with its headroom) times the values (estimated) or
+    // buckets (exact)
+    def est(ndv: Long): Long = math.ceil(ndv * NdvHeadroom).toLong + 1
+    val nKeys = groups.fold(est(keyNdv))(_.size.toLong)
+    val bound = counted.map(i =>
+      i -> nKeys * cuts.get(i).fold(est(colNdv(i)))(_.length + 1L)).toMap
+    val typed = counted.filterNot(i => exact(df.schema(cols(i)).dataType))
+    val nk = keys.size
+    def counts(is: Seq[Int]): DataFrame = {
+      val e = explode(array(is.map { i =>
+        val c = cols(i)
+        val x = cuts.get(i).fold(col(c))(bucketOf(col(c), _))
+        when(col(c).isNotNull, struct(lit(i).as("i") +:
+          (if (typed.contains(i)) lit(null) else x).cast("double").as("v") +:
+          typed.map(t => (if (t == i) x else lit(null))
+            .cast(df.schema(cols(t)).dataType).as(s"t$t")): _*))
       }: _*)).as("__e")
-      val rows = df.select(keys.indices.map(i => col(keys(i)).as(keyName(i))) :+ e: _*)
+      df.select(keys.indices.map(k => col(keys(k)).as(keyName(k))) :+ e: _*)
         .filter(col("__e").isNotNull)
-        .groupBy(keys.indices.map(i => col(keyName(i))) ++
-          Seq(col("__e.i"), col("__e.v")): _*)
-        .count().limit(lim + 1).collect()
-      require(rows.length <= lim, s"rank: the counts of " +
-        s"${counted.map(_._1).mkString(", ")} exceed their bound of $lim rows")
-      val nk = keys.size
-      val byCol = rows.groupBy(_.getInt(nk))
-      counted.indices.map { j =>
-        val perKey = byCol.getOrElse(j, Array.empty[Row]).groupBy(keyOf(_, nk))
-        table(df, keys, perKey.values.toSeq.map(rs => (0 until nk).map(rs.head.get) ->
-          rs.map(r => r.getDouble(nk + 1) -> r.getLong(nk + 2)).toMap))
-      }
+        .groupBy(keys.indices.map(k => col(keyName(k))) ++
+          ("i" +: "v" +: typed.map(t => s"t$t")).map(f => col(s"__e.$f")): _*)
+        .count()
     }
+    val (driver, inPlan) = counted.partition(i => bound(i) <= gate)
+    val lim = math.min(driver.map(bound).sum, Int.MaxValue - 1L).toInt
+    val rows = if (driver.isEmpty) Array.empty[Row]
+      else counts(driver).limit(lim + 1).collect()
+    require(rows.length <= lim, s"rank: the counts of " +
+      s"${driver.map(cols).mkString(", ")} exceed their bound of $lim rows")
+    val byCol = rows.groupBy(_.getInt(nk))
+    counted.map { i =>
+      val (v, vt) = if (typed.contains(i)) (s"t$i", df.schema(cols(i)).dataType)
+        else ("v", DoubleType)
+      if (inPlan.contains(i)) planTable(counts(Seq(i)), nk, v)
+      else table(df, keys, vt, byCol.getOrElse(i, Array.empty[Row])
+        .groupBy(keyOf(_, nk)).values.toSeq.map(rs => (0 until nk).map(rs.head.get) ->
+          rs.map(r => r.getAs[Any](v) -> r.getAs[Long]("count"))))
+    }
+  }
+
+  /** A counted table kept in the plan: `before` and the dense index are
+    * running sums over the `(keys, i, v, count)` counts in value order,
+    * by a window partitioned by (keys, column) when grouped, else by the
+    * two-pass range prefix sum of [[Cumulative.globalCumsumMulti]] over
+    * the checkpointed counts, so no task holds a whole column. The
+    * join-back is a shuffle join: the table outgrew the broadcast gate. */
+  private def planTable(counts: DataFrame, nk: Int, v: String): DataFrame = {
+    val ks = (0 until nk).map(k => col(keyName(k)))
+    val t = counts.select(ks ++ Seq(col("i"), col(v).as("__gv"),
+      col("count").cast("double").as("__gc"), lit(1.0).as("__one")): _*)
+    val sums = Seq(col("__gc") -> "__cum", col("__one") -> "__gd")
+    val w = Window.partitionBy(ks :+ col("i"): _*).orderBy("__gv")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    (if (nk > 0) sums.foldLeft(t) { case (d, (x, o)) => d.withColumn(o, sum(x).over(w)) }
+     else Cumulative.globalCumsumMulti(t.localCheckpoint(), Seq(col("__gv").asc), sums))
+      .withColumn("__gb", col("__cum") - col("__gc"))
+      .drop("i", "__one", "__cum").hint("shuffle_hash")
+  }
 
   /** A collected key as a driver map key: Row equality holds NaN equal
     * to itself, as Spark's grouping does; a binary key compares by

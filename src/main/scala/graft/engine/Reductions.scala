@@ -103,59 +103,6 @@ object Reductions {
       .select(col(c)).orderBy(col(c))
   }
 
-  /** Per-VALUE rank statistics of column `c` in ascending order, for any
-    * orderable type: `__gv` the distinct value (original type), `__gc`
-    * its tie-group size, `__gb` the count of values strictly before it
-    * (min rank = before+1, max = before+cnt, average =
-    * before+(cnt+1)/2) and `__gd` its 1-based dense rank. It is the
-    * stats source of [[Rank]] for columns whose double cast is not
-    * exact (strings, timestamps, longs above 2^53).
-    *
-    * Shape: ONE probe job — the value-counts aggregate (map-side
-    * combinable), sorted, with a limit bounding what can reach the
-    * driver. Up to 1,000,000 distinct values the prefix sums run on
-    * the driver and ship back as a broadcast LocalRelation; above it
-    * the two-pass [[Cumulative.globalCumsumMulti]] range-partitioned
-    * prefix sum runs over the re-aggregated counts, so nothing
-    * driver-sized is built. Ties never straddle partitions because the
-    * prefix sum runs per value. */
-  def rankStatsTable(df: DataFrame, c: String): DataFrame = {
-    val maxDriverRows = 1000000
-    val cnts = df.filter(col(c).isNotNull)
-      .groupBy(col(c).as("__gv"))
-      .agg(count(lit(1)).cast("double").as("__gc"))
-    val sorted = cnts.orderBy(col("__gv")).limit(maxDriverRows + 1).collect()
-    if (sorted.length <= maxDriverRows) {
-      var before = 0.0
-      val rows = sorted.zipWithIndex.map { case (r, i) =>
-        val cnt = r.getDouble(1)
-        val out = org.apache.spark.sql.Row(r.get(0), cnt, before, (i + 1).toDouble)
-        before += cnt; out
-      }
-      import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-      val schema = StructType(Seq(
-        cnts.schema.head, // key field keeps the original value type
-        StructField("__gc", DoubleType),
-        StructField("__gb", DoubleType),
-        StructField("__gd", DoubleType)))
-      broadcast(df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), schema))
-    } else {
-      // Large path re-runs the counts aggregate (one extra map-side-
-      // combinable pass) into the distributed prefix sum; checkpoint so
-      // the two passes inside globalCumsumMulti share one evaluation.
-      // Counts/dense indices ride as Double (rank callers cast back to
-      // long): exact only below 2^53 rows / distinct values — fine for
-      // row counts, not for 64-bit id-like payloads.
-      Cumulative.globalCumsumMulti(
-          cnts.localCheckpoint().withColumn("__one", lit(1.0)),
-          Seq(col("__gv").asc),
-          Seq(col("__gc") -> "__cum", col("__one") -> "__gd"))
-        .withColumn("__gb", col("__cum") - col("__gc"))
-        .drop("__one", "__cum")
-    }
-  }
-
   /** pandas `rank(method='average', pct, na_option, ascending)` over the
     * WHOLE frame: the [[Rank]] kernel's midrank plus pandas' options on
     * top. `outs` is (outputColumn, pct?) so average rank and its pct
@@ -220,23 +167,21 @@ object Reductions {
     * measured spill decade), so 64 MB splits the decades cleanly. */
   private[graft] val SortBigBytes: Long = 64L << 20
 
-  /** Default row cap of the [[Rank]] kernel's broadcast tables: a
-    * rank-stats table has one row per (group, distinct value) and is
-    * BROADCAST, so the per-column gate is NDV(key) × NDV(c) ≤ this
-    * (≈1.5 MB of (key, value, cnt, before) doubles). Above the probe's
-    * key bound the kernel compares approx_count_distinct PRODUCTS
-    * against it (default ~5% rsd per estimate), so the realized table
-    * can exceed the cap by the combined estimation error — the cap is
-    * a sizing target with that headroom, not a hard bound; the
-    * 160 B/row footprint model in [[groupRankStatsMaxRows]] absorbs
-    * it. */
+  /** Default driver bound of the [[Rank]] kernel's tables: a rank-stats
+    * table has one row per (group, distinct value) or (group, bucket).
+    * One fitting this many rows (≈1.5 MB of (key, value, cnt, before,
+    * dense) doubles) is built on the driver and BROADCAST; a larger one
+    * stays in the plan and joins back by a shuffle join. Above the
+    * probe's key bound the row count is bounded from
+    * approx_count_distinct estimates with headroom, and a collect past
+    * the summed bounds fails loudly. */
   private[graft] val GroupRankStatsMaxRows: Long = 65536L
 
   /** Session-adaptive form of the gate (VERDICT r14 item 6): size the
     * counts-table row cap from `spark.sql.autoBroadcastJoinThreshold`
     * so the broadcast stats table never outgrows what the session is
     * configured to broadcast. 160 B/row is a conservative
-    * HashedRelation footprint for the 4-field row (boxed key +
+    * HashedRelation footprint for a table row (boxed key +
     * UnsafeRow + hash-table entry), and intentionally maps the 10 MB
     * default threshold to exactly [[GroupRankStatsMaxRows]] (65536) so
     * default-config plans are unchanged. A disabled auto-broadcast
@@ -761,9 +706,6 @@ object Reductions {
   /** Row-wise (axis=1) quantile over a set of columns. */
   def rowQuantile(cols: Seq[Column], q: Double): Column =
     rowQuantileSorted(rowSortedValid(cols), q)
-
-  /** Row-wise median = quantile(0.5). */
-  def rowMedian(cols: Seq[Column]): Column = rowQuantile(cols, 0.5)
 
   /** Row-wise sample variance over the valid values (pandas
     * `var(axis=1, ddof)`): two-pass shifted-mean form

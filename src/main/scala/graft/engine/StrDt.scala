@@ -247,10 +247,6 @@ object StrDt {
   /** pandas str.match: regex anchored at the START only. */
   def strMatch(c: Column, pat: String): Column = c.rlike("^(?:" + pat + ")")
 
-  /** pandas str.fullmatch: regex anchored at both ends. */
-  def strFullmatch(c: Column, pat: String): Column =
-    c.rlike("^(?:" + pat + ")$")
-
   /** pandas str.rfind: 0-based index of the LAST occurrence, -1 when
     * absent — one instr over the reversed pair, no regex. */
   def strRfind(c: Column, sub: String): Column = {

@@ -221,15 +221,7 @@ object Syntax {
     def nuniqueApprox(cols: String*): DataFrame =
       Reductions.nuniqueApprox(df, if (cols.isEmpty) df.columns.toSeq else cols)
 
-    // ---- temporal joins ----
-    def asofJoin(right: DataFrame, on: String, by: Seq[String],
-                 direction: Joins.AsofDirection = Joins.Backward,
-                 toleranceUs: Option[Long] = None): DataFrame =
-      Joins.asof(df, right, on, by, direction, toleranceUs)
-
     // ---- dedup / curation pipeline ----
-    def dedupExact(id: String, text: String): DataFrame =
-      graft.pipeline.Dedup.exact(df, id, text)
     // spanning-edge candidates (r12): clusters only consume component
     // structure, and edges give identical components with linear
     // output per bucket — no quadratic left to cap, so no maxBucket
@@ -264,11 +256,6 @@ object Syntax {
                               vec: String = "embedding"): DataFrame =
       graft.pipeline.Similarity.semanticDecontaminate(df, bench,
         threshold, id, vec)
-    def dedupIncremental(seen: DataFrame, id: String, text: String,
-                         bloomExpectedItems: Long = 0L,
-                         bloomFpp: Double = 0.01): DataFrame =
-      graft.pipeline.Dedup.incremental(df, seen, id, text,
-        bloomExpectedItems, bloomFpp)
     def bm25TopTerms(id: String, text: String, k: Int = 3): DataFrame =
       graft.pipeline.TextAnalysis.bm25TopTerms(df, id, text, k)
     def unigramLogProb(id: String, text: String): DataFrame =
@@ -337,14 +324,6 @@ object Syntax {
                    minPeriods: Int): DataFrame =
       df.withColumn(s"${a}_${b}_cov", WindowOps.rCov(col(a), col(b),
         WindowOps.rollingSpec(w, n), minPeriods))
-    def rollingCorr(a: String, b: String, w: WindowSpec, n: Int,
-                    minPeriods: Int): DataFrame =
-      df.withColumn(s"${a}_${b}_corr", WindowOps.rCorr(col(a), col(b),
-        WindowOps.rollingSpec(w, n), minPeriods))
-    def ewmCov(a: String, b: String, w: WindowSpec, alpha: Double,
-               ignoreNa: Boolean = false): DataFrame =
-      df.withColumn(s"${a}_${b}_ewm_cov",
-        Ewm.cov(col(a), col(b), w, alpha, ignoreNa))
     def ewmCorr(a: String, b: String, w: WindowSpec, alpha: Double,
                 ignoreNa: Boolean = false): DataFrame =
       df.withColumn(s"${a}_${b}_ewm_corr",

@@ -12,13 +12,10 @@ import org.apache.spark.sql.functions._
   * PNG re-encode in `resizeImages`. Payloads no installed reader
   * recognizes (synthetic test media, audio/video containers) fall back
   * to the clearly-marked deterministic STUB so the plumbing — schema,
-  * Dataset[T] encoder, mapPartitions batch shape, partition sizing —
-  * stays exercised end-to-end either way.
+  * Dataset[T] encoder, mapPartitions batch shape — stays exercised end-to-end either way.
   *
-  * Scale notes: binary payloads dominate row size, so the pipeline
-  * repartitions by count (`maxRecordsPerPartition`) before the decode
-  * map; decode is per-partition (one codec init per partition, not per
-  * row), zero shuffle.
+  * Scale notes: decode is per-partition (one codec init per partition,
+  * not per row), zero shuffle.
   */
 object Multimodal {
 
@@ -213,12 +210,5 @@ object Multimodal {
     df.select(col(id).cast("long").as("id"), lit(modality).as("modality"),
         encode(col(text), "UTF-8").as("data"))
       .as[MediaRow]
-  }
-
-  /** Partition-size guard for fat binary rows. */
-  def repartitionForDecode(df: DataFrame, maxRecordsPerPartition: Long): DataFrame = {
-    val n = df.count()
-    val parts = math.max(1, math.ceil(n.toDouble / maxRecordsPerPartition).toInt)
-    df.repartition(parts)
   }
 }

@@ -97,28 +97,6 @@ object Similarity {
     f(vec)
   }
 
-  /** ANN top-k: score only same-bucket candidates. One shuffle keyed by
-    * the bucket id; per-bucket volume is corpus/2^planes on average. */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, planes: Int,
-              dim: Int, seed: Long = 42L): DataFrame = {
-    val ps = hyperplanes(planes, dim, seed)
-    val q = queries.select(col("vec_id").as("query_id"),
-      asDouble(col("embedding")).as("qv"))
-      .withColumn("bucket", lshBucket(col("qv"), ps))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      asDouble(col("embedding")).as("cv"))
-      .withColumn("bucket", lshBucket(col("cv"), ps))
-    val scored = c.withColumn("cn", l2norm(col("cv")))
-      .join(q.withColumn("qn", l2norm(col("qv"))), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", pairCos(col("qv"), col("qn"), col("cv"), col("cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-  }
-
   /** The `tables` seeded plane sets for [[lshTopKMulti]] — exposed so
     * an external oracle can regenerate the identical constants. */
   def multiPlanes(planes: Int, dim: Int, tables: Int,

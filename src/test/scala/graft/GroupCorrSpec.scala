@@ -812,10 +812,17 @@ class GroupCorrSpec extends SparkSpec {
       "fixed-bucket window" -> noHist,
       "quantile-cut window" -> noHist.copy(groups = noHist.groups.map(_.map(g =>
         g.copy(bkt = IndexedSeq(null))))),
-      "in-plan stats join" -> p.copy(groups = None),
+      "counted stats join" -> p.copy(groups = None),
+      // the (key, value) product fits the gate, the headroomed bound not
+      "in-plan stats join" -> p.copy(groups = None, gate = p.keyNdv * p.colNdv(0)),
       "in-plan quantile-cut window" -> p.copy(groups = None, gate = 0L))
-    for ((name, q) <- regimes) {
-      val got = Rank.midrank(q, Seq("r")).select("id", "r").collect()
+    def check(name: String, q: Rank.Probe,
+              truth: Map[Long, Option[Double]]): Unit = {
+      val ranked = Rank.midrank(q, Seq("r"))
+      // a driver table joins back by broadcast, an in-plan one by shuffle
+      val inPlan = ranked.queryExecution.optimizedPlan.toString.contains("shuffle_hash")
+      assert(inPlan == name.startsWith("in-plan"), s"$name: in-plan = $inPlan")
+      val got = ranked.select("id", "r").collect()
         .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
         .toMap
       assert(got.size == 5000, s"$name: ${got.size} rows")
@@ -823,6 +830,17 @@ class GroupCorrSpec extends SparkSpec {
         assert(got(id) == want, s"$name: midrank at id=$id: ${got(id)} vs $want")
       }
     }
+    for ((name, q) <- regimes) check(name, q, truth)
+    // ungrouped, a long (not exact as a double) counts by its raw value:
+    // 2^53 + v keeps every tie that a double cast would merge
+    val longs = rows.map { case (_, v, id) =>
+      (if (v == null || v.isNaN) None else Some((1L << 53) + v.longValue), id) }
+    val lvs = longs.flatMap(_._1)
+    val ltruth = longs.map { case (t, id) => id -> t.map(x =>
+      lvs.count(_ < x) + (lvs.count(_ == x) + 1) / 2.0) }.toMap
+    val lp = Rank.probe(longs.toDF("t", "id"), Nil, Seq("t"))
+    check("driver typed stats join", lp, ltruth)
+    check("in-plan typed stats join", lp.copy(gate = 0L), ltruth)
     // the null-key group really is ranked, and null values rank null
     assert(rows.exists(r => r._1 == null && r._2 != null && !r._2.isNaN))
     assert(rows.filter(_._2 == null).forall { case (_, _, id) => truth(id).isEmpty })
@@ -902,6 +920,52 @@ class GroupCorrSpec extends SparkSpec {
     assert(lp.collect { case a: Aggregate => a }.length == 1, lp.toString)
     val cells = out.filter(col("c1") === "x" && col("c2") === "y").collect()
     assert(cells.length == 2048 && cells.forall(_.getDouble(3) == 1.0))
+  }
+
+  test("Rank: tables above the gate stay in the plan — no counts rows " +
+    "reach the driver, and they join back by shuffle, not broadcast") {
+    import graft.engine.Rank
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val p = Rank.probe(padded2048, Seq("g"), Seq("x", "y"))
+    // y (3 values) still counts by value and x by quantile-cut bucket,
+    // but neither table's headroomed bound fits this gate
+    val low = p.copy(gate = p.keyNdv * p.colNdv(1))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marker = "rank-in-plan-test-marker"
+    @volatile var seen = false
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties.getProperty("spark.job.description") == marker) seen = true
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    val out = try {
+      val o = Rank.midrank(low, Seq("rx", "ry"))
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val until = System.nanoTime() + 30000000000L
+      while (!seen && System.nanoTime() < until) Thread.sleep(20)
+      assert(seen, "listener never saw the marker job")
+      o
+    } finally sc.removeSparkListener(l)
+    assert(!plans.toArray.exists(_.toString.contains("explode(array(struct(")),
+      "a counts aggregate ran while the ranks were built")
+    def ranks(d: org.apache.spark.sql.DataFrame) = d.collect().map(r =>
+      (r.getAs[String]("g"), r.getAs[Double]("x")) ->
+        (r.getAs[Double]("rx"), r.getAs[Double]("ry"))).toMap
+    val got = ranks(out)
+    assert(got.size == 3 * 2048 && got == ranks(Rank.midrank(p, Seq("rx", "ry"))))
+    // the plan that ran, after adaptive re-planning
+    val plan = out.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    assert(plan.contains("isFinalPlan=true"), plan)
+    assert(!plan.contains("BroadcastHashJoin"), plan)
+    assert("ShuffledHashJoin".r.findAllMatchIn(plan).size == 2, plan)
   }
 
   test("Rank counts job: a keyNdv that understates the keys fails " +

@@ -304,6 +304,44 @@ class ReductionsSpec extends SparkSpec {
     assert(out == Map(big -> 1.0, (big + 1) -> 2.0, (big + 2) -> 3.0))
   }
 
+  test("withRankAvg ranks strings and timestamps like pandas rank(), " +
+    "ties and nulls included") {
+    // pandas Series(["b", "a", None, "b", "\uFF21", "a", "b",
+    // "\U0001D49C"]).rank() = [4, 1.5, NaN, 4, 6, 1.5, 4, 7]: code-point
+    // order puts U+FF21 before U+1D49C, which UTF-16 order would swap
+    val strs = Seq("b", "a", null, "b", "\uFF21", "a", "b", "\uD835\uDC9C")
+    val sr = Reductions.withRankAvg(strs.zipWithIndex.toDF("s", "id"), "s",
+      Seq("r" -> false)).collect().map(r => r.getInt(1) -> r.get(2)).toMap
+    assert(sr == Map(0 -> 4.0, 1 -> 1.5, 2 -> null, 3 -> 4.0, 4 -> 6.0,
+      5 -> 1.5, 6 -> 4.0, 7 -> 7.0))
+    // pandas Series(pd.to_datetime(["2024-01-02", "2024-01-01", None,
+    // "2024-01-02 00:00:00.000001", "2024-01-02"])).rank()
+    //   = [2.5, 1, NaN, 4, 2.5]
+    val ts = Seq("2024-01-02 00:00:00", "2024-01-01 00:00:00", null,
+      "2024-01-02 00:00:00.000001", "2024-01-02 00:00:00")
+    val tdf = ts.zipWithIndex.toDF("s", "id").select(col("s").cast("timestamp").as("t"), col("id"))
+    val tr = Reductions.withRankAvg(tdf, "t", Seq("r" -> false))
+      .collect().map(r => r.getInt(1) -> r.get(2)).toMap
+    assert(tr == Map(0 -> 2.5, 1 -> 1.0, 2 -> null, 3 -> 4.0, 4 -> 2.5))
+  }
+
+  test("longs next to 2^53 rank the same in the driver and the in-plan " +
+    "regime (pandas int64 ranks)") {
+    import graft.engine.Rank
+    val big = 1L << 53
+    val df = Seq(Some(big + 2), Some(big), None, Some(big + 1), Some(big - 1),
+      Some(big + 1)).toDF("x")
+    val p = Rank.probe(df, Nil, Seq("x"))
+    def ranks(q: Rank.Probe) = Rank.midrank(q, Seq("r")).collect()
+      .map(r => Option(r.get(0)) -> Option(r.get(1))).toMap
+    val want = Map(Some(big - 1) -> Some(1.0), Some(big) -> Some(2.0),
+      Some(big + 1) -> Some(3.5), Some(big + 2) -> Some(5.0), None -> None)
+    assert(ranks(p) == want, "driver regime")
+    val inPlan = Rank.midrank(p.copy(gate = 0L), Seq("r"))
+    assert(inPlan.queryExecution.optimizedPlan.toString.contains("shuffle_hash"))
+    assert(ranks(p.copy(gate = 0L)) == want, "in-plan regime")
+  }
+
   test("nuniqueApprox: HLL within rsd of exact") {
     import spark.implicits._
     val df = (1 to 10000).map(i => i % 997).toDF("v")

@@ -285,7 +285,7 @@ class WindowSpec extends SparkSpec {
   test("global cumsum: two-pass prefix sum equals a sequential running sum") {
     val df = (1 to 100).map(i => (i.toLong, i * 0.5)).toDF("i", "v")
       .repartition(7) // scatter rows so offsets actually matter
-    val out = Cumulative.globalCumsum(df, Seq(col("i")), col("v"), "c")
+    val out = Cumulative.globalCumsumMulti(df, Seq(col("i")), Seq(col("v") -> "c"))
       .orderBy("i")
     val expect = (1 to 100).scanLeft(0.0)(_ + _ * 0.5).tail
     assertSeqApprox(colD(out, "c"), expect.map(Some(_)))
