@@ -21,7 +21,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       val ev = Query.T(s, d, "events")
         .withColumn("tsu", unix_micros(col("ts")))
-      graft.engine.Corr.kendallDistributed(ev, "value", "tsu")
+      graft.engine.Corr.kendallGrid(ev, Seq("value", "tsu")).select("kendall")
     },
     "bench_dedup_fuzzy_10x" -> { (s, d) =>
       import org.apache.spark.sql.functions._

@@ -524,13 +524,12 @@ object Queries {
          (SELECT round(corr(ra, rb) + 1e-9,6) FROM rk) AS spearman_qty_price
          FROM lineitem"""),
 
-    // ---- §2.6 kendall tau-b (bounded slice) ----
-    // O(n log n) Knight's-algorithm exact form; identical value to the
-    // pairwise Corr.kendall (spec-asserted), minutes-vs-seconds at 1M+
+    // ---- §2.6 kendall tau-b (bounded slice): the Kendall kernel's
+    //      driver regime, Knight's O(n log n) exact form ----
     Query("q_kendall", (s, d) => {
       val ev = T(s, d, "events").filter(col("user_id") === 7)
         .withColumn("tsu", Core.usOf(col("ts")))
-      Corr.kendallFast(ev, "value", "tsu")
+      Corr.kendall(ev, "value", "tsu")
         .select(r(col("kendall"), 6).as("kendall"))
     },
       """WITH b AS (SELECT value AS x, epoch_us(ts) AS y,
@@ -664,13 +663,14 @@ object Queries {
          ORDER BY user_id, event_id"""),
 
     // ---- §2.6 kendall, EXACT DISTRIBUTED grid decomposition (the
-    //      100 TB path: no driver collect, no sampling) — same tau-b
-    //      as kendallFast, verified against the O(n²) SQL oracle on a
+    //      100 TB path: no driver collect, no sampling), forced at any
+    //      size through the kernel's grid seam — same tau-b as the
+    //      driver regime, verified against the O(n²) SQL oracle on a
     //      two-user slice ----
     Query("q_kendall_dist", (s, d) => {
       val ev = T(s, d, "events").filter(col("user_id").isin(3, 7))
         .withColumn("tsu", Core.usOf(col("ts")))
-      Corr.kendallDistributed(ev, "value", "tsu", buckets = 16)
+      Corr.kendallGrid(ev, Seq("value", "tsu"), buckets = 16)
         .select(r(col("kendall"), 6).as("kendall"))
     },
       """WITH b AS (SELECT value AS x, epoch_us(ts) AS y,

@@ -201,7 +201,7 @@ object Queries11 {
     Query("q_kendall_approx", (s, d) => {
       val ev = T(s, d, "events").filter(col("user_id") < 30)
         .withColumn("tsu", Core.usOf(col("ts")))
-      val exact = Corr.kendallFast(ev, "value", "tsu")
+      val exact = Corr.kendall(ev, "value", "tsu")
         .select(col("kendall").as("__e"))
       val approx = Corr.kendallApprox(ev, "value", "tsu", maxRows = 1000)
         .select(col("kendall").as("__a"))

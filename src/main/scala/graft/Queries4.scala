@@ -25,9 +25,10 @@ object Queries4 {
     //      spearman: ONE batched stats job for all 4 columns (bounded
     //      exact histograms + quantile cuts in a single aggregate), each
     //      column ranked once, one corr aggregate for all 6 pairs.
-    //      kendall: one shared bounded collect + Knight O(n log n) per
-    //      pair. The frame is a bounded slice (l_partkey < 200, ~6k rows
-    //      at every SF) because the ORACLE's pairwise tau is O(n²) —
+    //      kendall: the Kendall kernel over the listwise rows (one
+    //      bounded collect + Knight O(n log n) per pair). The frame is
+    //      a bounded slice (l_partkey < 200, ~6k rows at every SF)
+    //      because the ORACLE's pairwise tau is O(n²) —
     //      the engine paths themselves run the scale plans. ----
     Query("q_corr_matrix", (s, d) => {
       val li = T(s, d, "lineitem").filter(col("l_partkey") < 200)

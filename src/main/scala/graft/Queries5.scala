@@ -209,9 +209,9 @@ object Queries5 {
     // ---- §2.6 PAIRWISE-complete kendall matrix — completes the
     //      pairwise family (q_corr_pairwise covers pearson+spearman):
     //      pandas df.corr(method='kendall') on NaN-laden frames. Same
-    //      bounded slice + deterministic holes; ONE bounded collect,
-    //      each cell compacts its own pair mask before Knight's
-    //      O(n log n) tau on the driver pool. ----
+    //      bounded slice + deterministic holes; the Kendall kernel's
+    //      ONE bounded collect, each cell compacting its own pair mask
+    //      before Knight's O(n log n) tau on the driver pool. ----
     Query("q_kendall_pairwise", (s, d) => {
       val li = T(s, d, "lineitem").filter(col("l_partkey") < 200)
       val holed = li.select(
@@ -219,7 +219,7 @@ object Queries5 {
         when(col("l_orderkey") % 5 =!= 1, col("l_extendedprice")).as("l_extendedprice"),
         when(col("l_partkey") % 6 =!= 2, col("l_discount")).as("l_discount"),
         when(col("l_suppkey") % 4 =!= 3, col("l_tax")).as("l_tax"))
-      Corr.kendallMatrixPairwise(holed, MatCols)
+      Corr.kendallMatrix(holed, MatCols)
         .select(col("c1"), col("c2"),
           r(col("kendall"), 6).as("kendall"), col("n"))
         .orderBy("c1", "c2")

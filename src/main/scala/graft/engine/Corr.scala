@@ -18,25 +18,26 @@ import org.apache.spark.sql.functions._
   * [[pearsonLongGramian]] computes the Gramian once). Spearman's rank prestep is the [[Rank]] kernel —
   * one probe job, then broadcast stats joins or bucketed midrank
   * windows, no global window at any scale. Kendall (the reference's
-  * numba kernel is O(n²) pairwise, `_numba.py:106-146`) has three
-  * tiers here: bounded-collect
-  * Knight ([[kendallFast]]), sampled ([[kendallApprox]]), and the
-  * unbounded exact grid decomposition ([[kendallDistributed]]).
+  * numba kernel is O(n²) pairwise, `_numba.py:106-146`) is one kernel,
+  * [[kendallMatrix]], with one rule: one bounded collect of the rows
+  * is both the probe and the data; at most [[kendallCollectMaxRows]]
+  * rows run Knight's O(n log n) tau on the driver, more run every pair
+  * through the exact grid decomposition ([[kendallGrid]]). Both see
+  * the same input projection and pairwise masks. [[kendallMatrixBy]]
+  * runs the same per-cell step per group on the executors, and
+  * [[kendallApprox]] samples into the kernel.
   */
 object Corr {
 
-  /** Byte-aware default for the bounded-collect kendall paths: rows
-    * allowed under a ~256 MB driver-heap budget, with a JVM cost model
-    * of ~(64 + 48·k) bytes per collected external Row of k boxed
-    * doubles (Row object + field array + a boxed Double per cell).
-    * k=2 → ~1.7M rows, k=4 → ~1.0M — replaces the former flat 10M-row
-    * default, which at k=4 meant multiple GiB of driver heap ("bounded"
-    * in name but not in bytes; VERDICT r10). Pass `maxRows` explicitly
-    * to override in either direction; above the bound the matrix forms
-    * escalate to [[kendallMatrixDistributed]] or point at
-    * [[kendallApprox]], both semantically identical. */
-  def kendallCollectMaxRows(k: Int, budgetBytes: Long = 256L << 20): Long =
-    budgetBytes / (64L + 48L * k.max(1))
+  /** The Kendall kernel's driver bound: rows allowed under a ~256 MB
+    * driver-heap budget, with a JVM cost model of ~(64 + 48·k) bytes
+    * per collected external Row of k boxed doubles (Row object + field
+    * array + a boxed Double per cell). k=2 → ~1.7M rows, k=4 → ~1.0M.
+    * [[kendallMatrix]] runs the driver pass up to this many rows and
+    * the grid above it; [[kendallMatrixBy]] buffers at most this many
+    * rows per group. */
+  def kendallCollectMaxRows(k: Int): Long =
+    (256L << 20) / (64L + 48L * k.max(1))
 
   /** Pairwise pearson matrix in long form (c1, c2, corr), upper triangle. */
   def pearsonLong(df: DataFrame, cols: Seq[String]): DataFrame = {
@@ -73,8 +74,7 @@ object Corr {
     * NaN. */
   def corrMatrixBy(df0: DataFrame, key: String, cols: Seq[String],
                    method: String = "pearson",
-                   minPeriods: Int = 1,
-                   kendallMaxGroupRows: Int = 2000000): DataFrame = {
+                   minPeriods: Int = 1): DataFrame = {
     // pandas groupby(dropna=True): null keys drop for EVERY method
     // (Spark's groupBy would keep a null-key group)
     val df = df0.filter(col(key).isNotNull)
@@ -85,8 +85,7 @@ object Corr {
         Rank.midrank(Rank.probe(df, Seq(key), cols), cols.map(c => s"__mr_$c"))
           .select(col(key) +: cols.map(c => col(s"__mr_$c").as(c)): _*)
       case "kendall" =>
-        return kendallMatrixBy(df, key, cols,
-            maxGroupRows = kendallMaxGroupRows, minPeriods = minPeriods)
+        return kendallMatrixBy(df, key, cols, minPeriods)
           .withColumnRenamed("kendall", "corr")
       case other => throw new IllegalArgumentException(
         s"corrMatrixBy: method='$other' (pearson|spearman|kendall)")
@@ -109,18 +108,52 @@ object Corr {
     one.select(col(key), expr(stacked))
   }
 
+  /** Injective string form of a group-key value for `groupByKey`.
+    * `String.valueOf` alone is identity-hash for `Array[Byte]` (Spark
+    * BinaryType surfaces as a JVM array), which would put EQUAL binary
+    * keys in different groups — encode binary as hex and recurse into
+    * containers instead. Container ELEMENTS are length-prefixed
+    * (`<len>:<token>`) so a separator character inside a string element
+    * can never alias two distinct keys (Seq("a,b") vs Seq("a","b")),
+    * and strings/nulls carry a type tag so a string element can never
+    * collide with the null marker or a container rendering -- the same
+    * scheme as snapshotDiff's digest. -0.0 encodes as 0.0, so the two
+    * zeros are one group, as in `groupBy` and pandas. */
+  private[graft] def groupKeyString(v: Any): String = v match {
+    case null => "n"
+    case s: String => "s" + s
+    case b: Array[Byte] => "0x" + b.map("%02x".format(_)).mkString
+    case a: Array[_] => a.map(keyToken).mkString("[", ",", "]")
+    case s: scala.collection.Seq[_] =>
+      s.map(keyToken).mkString("[", ",", "]")
+    case r: org.apache.spark.sql.Row =>
+      r.toSeq.map(keyToken).mkString("(", ",", ")")
+    case other => String.valueOf(unsignedZero(other))
+  }
+  /** Length-prefixed element token: the prefix fixes where each token
+    * ends, making container encodings injective given injective element
+    * encodings. */
+  private def keyToken(v: Any): String = {
+    val e = groupKeyString(v); e.length + ":" + e
+  }
+  private def unsignedZero(v: Any): Any = v match {
+    case d: Double if d == 0.0 => 0.0
+    case f: Float if f == 0f => 0f
+    case other => other
+  }
+
   /** pandas `groupby(key).corr(method='kendall')` — per-group tau-b
     * matrix in long form (key, c1, c2, kendall), upper triangle incl.
     * the diagonal, completing [[corrMatrixBy]]'s method set. pandas
     * runs scipy's kendalltau per group; the analogue here is ONE typed
     * flatMapGroups after one shuffle on the key: each group's k
-    * columns buffer into arrays (GROUP-sized memory — the same
-    * contract as pandas' per-group kernel and GroupBy.p_apply) and
-    * Knight's O(n log n) tau runs per pair, groups in parallel across
-    * executors. `maxGroupRows` fails fast on a group too large to
-    * buffer (route that group's slice through [[kendallDistributed]]).
-    * Cells are pairwise-masked (rows with null/NaN in either column of
-    * the pair drop, like scipy's nan_policy='omit' path pandas uses);
+    * columns, in the kernel's input projection, buffer into arrays
+    * (GROUP-sized memory — the same contract as pandas' per-group
+    * kernel and GroupBy.p_apply) and the kernel's per-cell step
+    * ([[kendallCell]]: pairwise mask, `minPeriods` gate, Knight's
+    * O(n log n) tau) runs per pair, groups in parallel across
+    * executors. A group above [[kendallCollectMaxRows]] rows fails
+    * fast (run that group's slice through [[kendallMatrix]]).
     * OFF-diagonal degenerate (constant-side) cells are null; the
     * diagonal is LITERAL 1.0 without invoking the kernel — the
     * reference's unconditional `np.fill_diagonal(result_mat, 1)`, same
@@ -134,52 +167,19 @@ object Corr {
     * output itself (first row of each group) — no string round-trip
     * join-back, no second scan of a possibly non-deterministic
     * upstream (ADVICE r10). Groups are keyed on an injective string
-    * form of the key ([[groupKeyString]]): primitives via
-    * `String.valueOf`, binary via hex (a raw `Array[Byte].toString` is
-    * per-OBJECT identity and would shatter equal byte keys into one
-    * group per row), arrays/structs element-wise. The one residual
-    * split vs `groupBy` is -0.0/0.0 doubles (string-splits where
-    * groupBy would merge). */
-  /** Injective string form of a group-key value for `groupByKey`.
-    * `String.valueOf` alone is identity-hash for `Array[Byte]` (Spark
-    * BinaryType surfaces as a JVM array), which would put EQUAL binary
-    * keys in different groups — encode binary as hex and recurse into
-    * containers instead. Container ELEMENTS are length-prefixed
-    * (`<len>:<token>`) so a separator character inside a string element
-    * can never alias two distinct keys (Seq("a,b") vs Seq("a","b")),
-    * and strings/nulls carry a type tag so a string element can never
-    * collide with the null marker or a container rendering -- the same
-    * scheme as snapshotDiff's digest. */
-  private[graft] def groupKeyString(v: Any): String = v match {
-    case null => "n"
-    case s: String => "s" + s
-    case b: Array[Byte] => "0x" + b.map("%02x".format(_)).mkString
-    case a: Array[_] => a.map(keyToken).mkString("[", ",", "]")
-    case s: scala.collection.Seq[_] =>
-      s.map(keyToken).mkString("[", ",", "]")
-    case r: org.apache.spark.sql.Row =>
-      r.toSeq.map(keyToken).mkString("(", ",", ")")
-    case other => String.valueOf(other)
-  }
-  /** Length-prefixed element token: the prefix fixes where each token
-    * ends, making container encodings injective given injective element
-    * encodings. */
-  private def keyToken(v: Any): String = {
-    val e = groupKeyString(v); e.length + ":" + e
-  }
-
+    * form of the key ([[groupKeyString]]). */
   def kendallMatrixBy(df: DataFrame, key: String, cols: Seq[String],
-                      maxGroupRows: Int = 2000000,
-                      minPeriods: Int = 1): DataFrame = {
+                      minPeriods: Int = 1): DataFrame =
+    kendallGroups(df, key, cols, minPeriods, kendallCollectMaxRows(cols.size))
+
+  /** [[kendallMatrixBy]] with its per-group row bound as a parameter. */
+  private[graft] def kendallGroups(df: DataFrame, key: String,
+      cols: Seq[String], minPeriods: Int, maxGroupRows: Long): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
     val k = cols.size
     require(k >= 1, "kendallMatrixBy: need at least one column")
-    val pairs = for { i <- 0 until k; j <- i until k } yield (i, j)
-    val slim = df.filter(col(key).isNotNull)
-      .select(col(key).as("__k"),
-        array(cols.map(c =>
-          coalesce(col(c).cast("double"), lit(Double.NaN))): _*).as("__vs"))
+    val slim = kendallInput(df.filter(col(key).isNotNull), cols, col(key).as("__k"))
     val outSchema = StructType(Seq(
       StructField(key, slim.schema("__k").dataType),
       StructField("c1", StringType, nullable = false),
@@ -187,30 +187,16 @@ object Corr {
       StructField("kendall", DoubleType)))
     slim.groupByKey(r => groupKeyString(r.get(0)))(Encoders.STRING)
       .flatMapGroups { (ks: String, it: Iterator[Row]) =>
-        var keyVal: Any = null
-        val rows = new scala.collection.mutable.ArrayBuffer[Seq[Double]]
-        it.foreach { r =>
-          require(rows.size < maxGroupRows,
-            s"kendallMatrixBy: group '$ks' exceeds maxGroupRows=" +
-              s"$maxGroupRows — use kendallDistributed on its slice")
-          if (rows.isEmpty) keyVal = r.get(0)
-          rows += r.getSeq[Double](1)
-        }
-        pairs.iterator.map { case (i, j) =>
+        val rows = it.zipWithIndex.map { case (r, t) =>
+          require(t < maxGroupRows, s"kendallMatrixBy: group '$ks' exceeds " +
+            s"$maxGroupRows rows — run its slice through kendallMatrix")
+          r
+        }.toArray
+        val keyVal = unsignedZero(rows(0).get(0))
+        val data = Array.tabulate(k, rows.length)((i, t) => rows(t).getDouble(1 + i))
+        for (i <- (0 until k).iterator; j <- i until k) yield
           if (i == j) Row(keyVal, cols(i), cols(j), 1.0) // fill_diagonal
-          else {
-            val xs = Array.newBuilder[Double]
-            val ys = Array.newBuilder[Double]
-            rows.foreach { r =>
-              val x = r(i); val y = r(j)
-              if (!x.isNaN && !y.isNaN) { xs += x; ys += y }
-            }
-            val xa = xs.result(); val ya = ys.result()
-            val tau: java.lang.Double =
-              if (xa.length < minPeriods) null else knightTau(xa, ya)
-            Row(keyVal, cols(i), cols(j), tau)
-          }
-        }
+          else Row(keyVal, cols(i), cols(j), kendallCell(data, i, j, minPeriods)._1)
       }(Encoders.row(outSchema))
   }
 
@@ -275,8 +261,7 @@ object Corr {
                bigBytes: Long = Reductions.SortBigBytes): DataFrame = {
     val base = df.select(col(a).cast("double").as("__a"),
         col(b).cast("double").as("__b"))
-      .filter(Seq("__a", "__b").map(c => col(c).isNotNull && !isnan(col(c)))
-        .reduce(_ && _))
+      .filter(complete(Seq("__a", "__b")))
     val p = Rank.probe(base, Nil, Seq("__a", "__b"))
     Rank.midrank(p, Seq("ra", "rb"), rankWidth(p, bigBytes))
       .agg(Core.safeCorr(col("ra"), col("rb")).as("spearman"))
@@ -339,9 +324,7 @@ object Corr {
     : (DataFrame, Seq[(Int, Int)]) = {
     val k = cols.size
     require(k >= 2, "corr matrix: need at least two columns")
-    val keep = cols.map(c => col(c).isNotNull && !isnan(col(c).cast("double")))
-      .reduce(_ && _)
-    val base = df.filter(keep)
+    val base = df.filter(complete(cols))
       .select(cols.zipWithIndex.map { case (c, i) =>
         col(c).cast("double").as(s"__c$i") }: _*)
     val p = Rank.probe(base, Nil, base.columns.toSeq)
@@ -355,21 +338,12 @@ object Corr {
     * pearson, spearman): the final aggregate evaluates raw-value and
     * rank correlations for every pair over the same ranked frame, so
     * the whole two-method matrix costs 1 stats probe + 1 aggregate at
-    * any column count. `withKendall` joins the Knight-tau matrix on
-    * top: the bounded-collect [[kendallMatrix]] while the listwise
-    * frame fits `kendallMaxRows`, automatically escalating to the
-    * unbounded [[kendallMatrixDistributed]] (on the same listwise
-    * mask, so semantics are identical) above it — the full
-    * three-method matrix no longer has a row ceiling.
-    * Listwise-complete masking across `cols`, like the other matrix
-    * forms. */
+    * any column count. `withKendall` joins the [[kendallMatrix]] kernel
+    * over the same listwise-complete rows, so the full three-method
+    * matrix has no row ceiling. Listwise-complete masking across
+    * `cols`, like the other matrix forms. */
   def corrMatrixAll(df: DataFrame, cols: Seq[String],
-                    withKendall: Boolean = false,
-                    kendallMaxRows: Long = 0L): DataFrame = {
-    // 0 = auto: byte-aware default (≤256 MB of driver heap at this k)
-    val kMaxRows =
-      if (kendallMaxRows > 0) kendallMaxRows
-      else kendallCollectMaxRows(cols.size)
+                    withKendall: Boolean = false): DataFrame = {
     val (ranked, pairs) = rankedFrame(df, cols)
     val corrAggs = pairs.flatMap { case (i, j) => Seq(
       Core.safeCorr(col(s"__c$i"), col(s"__c$j")).as(s"p${i}_$j"),
@@ -380,16 +354,8 @@ object Corr {
       .mkString(s"stack(${pairs.size}, ", ", ",
         ") as (c1, c2, pearson, spearman)")
     val ps = one.select(expr(stacked))
-    if (withKendall) {
-      val keep = cols.map(c => col(c).isNotNull && !isnan(col(c).cast("double")))
-        .reduce(_ && _)
-      val km =
-        if (df.filter(keep).limit((kMaxRows + 1).min(Int.MaxValue).toInt)
-            .count() <= kMaxRows)
-          kendallMatrix(df, cols, kMaxRows)
-        else kendallMatrixDistributed(df.filter(keep), cols)
-      ps.join(km, Seq("c1", "c2"))
-    } else ps
+    if (withKendall) ps.join(kendallListwise(df, cols), Seq("c1", "c2"))
+    else ps
   }
 
   /** PAIRWISE-complete pearson + spearman matrix — pandas `df.corr()`
@@ -440,125 +406,93 @@ object Corr {
     ranked.agg(aggs.head, aggs.tail: _*).select(expr(stacked))
   }
 
-  /** PAIRWISE-complete kendall tau-b matrix — pandas
-    * `df.corr(method='kendall')` semantics on NaN-laden frames
-    * (companion to [[corrMatrixPairwise]]): each cell (i, j) masks ITS
-    * OWN pair of columns and is nulled when its pair count is below
-    * `minPeriods`. Same scale shape as [[kendallMatrix]] — ONE bounded
-    * collect + the 8-thread driver Knight pool — but rows with ANY
-    * complete pair are kept (nulls travel as NaN) and each pair
-    * compacts its own mask before the O(n log n) tau. Long form
-    * (c1, c2, kendall, n), upper triangle. */
-  def kendallMatrixPairwise(df: DataFrame, cols: Seq[String],
-                            maxRows: Long = 0L,
-                            minPeriods: Int = 1): DataFrame = {
-    val spark = df.sparkSession
+  /** The Kendall kernel: pandas `df.corr(method='kendall',
+    * min_periods)` — `p_corr(method='kendall')` — as a tau-b matrix in
+    * long form (c1, c2, kendall, n), upper triangle. Every cell (i, j)
+    * masks ITS OWN pair of columns (rows with null or NaN in either
+    * drop) and is null when its pair count `n` is below `minPeriods`
+    * or one side is constant.
+    *
+    * One rule picks the algorithm: ONE `limit(bound + 1)` collect of
+    * the rows with at least two cells is both the probe and the data,
+    * with `bound` = [[kendallCollectMaxRows]](k). At most `bound` rows:
+    * each pair compacts its mask and runs Knight's O(n log n) tau
+    * ([[kendallCell]]) on the driver pool of [[Core.runConcurrently]].
+    * More: every pair runs through the exact distributed grid
+    * ([[kendallGrid]]), never sampled. */
+  def kendallMatrix(df: DataFrame, cols: Seq[String],
+                    minPeriods: Int = 1): DataFrame =
+    kendallKernel(df, cols, minPeriods, kendallCollectMaxRows(cols.size))
+
+  /** [[kendallMatrix]] with its driver bound as a parameter. */
+  private[graft] def kendallKernel(df: DataFrame, cols: Seq[String],
+      minPeriods: Int, bound: Long): DataFrame = {
     val k = cols.size
-    require(k >= 2, "kendallMatrixPairwise: need at least two columns")
-    // 0 = auto: byte-aware default (≤256 MB of driver heap at this k)
-    val bound = if (maxRows > 0) maxRows else kendallCollectMaxRows(k)
-    val nonNull = cols.map(c =>
-      when(col(c).isNotNull && !isnan(col(c).cast("double")), 1).otherwise(0))
+    require(k >= 2, "kendallMatrix: need at least two columns")
+    val cells = kendallInput(df, cols)
+    val present = cells.columns.map(c => when(!isnan(col(c)), 1).otherwise(0))
       .reduce(_ + _)
-    val rows = df.filter(nonNull >= 2)
-      .select(cols.map(c =>
-        coalesce(col(c).cast("double"), lit(Double.NaN))): _*)
+    val rows = cells.filter(present >= 2)
       .limit((bound + 1).min(Int.MaxValue).toInt).collect()
-    require(rows.length <= bound,
-      s"kendallMatrixPairwise collects the projected columns; input " +
-        s"exceeds maxRows=$bound — use kendallApprox per pair")
-    val n = rows.length
-    val data = Array.ofDim[Double](k, n)
-    var r = 0
-    while (r < n) {
-      var i = 0
-      while (i < k) { data(i)(r) = rows(r).getDouble(i); i += 1 }
-      r += 1
+    if (rows.length > bound) return kendallGrid(df, cols, minPeriods)
+    val data = Array.tabulate(k, rows.length)((i, t) => rows(t).getDouble(i))
+    val pairs = kendallPairs(k)
+    // k(k-1)/2 independent O(n log n) sorts on a bounded driver pool:
+    // at 12 columns that is 66 taus across 8 threads
+    val taus = Core.runConcurrently(pairs) { case (i, j) =>
+      kendallCell(data, i, j, minPeriods)
     }
-    val pairIdx = for { i <- 0 until k; j <- (i + 1) until k } yield (i, j)
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(pairIdx.size, 8))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val out =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(pairIdx.map { case (i, j) =>
-          scala.concurrent.Future {
-            // compact this pair's mask once; NaN marks a hole
-            val xs = new scala.collection.mutable.ArrayBuffer[Double](n)
-            val ys = new scala.collection.mutable.ArrayBuffer[Double](n)
-            var t = 0
-            while (t < n) {
-              val x = data(i)(t); val y = data(j)(t)
-              if (!x.isNaN && !y.isNaN) { xs += x; ys += y }
-              t += 1
-            }
-            val tau: Any =
-              if (xs.length < minPeriods) null
-              else knightTau(xs.toArray, ys.toArray)
-            org.apache.spark.sql.Row(cols(i), cols(j), tau, xs.length.toLong)
-          }
-        }), scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
+    kendallFrame(df, cols, pairs.zip(taus))
+  }
+
+  /** The kernel's one input projection, after any `lead` columns: each
+    * of `cols` cast to double as `__v<i>`, with null and NaN as NaN
+    * (the hole marker) and -0.0 as 0.0 (pandas and scipy compare the
+    * two zeros equal; a total double order in a sort or a range cut
+    * would split their tie). */
+  private def kendallInput(df: DataFrame, cols: Seq[String],
+                           lead: Column*): DataFrame =
+    df.select(lead ++ cols.zipWithIndex.map { case (c, i) =>
+      val d = col(c).cast("double")
+      when(d.isNull || isnan(d), Double.NaN).when(d === 0.0, 0.0)
+        .otherwise(d).as(s"__v$i")
+    }: _*)
+
+  private def kendallPairs(k: Int): IndexedSeq[(Int, Int)] =
+    for { i <- 0 until k; j <- (i + 1) until k } yield (i, j)
+
+  /** The kernel's per-cell step over column arrays with NaN holes:
+    * compact pair (i, j)'s mask, gate on `minPeriods`, run Knight's tau.
+    * Returns (tau, pair count). */
+  private def kendallCell(data: Array[Array[Double]], i: Int, j: Int,
+                          minPeriods: Int): (java.lang.Double, Long) = {
+    val keep = Array.range(0, data(i).length)
+      .filter(t => !data(i)(t).isNaN && !data(j)(t).isNaN)
+    val n = keep.length
+    (if (n < minPeriods) null else knightTau(keep.map(data(i)), keep.map(data(j))),
+      n.toLong)
+  }
+
+  /** The kernel's output frame (c1, c2, kendall, n). */
+  private def kendallFrame(df: DataFrame, cols: Seq[String],
+      cells: Seq[((Int, Int), (java.lang.Double, Long))]): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-    spark.createDataFrame(java.util.Arrays.asList(out: _*),
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(cells.map {
+        case ((i, j), (tau, n)) => org.apache.spark.sql.Row(cols(i), cols(j), tau, n)
+      }: _*),
       StructType(Seq(StructField("c1", StringType),
         StructField("c2", StringType), StructField("kendall", DoubleType),
         StructField("n", LongType))))
   }
 
-  /** Full kendall tau-b matrix over `cols`, long form (c1, c2, kendall),
-    * upper triangle — pandas `p_corr(method='kendall')`. ONE bounded
-    * listwise-complete collect shared by all pairs, then Knight's
-    * O(n log n) tau ([[kendallFast]]'s core) per pair on the driver —
-    * k(k-1)/2 in-memory sorts instead of k(k-1)/2 cluster jobs. Same
-    * `maxRows` contract as [[kendallFast]]; above it, sample per pair
-    * with [[kendallApprox]]. */
-  def kendallMatrix(df: DataFrame, cols: Seq[String],
-                    maxRows: Long = 0L): DataFrame = {
-    val spark = df.sparkSession
-    val k = cols.size
-    require(k >= 2, "kendallMatrix: need at least two columns")
-    // 0 = auto: byte-aware default (≤256 MB of driver heap at this k)
-    val bound = if (maxRows > 0) maxRows else kendallCollectMaxRows(k)
-    val keep = cols.map(c => col(c).isNotNull && !isnan(col(c).cast("double")))
-      .reduce(_ && _)
-    val rows = df.filter(keep)
-      .select(cols.map(c => col(c).cast("double")): _*)
-      .limit((bound + 1).min(Int.MaxValue).toInt).collect()
-    require(rows.length <= bound,
-      s"kendallMatrix collects the projected columns; input exceeds " +
-        s"maxRows=$bound — use kendallMatrixDistributed or " +
-        "kendallApprox per pair")
-    val n = rows.length
-    val data = Array.ofDim[Double](k, n)
-    var r = 0
-    while (r < n) {
-      var i = 0
-      while (i < k) { data(i)(r) = rows(r).getDouble(i); i += 1 }
-      r += 1
-    }
-    // k(k-1)/2 independent O(n log n) sorts — run them on a bounded
-    // driver pool (same pattern as describe's per-column stats) instead
-    // of serially; at 12 columns that is 66 taus across 8 threads.
-    val pairIdx = for { i <- 0 until k; j <- (i + 1) until k } yield (i, j)
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(pairIdx.size, 8))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val out =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(pairIdx.map { case (i, j) =>
-          scala.concurrent.Future(
-            org.apache.spark.sql.Row(cols(i), cols(j),
-              knightTau(data(i), data(j))))
-        }), scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
-    spark.createDataFrame(java.util.Arrays.asList(out: _*),
-      StructType(Seq(StructField("c1", StringType),
-        StructField("c2", StringType), StructField("kendall", DoubleType))))
-  }
+  /** Rows complete in every one of `cols` (not null, not NaN): the
+    * listwise mask of the matrix forms. */
+  private def complete(cols: Seq[String]): Column =
+    cols.map(c => col(c).isNotNull && !isnan(col(c).cast("double"))).reduce(_ && _)
+
+  /** The kernel over the listwise-complete rows, as (c1, c2, kendall). */
+  private def kendallListwise(df: DataFrame, cols: Seq[String]): DataFrame =
+    kendallMatrix(df.filter(complete(cols)), cols).select("c1", "c2", "kendall")
 
   /** pandas `p_corr(method=…)` matrix dispatch: full col×col matrix in
     * long form for all three methods. For `method=callable`
@@ -567,7 +501,7 @@ object Corr {
                  method: String = "pearson"): DataFrame = method match {
     case "pearson"  => pearsonLong(df, cols)
     case "spearman" => spearmanMatrix(df, cols)
-    case "kendall"  => kendallMatrix(df, cols)
+    case "kendall"  => kendallListwise(df, cols)
     case other => throw new IllegalArgumentException(
       s"corr method: $other (pearson|spearman|kendall; " +
         "for method=callable use corrMatrixWith)")
@@ -667,10 +601,8 @@ object Corr {
       def outputEncoder = org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[Array[Double]]()
     }
-    val keep = cols.map(c => col(c).isNotNull && !isnan(col(c).cast("double")))
-      .reduce(_ && _)
     val gramUdaf = udaf(agg)
-    val m = df.filter(keep)
+    val m = df.filter(complete(cols))
       .select(gramUdaf(array(cols.map(col(_).cast("double")): _*)).as("m"))
       .collect()(0).getSeq[Double](0)
     val n = m(0)
@@ -689,79 +621,10 @@ object Corr {
         StructField("c2", StringType), StructField("corr", DoubleType))))
   }
 
-  /** Kendall tau-b over a BOUNDED frame: self-join pairwise counting.
-    * tau_b = (C - D) / sqrt((n0 - tx)(n0 - ty)).
-    *
-    * The pairwise form is O(n²) by construction (so is the reference's
-    * kernel), so this GUARDS eagerly: one count job, and anything over
-    * `maxExactRows` fails fast with a pointer at [[kendallApprox]]
-    * instead of silently launching an n² broadcast-nested-loop join.
-    * The default bound (100k rows -> 10^10 sign pairs) is already
-    * minutes of cluster work — raise it knowingly or sample. */
-  def kendall(df: DataFrame, a: String, b: String,
-              maxExactRows: Long = 100000): DataFrame = {
-    val base = df.select(col(a).as("x"), col(b).as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
-    val n = base.count()
-    require(n <= maxExactRows,
-      s"exact kendall is O(n^2) and the frame has $n rows " +
-        s"(> maxExactRows=$maxExactRows); use kendallApprox, or raise " +
-        "maxExactRows explicitly if you really mean it")
-    kendallUnguarded(base)
-  }
-
-  private def kendallUnguarded(base0: DataFrame): DataFrame = {
-    val base = base0.withColumn("i", monotonically_increasing_id())
-    val l = base.select(col("i").as("i1"), col("x").as("x1"), col("y").as("y1"))
-    val r = base.select(col("i").as("i2"), col("x").as("x2"), col("y").as("y2"))
-    val pairs = l.join(r, col("i1") < col("i2"))
-    val sgn = (p: Column, q: Column) => when(p < q, 1).when(p > q, -1).otherwise(0)
-    pairs.agg(
-      sum(sgn(col("x1"), col("x2")) * sgn(col("y1"), col("y2"))).cast("double").as("cd"),
-      count(lit(1)).cast("double").as("n0"),
-      sum(when(col("x1") === col("x2"), 1).otherwise(0)).cast("double").as("tx"),
-      sum(when(col("y1") === col("y2"), 1).otherwise(0)).cast("double").as("ty")
-    ).select(
-      (col("cd") / sqrt((col("n0") - col("tx")) * (col("n0") - col("ty"))))
-        .as("kendall"))
-  }
-
-  /** Exact Kendall tau-b in O(n log n) — Knight's algorithm (merge-sort
-    * inversion counting) instead of the O(n²) pairwise join:
-    *   tau_b = (n0 - n1 - n2 + n3 - 2S) / sqrt((n0-n1)(n0-n2))
-    * with n0 = n(n-1)/2, n1/n2 = tie-pair counts of x/y, n3 = joint-tie
-    * pairs, and S = inversions of the y sequence after sorting by
-    * (x, y). The heavy lifting (null filter + projection) is
-    * distributed; the sorted inversion count runs on the driver over a
-    * bounded collect (`maxRows`; 0 = the byte-aware
-    * [[kendallCollectMaxRows]] default, ~1.7M rows ≈ 256 MB of boxed
-    * driver Rows — the same "eager bounded finish" contract as
-    * describe's quantile sorts). Above the bound use
-    * [[kendallDistributed]] (exact) or [[kendallApprox]]. Identical
-    * value to [[kendall]] on any input. */
-  def kendallFast(df: DataFrame, a: String, b: String,
-                  maxRows: Long = 0L): DataFrame = {
-    val spark = df.sparkSession
-    // 0 = auto: byte-aware default (≤256 MB of driver heap for a pair)
-    val bound = if (maxRows > 0) maxRows else kendallCollectMaxRows(2)
-    val base = df.select(col(a).cast("double").as("x"),
-        col(b).cast("double").as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull &&
-        !isnan(col("x")) && !isnan(col("y")))
-    val rows = base.limit((bound + 1).min(Int.MaxValue).toInt).collect()
-    require(rows.length <= bound,
-      s"kendallFast collects the pair column; input exceeds maxRows=" +
-        s"$bound — use kendallDistributed or kendallApprox")
-    val n = rows.length
-    val xs = new Array[Double](n); val ys = new Array[Double](n)
-    var i = 0
-    while (i < n) { xs(i) = rows(i).getDouble(0); ys(i) = rows(i).getDouble(1); i += 1 }
-    val tau = knightTau(xs, ys)
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(tau)),
-      StructType(Seq(StructField("kendall", DoubleType))))
-  }
+  /** Kendall tau-b of one pair (pandas `Series.corr(method='kendall')`):
+    * the one-cell view of the [[kendallMatrix]] kernel, as (kendall). */
+  def kendall(df: DataFrame, a: String, b: String): DataFrame =
+    kendallMatrix(df, Seq(a, b)).select("kendall")
 
   /** Knight's-algorithm tau-b core over in-memory arrays (null when the
     * denominator is 0, i.e. one side is constant). Inputs are not
@@ -817,13 +680,17 @@ object Corr {
     pairs
   }
 
-  /** EXACT distributed Kendall tau-b — the 100 TB path that neither
-    * collects the data ([[kendallFast]]) nor samples ([[kendallApprox]]).
+  /** The kernel's distributed regime: EXACT tau-b for every pair
+    * without a collect of the data or a sample — the 100 TB path, and
+    * what [[kendallMatrix]] runs above its driver bound. Same input
+    * projection, pairwise masks, `minPeriods` gate and long form
+    * (c1, c2, kendall, n). Tests and the grid's oracle row call it
+    * directly to force the regime at any size.
     *
-    * Grid decomposition: bucket x and y by range cuts (equal values can
-    * never split across buckets, so cross-bucket comparisons are
-    * strict). Every (a, b) pair falls in exactly one of three classes,
-    * each counted exactly:
+    * Grid decomposition, per pair: bucket x and y by range cuts (equal
+    * values can never split across buckets, so cross-bucket comparisons
+    * are strict). Every (a, b) pair falls in exactly one of three
+    * classes, each counted exactly:
     *   1. same x-bucket  — per-xb local Knight pass (inversions of y in
     *      (x,y)-sorted order), which also yields the x/(x,y) tie pairs
     *      (ties never cross buckets);
@@ -837,26 +704,31 @@ object Corr {
     *      aggregate.
     *
     * Scale shape: two data shuffles (groupBy xb, groupBy yb) with
-    * per-group memory n/B (pick `buckets` so a stripe fits an executor;
-    * recurse the same decomposition inside a stripe if it ever cannot),
+    * per-group memory n/B (`buckets` sizes a stripe to an executor),
     * one grid aggregate, driver state O(B²). Pair counts accumulate in
     * Long — exact for n up to ~3e9 rows (n² / 2 < 2⁶³). Degenerate
     * frames (≤ a few distinct x or y) collapse toward one stripe; the
     * grid counts expose that BEFORE the stripe passes run, so the
     * guard fails fast with the stripe size instead of OOMing an
     * executor (`maxStripeRows`; a fully-constant side returns null
-    * anyway — denominator 0). Identical value to
-    * [[kendall]]/[[kendallFast]] on any input. */
-  def kendallDistributed(df: DataFrame, a: String, b: String,
-                         buckets: Int = 64,
-                         maxStripeRows: Long = 50000000L): DataFrame = {
+    * anyway — denominator 0). */
+  private[graft] def kendallGrid(df: DataFrame, cols: Seq[String],
+      minPeriods: Int = 1, buckets: Int = 64,
+      maxStripeRows: Long = 50000000L): DataFrame = {
     require(buckets >= 2, s"need buckets>=2, got $buckets")
-    val spark = df.sparkSession
+    val cells = kendallInput(df, cols)
+    val pairs = kendallPairs(cols.size)
+    kendallFrame(df, cols, pairs.map { case (i, j) =>
+      (i, j) -> gridTau(cells.select(col(s"__v$i").as("x"), col(s"__v$j").as("y"))
+        .filter(!isnan(col("x")) && !isnan(col("y"))), minPeriods, buckets, maxStripeRows)
+    })
+  }
+
+  /** One pair of [[kendallGrid]] over its masked (x, y) frame: (tau, n). */
+  private def gridTau(base: DataFrame, minPeriods: Int, buckets: Int,
+                      maxStripeRows: Long): (java.lang.Double, Long) = {
+    val spark = base.sparkSession
     import spark.implicits._
-    val base = df.select(col(a).cast("double").as("x"),
-        col(b).cast("double").as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull &&
-        !isnan(col("x")) && !isnan(col("y")))
     // range cuts computed ONCE, driver-side (2·B doubles) — evaluating
     // sampled cuts independently in two plan branches would assign
     // inconsistent buckets (the BASELINE.md round-4 lesson)
@@ -884,12 +756,13 @@ object Corr {
     // loudly before launching them
     val maxX = (0 until nx).map(i => (0 until ny).map(j => m(i)(j)).sum).max
     val maxY = (0 until ny).map(j => (0 until nx).map(i => m(i)(j)).sum).max
+    val n = m.map(_.sum).sum
+    if (n < minPeriods) return (null, n)
     require(math.max(maxX, maxY) <= maxStripeRows,
-      s"kendallDistributed: largest bucket stripe has ${math.max(maxX, maxY)} " +
+      s"kendallGrid: largest bucket stripe has ${math.max(maxX, maxY)} " +
         s"rows (> maxStripeRows=$maxStripeRows) — the value distribution " +
-        "is too concentrated for B=" + buckets + " range buckets; raise " +
-        "`buckets`, raise `maxStripeRows` if executors have the memory, " +
-        "or use kendallApprox")
+        "is too concentrated for B=" + buckets + " range buckets; " +
+        "use kendallApprox")
     // D(i,j) = Σ_{i'>i, j'<j} m(i',j'): y-prefix then x-suffix, O(B²)
     val pref = Array.ofDim[Long](nx, ny) // pref(i)(j) = Σ_{j'<j} m(i)(j')
     for (i <- 0 until nx; j <- 1 until ny)
@@ -917,48 +790,23 @@ object Corr {
       (total - inCell, tieRuns(rows.map(_._2).sorted.toIndexedSeq))
     }.collect()
 
-    val n = m.map(_.sum).sum
     val n0 = n * (n - 1) / 2
     val n1 = xbAgg.map(_._2).sum
     val n3 = xbAgg.map(_._3).sum
     val n2 = ybAgg.map(_._2).sum
     val s = xbAgg.map(_._1).sum + ybAgg.map(_._1).sum + sGrid
     val denom = math.sqrt((n0 - n1).toDouble * (n0 - n2).toDouble)
-    val tau: java.lang.Double =
-      if (denom == 0) null else (n0 - n1 - n2 + n3 - 2 * s) / denom
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(tau)),
-      StructType(Seq(StructField("kendall", DoubleType))))
+    (if (denom == 0) null else (n0 - n1 - n2 + n3 - 2 * s) / denom, n)
     } finally withB.unpersist(blocking = false)
   }
 
-  /** Unbounded-exact kendall matrix: [[kendallDistributed]] per pair —
-    * k(k-1)/2 independent two-shuffle jobs instead of
-    * [[kendallMatrix]]'s single bounded collect. Per-pair PAIRWISE
-    * completeness (each cell masks its own nulls, like
-    * [[kendallMatrixPairwise]]); prefer the collect forms whenever the
-    * frame fits their bound — one pass beats k² jobs. Long form
-    * (c1, c2, kendall), upper triangle. */
-  def kendallMatrixDistributed(df: DataFrame, cols: Seq[String],
-                               buckets: Int = 64): DataFrame = {
-    require(cols.size >= 2, "kendallMatrixDistributed: need >= 2 columns")
-    (for { i <- cols.indices; j <- (i + 1) until cols.size } yield {
-      kendallDistributed(df, cols(i), cols(j), buckets)
-        .select(lit(cols(i)).as("c1"), lit(cols(j)).as("c2"),
-          col("kendall"))
-    }).reduce(_ unionAll _)
-  }
-
   /** 100 TB mode of [[kendall]]: exact tau-b over a deterministic hash
-    * sample of `maxRows` rows. The pairwise form is O(n²) in the row
-    * count by construction (same as the reference's kernel); at scale
-    * the standard move is to bound n. Sampling is by `xxhash64(x, y,
-    * seed)` order — deterministic, reproducible, and independent of the
+    * sample of `maxRows` of the pair's complete rows (null and NaN
+    * masked first, like the kernel). Sampling is by `xxhash64(a, b,
+    * row id, seed)` order — deterministic, reproducible, and independent of the
     * input partitioning, unlike `limit` (first-partitions bias) or
     * `sample` (rng per partition). Error is O(1/sqrt(maxRows)) for the
-    * tau estimate; maxRows=10k ⇒ ~1% — and 10k² = 100M sign pairs, a
-    * few seconds of distributed work regardless of input size. */
+    * tau estimate; maxRows=10k ⇒ ~1%. */
   def kendallApprox(df: DataFrame, a: String, b: String,
                     maxRows: Int = 10000, seed: Long = 42L): DataFrame = {
     // The hash mixes a per-row id: hashing only (x, y) would sample
@@ -966,12 +814,10 @@ object Corr {
     // whatever ties happened to hash low. The row id is deterministic
     // for a fixed input layout (stable re-runs), which is the
     // reproducibility this sketch promises.
-    val sampled = df
-      .filter(col(a).isNotNull && col(b).isNotNull)
+    val sampled = df.filter(complete(Seq(a, b)))
       .withColumn("__h",
         xxhash64(col(a), col(b), monotonically_increasing_id(), lit(seed)))
       .orderBy("__h").limit(maxRows)
-      .drop("__h")
-    kendallUnguarded(sampled.select(col(a).as("x"), col(b).as("y")))
+    kendall(sampled, a, b)
   }
 }

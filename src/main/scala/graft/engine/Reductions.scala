@@ -703,10 +703,6 @@ object Reductions {
     when(n > 0, loV + frac * (hiV - loV))
   }
 
-  /** Row-wise (axis=1) quantile over a set of columns. */
-  def rowQuantile(cols: Seq[Column], q: Double): Column =
-    rowQuantileSorted(rowSortedValid(cols), q)
-
   /** Row-wise sample variance over the valid values (pandas
     * `var(axis=1, ddof)`): two-pass shifted-mean form
     * sum((x - mean)^2) / (n - ddof) — no catastrophic cancellation for

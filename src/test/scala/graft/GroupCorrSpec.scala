@@ -184,38 +184,82 @@ class GroupCorrSpec extends SparkSpec {
     assertApprox(d1(Corr.kendall(xy, "x", "y")), Some(-0.5477225575051661), 1e-9)
   }
 
+  /** Runs `f` and returns its value with the long call site of every
+    * stage it submitted: a stage of the Kendall grid names
+    * `kendallGrid` there. */
+  private def stageSites[T](f: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marker = "kendall-stage-sites-marker"
+    @volatile var seen = false
+    val l = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (!seen) sites.add(e.stageInfo.details)
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties.getProperty("spark.job.description") == marker) seen = true
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val out = f
+      // one listener queue delivers in order: once the marker job is
+      // seen, every stage of `f` has been too
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val until = System.nanoTime() + 30000000000L
+      while (!seen && System.nanoTime() < until) Thread.sleep(20)
+      assert(seen, "listener never saw the marker job")
+      (out, sites.toArray.map(_.toString).toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("q_kendall_dist runs the Kendall grid") {
+    import spark.implicits._
+    // a small events table: users 3 and 7 are the query's slice
+    val dir = java.nio.file.Files.createTempDirectory("kendall-dist").toString
+    val ev = (1 to 90).map(i =>
+      (Seq(3L, 7L, 9L)(i % 3), i * 1000000000L, (i * 37 % 11).toDouble))
+      .toDF("user_id", "ts", "value")
+    ev.write.parquet(s"$dir/events.parquet")
+    val (out, sites) = stageSites(SparkEntry.queries("q_kendall_dist")(spark, dir))
+    assert(sites.exists(_.contains("kendallGrid")), sites.mkString("\n"))
+    assertApprox(d1(out), refTauOf(ev.filter(col("user_id") =!= 9L)
+      .withColumn("t", col("ts").cast("double")), "value", "t"), 1e-6)
+  }
+
   test("kendallFast (Knight O(n log n)) equals pairwise kendall incl. ties") {
     import spark.implicits._
-    assertApprox(d1(Corr.kendallFast(xy, "x", "y")),
+    assertApprox(d1(Corr.kendall(xy, "x", "y")),
       Some(-0.5477225575051661), 1e-9)
     // random-ish data with heavy ties in both columns
     val df = (1 to 400).map { i =>
       ((i * 37 % 11).toDouble, (i * 53 % 7).toDouble)
     }.toDF("x", "y")
-    assertApprox(d1(Corr.kendallFast(df, "x", "y")),
-      d1(Corr.kendall(df, "x", "y")), 1e-12)
+    assertApprox(d1(Corr.kendall(df, "x", "y")),
+      refTauOf(df, "x", "y"), 1e-12)
   }
 
   test("kendallDistributed (grid decomposition) equals pairwise kendall") {
     import spark.implicits._
-    assertApprox(d1(Corr.kendallDistributed(xy, "x", "y", buckets = 3)),
-      Some(-0.5477225575051661), 1e-9)
+    def grid(df: org.apache.spark.sql.DataFrame, b: Int) =
+      d1(Corr.kendallGrid(df, Seq("x", "y"), buckets = b).select("kendall"))
+    assertApprox(grid(xy, 3), Some(-0.5477225575051661), 1e-9)
     // heavy ties in both columns, several bucket settings (cuts land on
     // tied values — the equal-values-never-split property is what's
     // under test), negatives, and nulls/NaN filtered like the others
     val df = (1 to 400).map { i =>
       ((i * 37 % 11).toDouble - 5, (i * 53 % 7).toDouble)
     }.toDF("x", "y")
-    val want = d1(Corr.kendall(df, "x", "y"))
+    val want = refTauOf(df, "x", "y")
     for (b <- Seq(2, 3, 8, 64))
-      assertApprox(d1(Corr.kendallDistributed(df, "x", "y", buckets = b)),
-        want, 1e-12)
+      assertApprox(grid(df, b), want, 1e-12)
     val withNulls = df.union(Seq((Double.NaN, 1.0), (1.0, Double.NaN))
       .toDF("x", "y"))
-    assertApprox(d1(Corr.kendallDistributed(withNulls, "x", "y")), want, 1e-12)
+    assertApprox(grid(withNulls, 64), want, 1e-12)
     // constant side -> null (denominator 0)
     val const = (1 to 50).map(i => (1.0, i.toDouble)).toDF("x", "y")
-    assert(Corr.kendallDistributed(const, "x", "y").collect()(0).isNullAt(0))
+    assert(grid(const, 64).isEmpty)
   }
 
   test("corrMatrixAll escalates kendall to the distributed path above the bound") {
@@ -225,10 +269,11 @@ class GroupCorrSpec extends SparkSpec {
     }.toDF("a", "b")
     val bounded = Corr.corrMatrixAll(df, Seq("a", "b"), withKendall = true)
       .collect()(0)
-    // force the distributed branch with a tiny ceiling
-    val escalated = Corr.corrMatrixAll(df, Seq("a", "b"), withKendall = true,
-      kendallMaxRows = 10L).collect()(0)
-    assertApprox(optD(escalated, 4), optD(bounded, 4), 1e-12)
+    // force the grid with a tiny driver bound
+    val (escalated, sites) = stageSites(
+      Corr.kendallKernel(df, Seq("a", "b"), 1, 10L).collect()(0))
+    assert(sites.exists(_.contains("kendallGrid")), sites.mkString("\n"))
+    assertApprox(optD(escalated, 2), optD(bounded, 4), 1e-12)
   }
 
   test("kendallDistributed refuses concentrated distributions loudly") {
@@ -236,12 +281,12 @@ class GroupCorrSpec extends SparkSpec {
     // x has 2 distinct values -> one stripe holds >= half the rows
     val df = (1 to 100).map(i => ((i % 2).toDouble, i.toDouble)).toDF("x", "y")
     val e = intercept[IllegalArgumentException] {
-      Corr.kendallDistributed(df, "x", "y", maxStripeRows = 10L)
+      Corr.kendallGrid(df, Seq("x", "y"), maxStripeRows = 10L)
     }
     assert(e.getMessage.contains("maxStripeRows"))
     // and with the default bound the same frame is exact
-    assertApprox(d1(Corr.kendallDistributed(df, "x", "y")),
-      d1(Corr.kendall(df, "x", "y")), 1e-12)
+    assertApprox(d1(Corr.kendallGrid(df, Seq("x", "y")).select("kendall")),
+      refTauOf(df, "x", "y"), 1e-12)
   }
 
   test("kendallMatrixDistributed cells equal single-pair kendall") {
@@ -249,20 +294,37 @@ class GroupCorrSpec extends SparkSpec {
     val df = (1 to 120).map { i =>
       ((i * 37 % 11).toDouble, (i * 53 % 7).toDouble, i.toDouble)
     }.toDF("a", "b", "c")
-    val got = Corr.kendallMatrixDistributed(df, Seq("a", "b", "c"),
+    val got = Corr.kendallGrid(df, Seq("a", "b", "c"),
       buckets = 4).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
     assert(got.size == 3)
     for (((c1, c2), v) <- got)
-      assertApprox(Some(v), d1(Corr.kendall(df, c1, c2)), 1e-12)
+      assertApprox(Some(v), refTauOf(df, c1, c2), 1e-12)
   }
 
-  test("exact kendall fails fast above maxExactRows") {
+  test("Kendall kernel: -0.0 ties 0.0 in the driver, grid and grouped " +
+    "paths (a total double order split the tie)") {
     import spark.implicits._
-    val big = (1 to 100).map(i => (i.toDouble, i * 1.0)).toDF("x", "y")
-    intercept[IllegalArgumentException] {
-      Corr.kendall(big, "x", "y", maxExactRows = 50)
-    }
+    // tau-b of x=[-0,0,1], y=[2,1,3] is 2/sqrt(6), as for x=[0,0,1]
+    val want = Some(2 / math.sqrt(6))
+    val df = Seq((-0.0, 2.0), (0.0, 1.0), (1.0, 3.0)).toDF("x", "y")
+    assertApprox(d1(Corr.kendall(df, "x", "y")), want, 1e-12)
+    for (b <- Seq(2, 3))
+      assertApprox(d1(Corr.kendallGrid(df, Seq("x", "y"), buckets = b)
+        .select("kendall")), want, 1e-12)
+    val by = Corr.kendallMatrixBy(df.withColumn("g", lit(1)), "g",
+        Seq("x", "y")).filter(col("c1") =!= col("c2"))
+    assertApprox(d1(by.select("kendall")), want, 1e-12)
+  }
+
+  test("kendallMatrixBy: -0.0 and 0.0 group keys are one group, keyed 0.0") {
+    val df = Seq((-0.0, 1.0, 4.0), (-0.0, 2.0, 1.0), (0.0, 3.0, 3.0),
+      (0.0, 4.0, 2.0)).toDF("k", "x", "y")
+    val out = Corr.kendallMatrixBy(df, "k", Seq("x", "y"))
+      .filter(col("c1") === "x" && col("c2") === "y").collect()
+    assert(out.length == 1, out.mkString(", "))
+    assert(java.lang.Double.compare(out(0).getDouble(0), 0.0) == 0)
+    assert(math.abs(out(0).getDouble(3) - (-1.0 / 3)) < 1e-12)
   }
 
   test("spearmanMatrix: every pair equals the single-pair spearman") {
@@ -322,18 +384,16 @@ class GroupCorrSpec extends SparkSpec {
        (i * 53 % 7).toDouble,
        if (i % 5 == 0) None else Some(math.sin(i) * 1000))
     }.toDF("x", "y", "z")
-    val m = Corr.kendallMatrixPairwise(df, Seq("x", "y", "z"))
+    val m = Corr.kendallMatrix(df, Seq("x", "y", "z"))
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         ((optD(r, 2), r.getLong(3)))).toMap
     assert(m.size == 3)
     assert(m(("x", "y"))._2 == 200 - 200 / 3)
     assert(m(("x", "z"))._2 == 200 - 200 / 3 - 200 / 5 + 200 / 15)
-    for ((a, b) <- Seq(("x", "y"), ("x", "z"), ("y", "z"))) {
-      val masked = df.filter(col(a).isNotNull && col(b).isNotNull)
-      assertApprox(m((a, b))._1, d1(Corr.kendallFast(masked, a, b)), 1e-9)
-    }
+    for ((a, b) <- Seq(("x", "y"), ("x", "z"), ("y", "z")))
+      assertApprox(m((a, b))._1, refTauOf(df, a, b), 1e-9)
     // minPeriods above the thinnest pair nulls that cell only
-    val gated = Corr.kendallMatrixPairwise(df, Seq("x", "y", "z"),
+    val gated = Corr.kendallMatrix(df, Seq("x", "y", "z"),
         minPeriods = 200 - 200 / 3 - 200 / 5 + 200 / 15 + 1)
       .collect().map(r => (r.getString(0), r.getString(1)) -> optD(r, 2)).toMap
     assert(gated(("x", "z")).isEmpty && gated(("x", "y")).nonEmpty)
@@ -348,7 +408,7 @@ class GroupCorrSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1)) -> optD(r, 2)).toMap
     assert(m.size == 3)
     for (((a, b), got) <- m)
-      assertApprox(got, d1(Corr.kendallFast(df, a, b)), 1e-12)
+      assertApprox(got, refTauOf(df, a, b), 1e-12)
     // dispatcher: pearson matrix comes back in the same long form
     val p = Corr.corrMatrix(df, Seq("x", "y", "z"), "pearson")
     assert(p.columns.toSeq == Seq("c1", "c2", "corr") && p.count() == 3)
@@ -507,11 +567,9 @@ class GroupCorrSpec extends SparkSpec {
     val out = Corr.kendallMatrixBy(df, "g", Seq("x", "y", "c"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)) ->
         (if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toMap
-    // cross-check the masked x-y cells against kendallFast per slice
+    // cross-check the masked x-y cells against the definition per slice
     for (g <- Seq(1L, 2L)) {
-      val want = Corr.kendallFast(
-        df.filter(col("g") === g && col("y").isNotNull), "x", "y")
-        .head().getDouble(0)
+      val want = refTauOf(df.filter(col("g") === g), "x", "y").get
       assert(math.abs(out((g, "x", "y")).get - want) < 1e-12,
         s"g=$g: ${out((g, "x", "y"))} vs $want")
     }
@@ -562,43 +620,38 @@ class GroupCorrSpec extends SparkSpec {
 
   test("kendall collect bound is byte-aware (VERDICT r10): 256 MB " +
     "budget caps rows by row width, and the budget drives escalation") {
-    import spark.implicits._
     // cost model: 64 + 48*k bytes per collected Row of k boxed doubles
     assert(Corr.kendallCollectMaxRows(2) == (256L << 20) / 160)
     assert(Corr.kendallCollectMaxRows(4) == 1048576L)
     // wider matrices shrink the bound; never unbounded, never zero
     assert(Corr.kendallCollectMaxRows(100) < Corr.kendallCollectMaxRows(4))
     assert(Corr.kendallCollectMaxRows(100) > 0)
-    // the derived bound (not a flat row count) is what the matrix path
-    // enforces and what corrMatrixAll escalates on: with a 1.6 kB
-    // budget the same 50-row frame must refuse the collect form and
-    // take the distributed path, with identical cells
-    val tiny = Corr.kendallCollectMaxRows(2, budgetBytes = 1600) // 10 rows
-    val df = (1 to 50).map { i =>
-      ((i * 37 % 11).toDouble, (i * 53 % 7).toDouble)
-    }.toDF("a", "b")
-    val e = intercept[IllegalArgumentException] {
-      Corr.kendallMatrix(df, Seq("a", "b"), maxRows = tiny).collect()
-    }
-    assert(e.getMessage.contains("kendallMatrixDistributed"))
-    val esc = Corr.corrMatrixAll(df, Seq("a", "b"), withKendall = true,
-      kendallMaxRows = tiny).collect()(0)
-    val full = Corr.corrMatrixAll(df, Seq("a", "b"), withKendall = true)
-      .collect()(0)
-    assertApprox(optD(esc, 4), optD(full, 4), 1e-12)
+    // the bound is what the kernel escalates on: a 50-row frame over a
+    // 10-row bound takes the grid, below it the driver pass, with
+    // identical cells (a range, not a local frame, so that the driver
+    // pass's collect runs a stage too)
+    val df = spark.range(1, 51).select(
+      (col("id") * 37 % 11).cast("double").as("a"),
+      (col("id") * 53 % 7).cast("double").as("b"))
+    val (esc, escSites) = stageSites(
+      Corr.kendallKernel(df, Seq("a", "b"), 1, 10L).collect()(0))
+    val (full, fullSites) = stageSites(
+      Corr.kendallMatrix(df, Seq("a", "b")).collect()(0))
+    assert(escSites.exists(_.contains("kendallGrid")))
+    assert(fullSites.nonEmpty && !fullSites.exists(_.contains("kendallGrid")),
+      fullSites.mkString("\n"))
+    assertApprox(optD(esc, 2), optD(full, 2), 1e-12)
   }
 
-  test("corrMatrixBy threads kendallMaxGroupRows to the per-group " +
-    "buffer guard (ADVICE r10: the unified entry point has the knob)") {
+  test("kendallMatrixBy: a group above the buffer bound fails loudly") {
     val df = Seq((1L, 1.0, 2.0), (1L, 2.0, 1.0), (1L, 3.0, 3.0))
       .toDF("g", "x", "y")
     val e = intercept[Exception] {
-      Corr.corrMatrixBy(df, "g", Seq("x", "y"), "kendall",
-        kendallMaxGroupRows = 2).collect()
+      Corr.kendallGroups(df, "g", Seq("x", "y"), 1, maxGroupRows = 2).collect()
     }
     val msgs = Iterator.iterate(e: Throwable)(_.getCause)
       .takeWhile(_ != null).map(_.getMessage).mkString("\n")
-    assert(msgs.contains("maxGroupRows"))
+    assert(msgs.contains("exceeds 2 rows"))
   }
 
   test("kendallMatrixBy: BINARY grouping keys — equal byte arrays land " +

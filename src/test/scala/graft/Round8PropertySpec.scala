@@ -216,7 +216,7 @@ class Round8PropertySpec extends AnyFunSuite {
       WindowOps.rCorr(col("v"), col("v"), w3, 2),
       WindowOps.weightedVar(col("v"), byI, Seq(1.0, 2.0, 1.0))).collect()
     Corr.spearman(const.withColumn("u", col("v")), "v", "u").collect()
-    Corr.kendallFast(const.withColumn("u", col("v")), "v", "u").collect()
+    Corr.kendall(const.withColumn("u", col("v")), "v", "u").collect()
     Reductions.describe(const, Seq("v")).collect()
     const.select(Ewm.variance(col("v"), byI, 0.3),
       Ewm.corr(col("v"), col("v"), byI, 0.3)).collect()

@@ -33,6 +33,30 @@ trait SparkSpec extends AnyFunSuite {
     case _ => fail(s"got $got want $want")
   }
 
+  /** O(n²) reference Kendall tau-b straight from the definition; None
+    * when a side is constant (denominator 0). */
+  def refTau(xs: Seq[Double], ys: Seq[Double]): Option[Double] = {
+    val x = xs.toIndexedSeq; val y = ys.toIndexedSeq
+    var cd = 0L; var tx = 0L; var ty = 0L; var n0 = 0L
+    for (i <- x.indices; j <- (i + 1) until x.length) {
+      n0 += 1
+      cd += (math.signum(x(j) - x(i)) * math.signum(y(j) - y(i))).toLong
+      if (x(i) == x(j)) tx += 1
+      if (y(i) == y(j)) ty += 1
+    }
+    val denom = math.sqrt((n0 - tx).toDouble * (n0 - ty).toDouble)
+    if (denom == 0) None else Some(cd / denom)
+  }
+
+  /** [[refTau]] of columns `a`, `b` over the rows where both are
+    * present (not null, not NaN) — pandas' pairwise mask. */
+  def refTauOf(df: DataFrame, a: String, b: String): Option[Double] = {
+    val rows = df.select(df(a).cast("double"), df(b).cast("double")).collect()
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1) &&
+        !r.getDouble(0).isNaN && !r.getDouble(1).isNaN)
+    refTau(rows.map(_.getDouble(0)), rows.map(_.getDouble(1)))
+  }
+
   def assertSeqApprox(got: Seq[Option[Double]], want: Seq[Option[Double]],
                       tol: Double = 1e-9): Unit = {
     assert(got.size == want.size, s"size ${got.size} != ${want.size}")
