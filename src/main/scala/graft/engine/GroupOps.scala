@@ -174,45 +174,13 @@ object GroupOps {
 
   /** pandas merge: equi-join with suffix disambiguation of overlapping
     * non-key columns. Spark picks broadcast/sort-merge itself; callers
-    * can wrap the right side in `broadcast()`.
-    *
-    * `validate` (pandas `merge(validate=…)`): "1:1" / "1:m" / "m:1" /
-    * "m:m" — asserts key uniqueness on the constrained side(s) BEFORE
-    * the join, failing fast with pandas' MergeError message shape. The
-    * check is one map-side-combinable `max(count)` aggregate per
-    * constrained side (never a frame-sized collect); "m:m" checks
-    * nothing, like pandas. */
+    * can wrap the right side in `broadcast()`. `validate`: see
+    * [[validateMerge]]. */
   def merge(left: DataFrame, right: DataFrame, on: Seq[String],
             how: String = "inner",
             suffixes: (String, String) = ("_x", "_y"),
             validate: Option[String] = None): DataFrame = {
-    validate.foreach { v =>
-      def unique(df: DataFrame): Boolean =
-        df.groupBy(on.map(col): _*).count()
-          .agg(coalesce(max(col("count")), lit(0L)).as("m"))
-          .collect()(0).getLong(0) <= 1
-      def fail(side: String, kind: String): Nothing =
-        throw new IllegalArgumentException(
-          s"MergeError: Merge keys are not unique in $side dataset; " +
-            s"not a $kind merge")
-      v match {
-        case "1:1" | "one_to_one" =>
-          if (!unique(left)) fail("left", "one-to-one")
-          if (!unique(right)) fail("right", "one-to-one")
-        case "1:m" | "one_to_many" =>
-          if (!unique(left)) fail("left", "one-to-many")
-        case "m:1" | "many_to_one" =>
-          if (!unique(right)) fail("right", "many-to-one")
-        case "m:m" | "many_to_many" => ()
-        case other =>
-          throw new IllegalArgumentException(
-            s""""$other" is not a valid argument. Valid arguments are:
-               |- "1:1"
-               |- "1:m"
-               |- "m:1"
-               |- "m:m"""".stripMargin)
-      }
-    }
+    validate.foreach(validateMerge(_, left, on, right, on))
     val overlap = (left.columns.toSet intersect right.columns.toSet) -- on.toSet
     val l = overlap.foldLeft(left)((d, c) => d.withColumnRenamed(c, c + suffixes._1))
     val r = overlap.foldLeft(right)((d, c) => d.withColumnRenamed(c, c + suffixes._2))
@@ -222,6 +190,41 @@ object GroupOps {
         "MergeError: Can not pass on, right_on, left_on with how='cross'")
       l.crossJoin(r)
     } else l.join(r, on, how)
+  }
+
+  /** pandas `merge(validate=…)`: "1:1" / "1:m" / "m:1" / "m:m" (or the
+    * spelled-out forms) asserts key uniqueness on the constrained
+    * side(s) BEFORE the join, failing fast with pandas' MergeError
+    * message shape. The check is one map-side-combinable `max(count)`
+    * aggregate per constrained side (never a frame-sized collect);
+    * "m:m" checks nothing, like pandas. */
+  private def validateMerge(v: String, left: DataFrame, leftOn: Seq[String],
+                            right: DataFrame, rightOn: Seq[String]): Unit = {
+    def unique(df: DataFrame, ks: Seq[String]): Boolean =
+      df.groupBy(ks.map(col): _*).count()
+        .agg(coalesce(max(col("count")), lit(0L)).as("m"))
+        .collect()(0).getLong(0) <= 1
+    def fail(side: String, kind: String): Nothing =
+      throw new IllegalArgumentException(
+        s"MergeError: Merge keys are not unique in $side dataset; " +
+          s"not a $kind merge")
+    v match {
+      case "1:1" | "one_to_one" =>
+        if (!unique(left, leftOn)) fail("left", "one-to-one")
+        if (!unique(right, rightOn)) fail("right", "one-to-one")
+      case "1:m" | "one_to_many" =>
+        if (!unique(left, leftOn)) fail("left", "one-to-many")
+      case "m:1" | "many_to_one" =>
+        if (!unique(right, rightOn)) fail("right", "many-to-one")
+      case "m:m" | "many_to_many" => ()
+      case other =>
+        throw new IllegalArgumentException(
+          s""""$other" is not a valid argument. Valid arguments are:
+             |- "1:1"
+             |- "1:m"
+             |- "m:1"
+             |- "m:m"""".stripMargin)
+    }
   }
 
   /** pandas `merge(left_on=, right_on=, left_index=, right_index=)` —
@@ -257,32 +260,7 @@ object GroupOps {
         .drop("__ml", "__mr")
     if (leftOn == rightOn)
       return finish(merge(l0, r0, leftOn, how, suffixes, validate))
-    validate.foreach { v =>
-      def unique(df: DataFrame, ks: Seq[String]): Boolean =
-        df.groupBy(ks.map(col): _*).count()
-          .agg(coalesce(max(col("count")), lit(0L)).as("m"))
-          .collect()(0).getLong(0) <= 1
-      def fail(side: String, kind: String): Nothing =
-        throw new IllegalArgumentException(
-          s"MergeError: Merge keys are not unique in $side dataset; " +
-            s"not a $kind merge")
-      v match {
-        case "1:1" | "one_to_one" =>
-          if (!unique(left, leftOn)) fail("left", "one-to-one")
-          if (!unique(right, rightOn)) fail("right", "one-to-one")
-        case "1:m" | "one_to_many" =>
-          if (!unique(left, leftOn)) fail("left", "one-to-many")
-        case "m:1" | "many_to_one" =>
-          if (!unique(right, rightOn)) fail("right", "many-to-one")
-        case "m:m" | "many_to_many" => ()
-        case other => throw new IllegalArgumentException(
-          s""""$other" is not a valid argument. Valid arguments are:
-             |- "1:1"
-             |- "1:m"
-             |- "m:1"
-             |- "m:m"""".stripMargin)
-      }
-    }
+    validate.foreach(validateMerge(_, left, leftOn, right, rightOn))
     // overlapping names (keys with DIFFERENT names are not exempt —
     // pandas suffixes any shared name that isn't a shared key)
     val overlap = l0.columns.toSet intersect r0.columns.toSet

@@ -369,7 +369,7 @@ object Curation {
     val bucket = (c: Column) =>
       conv(substring(md5(c.cast("binary")), 1, 8), 16, 10).cast("long") % buckets
     def toks(df: DataFrame, keep: Seq[Column]) =
-      df.select(keep :+ explode(Dedup.words(col(text))).as("__w"): _*)
+      df.select(keep :+ explode(TextAnalysis.tokens(col(text))).as("__w"): _*)
         .filter(col("__w") =!= "")
         .select(keep :+ bucket(col("__w")).as("__b"): _*)
     val docBuckets = toks(raw, Seq(col(id))).groupBy(col(id), col("__b"))
@@ -406,7 +406,7 @@ object Curation {
     * grams rather than hot-spotting one task; the per-doc max then
     * map-side-combines. Token totals ride along codegen-only. */
   def repetitionMetrics(df: DataFrame, id: String, text: String): DataFrame = {
-    val w = Dedup.words(col(text))
+    val w = TextAnalysis.tokens(col(text))
     val base = df.select(col(id), w.as("__w"))
       .withColumn("__n", size(col("__w")))
     val grams = base.filter(col("__n") >= 2)

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.pipeline.TextAnalysis.tokens
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -24,9 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Lowercased word array of a text column. */
-  def words(c: Column): Column = split(lower(trim(c)), "\\s+")
-
   /** k-shingles from a PRE-MATERIALIZED word-array column. `w` must be a
     * real attribute (`withColumn`), not an inline expression: a HOF
     * lambda body re-evaluates any referenced expression PER ELEMENT, so
@@ -40,7 +38,7 @@ object Dedup {
 
   /** Lowercased word k-shingles of a text column. Convenience form for
     * small inputs — see [[shinglesFromWords]] for the hot path. */
-  def shingles(c: Column, k: Int): Column = shinglesFromWords(words(c), k)
+  def shingles(c: Column, k: Int): Column = shinglesFromWords(tokens(c), k)
 
   private val HexDigits = "0123456789abcdef".toCharArray
 
@@ -209,32 +207,6 @@ object Dedup {
         .select(col(id), col("digest"))
   }
 
-  /** LSH candidate pairs: docs sharing any band signature.
-    *
-    * Hash family: ONE md5 per distinct shingle, split into two 60-bit
-    * halves (a, b); hash i is `a + i*b` (Kirsch-Mitzenmacher double
-    * hashing — i < 8 keeps a + i*b < 2^63, no overflow). The whole
-    * signature is computed by [[minhashSigUdf]] in one map-side pass over
-    * the scan — no shingle explode, no doc-keyed aggregate shuffle.
-    *
-    * Shape at scale: ONE shuffle total, keyed by (band, band-signature):
-    * the banded rows are grouped per bucket and candidate pairs stream
-    * out of a typed flatMapGroups — no self-join, no materialization of
-    * the banded table. Cross-band duplicates are dropped inside the same
-    * loop by the FIRST-colliding-band rule (all earlier bands of the two
-    * signatures must differ), so no distinct shuffle either.
-    *
-    * Skew guard: a bucket of B near-identical docs yields B²/2 pairs —
-    * quadratic in the hottest bucket. With `maxBucket > 0` (the finite
-    * default caps a template-heavy corpus's hottest bucket), any bucket
-    * larger than that emits a STAR instead (every member paired with the
-    * bucket minimum): linear output that preserves exactly the
-    * connectivity [[clusters]] needs, at the cost of losing the
-    * non-representative pair list for those buckets (the caller was
-    * going to collapse them into one cluster anyway; a star pair can
-    * repeat across bands — [[clusters]] is insensitive, pair-list
-    * consumers should distinct). maxBucket=0 keeps full enumeration —
-    * the oracle-checked default at test scale. */
   /** The LSH band-key table — the thing an INCREMENTAL pipeline
     * persists per ingest batch: one (doc, band, key) row per band,
     * where key is that band's rowsPerBand minhash values. Map-side
@@ -244,20 +216,31 @@ object Dedup {
     * State contract: k/bands/rowsPerBand must match across batches. */
   def minhashBandKeys(df0: DataFrame, id: String, text: String,
                       k: Int = 3, bands: Int = 4,
-                      rowsPerBand: Int = 2): DataFrame = {
+                      rowsPerBand: Int = 2): DataFrame =
+    minhashBands(df0, id, text, k, bands, rowsPerBand)
+      .select("doc", "band", "key")
+
+  /** The one MinHash band projection: (doc, sig, band, key), one row
+    * per (doc, band), key = that band's rowsPerBand signature values.
+    * Map-side signatures and one narrow explode; column pruning drops
+    * `sig` where only the keys are read ([[minhashBandKeys]]). */
+  private def minhashBands(df0: DataFrame, id: String, text: String,
+                           k: Int, bands: Int,
+                           rowsPerBand: Int): DataFrame = {
     val df = graft.engine.Core.spread(df0)
     val nh = bands * rowsPerBand
     require(nh <= 8, "a + i*b needs i*b < 2^63: at most 8 hashes from 60-bit halves")
-    val mins = df.select(col(id).as("doc"),
-      minhashSigUdf(k, nh)(words(col(text))).as("sig"))
-      .filter(col("sig").isNotNull)
     val bandCols = (0 until bands).map { bd =>
       struct(lit(bd).as("band"),
         array((0 until rowsPerBand).map(r =>
           col("sig")(bd * rowsPerBand + r)): _*).as("key"))
     }
-    mins.select(col("doc"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc"), col("bk.band").as("band"), col("bk.key").as("key"))
+    df.select(col(id).as("doc"),
+        minhashSigUdf(k, nh)(tokens(col(text))).as("sig"))
+      .filter(col("sig").isNotNull)
+      .select(col("doc"), col("sig"), explode(array(bandCols: _*)).as("bk"))
+      .select(col("doc"), col("sig"), col("bk.band").as("band"),
+        col("bk.key").as("key"))
   }
 
   /** Incremental MinHash-LSH: candidate pairs of a NEW batch against a
@@ -284,25 +267,40 @@ object Dedup {
     vsState.unionByName(within).distinct()
   }
 
+  /** LSH candidate pairs: docs sharing any band signature.
+    *
+    * Hash family: ONE md5 per distinct shingle, split into two 60-bit
+    * halves (a, b); hash i is `a + i*b` (Kirsch-Mitzenmacher double
+    * hashing — i < 8 keeps a + i*b < 2^63, no overflow). The whole
+    * signature is computed by [[minhashSigUdf]] in one map-side pass over
+    * the scan — no shingle explode, no doc-keyed aggregate shuffle.
+    *
+    * Shape at scale: ONE shuffle total, keyed by (band, band-signature):
+    * the banded rows are grouped per bucket and candidate pairs stream
+    * out of a typed flatMapGroups — no self-join, no materialization of
+    * the banded table. Cross-band duplicates are dropped inside the same
+    * loop by the FIRST-colliding-band rule (all earlier bands of the two
+    * signatures must differ), so no distinct shuffle either.
+    *
+    * Skew guard: a bucket of B near-identical docs yields B²/2 pairs —
+    * quadratic in the hottest bucket. With `maxBucket > 0` (the finite
+    * default caps a template-heavy corpus's hottest bucket), any bucket
+    * larger than that emits a STAR instead (every member paired with the
+    * bucket minimum): linear output that preserves exactly the
+    * connectivity [[clusters]] needs, at the cost of losing the
+    * non-representative pair list for those buckets (the caller was
+    * going to collapse them into one cluster anyway; a star pair can
+    * repeat across bands — [[clusters]] is insensitive, pair-list
+    * consumers should distinct). maxBucket=0 keeps full enumeration —
+    * the oracle-checked default at test scale. */
   def minhashLshPairs(df0: DataFrame, id: String, text: String,
                       k: Int = 3, bands: Int = 4, rowsPerBand: Int = 2,
                       maxBucket: Int = 100000): DataFrame = {
     val spark = df0.sparkSession
     import spark.implicits._
-    val df = graft.engine.Core.spread(df0)
-    val nh = bands * rowsPerBand
-    require(nh <= 8, "a + i*b needs i*b < 2^63: at most 8 hashes from 60-bit halves")
-    val mins = df.select(col(id).as("doc"),
-      minhashSigUdf(k, nh)(words(col(text))).as("sig"))
-      .filter(col("sig").isNotNull)
-    val bandCols = (0 until bands).map { bd =>
-      struct(lit(bd).as("band"),
-        array((0 until rowsPerBand).map(r =>
-          col("sig")(bd * rowsPerBand + r)): _*).as("key"))
-    }
     val rpb = rowsPerBand
-    mins.select(col("doc"), col("sig"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("bk.band"), col("bk.key"), col("doc"), col("sig"))
+    minhashBands(df0, id, text, k, bands, rowsPerBand)
+      .select(col("band"), col("key"), col("doc"), col("sig"))
       .as[(Int, Seq[Long], Long, Seq[Long])]
       .groupByKey(t => (t._1, t._2))
       .flatMapGroups { (key: (Int, Seq[Long]), it: Iterator[(Int, Seq[Long], Long, Seq[Long])]) =>
@@ -395,7 +393,7 @@ object Dedup {
     * replaces shuffled every (doc, token) row by doc). */
   def simhash32(df0: DataFrame, id: String, text: String): DataFrame = {
     val df = graft.engine.Core.spread(df0)
-    df.select(col(id).as("doc"), simhashFpUdf(words(col(text))).as("simhash"))
+    df.select(col(id).as("doc"), simhashFpUdf(tokens(col(text))).as("simhash"))
       .filter(col("simhash").isNotNull)
   }
 
@@ -682,7 +680,7 @@ object Dedup {
     val spark = df.sparkSession
     import spark.implicits._
     val docs = graft.engine.Core.spread(df)
-      .select(col(id).as("doc"), shingleHash64SetUdf(k)(words(col(text))).as("shl"))
+      .select(col(id).as("doc"), shingleHash64SetUdf(k)(tokens(col(text))).as("shl"))
     val sh = docs
       .select(col("doc"), size(col("shl")).as("sz"), explode(col("shl")).as("s"))
       .select(col("s"), col("doc"), col("sz"))
@@ -733,7 +731,7 @@ object Dedup {
     import spark.implicits._
     val docs = graft.engine.Core.spread(df)
       .select(col(id).as("doc"),
-        shingleHash64SetUdf(k)(words(col(text))).as("shl"))
+        shingleHash64SetUdf(k)(tokens(col(text))).as("shl"))
     docs.select(explode(col("shl")).as("s"), col("doc"))
       .as[(Long, Long)]
       .groupByKey(_._1)

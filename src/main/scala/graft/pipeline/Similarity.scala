@@ -3,21 +3,31 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.NearestCentroid.nearestCentroid
+import graft.functions.VectorFunctions
 
-/** Embedding similarity search: brute-force cosine top-k (exact
-  * baseline) and random-hyperplane-LSH bucketed ANN (the scale path).
+/** Embedding similarity search, clustering and vector quantization.
   *
-  * The dot products are `zip_with` + `aggregate` higher-order functions —
-  * pure Catalyst expressions, no UDF, so the whole scoring pipeline is
-  * codegen'd.
+  * Every top-k entry point is candidate generation plus scoring, then
+  * one shared tail ([[topK]]): drop the self-match, rank each query's
+  * candidates by score then ascending neighbor id, keep rank <= k.
+  * Only candidate generation differs:
+  *   - brute force ([[bruteForceTopK]] cosine, [[bruteForceTopKL2]]
+  *     squared L2): broadcast queries crossed with the streamed corpus,
+  *     O(Q*N*d) — the exact baselines;
+  *   - [[lshTopKMulti]]: same-bucket pairs under `tables` random
+  *     hyperplane sets (OR-amplified recall);
+  *   - [[ivfTopK]]/[[ivfTopKWith]]: the corpus cells nearest each query
+  *     (`nprobe` of them), one cell-keyed equi-join;
+  *   - [[pqTopK]] and [[ivfPqTopK]]: ADC scores over product-quantized
+  *     codes, with codebooks and cells trained by [[kmeans]]'s Lloyd
+  *     loop ([[kmeansCentroids]]).
   *
-  * Scale shape: brute force is a broadcast nested loop (queries are
-  * broadcast; corpus streamed) — right for <=1e4 queries against any
-  * corpus size, O(Q*N*d). The LSH variant buckets both sides by
-  * hyperplane sign bits so each query only scores its bucket —
-  * sub-linear candidate sets at the cost of recall; increase `tables`
-  * (OR-ed buckets) for recall. A production IVF variant would replace
-  * the random planes with k-means centroids; same join shape.
+  * Pairwise scores are native codegen kernels
+  * ([[graft.functions.VectorFunctions]]); argmins over literal centroids
+  * are [[graft.functions.NearestCentroid]]. UDFs over a broadcast JVM
+  * matrix share one ascending-index [[dot]] loop, the same summation
+  * order as the native kernels.
   */
 object Similarity {
 
@@ -29,45 +39,82 @@ object Similarity {
     when(na > 0 && nb > 0, dot / (na * nb))
   }
 
-  /** Native codegen dot product for the pairwise hot path
-    * ([[graft.functions.DotProduct]]). History: the higher-order-function
-    * form above is CodegenFallback (interpreted lambda per element —
-    * ~40µs/pair at d=64); a compiled Scala UDF was ~100x faster but still
-    * copied each array into a boxed Seq per call; the native expression
-    * reads the UnsafeArrayData in place inside whole-stage codegen.
-    * Ascending-index accumulation, exactly like the sequential oracle. */
-  private def dotNative(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dot(a, b)
-
-  /** L2 norm, computed once per VECTOR (map-side), not once per pair.
-    * Native expression for the same reason as [[dotNative]]. */
-  private val l2norm: Column => Column =
-    graft.functions.VectorFunctions.l2norm
+  /** L2 norm, computed once per VECTOR (map-side), not once per pair. */
+  private val l2norm: Column => Column = VectorFunctions.l2norm
 
   /** Pairwise cosine from precomputed norms: same formula and summation
-    * order as [[cosine]], but O(d) work per pair instead of O(3d). */
+    * order as [[cosine]], but one native dot per pair
+    * ([[graft.functions.DotProduct]] reads the arrays in place inside
+    * whole-stage codegen). */
   private def pairCos(v1: Column, n1: Column, v2: Column, n2: Column): Column =
-    when(n1 > 0 && n2 > 0, dotNative(v1, v2) / (n1 * n2))
+    when(n1 > 0 && n2 > 0, VectorFunctions.dot(v1, v2) / (n1 * n2))
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
+
+  /** The one side projection: `(idCol as long, vecCol as array<double>)`
+    * renamed to `(id, vec)`. */
+  private def side(df: DataFrame, idCol: String, vecCol: String,
+                   id: String, vec: String): DataFrame =
+    df.select(col(idCol).cast("long").as(id), asDouble(col(vecCol)).as(vec))
+
+  /** The one top-k tail over (query_id, neighbor_id, score) candidates:
+    * drops self-matches, ranks each query's candidates by `score`
+    * (descending for a similarity, ascending for a distance), breaks
+    * ties by ascending neighbor_id, keeps rank <= k. Returns
+    * (query_id, neighbor_id, score, rank). */
+  private def topK(scored: DataFrame, k: Int, score: String,
+                   descending: Boolean): DataFrame = {
+    val s = if (descending) col(score).desc else col(score).asc
+    val w = Window.partitionBy(col("query_id")).orderBy(s, col("neighbor_id"))
+    scored.filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col(score), col("rank"))
+  }
+
+  /** The one JVM dot loop: ascending index from 0.0 over the shorter
+    * length — the summation order of the native kernels. */
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  private def norm(v: Array[Double]): Double = math.sqrt(dot(v, v))
+
+  /** One driver collect of a (long id, vector) frame, ordered by id and
+    * capped by `limit(cap + 1)`: the bound binds on the collect itself
+    * (a count probe followed by an uncapped collect is a second job, and
+    * races an input whose plan is non-deterministic). Above the cap it
+    * fails loudly naming `fn`, `knob` and the alternative in `hint`. */
+  private def collectVectors(vecs: DataFrame, cap: Long, fn: String,
+                             knob: String,
+                             hint: String): Array[(Long, Array[Double])] = {
+    val rows = vecs.orderBy(vecs.columns(0))
+      .limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    require(rows.length <= cap, {
+      val dim = rows.head._2.length
+      s"$fn: more than $knob=$cap vectors (~${cap * 8 * dim >> 20} MB " +
+        s"at dim $dim) — $hint"
+    })
+    rows
+  }
 
   /** Exact top-k neighbors for each query vector (brute force).
     * Queries must be small enough to broadcast. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                      qId: String = "vec_id", qVec: String = "embedding",
                      cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
-    val q = queries.select(col(qId).as("query_id"), asDouble(col(qVec)).as("qv"))
+    val q = side(queries, qId, qVec, "query_id", "qv")
       .withColumn("qn", l2norm(col("qv")))
-    val c = corpus.select(col(cId).as("neighbor_id"), asDouble(col(cVec)).as("cv"))
+    val c = side(corpus, cId, cVec, "neighbor_id", "cv")
       .withColumn("cn", l2norm(col("cv")))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", pairCos(col("qv"), col("qn"), col("cv"), col("cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    topK(c.crossJoin(broadcast(q))
+      .withColumn("cos", pairCos(col("qv"), col("qn"), col("cv"), col("cn"))),
+      k, "cos", descending = true)
   }
 
   /** Deterministic random hyperplanes: `planes` x `dim`, seeded. */
@@ -76,25 +123,28 @@ object Similarity {
     Seq.fill(planes)(Seq.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Sign-bit LSH bucket id of a vector column under the given planes.
-    * One compiled kernel over the whole plane matrix (the per-plane HOF
-    * form ran `planes` interpreted array reductions per vector). */
-  def lshBucket(vec: Column, planes: Seq[Seq[Double]]): Column = {
+  /** The one plane-sign loop: bit p of a vector's bucket id is set iff
+    * its dot with plane p is >= 0. A bucket id is one long, so 1..64
+    * planes only (a shift by p >= 64 wraps mod 64 and would silently
+    * merge planes' bits). */
+  private def signBits(planes: Seq[Seq[Double]]): Array[Double] => Long = {
+    require(planes.length >= 1 && planes.length <= 64,
+      s"LSH: planes=${planes.length} must be in 1..64 (one sign bit per " +
+        "plane in a 64-bit bucket id)")
     val m = planes.map(_.toArray).toArray
-    val f = udf { v: Seq[Double] =>
+    v => {
       var b = 0L
       var p = 0
-      while (p < m.length) {
-        val pl = m(p)
-        var i = 0; var d = 0.0
-        val n = math.min(v.length, pl.length)
-        while (i < n) { d += v(i) * pl(i); i += 1 }
-        if (d >= 0) b |= 1L << p
-        p += 1
-      }
+      while (p < m.length) { if (dot(v, m(p)) >= 0) b |= 1L << p; p += 1 }
       b
     }
-    f(vec)
+  }
+
+  /** Sign-bit LSH bucket id of a vector column under the given planes
+    * (1..64 of them). */
+  def lshBucket(vec: Column, planes: Seq[Seq[Double]]): Column = {
+    val bits = signBits(planes)
+    udf { v: Seq[Double] => bits(v.toArray) }.apply(vec)
   }
 
   /** The `tables` seeded plane sets for [[lshTopKMulti]] — exposed so
@@ -114,46 +164,24 @@ object Similarity {
   def lshTopKMulti(queries: DataFrame, corpus: DataFrame, k: Int,
                    planes: Int, tables: Int, dim: Int,
                    seed: Long = 42L): DataFrame = {
-    val sets = multiPlanes(planes, dim, tables, seed)
-    val m: Array[Array[Array[Double]]] =
-      sets.map(_.map(_.toArray).toArray).toArray
+    val kernels = multiPlanes(planes, dim, tables, seed).map(signBits).toArray
     val bUdf = udf { v: Seq[Double] =>
       val arr = v.toArray
-      m.indices.map { t =>
-        val pls = m(t)
-        var b = 0L
-        var p = 0
-        while (p < pls.length) {
-          val pl = pls(p)
-          var i = 0; var d = 0.0
-          val n = math.min(arr.length, pl.length)
-          while (i < n) { d += arr(i) * pl(i); i += 1 }
-          if (d >= 0) b |= 1L << p
-          p += 1
-        }
-        (t, b)
-      }
+      kernels.indices.map(t => (t, kernels(t)(arr)))
     }
-    val q = queries.select(col("vec_id").as("query_id"),
-      asDouble(col("embedding")).as("qv"))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      asDouble(col("embedding")).as("cv"))
+    val q = side(queries, "vec_id", "embedding", "query_id", "qv")
+    val c = side(corpus, "vec_id", "embedding", "neighbor_id", "cv")
     val qb = q.select(col("query_id"), explode(bUdf(col("qv"))).as("tb"))
       .select(col("query_id"), col("tb._1").as("t"), col("tb._2").as("bkt"))
     val cb = c.select(col("neighbor_id"), explode(bUdf(col("cv"))).as("tb"))
       .select(col("neighbor_id"), col("tb._1").as("t"), col("tb._2").as("bkt"))
     val cand = qb.join(cb, Seq("t", "bkt"))
-      .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
-    val scored = cand
+    topK(cand
       .join(broadcast(q.withColumn("qn", l2norm(col("qv")))), Seq("query_id"))
       .join(c.withColumn("cn", l2norm(col("cv"))), Seq("neighbor_id"))
-      .withColumn("cos", pairCos(col("qv"), col("qn"), col("cv"), col("cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+      .withColumn("cos", pairCos(col("qv"), col("qn"), col("cv"), col("cn"))),
+      k, "cos", descending = true)
   }
 
   /** IVF (inverted-file) ANN top-k: the corpus is partitioned into
@@ -163,11 +191,12 @@ object Similarity {
     * vector layout (FAISS IVFFlat) expressed as a Spark equi-join.
     *
     * Centroids are a deterministic hash-ordered corpus sample collected
-    * to the driver and broadcast (production: k-means via MLlib — the
-    * join shape is identical, only centroid quality changes). Cell
-    * assignment and probe lists are compiled UDFs over the broadcast
-    * centroid matrix: O(nlist*d) per vector, map-side, no shuffle.
-    * `nprobe = nlist` degrades to exact search — the spec's oracle. */
+    * to the driver and broadcast ([[ivfTopKWith]] takes trained ones,
+    * e.g. [[kmeansCentroids]] output — the join shape is identical).
+    * Cell assignment and probe lists are compiled UDFs over the
+    * broadcast centroid matrix: O(nlist*d) per vector, map-side, no
+    * shuffle. `nprobe = nlist` degrades to exact search — the spec's
+    * oracle. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int, nlist: Int,
               nprobe: Int, seed: Long = 42L): DataFrame =
     ivfTopKWith(queries, corpus,
@@ -180,62 +209,48 @@ object Similarity {
   /** [[ivfTopK]] with an EXPLICIT centroid table (vec_id, embedding) —
     * lets callers pick deterministic, externally-reproducible centroids
     * (fixed ids, k-means output, …); the default overload hash-samples
-    * `nlist` corpus rows. */
+    * `nlist` corpus rows. Cells are scored by cosine, so assignment
+    * stays a UDF ([[graft.functions.NearestCentroid]] is L2). */
   def ivfTopKWith(queries: DataFrame, corpus: DataFrame,
                   centroids: DataFrame, k: Int, nprobe: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    def l2(v: Array[Double]): Double = {
-      var i = 0; var s = 0.0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
     // ordered by centroid id so cell indexes (and first-max tie-breaks)
     // are deterministic and SQL-reproducible
     val cents: Array[(Array[Double], Double)] = centroids
       .orderBy(col("vec_id"))
       .select(asDouble(col("embedding")).as("v")).as[Array[Double]].collect()
-      .map(v => (v, l2(v)))
+      .map(v => (v, norm(v)))
     val bc = spark.sparkContext.broadcast(cents)
-    def cellScores(v: Seq[Double]): Array[Double] = {
-      val cs = bc.value
-      val arr = v.toArray
-      val n = l2(arr)
-      cs.map { case (cv, cn) =>
-        if (n == 0 || cn == 0) -2.0
-        else {
-          var i = 0; var d = 0.0
-          val len = math.min(arr.length, cv.length)
-          while (i < len) { d += arr(i) * cv(i); i += 1 }
-          d / (n * cn)
-        }
-      }
-    }
     val assignUdf = udf { v: Seq[Double] =>
-      val s = cellScores(v)
+      val s = cellScores(v.toArray, bc.value)
       var best = 0; var i = 1
       while (i < s.length) { if (s(i) > s(best)) best = i; i += 1 }
       best
     }
     val probeUdf = udf { v: Seq[Double] =>
-      cellScores(v).zipWithIndex.sortBy(-_._1).take(nprobe).map(_._2)
+      cellScores(v.toArray, bc.value).zipWithIndex.sortBy(-_._1)
+        .take(nprobe).map(_._2)
     }
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      asDouble(col("embedding")).as("cv"))
+    val c = side(corpus, "vec_id", "embedding", "neighbor_id", "cv")
       .withColumn("cell", assignUdf(col("cv")))
       .withColumn("cn", l2norm(col("cv")))
-    val q = queries.select(col("vec_id").as("query_id"),
-      asDouble(col("embedding")).as("qv"))
+    val q = side(queries, "vec_id", "embedding", "query_id", "qv")
       .withColumn("cell", explode(probeUdf(col("qv"))))
       .withColumn("qn", l2norm(col("qv")))
-    val scored = c.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", pairCos(col("qv"), col("qn"), col("cv"), col("cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    topK(c.join(q, Seq("cell"))
+      .withColumn("cos", pairCos(col("qv"), col("qn"), col("cv"), col("cn"))),
+      k, "cos", descending = true)
+  }
+
+  /** Cosine of `v` against each (centroid, norm); -2.0 (below every
+    * cosine) where either norm is zero. */
+  private def cellScores(v: Array[Double],
+                         cents: Array[(Array[Double], Double)]): Array[Double] = {
+    val n = norm(v)
+    cents.map { case (cv, cn) =>
+      if (n == 0 || cn == 0) -2.0 else dot(v, cv) / (n * cn)
+    }
   }
 
   /** recall@k of an ANN result against the exact baseline: per query,
@@ -256,57 +271,43 @@ object Similarity {
 
   /** Exact embedding near-duplicate pairs: all pairs with cosine >=
     * threshold. The corpus (necessarily bounded — exact all-pairs is
-    * O(n²); use [[nearDupPairs]] for large n) is broadcast as a plain
-    * JVM matrix and each partition scans it in a tight primitive loop:
-    * one array conversion per VECTOR instead of two per PAIR. The
-    * join-with-UDF formulation allocated ~1KB per pair (2GB of garbage
-    * across 2M pairs) and its run time varied 1.7-16s with heap state;
-    * this form is allocation-free in the inner loop. */
+    * O(n²); use [[nearDupPairs]] for large n) is collected once, capped
+    * at `maxRows`, and broadcast as a plain JVM matrix; each of the
+    * session's shuffle partitions scans it in a tight primitive loop:
+    * one array conversion per VECTOR instead of two per PAIR, and no
+    * allocation in the inner loop (the join-with-UDF form allocated ~1KB
+    * per pair). Null vectors never pair. */
   def nearDupPairsExact(df: DataFrame, threshold: Double,
-                        parallelism: Int = 64,
                         maxRows: Long = 500000L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    def l2(v: Array[Double]): Double = {
-      var i = 0; var s = 0.0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
-    val vecs = df.select(col("vec_id").cast("long"),
-      asDouble(col("embedding"))).as[(Long, Array[Double])]
-    // Fail FAST before the driver collect: this baseline is O(n²) with a
-    // driver-resident corpus, sized for validation runs only. Above the
-    // cap, refuse loudly instead of OOMing an executor or the driver —
-    // the cluster-scale paths are nearDupPairs (LSH-bucketed exact),
-    // annIvf, and pqTopK.
-    val n = vecs.count()
-    require(n <= maxRows,
-      s"nearDupPairsExact: $n vectors exceeds maxRows=$maxRows; this " +
-        "all-pairs baseline broadcasts the corpus to every task — use " +
-        "nearDupPairs (LSH) / annIvf / pqTopK at this scale, or raise " +
-        "maxRows explicitly if this is a deliberate validation run")
-    val corpus = vecs.collect().map { case (id, v) => (id, v, l2(v)) }
+    val vecs = side(df, "vec_id", "embedding", "id", "v")
+      .filter(col("v").isNotNull)
+    val corpus = collectVectors(vecs, maxRows, "nearDupPairsExact", "maxRows",
+      "this all-pairs baseline broadcasts the corpus to every task; use " +
+        "nearDupPairs (LSH), ivfTopK or pqTopK at this scale, or raise " +
+        "maxRows for a deliberate validation run")
+      .map { case (id, v) => (id, v, norm(v)) }
     val bc = spark.sparkContext.broadcast(corpus)
-    vecs.repartition(parallelism).mapPartitions { it =>
-      val cand = bc.value
-      it.flatMap { case (id1, v1) =>
-        val n1 = l2(v1)
-        val out = Seq.newBuilder[(Long, Long, Double)]
-        var j = 0
-        while (j < cand.length) {
-          val (id2, v2, n2) = cand(j)
-          if (id1 < id2 && n1 > 0 && n2 > 0) {
-            var i = 0; var d = 0.0
-            val n = math.min(v1.length, v2.length)
-            while (i < n) { d += v1(i) * v2(i); i += 1 }
-            val cos = d / (n1 * n2)
-            if (cos >= threshold) out += ((id1, id2, cos))
+    vecs.as[(Long, Array[Double])]
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .mapPartitions { it =>
+        val cand = bc.value
+        it.flatMap { case (id1, v1) =>
+          val n1 = norm(v1)
+          val out = Seq.newBuilder[(Long, Long, Double)]
+          var j = 0
+          while (j < cand.length) {
+            val (id2, v2, n2) = cand(j)
+            if (id1 < id2 && n1 > 0 && n2 > 0) {
+              val cos = dot(v1, v2) / (n1 * n2)
+              if (cos >= threshold) out += ((id1, id2, cos))
+            }
+            j += 1
           }
-          j += 1
+          out.result().iterator
         }
-        out.result().iterator
-      }
-    }.toDF("id1", "id2", "cos")
+      }.toDF("id1", "id2", "cos")
   }
 
   /** Embedding near-duplicate pairs: cosine >= threshold. Brute force
@@ -315,7 +316,7 @@ object Similarity {
   def nearDupPairs(df: DataFrame, threshold: Double, planes: Int, dim: Int,
                    seed: Long = 42L): DataFrame = {
     val ps = hyperplanes(planes, dim, seed)
-    val v = df.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val v = side(df, "vec_id", "embedding", "vec_id", "v")
       .withColumn("bucket", lshBucket(col("v"), ps))
       .withColumn("n", l2norm(col("v")))
     val l = v.select(col("vec_id").as("id1"), col("v").as("v1"),
@@ -334,55 +335,54 @@ object Similarity {
     * IVF probe misses substantially).
     *
     * Scale shape per iteration: centroids live on the DRIVER (k × dim
-    * doubles — tiny) and enter the plan as literals, so assignment is a
-    * zero-shuffle codegen projection (argmin over k fold expressions);
-    * the update is one hash-aggregate keyed (cluster, dim) — 64·N rows
-    * spread over the cluster, no hot key. Nothing frame-sized ever
-    * serializes to the driver.
+    * doubles — tiny) and enter the plan as one native argmin
+    * ([[graft.functions.NearestCentroid]]), so assignment is a
+    * zero-shuffle codegen projection; the update is one hash-aggregate
+    * keyed (cluster, dim) — 64·N rows spread over the cluster, no hot
+    * key. Nothing frame-sized ever serializes to the driver.
     *
     * Determinism: init = the k lowest-id vectors (cid by id order);
-    * argmin ties break to the lowest cid via struct array_min; centroid
-    * means are exact sums of float32-valued doubles (order-independent
-    * because no addition ever rounds: 24-bit mantissas with bounded
-    * exponent spread fit in 53 bits), so re-runs — and the DuckDB
-    * oracle — reproduce the trajectory bit-for-bit.
+    * argmin ties break to the lowest cid; centroid means are exact sums
+    * of float32-valued doubles (order-independent because no addition
+    * ever rounds: 24-bit mantissas with bounded exponent spread fit in
+    * 53 bits), so re-runs — and the DuckDB oracle — reproduce the
+    * trajectory bit-for-bit.
     *
     * Returns (vec_id, cluster, dist): final assignment against the
     * post-iteration centroids, dist = Euclidean. */
   def kmeans(df: DataFrame, idCol: String, vecCol: String,
-             k: Int, iters: Int): DataFrame =
-    kmeansAssign(df, idCol, vecCol,
-        kmeansCentroids(df, idCol, vecCol, k, iters))
-      .select(col("vec_id"), col("__best.c").as("cluster"),
-        sqrt(col("__best.d")).as("dist"))
+             k: Int, iters: Int): DataFrame = {
+    val cents = kmeansCentroids(df, idCol, vecCol, k, iters)
+    val centsLit = typedlit(cents.map(_.toSeq).toSeq)
+    kmeansAssign(df, idCol, vecCol, cents)
+      .select(col("vec_id"), col("cluster"),
+        sqrt(VectorFunctions.sqdist(col("x"),
+          element_at(centsLit, col("cluster") + 1))).as("dist"))
+  }
 
   /** Map-side argmin assignment against literal centroids (see
-    * [[kmeans]]'s scale note): zero shuffle, pure codegen projection.
-    * Keeps `x` and `__best.{d,c}` so callers can continue the plan. */
+    * [[kmeans]]'s scale note): zero shuffle, one native kernel per row.
+    * The widest centroid sets the kernel's width, so each distance runs
+    * over min(|x|, |centroid|) elements, like graft_sqdist. Returns
+    * (vec_id, x, cluster). */
   private def kmeansAssign(df: DataFrame, idCol: String, vecCol: String,
-                           cents: Array[Array[Double]]): DataFrame = {
-    val base = df.select(col(idCol).cast("long").as("vec_id"),
-      asDouble(col(vecCol)).as("x"))
-    def sqDist(cv: Array[Double]): Column = sqDistLit(col("x"), cv)
-    base.withColumn("__best",
-      array_min(array(cents.zipWithIndex.map { case (cv, i) =>
-        struct(sqDist(cv).as("d"), lit(i).as("c"))
-      }: _*)))
-  }
+                           cents: Array[Array[Double]]): DataFrame =
+    side(df, idCol, vecCol, "vec_id", "x")
+      .withColumn("cluster", nearestCentroid(col("x"), cents, 0,
+        cents.map(_.length).max))
 
   /** The Lloyd loop of [[kmeans]], returning the trained k × dim
     * centroid matrix (driver-sized by construction). */
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
                       k: Int, iters: Int): Array[Array[Double]] = {
     require(k > 0 && iters >= 0, s"kmeans: need k>0, iters>=0")
-    val base = df.select(col(idCol).cast("long").as("vec_id"),
-      asDouble(col(vecCol)).as("x"))
-    var cents: Array[Array[Double]] = base.orderBy("vec_id").limit(k)
+    var cents: Array[Array[Double]] = side(df, idCol, vecCol, "vec_id", "x")
+      .orderBy("vec_id").limit(k)
       .select("x").collect().map(_.getSeq[Double](0).toArray)
     require(cents.length == k, s"kmeans: k=$k but only ${cents.length} rows")
     for (_ <- 0 until iters) {
       val sums = kmeansAssign(df, idCol, vecCol, cents)
-        .select(col("__best.c").as("cid"), posexplode(col("x")).as(Seq("p", "v")))
+        .select(col("cluster").as("cid"), posexplode(col("x")).as(Seq("p", "v")))
         .groupBy("cid", "p")
         .agg(sum("v").as("s"), count("v").as("n"))
         .collect()
@@ -437,7 +437,7 @@ object Similarity {
                maxCluster: Int = 100000): DataFrame = {
     val cents = kmeansCentroids(df, idCol, vecCol, k, iters)
     val m = kmeansAssign(df, idCol, vecCol, cents)
-      .select(col("vec_id"), col("__best.c").as("cluster"), col("x").as("__v"))
+      .select(col("vec_id"), col("cluster"), col("x").as("__v"))
       .withColumn("__n", l2norm(col("__v")))
     val dups = semDedupCandidates(m, maxCluster)
       .filter(round(pairCos(col("__va"), col("__na"), col("__vb"), col("__nb"))
@@ -486,16 +486,6 @@ object Similarity {
   // Product quantization (PQ) — compressed ANN at corpus scale
   // ---------------------------------------------------------------
 
-  /** Squared L2 between a vector column and a literal centroid — the
-    * same zip_with/aggregate codegen shape as [[kmeansAssign]]. */
-  /** Native graft_sqdist kernel against a literal centroid — float-
-    * identical to the aggregate(zip_with) left fold it replaced
-    * (ascending-index accumulation from 0.0), so every SQL oracle built
-    * on list_reduce stays bit-exact; ~20x cheaper per evaluation and
-    * codegen-capable when no enclosing HOF blocks it. */
-  private def sqDistLit(v: Column, cv: Array[Double]): Column =
-    graft.functions.VectorFunctions.sqdist(v, array(cv.map(lit): _*))
-
   /** Train PQ codebooks: split the `dim`-dimensional space into `m`
     * contiguous subspaces of dim/m and run the bit-reproducible Lloyd
     * trainer ([[kmeansCentroids]]) independently in each — m bounded
@@ -513,23 +503,17 @@ object Similarity {
     }.toArray
   }
 
-  /** PQ-encode every vector: m argmin-over-codebook codes, all from
-    * literal centroids — pure map-side codegen, ZERO shuffle, and the
-    * output is m small ints per vector instead of dim floats (the
-    * 100 TB story: a 64-dim float corpus compresses 64x, so the
-    * scoring scan reads codes, not vectors). */
+  /** PQ-encode every vector: m argmin-over-codebook codes, one native
+    * [[graft.functions.NearestCentroid]] per subspace — pure map-side
+    * codegen, ZERO shuffle, and the output is m small ints per vector
+    * instead of dim floats (the 100 TB story: a 64-dim float corpus
+    * compresses 64x, so the scoring scan reads codes, not vectors). */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                books: Array[Array[Array[Double]]]): DataFrame = {
     val w = books(0)(0).length
-    val base = df.select(col(idCol).cast("long").as("vec_id"),
-      asDouble(col(vecCol)).as("x"))
-    base.select(col("vec_id"),
-      array(books.indices.map { s =>
-        // native one-kernel argmin (r15): bit-identical to the
-        // struct-min tree it replaces — [[graft.functions.NearestCentroid]]
-        graft.functions.NearestCentroid.nearestCentroid(
-          col("x"), books(s), s * w, w)
-      }: _*).as("codes"))
+    side(df, idCol, vecCol, "vec_id", "x").select(col("vec_id"),
+      array(books.indices.map(s =>
+        nearestCentroid(col("x"), books(s), s * w, w)): _*).as("codes"))
   }
 
   /** Exact squared-L2 top-k — the baseline [[pqTopK]] approximates
@@ -539,19 +523,11 @@ object Similarity {
                        qId: String = "vec_id", qVec: String = "embedding",
                        cId: String = "vec_id",
                        cVec: String = "embedding"): DataFrame = {
-    val q = queries.select(col(qId).cast("long").as("query_id"),
-      asDouble(col(qVec)).as("qv"))
-    val c = corpus.select(col(cId).cast("long").as("neighbor_id"),
-      asDouble(col(cVec)).as("cv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("dist",
-        graft.functions.VectorFunctions.sqdist(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "dist", "rank")
+    val q = side(queries, qId, qVec, "query_id", "qv")
+    val c = side(corpus, cId, cVec, "neighbor_id", "cv")
+    topK(c.crossJoin(broadcast(q))
+      .withColumn("dist", VectorFunctions.sqdist(col("qv"), col("cv"))),
+      k, "dist", descending = false)
   }
 
   /** Asymmetric-distance (ADC) top-k: queries stay exact, the corpus
@@ -559,40 +535,34 @@ object Similarity {
     * sum_s ||q_sub_s - centroid[s][code_s]||² — element_at into the
     * literal codebook arrays, all inside codegen; the corpus-side scan
     * touches only (id, codes). Broadcast queries, one WindowGroupLimit
-    * top-k per query; self-matches excluded like [[bruteForceTopK]].
-    * Returns (query_id, neighbor_id, dist, rank), rank by ascending
-    * approximate squared distance. */
+    * top-k per query. Returns (query_id, neighbor_id, dist, rank), rank
+    * by ascending approximate squared distance. */
   def pqTopK(queries: DataFrame, codes: DataFrame,
              books: Array[Array[Array[Double]]], k: Int,
              qId: String = "vec_id", qVec: String = "embedding"): DataFrame = {
     val w = books(0)(0).length
-    // ADC lookup table (r15, guide §1.2 step 2 — per-task work):
-    // ||q_sub_s - book[s][c]||² is a pure function of the QUERY, so
-    // compute all m×k entries ONCE per query row BEFORE the broadcast;
-    // each (query, candidate) pair then reads m table cells instead of
-    // re-running m subvector sqdist kernels (with their slice
-    // allocations). Float-identical: every entry is the exact sqdist
-    // the per-pair form computed, summed in the same subspace order.
-    val q = queries.select(col(qId).cast("long").as("query_id"),
-        asDouble(col(qVec)).as("qv"))
+    // ADC lookup table: ||q_sub_s - book[s][c]||² is a pure function of
+    // the QUERY, so all m×k entries are computed ONCE per query row
+    // before the broadcast; each (query, candidate) pair then reads m
+    // table cells, summed in subspace order.
+    val q = side(queries, qId, qVec, "query_id", "qv")
       .withColumn("qlut", array(books.indices.map { s =>
-        array(books(s).map(cv => graft.functions.VectorFunctions.sqdist(
+        array(books(s).map(cv => VectorFunctions.sqdist(
           slice(col("qv"), s * w + 1, w), array(cv.map(lit): _*))): _*)
       }: _*))
       .drop("qv")
-    val scored = codes.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("vec_id"))
+    topK(codes.withColumnRenamed("vec_id", "neighbor_id")
+      .crossJoin(broadcast(q))
       .withColumn("dist", books.indices.map { s =>
         element_at(element_at(col("qlut"), s + 1),
           col("codes").getItem(s) + 1)
-      }.reduce(_ + _))
-    val win = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("dist"), col("rank"))
+      }.reduce(_ + _)),
+      k, "dist", descending = false)
   }
+
+  /** The bench-set size up to which [[semanticDecontaminate]] inlines
+    * the bench matrix into the plan as one literal. */
+  private val BenchLiteralMax = 4096
 
   /** Semantic decontamination: flag corpus documents whose embedding is
     * too close to ANY benchmark/eval-set embedding — the embedding-space
@@ -602,69 +572,63 @@ object Similarity {
     * norms) ride a single nested-array Literal; each corpus row takes a
     * map-side max over the bench matrix via the native dot kernel —
     * ZERO shuffle, scan-speed at any corpus size, O(|bench| * d) per
-    * row. An eval set larger than `maxBenchLiteral` would explode plan
-    * size (the literal matrix is inlined into every task's codegen), so
+    * row. A bench set larger than 4096 vectors would explode plan size
+    * (the literal matrix is inlined into every task's codegen), so
     * above it the SAME semantics run off a Spark BROADCAST VARIABLE and
     * a per-row max UDF — one copy of the bench matrix per executor,
     * still zero shuffle and still exactly one output row per corpus row
     * BY CONSTRUCTION (a join+groupBy on a generated row-id would lose
     * that under task retry, since monotonically_increasing_id is not
     * stable across attempts). Both branches share ONE driver collect
-    * that is `limit`-capped at `maxBenchRows`, so the driver-memory
-    * bound is binding at collect time, not a separate racy count probe;
-    * above the cap the call fails loudly naming [[ivfTopKWith]] /
-    * [[Curation.decontaminate]] as the distributed alternatives (an
-    * eval "benchmark" bigger than that is a corpus-vs-corpus join, not
-    * a decontamination pass). Returns (id, max_cos, contaminated);
-    * filter on the flag to drop. Zero-norm vectors score null max_cos
-    * but a FALSE (not null) contaminated flag, so `filter(!contaminated)`
-    * keeps them — a three-valued null flag would silently drop clean
-    * rows. NaN-norm vectors (a NaN element) follow the zero-norm rule
-    * on BOTH sides, and null bench vectors are dropped up front. If
-    * EVERY bench vector is degenerate (zero/NaN/Inf norm) the call
-    * fails loudly instead of failing open — a broken upstream
-    * embedding job must not mark the whole corpus clean. */
+    * capped at `maxBenchRows`; above the cap the call fails loudly
+    * naming [[ivfTopKWith]] / [[Curation.decontaminate]] as the
+    * distributed alternatives (an eval "benchmark" bigger than that is
+    * a corpus-vs-corpus join, not a decontamination pass). Returns (id,
+    * max_cos, contaminated); filter on the flag to drop. Zero-norm
+    * vectors score null max_cos but a FALSE (not null) contaminated
+    * flag, so `filter(!contaminated)` keeps them — a three-valued null
+    * flag would silently drop clean rows. NaN-norm vectors (a NaN
+    * element) follow the zero-norm rule on BOTH sides, and null bench
+    * vectors are dropped up front. If EVERY bench vector is degenerate
+    * (zero/NaN/Inf norm) the call fails loudly instead of failing open
+    * — a broken upstream embedding job must not mark the whole corpus
+    * clean. */
   def semanticDecontaminate(corpus: DataFrame, bench: DataFrame,
                             threshold: Double,
                             idCol: String = "vec_id",
                             vecCol: String = "embedding",
-                            maxBenchLiteral: Int = 4096,
-                            maxBenchRows: Int = 262144): DataFrame = {
-    def l2(v: Array[Double]): Double =
-      math.sqrt(v.map(x => x * x).sum)
-    // ONE limit-capped collect decides the branch. A count probe
-    // followed by an uncapped collect is TOCTOU: a bench whose plan is
-    // non-deterministic (unseeded sample, growing directory) could pass
-    // the probe and still hand the driver an unbounded collect. The
-    // limit makes the bound binding on the collect itself.
-    val collected: Array[Array[Double]] = bench.orderBy(col(idCol))
-      .filter(col(vecCol).isNotNull) // null vectors never match; a
-      // driver-side getSeq(null).toArray would NPE before any branch
-      .select(asDouble(col(vecCol)).as("v")).limit(maxBenchRows + 1)
-      .collect().map(_.getSeq[Double](0).toArray)
+                            maxBenchRows: Int = 262144): DataFrame =
+    semanticDecontaminateWith(corpus, bench, threshold, idCol, vecCol,
+      maxBenchRows, BenchLiteralMax)
+
+  /** [[semanticDecontaminate]] with the literal branch's size limit as
+    * a parameter, so the spec can force the broadcast branch on a small
+    * bench set. */
+  private[graft] def semanticDecontaminateWith(corpus: DataFrame,
+      bench: DataFrame, threshold: Double, idCol: String, vecCol: String,
+      maxBenchRows: Int, literalMax: Int): DataFrame = {
+    val collected = collectVectors(
+      side(bench, idCol, vecCol, "id", "v").filter(col("v").isNotNull),
+      maxBenchRows, "semanticDecontaminate", "maxBenchRows",
+      "an eval set that large is a corpus-vs-corpus problem; use " +
+        "ivfTopKWith/lshTopKMulti or Curation.decontaminate instead")
+      .map(_._2)
     require(collected.nonEmpty, "semanticDecontaminate: empty benchmark set")
-    require(collected.length <= maxBenchRows,
-      s"semanticDecontaminate: benchmark set exceeds maxBenchRows=" +
-        s"$maxBenchRows (~${maxBenchRows.toLong * 8 * collected.head.length /
-          (1 << 20)} MB at dim ${collected.head.length}) — an eval set that " +
-        "large is a corpus-vs-corpus problem; use ivfTopKWith/lshTopKMulti or " +
-        "Curation.decontaminate instead")
     // zero/NaN/Inf-norm bench vectors can never produce a meaningful
     // cosine — drop them ONCE here so both branches share identical
-    // semantics (the old per-branch guards disagreed on non-finite
-    // norms: Catalyst orders NaN above every number and Inf/Inf is a
-    // NaN cosine, Scala compares both false)
-    val bvecs: Array[Array[Double]] =
-      collected.filter(v => { val n = l2(v); n > 0 && !n.isNaN &&
-        !n.isInfinite })
+    // semantics (Catalyst orders NaN above every number and Inf/Inf is
+    // a NaN cosine, Scala compares both false)
+    val bvecs = collected.filter { v =>
+      val n = norm(v); n > 0 && !n.isNaN && !n.isInfinite
+    }
     // fail CLOSED when the whole benchmark is degenerate: a broken
     // upstream embedding job (all-zero / NaN vectors) must not silently
     // mark the entire corpus clean — mirrors the empty-bench guard
     require(bvecs.nonEmpty, "semanticDecontaminate: all benchmark " +
       "vectors are degenerate (zero/NaN/Inf norm) — refusing to mark " +
       "the corpus clean against an unusable benchmark")
-    val base = corpus.select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("__v"))
+    val bNorms = bvecs.map(norm)
+    val base = side(corpus, idCol, vecCol, "id", "__v")
       .withColumn("__n", l2norm(col("__v")))
     // corpus-side validity: positive FINITE norm, so the literal
     // branch's Catalyst compares (NaN > 0 is TRUE in SQL; an Inf norm
@@ -675,57 +639,39 @@ object Similarity {
     // produce a NaN cosine — normalize such embeddings upstream.
     val vOk = col("__n") > 0 && !isnan(col("__n")) &&
       col("__n") =!= Double.PositiveInfinity
-    if (bvecs.length <= maxBenchLiteral) {
+    val mx = if (bvecs.length <= literalMax) {
       val bLit = typedlit(bvecs.map(_.toSeq).toSeq)
-      val bNorms = typedlit(bvecs.map(l2).toSeq)
-      val mx =
-        array_max(transform(sequence(lit(0), lit(bvecs.length - 1)),
-          i => when(vOk,
-            dotNative(col("__v"), element_at(bLit, i + 1)) /
-              (col("__n") * element_at(bNorms, i + 1)))))
-      base.select(col("id"), mx.as("max_cos"),
-        coalesce(mx >= threshold, lit(false)).as("contaminated"))
+      val bNormsLit = typedlit(bNorms.toSeq)
+      array_max(transform(sequence(lit(0), lit(bvecs.length - 1)),
+        i => when(vOk,
+          VectorFunctions.dot(col("__v"), element_at(bLit, i + 1)) /
+            (col("__n") * element_at(bNormsLit, i + 1)))))
     } else {
       // Large eval set: ship the matrix ONCE per executor as a
       // broadcast variable and take the per-row max in a UDF — no
       // join, no groupBy, no generated row-id, so the one-row-per-
       // corpus-row contract survives task retries and duplicate ids.
-      val bNorms: Array[Double] = bvecs.map(l2)
       val bc = corpus.sparkSession.sparkContext.broadcast((bvecs, bNorms))
-      val maxCos = udf { (v: Seq[Double]) =>
-        if (v == null) None
+      udf { (v: Seq[Double]) =>
+        val (bv, bn) = bc.value
+        val arr = if (v == null) null else v.toArray
+        val n = if (arr == null) Double.NaN else norm(arr)
+        // mirror vOk: positive FINITE norm (NaN compares false itself)
+        if (!(n > 0 && !n.isInfinite)) None
         else {
-          val (bv, bn) = bc.value
-          val arr = v.toArray
-          var n = 0.0
-          var j = 0
-          while (j < arr.length) { n += arr(j) * arr(j); j += 1 }
-          n = math.sqrt(n)
           var best = Double.NegativeInfinity
-          var any = false
           var i = 0
           while (i < bv.length) {
-            // mirror vOk: positive FINITE norm (bench norms are
-            // pre-filtered; NaN compares false here by itself)
-            if (n > 0 && !n.isInfinite && bn(i) > 0) {
-              val b = bv(i)
-              val d = math.min(arr.length, b.length)
-              var s = 0.0
-              var k = 0
-              while (k < d) { s += arr(k) * b(k); k += 1 }
-              val c = s / (n * bn(i))
-              if (c > best) best = c
-              any = true
-            }
+            val c = dot(arr, bv(i)) / (n * bn(i))
+            if (c > best) best = c
             i += 1
           }
-          if (any) Some(best) else None
+          Some(best)
         }
-      }
-      val mx = maxCos(col("__v"))
-      base.select(col("id"), mx.as("max_cos"),
-        coalesce(mx >= threshold, lit(false)).as("contaminated"))
+      }.apply(col("__v"))
     }
+    base.select(col("id"), mx.as("max_cos"),
+      coalesce(mx >= threshold, lit(false)).as("contaminated"))
   }
 
   /** IVF-PQ combined ANN (FAISS IVFPQ shape): coarse cells bound the
@@ -767,44 +713,31 @@ object Similarity {
     // per-centroid expression forest cost ~5s of planning per query
     val cellsLit = typedlit(cells.map(_.toSeq).toSeq)
     val booksLit = typedlit(books.map(_.map(_.toSeq).toSeq).toSeq)
-    // native kernel, float-identical to the aggregate(zip_with) left
-    // fold (and so to the SQL oracle's list_reduce)
-    def sqd(a: Column, b: Column): Column =
-      graft.functions.VectorFunctions.sqdist(a, b)
-    // (dist, cell-index) structs; array_min/array_sort lexicographic
-    // order = dist-then-lowest-index tie-break, same as NearestCentroid
+    def sqd(a: Column, b: Column): Column = VectorFunctions.sqdist(a, b)
+    // (dist, cell-index) structs; array_sort's lexicographic order =
+    // dist-then-lowest-index tie-break, same as NearestCentroid
     def cellStructs(v: Column) =
       transform(sequence(lit(0), lit(cells.length - 1)),
         i => struct(sqd(v, element_at(cellsLit, i + 1)).as("d"),
           i.as("c")))
-    val c0 = corpus
-      .select(col(cId).cast("long").as("neighbor_id"),
-        asDouble(col(cVec)).as("x"))
-      // native one-kernel argmins (r15): bit-identical to the
-      // struct-min trees they replace — [[graft.functions.NearestCentroid]]
-      .withColumn("cell", graft.functions.NearestCentroid
-        .nearestCentroid(col("x"), cells, 0, cells(0).length))
+    val c0 = side(corpus, cId, cVec, "neighbor_id", "x")
+      .withColumn("cell", nearestCentroid(col("x"), cells, 0, cells(0).length))
       .withColumn("rv", zip_with(col("x"),
         element_at(cellsLit, col("cell") + 1), (a, b) => a - b))
     val codes = c0.select(col("neighbor_id"), col("cell"),
-      array(books.indices.map { s =>
-        graft.functions.NearestCentroid.nearestCentroid(
-          col("rv"), books(s), s * w, w)
-      }: _*).as("codes"))
-    val q0 = queries
-      .select(col(qId).cast("long").as("query_id"),
-        asDouble(col(qVec)).as("qx"))
+      array(books.indices.map(s =>
+        nearestCentroid(col("rv"), books(s), s * w, w)): _*).as("codes"))
+    val q0 = side(queries, qId, qVec, "query_id", "qx")
       .withColumn("cell", explode(transform(
         slice(array_sort(cellStructs(col("qx"))), 1, nprobe),
         p => p.getField("c"))))
       .withColumn("qrv", zip_with(col("qx"),
         element_at(cellsLit, col("cell") + 1), (a, b) => a - b))
       .drop("qx")
-      // ADC lookup table (r15, same as [[pqTopK]]): the residual is a
-      // pure function of (query, probed cell), so the m×k sqdist table
-      // is computed once per q0 row — |queries| × nprobe rows — before
-      // the cell-keyed join; scoring reads m cells per candidate.
-      // Float-identical entries, same subspace summation order.
+      // ADC lookup table (as in [[pqTopK]]): the residual is a pure
+      // function of (query, probed cell), so the m×k sqdist table is
+      // computed once per q0 row — |queries| × nprobe rows — before the
+      // cell-keyed join; scoring reads m cells per candidate.
       .withColumn("qlut", array(books.indices.map { s =>
         array(books(s).indices.map { c =>
           sqd(slice(col("qrv"), s * w + 1, w),
@@ -813,22 +746,17 @@ object Similarity {
       }: _*))
       .drop("qrv")
     // the query side is |queries| × nprobe rows BY CONTRACT — the small
-    // side. The hint pins the build side (guide §3.1): size ESTIMATES
-    // here are heuristic (explode × literal-heavy projections), and a
+    // side. The hint pins the build side: size ESTIMATES here are
+    // heuristic (explode × literal-heavy projections), and a
     // mis-estimate that broadcasts the CORPUS side instead would build
     // a corpus-sized hash relation on the driver every run (measured:
     // 2 s -> 20 s on the 10× stress row when the estimate flipped).
-    val scored = codes.join(broadcast(q0), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    topK(codes.join(broadcast(q0), Seq("cell"))
       .withColumn("dist", books.indices.map { s =>
         element_at(element_at(col("qlut"), s + 1),
           col("codes").getItem(s) + 1)
-      }.reduce(_ + _))
-    val win = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "dist", "rank")
+      }.reduce(_ + _)),
+      k, "dist", descending = false)
   }
 
   /** Symmetric per-vector INT8 scalar quantization — the standard 4-8x

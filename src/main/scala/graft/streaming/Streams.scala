@@ -209,7 +209,7 @@ object Streams {
     val sigs = docs.toDF()
       .select(col("doc_id"), col("ts"),
         graft.pipeline.Dedup.minhashSigUdf(k, nh)(
-          graft.pipeline.Dedup.words(col("text"))).as("sig"))
+          graft.pipeline.TextAnalysis.tokens(col("text"))).as("sig"))
       .filter(col("sig").isNotNull)
     val bandCols = (0 until bands).map { bd =>
       struct(lit(bd).as("band"),
@@ -313,12 +313,12 @@ object Streams {
   def streamingDecontaminate(docs: DataFrame, bench: DataFrame,
                              textCol: String = "text", k: Int = 3,
                              maxBenchGrams: Int = 5000000): DataFrame = {
-    import graft.pipeline.Dedup
+    import graft.pipeline.{Dedup, TextAnalysis}
     val spark = docs.sparkSession
     // words PRE-MATERIALIZED per Dedup.shinglesFromWords' contract: an
     // inline split inside the shingle HOF re-runs the regex per element
     val benchGrams = bench
-      .withColumn("__w", Dedup.words(col(textCol)))
+      .withColumn("__w", TextAnalysis.tokens(col(textCol)))
       .select(explode(Dedup.shinglesFromWords(col("__w"), k)).as("g"))
       .distinct()
     // ONE bounded job: collect at most maxBenchGrams+1 rows, then check
@@ -334,7 +334,7 @@ object Streams {
     val hitsUdf = udf((grams: Seq[String]) =>
       if (grams == null) 0L
       else grams.distinct.count(b.value.contains).toLong)
-    docs.withColumn("__w", Dedup.words(col(textCol)))
+    docs.withColumn("__w", TextAnalysis.tokens(col(textCol)))
       .withColumn("n_contaminated",
         hitsUdf(Dedup.shinglesFromWords(col("__w"), k)))
       .drop("__w")

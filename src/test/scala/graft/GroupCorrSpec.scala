@@ -111,6 +111,25 @@ class GroupCorrSpec extends SparkSpec {
       GroupOps.mergeOn(l, dup, Seq("row_id"), Seq("k"), validate = Some("1:1"))
     }
     assert(e.getMessage.contains("not unique in right dataset"))
+    // 1:m constrains only the left keys, m:1 only the right keys
+    val dupL = Seq((10L, "a"), (10L, "b")).toDF("row_id", "tag")
+    assert(GroupOps.mergeOn(l, dup, Seq("row_id"), Seq("k"),
+      validate = Some("1:m")).count() == 2)
+    assert(GroupOps.mergeOn(dupL, r, Seq("row_id"), Seq("k"),
+      validate = Some("m:1")).count() == 2)
+    val e1m = intercept[IllegalArgumentException] {
+      GroupOps.mergeOn(dupL, r, Seq("row_id"), Seq("k"), validate = Some("1:m"))
+    }
+    assert(e1m.getMessage.contains("not unique in left dataset") &&
+      e1m.getMessage.contains("one-to-many"))
+    val em1 = intercept[IllegalArgumentException] {
+      GroupOps.mergeOn(l, dup, Seq("row_id"), Seq("k"), validate = Some("m:1"))
+    }
+    assert(em1.getMessage.contains("not unique in right dataset") &&
+      em1.getMessage.contains("many-to-one"))
+    intercept[IllegalArgumentException] {
+      GroupOps.mergeOn(l, r, Seq("row_id"), Seq("k"), validate = Some("bogus"))
+    }
   }
 
   test("merge(validate=) passes valid shapes and fails fast like pandas") {

@@ -192,6 +192,83 @@ class PipelineSpec extends SparkSpec {
       rs.map(_._2).sorted.sameElements(1 to rs.length) })
   }
 
+  test("top-k contract on all six paths: neighbor_id tie-break, no self " +
+    "match, every candidate when k exceeds them, long ids") {
+    // int ids 0..8; ids i, i+3, i+6 share one vector, so every query has
+    // exact score ties. Vectors are flipped to the non-negative side of
+    // the single seeded LSH plane, so one bucket holds all of them.
+    val plane = Similarity.hyperplanes(1, 3, 42L).head
+    val base = Seq(Seq(1.0, 0.2, 0.0), Seq(0.3, 1.0, 0.1), Seq(0.1, 0.1, 1.0))
+      .map(v => if (v.zip(plane).map { case (a, b) => a * b }.sum < 0)
+        v.map(-_) else v)
+    val emb = (0 until 9).map(i => (i, base(i % 3))).toDF("vec_id", "embedding")
+    val q = emb.filter(col("vec_id") < 3)
+    val books = Similarity.pqTrainCodebooks(emb, "vec_id", "embedding",
+      dim = 3, m = 1, k = 3, iters = 2)
+    val codes = Similarity.pqEncode(emb, "vec_id", "embedding", books)
+    val cells = Similarity.kmeansCentroids(emb, "vec_id", "embedding", 3, 2)
+    val paths = Seq(
+      ("bruteForceTopK", Similarity.bruteForceTopK(q, emb, k = 100), true),
+      ("lshTopKMulti", Similarity.lshTopKMulti(q, emb, k = 100, planes = 1,
+        tables = 1, dim = 3), true),
+      ("ivfTopK", Similarity.ivfTopK(q, emb, k = 100, nlist = 3,
+        nprobe = 3), true),
+      ("bruteForceTopKL2", Similarity.bruteForceTopKL2(q, emb, 100), false),
+      ("pqTopK", Similarity.pqTopK(q, codes, books, 100), false),
+      ("ivfPqTopK", Similarity.ivfPqTopK(q, emb, cells, books, 100,
+        nprobe = cells.length), false))
+    paths.foreach { case (name, df, descending) =>
+      assert(df.schema("query_id").dataType == org.apache.spark.sql.types.LongType &&
+        df.schema("neighbor_id").dataType == org.apache.spark.sql.types.LongType,
+        s"$name: ids are not long")
+      val rows = df.collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      assert(rows.forall(r => r._1 != r._2), s"$name returned a self match")
+      var ties = 0
+      rows.groupBy(_._1).foreach { case (qid, rs) =>
+        val ranked = rs.sortBy(_._4)
+        assert(ranked.map(_._4).toSeq == (1 to 8),
+          s"$name: query $qid ranks ${ranked.map(_._4).toSeq}")
+        assert(ranked.map(_._2).toSet == (0L until 9L).toSet - qid,
+          s"$name: query $qid missed a candidate")
+        ranked.zip(ranked.tail).foreach { case (a, b) =>
+          if (a._3 == b._3) {
+            ties += 1
+            assert(a._2 < b._2, s"$name: tie not broken by neighbor_id: $a $b")
+          } else assert(if (descending) a._3 > b._3 else a._3 < b._3,
+            s"$name: scores out of order: $a $b")
+        }
+      }
+      assert(rows.map(_._1).toSet == Set(0L, 1L, 2L), s"$name lost a query")
+      assert(ties > 0, s"$name: fixture produced no score ties")
+    }
+  }
+
+  test("LSH rejects more than 64 planes instead of aliasing bucket bits") {
+    // a bucket id is one long: plane 64 would OR into bit 0 (shifts
+    // wrap mod 64) and silently coarsen the buckets
+    val emb = Seq((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.lshTopKMulti(emb, emb, k = 1, planes = 65, tables = 1, dim = 2)
+    }
+    assert(e.getMessage.contains("1..64"))
+    intercept[IllegalArgumentException] {
+      Similarity.lshBucket(col("embedding"), Similarity.hyperplanes(65, 2, 42L))
+    }
+    // 64 planes: bit p is exactly plane p's sign, up to bit 63
+    val ps = Similarity.hyperplanes(64, 2, 42L)
+    val got = emb.select(Similarity.lshBucket(col("embedding"), ps))
+      .collect().map(_.getLong(0))
+    val want = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)).map { v =>
+      ps.indices.foldLeft(0L) { (b, p) =>
+        if (v.zip(ps(p)).map { case (a, c) => a * c }.sum >= 0) b | (1L << p)
+        else b
+      }
+    }
+    assert(got.toSeq == want)
+  }
+
   test("exact near-dup pairs: symmetric threshold search") {
     val emb = Seq(
       (0L, Array(1.0f, 0.0f)), (1L, Array(1.0f, 0.05f)),
@@ -352,6 +429,15 @@ class PipelineSpec extends SparkSpec {
     assert(r3 >= r1, s"recall fell when widening probes: $r1 -> $r3")
   }
 
+  /** semanticDecontaminate with the literal branch capped at
+    * `literalMax` bench vectors: a small cap forces the broadcast
+    * branch (the public default is the 262144-row bench cap). */
+  private def decontamBroadcast(corpus: org.apache.spark.sql.DataFrame,
+      bench: org.apache.spark.sql.DataFrame, threshold: Double,
+      literalMax: Int, maxBenchRows: Int = 262144) =
+    Similarity.semanticDecontaminateWith(corpus, bench, threshold,
+      "vec_id", "embedding", maxBenchRows, literalMax)
+
   test("semanticDecontaminate: max-cosine flags, zero-norm never matches") {
     val bench = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f)),
@@ -396,8 +482,7 @@ class PipelineSpec extends SparkSpec {
           if (r.isNullAt(1)) None else Some(math.round(r.getDouble(1) * 1e9)),
           r.getBoolean(2))).toSeq
     val lit = Similarity.semanticDecontaminate(corpus, bench, 0.8)
-    val bc = Similarity.semanticDecontaminate(corpus, bench, 0.8,
-      maxBenchLiteral = 2) // forces the broadcast-join fallback
+    val bc = decontamBroadcast(corpus, bench, 0.8, literalMax = 2)
     assert(rows(bc) == rows(lit))
     assert(rows(bc).exists { case (id, s, f) => id == 11L && s.isEmpty && !f })
   }
@@ -432,8 +517,7 @@ class PipelineSpec extends SparkSpec {
         if (r.isNullAt(1)) None else Some(math.round(r.getDouble(1) * 1e9)),
         r.getBoolean(2))).toSeq.sorted
     val lit = got(Similarity.semanticDecontaminate(corpus, bench, 0.3))
-    val bc = got(Similarity.semanticDecontaminate(corpus, bench, 0.3,
-      maxBenchLiteral = 3))
+    val bc = got(decontamBroadcast(corpus, bench, 0.3, literalMax = 3))
     assert(lit == expect, "literal path diverges from in-memory reference")
     assert(bc == expect, "broadcast path diverges from in-memory reference")
   }
@@ -455,8 +539,7 @@ class PipelineSpec extends SparkSpec {
         if (r.isNullAt(1)) None else Some(math.round(r.getDouble(1) * 1e6)),
         r.getBoolean(2))).toSeq
     val lit = rows(Similarity.semanticDecontaminate(c, b, 0.5))
-    val bc = rows(Similarity.semanticDecontaminate(c, b, 0.5,
-      maxBenchLiteral = 2))
+    val bc = rows(decontamBroadcast(c, b, 0.5, literalMax = 2))
     assert(lit == bc, s"branches diverge: $lit vs $bc")
     assert(lit.take(2) == Seq((20L, None, false), (21L, None, false)))
     assert(lit(2)._1 == 22L && lit(2)._2.contains(1000000L) && lit(2)._3)
@@ -517,8 +600,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val corpus = Seq((99L, Array(1.0, 0.0))).toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
-      Similarity.semanticDecontaminate(corpus, bench, 0.5,
-        maxBenchLiteral = 2, maxBenchRows = 5)
+      decontamBroadcast(corpus, bench, 0.5, literalMax = 2, maxBenchRows = 5)
     }
     assert(e.getMessage.contains("maxBenchRows"))
     assert(e.getMessage.contains("ivfTopKWith"))
