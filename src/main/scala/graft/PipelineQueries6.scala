@@ -15,34 +15,21 @@ object PipelineQueries6 {
     * q_pipeline_semantic_ann: SemDeDup (k-means + in-cluster cosine,
     * min-id survivor) -> semantic decontamination vs the vec_id<16
     * bench matrix -> int8 quantize -> DEQUANTIZED survivor store.
-    * Returns the store plus the persisted frames the caller MUST
-    * unpersist in a finally (same contract as e2eChain's `caches`);
-    * a construction failure after the first persist releases it here.
-    * Boundaries persist because sem feeds decontaminate AND the
-    * survivor semi-join, and deq feeds the query side AND the corpus
-    * side of the downstream search. */
+    * Each stage hands its surviving rows on WITH their vectors (no join
+    * back to the corpus by id), so the one persisted frame is the store
+    * itself, which feeds both the query and the corpus side of the
+    * downstream search. Returns the store plus the persisted frames the
+    * caller MUST unpersist in a finally (same contract as e2eChain's
+    * `caches`). */
   private def semanticStore(s: SparkSession, d: String)
       : (DataFrame, Seq[DataFrame]) = {
     val emb = T(s, d, "embeddings")
     val bench = emb.filter(col("vec_id") < 16)
-    val corpus = emb.filter(col("vec_id") >= 16)
-    val sem = corpus.join(
-      Similarity.semDedup(corpus, "vec_id", "embedding",
-        k = 4, iters = 2, tau = 0.4)
-        .filter(col("keep") === 1).select("vec_id"),
-      Seq("vec_id"), "left_semi").persist()
-    try {
-      val dec = sem.join(
-        Similarity.semanticDecontaminate(sem, bench, threshold = 0.4)
-          .filter(!col("contaminated")).select(col("id").as("vec_id")),
-        Seq("vec_id"), "left_semi")
-      val deq = Similarity.dequantizeInt8(
-        Similarity.quantizeInt8(dec)).persist()
-      (deq, Seq(sem, deq))
-    } catch { case t: Throwable =>
-      sem.unpersist(blocking = false)
-      throw t
-    }
+    val kept = Similarity.semDedupKept(emb.filter(col("vec_id") >= 16),
+      "vec_id", "embedding", k = 4, iters = 2, tau = 0.4)
+    val dec = Similarity.semanticClean(kept, bench, threshold = 0.4)
+    val deq = Similarity.dequantizeInt8(Similarity.quantizeInt8(dec)).persist()
+    (deq, Seq(deq))
   }
 
   /** Shared CTE spine of the two semantic-leg oracles: k-means (2

@@ -20,6 +20,14 @@ object Session {
       // this the cached subtree runs with static 32-partition shuffles
       // — measured 7.5 -> 5.7 s on the q_pagerank row alone
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // static, JVM-wide: generated classes are cached by (class loader,
+      // source), and driver threads and executor tasks load each
+      // whole-stage class under different loaders, so a class takes two
+      // entries. Measured: the four llm_curation ops, called in passes in
+      // one local[4] session, compile ~91 classes per warm pass (~180
+      // entries); Spark's default of 100 evicts them every pass, 256
+      // keeps them all
+      .config("spark.sql.codegen.cache.maxEntries", "256")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.TopBigramFrac
 
 /** Corpus-curation operators for a training-data pipeline: benchmark
   * decontamination, PII detection/redaction, deterministic hash splits,
@@ -398,29 +399,23 @@ object Curation {
   // ---------------------------------------------------------------
 
   /** Per-doc repetition metrics a la Gopher/MassiveText quality rules:
-    *   - dup_word_frac: 1 - distinct/total tokens (in-row codegen);
+    *   - dup_word_frac: 1 - distinct/total tokens;
     *   - top_bigram_frac: occurrences of the most frequent word bigram
     *     over total bigrams (0 when < 2 tokens).
-    * The bigram mode needs a per-(doc, gram) count — one shuffle keyed
-    * (doc, gram), so a template-heavy doc spreads over its distinct
-    * grams rather than hot-spotting one task; the per-doc max then
-    * map-side-combines. Token totals ride along codegen-only. */
-  def repetitionMetrics(df: DataFrame, id: String, text: String): DataFrame = {
-    val w = TextAnalysis.tokens(col(text))
-    val base = df.select(col(id), w.as("__w"))
-      .withColumn("__n", size(col("__w")))
-    val grams = base.filter(col("__n") >= 2)
-      .select(col(id), explode(Dedup.shinglesFromWords(col("__w"), 2)).as("__g"))
-    val top = grams.groupBy(col(id), col("__g")).agg(count(lit(1)).as("__c"))
-      .groupBy(col(id)).agg(max(col("__c")).as("__top"), sum(col("__c")).as("__tot"))
-    base.join(top, Seq(id), "left")
-      .select(col(id),
-        col("__n").as("n_tokens"),
-        (lit(1.0) - size(array_distinct(col("__w"))).cast("double") /
-          greatest(col("__n"), lit(1)).cast("double")).as("dup_word_frac"),
-        coalesce(col("__top").cast("double") / col("__tot"), lit(0.0))
-          .as("top_bigram_frac"))
-  }
+    * One projection over the scan, zero shuffle: the bigram mode is the
+    * native [[graft.functions.TopBigramFrac]] kernel over each row's
+    * token array, so every row gets its own metrics (a null or
+    * duplicated id included). */
+  def repetitionMetrics(df: DataFrame, id: String, text: String): DataFrame =
+    df.select(col(id), TextAnalysis.tokens(col(text)).as("__w"))
+      .select(col(id) +: repetitionCols(col("__w")): _*)
+
+  /** (n_tokens, dup_word_frac, top_bigram_frac) of a token array. */
+  private def repetitionCols(w: Column): Seq[Column] = Seq(
+    size(w).as("n_tokens"),
+    (lit(1.0) - size(array_distinct(w)).cast("double") /
+      greatest(size(w), lit(1)).cast("double")).as("dup_word_frac"),
+    TopBigramFrac(w).as("top_bigram_frac"))
 
   // ---------------------------------------------------------------
   // Text normalization
@@ -559,22 +554,23 @@ object Curation {
   /** Composite document quality gate in the Gopher/MassiveText style:
     * token-count band, mean-word-length band, minimum stopword
     * fraction, and the [[repetitionMetrics]] repetition caps, each as
-    * its own flag plus an overall `pass`. Everything except the bigram
-    * metric is pure codegen over the scan; the one shuffle is
-    * repetitionMetrics' (doc, gram) aggregate. Emits per doc: the five
-    * metrics, `n_flags` (rules tripped), `pass`, and (r13) the six
-    * per-rule boolean flags `fail_min_words .. fail_top_bigram` — so
-    * funnel/audit consumers tally drop reasons without re-stating the
-    * thresholds. */
+    * its own flag plus an overall `pass`: one projection over the scan,
+    * zero shuffle and no join, one output row per input row. Emits per
+    * doc: the five metrics, `n_flags` (rules tripped), `pass`, and
+    * (r13) the six per-rule boolean flags `fail_min_words ..
+    * fail_top_bigram` — so funnel/audit consumers tally drop reasons
+    * without re-stating the thresholds. */
   def gopherFilter(df: DataFrame, id: String, text: String,
                    minWords: Int = 50, maxWords: Int = 100000,
                    wordLenBand: (Double, Double) = (3.0, 10.0),
                    minStopFrac: Double = 0.02,
                    maxDupWordFrac: Double = 0.5,
                    maxTopBigramFrac: Double = 0.2): DataFrame = {
-    val m = df.select(col(id),
-      TextAnalysis.meanWordLen(col(text)).as("mean_word_len"),
-      TextAnalysis.stopwordRatio(col(text), TextAnalysis.EnStops).as("stop_frac"))
+    val m = df.select(col(id), TextAnalysis.tokens(col(text)).as("__w"),
+        TextAnalysis.meanWordLen(col(text)).as("mean_word_len"),
+        TextAnalysis.stopwordRatio(col(text), TextAnalysis.EnStops).as("stop_frac"))
+      .select(Seq(col(id), col("mean_word_len"), col("stop_frac")) ++
+        repetitionCols(col("__w")): _*)
     // per-rule flags ride the output (r13) so a funnel/audit consumer
     // can tally drop reasons without re-stating the thresholds — the
     // thresholds live HERE and nowhere else on the Spark side; the
@@ -588,8 +584,7 @@ object Curation {
       col("dup_word_frac") > maxDupWordFrac,
       col("top_bigram_frac") > maxTopBigramFrac)
     val flags = GateReasons.zip(conds)
-    m.join(repetitionMetrics(df, id, text), Seq(id))
-      .select(Seq(col(id), col("n_tokens"), col("mean_word_len"),
+    m.select(Seq(col(id), col("n_tokens"), col("mean_word_len"),
         col("stop_frac"), col("dup_word_frac"), col("top_bigram_frac"),
         flags.map(_._2.cast("int")).reduce(_ + _).as("n_flags")) ++
         flags.map { case (n, c) => c.as(n) }: _*)

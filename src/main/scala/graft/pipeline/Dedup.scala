@@ -467,7 +467,13 @@ object Dedup {
     * it (the canonical dedup-cluster representative — keep that doc,
     * drop the rest).
     *
-    * Contraction + bounded driver finish — the practical distributed CC:
+    * Bounded driver finish, with contraction above the bound — the
+    * practical distributed CC. The edge set is checkpointed once and
+    * counted; edges that fit the bound are collected (one job at any
+    * partition count) and union-found on the driver, and that
+    * union-find is the returned cluster table (a local table of at most
+    * two rows per edge) — no doc explode/distinct plan. Only above the
+    * bound:
     *
     *   1. While the edge set exceeds `driverEdgeLimit`: run a hash-map
     *      union-find over each PARTITION's edges (`mapPartitions`, memory
@@ -515,53 +521,64 @@ object Dedup {
     var edges = truncate(pairs
       .select(least(col(doc1), col(doc2)).cast("long").as("a"),
         greatest(col(doc1), col(doc2)).cast("long").as("b")))
-    // full-resolution doc -> contracted-label mapping (starts identity;
-    // left as a plain plan — it is only materialized once at the end
-    // unless a contraction pass composes through it)
-    var mapping =
-      edges.select(explode(array(col("a"), col("b"))).as("doc")).distinct()
-        .withColumn("lbl", col("doc"))
-    var n = edges.count()
-    var pass = 0
-    while (n > driverEdgeLimit && pass < maxContract) {
-      val local = edges.as[(Long, Long)].mapPartitions { it =>
-        val uf = new UnionFind
-        it.foreach { case (a, b) => uf.union(a, b) }
-        uf.entries
-      }.toDF("node", "root")
-        .groupBy("node").agg(min("root").as("root"))
-      val m = truncate(local)
-      mapping = truncate(mapping
-        .join(m.withColumnRenamed("node", "lbl"), Seq("lbl"), "left")
-        .select(col("doc"), coalesce(col("root"), col("lbl")).as("lbl")))
-      edges = truncate(edges
-        .join(m.withColumnRenamed("node", "a").withColumnRenamed("root", "ra"),
-          Seq("a"), "left")
-        .join(m.withColumnRenamed("node", "b").withColumnRenamed("root", "rb"),
-          Seq("b"), "left")
-        .select(least(coalesce(col("ra"), col("a")),
-            coalesce(col("rb"), col("b"))).as("a"),
-          greatest(coalesce(col("ra"), col("a")),
-            coalesce(col("rb"), col("b"))).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct())
-      n = edges.count()
-      pass += 1
+    // the count bounds the collect: nothing is collected above the bound
+    def unionFind(): UnionFind = {
+      val uf = new UnionFind
+      edges.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
+      uf
     }
-    // fail fast instead of silently collecting an over-limit edge set
-    // when contraction stalls (e.g. one giant clique-free component that
-    // no partition-local pass can collapse further)
-    require(n <= driverEdgeLimit,
-      s"CC contraction stalled at $n edges (> driverEdgeLimit=" +
-        s"$driverEdgeLimit) after $pass passes; raise driverEdgeLimit " +
-        "or maxContract, or pre-partition the edge set")
-    // bounded exact finish: contracted edges fit on the driver
-    val uf = new UnionFind
-    edges.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
-    val roots = uf.entries.toMap
-    val bc = spark.sparkContext.broadcast(roots)
-    val resolve = udf { l: Long => bc.value.getOrElse(l, l) }
-    mapping.select(col("doc"), resolve(col("lbl")).as("cluster_rep"))
+    // a count of the physical rows is one job, with no row conversion
+    // (Dataset.count adds a shuffle stage, Dataset.rdd a deserializer)
+    def edgeCount(): Long = edges.queryExecution.toRdd.count()
+    var n = edgeCount()
+    if (n <= driverEdgeLimit)
+      // the driver union-find IS the cluster table (<= 2 rows per edge)
+      unionFind().entries.toSeq.toDF("doc", "cluster_rep")
+    else {
+      // full-resolution doc -> contracted-label mapping (starts identity;
+      // materialized once at the end unless a pass composes through it)
+      var mapping =
+        edges.select(explode(array(col("a"), col("b"))).as("doc")).distinct()
+          .withColumn("lbl", col("doc"))
+      var pass = 0
+      while (n > driverEdgeLimit && pass < maxContract) {
+        val local = edges.as[(Long, Long)].mapPartitions { it =>
+          val uf = new UnionFind
+          it.foreach { case (a, b) => uf.union(a, b) }
+          uf.entries
+        }.toDF("node", "root")
+          .groupBy("node").agg(min("root").as("root"))
+        val m = truncate(local)
+        mapping = truncate(mapping
+          .join(m.withColumnRenamed("node", "lbl"), Seq("lbl"), "left")
+          .select(col("doc"), coalesce(col("root"), col("lbl")).as("lbl")))
+        edges = truncate(edges
+          .join(m.withColumnRenamed("node", "a").withColumnRenamed("root", "ra"),
+            Seq("a"), "left")
+          .join(m.withColumnRenamed("node", "b").withColumnRenamed("root", "rb"),
+            Seq("b"), "left")
+          .select(least(coalesce(col("ra"), col("a")),
+              coalesce(col("rb"), col("b"))).as("a"),
+            greatest(coalesce(col("ra"), col("a")),
+              coalesce(col("rb"), col("b"))).as("b"))
+          .filter(col("a") =!= col("b"))
+          .distinct())
+        n = edgeCount()
+        pass += 1
+      }
+      // fail fast instead of silently collecting an over-limit edge set
+      // when contraction stalls (e.g. one giant clique-free component
+      // that no partition-local pass can collapse further)
+      require(n <= driverEdgeLimit,
+        s"CC contraction stalled at $n edges (> driverEdgeLimit=" +
+          s"$driverEdgeLimit) after $pass passes; raise driverEdgeLimit " +
+          "or maxContract, or pre-partition the edge set")
+      // bounded exact finish: contracted edges fit on the driver
+      val roots = unionFind().entries.toMap
+      val bc = spark.sparkContext.broadcast(roots)
+      val resolve = udf { l: Long => bc.value.getOrElse(l, l) }
+      mapping.select(col("doc"), resolve(col("lbl")).as("cluster_rep"))
+    }
   }
 
   /** End-to-end fuzzy dedup: MinHash-LSH candidate edges →

@@ -206,6 +206,10 @@ object Similarity {
         .orderBy("__h").limit(nlist).drop("__h"),
       k, nprobe)
 
+  /** The centroid-table size above which [[ivfTopKWith]] fails: every
+    * query and corpus row scores every centroid in a UDF. */
+  private val IvfCentroidMax = 65536
+
   /** [[ivfTopK]] with an EXPLICIT centroid table (vec_id, embedding) —
     * lets callers pick deterministic, externally-reproducible centroids
     * (fixed ids, k-means output, …); the default overload hash-samples
@@ -214,13 +218,13 @@ object Similarity {
   def ivfTopKWith(queries: DataFrame, corpus: DataFrame,
                   centroids: DataFrame, k: Int, nprobe: Int): DataFrame = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     // ordered by centroid id so cell indexes (and first-max tie-breaks)
     // are deterministic and SQL-reproducible
-    val cents: Array[(Array[Double], Double)] = centroids
-      .orderBy(col("vec_id"))
-      .select(asDouble(col("embedding")).as("v")).as[Array[Double]].collect()
-      .map(v => (v, norm(v)))
+    val cents: Array[(Array[Double], Double)] = collectVectors(
+      side(centroids, "vec_id", "embedding", "id", "v"), IvfCentroidMax,
+      "ivfTopKWith", "the centroid cap", "a coarse quantizer takes at most a " +
+        "few thousand cells; pass a centroid table, not the corpus")
+      .map { case (_, v) => (v, norm(v)) }
     val bc = spark.sparkContext.broadcast(cents)
     val assignUdf = udf { v: Seq[Double] =>
       val s = cellScores(v.toArray, bc.value)
@@ -434,7 +438,34 @@ object Similarity {
     * dup_of = the smallest qualifying same-cluster id (null ⇒ keep=1). */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
                k: Int, iters: Int, tau: Double,
-               maxCluster: Int = 100000): DataFrame = {
+               maxCluster: Int = SemDedupMaxCluster): DataFrame = {
+    val (m, dups) = semDedupDups(df, idCol, vecCol, k, iters, tau, maxCluster)
+    m.select(col("vec_id"), col("cluster"))
+      .join(dups, Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cluster"),
+        col("dup_of").isNull.cast("int").as("keep"), col("dup_of"))
+  }
+
+  /** [[semDedup]]'s default `maxCluster`. */
+  private val SemDedupMaxCluster = 100000
+
+  /** The rows [[semDedup]] keeps (keep = 1) at its default `maxCluster`,
+    * WITH their vectors: (vec_id, embedding as array<double>). The
+    * survivors come out of the assigned frame itself, so a chain that
+    * goes on with the vectors needs no join back to `df` by id. */
+  private[graft] def semDedupKept(df: DataFrame, idCol: String, vecCol: String,
+                                  k: Int, iters: Int, tau: Double): DataFrame = {
+    val (m, dups) =
+      semDedupDups(df, idCol, vecCol, k, iters, tau, SemDedupMaxCluster)
+    m.join(dups, Seq("vec_id"), "left_anti")
+      .select(col("vec_id"), col("__v").as("embedding"))
+  }
+
+  /** [[semDedup]]'s assigned frame m (vec_id, cluster, __v, __n) and
+    * its duplicate table (vec_id, dup_of). */
+  private def semDedupDups(df: DataFrame, idCol: String, vecCol: String,
+                           k: Int, iters: Int, tau: Double,
+                           maxCluster: Int): (DataFrame, DataFrame) = {
     val cents = kmeansCentroids(df, idCol, vecCol, k, iters)
     val m = kmeansAssign(df, idCol, vecCol, cents)
       .select(col("vec_id"), col("cluster"), col("x").as("__v"))
@@ -444,42 +475,46 @@ object Similarity {
         + lit(1e-9), 6) >= tau)
       .groupBy(col("__b").as("vec_id"))
       .agg(min(col("__a")).as("dup_of"))
-    m.select(col("vec_id"), col("cluster"))
-      .join(dups, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cluster"),
-        col("dup_of").isNull.cast("int").as("keep"), col("dup_of"))
+    (m, dups)
   }
 
   /** Candidate pair stream of [[semDedup]]: all in-cluster (a < b)
     * pairs for clusters within `maxCluster`, hub-star pairs (min-id
-    * member vs everyone else) for clusters over it. Cluster sizes ride
-    * a ≤k-row broadcast, so the cold/hot split is a map-side filter and
-    * the hot path adds no shuffle of the frame (hubs are ≤k rows,
-    * broadcast). Package-visible so the spec can assert the O(|c|)
+    * member vs everyone else) for clusters over it. One ≤k-row collect
+    * of the cluster sizes picks the hot clusters; the star branch (a
+    * hub aggregate and its broadcast) is planned only when one exists,
+    * and the cold/hot split is then a map-side filter on that literal
+    * id list — no shuffle of the frame beyond the cluster-keyed pair
+    * join. Package-visible so the spec can assert the O(|c|)
     * degradation directly. */
   private[graft] def semDedupCandidates(m: DataFrame,
                                         maxCluster: Int): DataFrame = {
-    val sizes = m.groupBy(col("cluster")).agg(count(lit(1)).as("__cn"))
-    val mm = m.join(broadcast(sizes), Seq("cluster"))
-    val cold = mm.filter(col("__cn") <= maxCluster)
+    val hotIds = m.groupBy(col("cluster")).agg(count(lit(1)).as("__cn"))
+      .filter(col("__cn") > maxCluster).select("cluster")
+      .collect().map(_.get(0))
+    val isHot = if (hotIds.isEmpty) lit(false) else col("cluster").isin(hotIds: _*)
+    val cold = m.filter(!isHot)
     val coldPairs = cold
       .select(col("cluster"), col("vec_id").as("__a"),
         col("__v").as("__va"), col("__n").as("__na"))
       .join(cold.select(col("cluster"), col("vec_id").as("__b"),
         col("__v").as("__vb"), col("__n").as("__nb")), Seq("cluster"))
       .filter(col("__a") < col("__b"))
-    val hot = mm.filter(col("__cn") > maxCluster)
-    // hub = the min-id member WITH its vector: struct min orders by the
-    // leading vec_id field, so one hash aggregate carries the payload
-    val hubs = hot.groupBy(col("cluster"))
-      .agg(min(struct(col("vec_id"), col("__v"), col("__n"))).as("__h"))
-      .select(col("cluster"), col("__h.vec_id").as("__a"),
-        col("__h.__v").as("__va"), col("__h.__n").as("__na"))
-    val hotPairs = hot.join(broadcast(hubs), Seq("cluster"))
-      .filter(col("vec_id") =!= col("__a"))
-      .select(col("cluster"), col("__a"), col("__va"), col("__na"),
-        col("vec_id").as("__b"), col("__v").as("__vb"), col("__n").as("__nb"))
-    coldPairs.unionByName(hotPairs)
+    if (hotIds.isEmpty) coldPairs
+    else {
+      val hot = m.filter(isHot)
+      // hub = the min-id member WITH its vector: struct min orders by the
+      // leading vec_id field, so one hash aggregate carries the payload
+      val hubs = hot.groupBy(col("cluster"))
+        .agg(min(struct(col("vec_id"), col("__v"), col("__n"))).as("__h"))
+        .select(col("cluster"), col("__h.vec_id").as("__a"),
+          col("__h.__v").as("__va"), col("__h.__n").as("__na"))
+      val hotPairs = hot.join(broadcast(hubs), Seq("cluster"))
+        .filter(col("vec_id") =!= col("__a"))
+        .select(col("cluster"), col("__a"), col("__va"), col("__na"),
+          col("vec_id").as("__b"), col("__v").as("__vb"), col("__n").as("__nb"))
+      coldPairs.unionByName(hotPairs)
+    }
   }
 
   // ---------------------------------------------------------------
@@ -564,6 +599,9 @@ object Similarity {
     * the bench matrix into the plan as one literal. */
   private val BenchLiteralMax = 4096
 
+  /** [[semanticDecontaminate]]'s default `maxBenchRows`. */
+  private val BenchRowsMax = 262144
+
   /** Semantic decontamination: flag corpus documents whose embedding is
     * too close to ANY benchmark/eval-set embedding — the embedding-space
     * complement of the k-gram [[Curation.decontaminate]] (catches
@@ -597,7 +635,7 @@ object Similarity {
                             threshold: Double,
                             idCol: String = "vec_id",
                             vecCol: String = "embedding",
-                            maxBenchRows: Int = 262144): DataFrame =
+                            maxBenchRows: Int = BenchRowsMax): DataFrame =
     semanticDecontaminateWith(corpus, bench, threshold, idCol, vecCol,
       maxBenchRows, BenchLiteralMax)
 
@@ -607,6 +645,39 @@ object Similarity {
   private[graft] def semanticDecontaminateWith(corpus: DataFrame,
       bench: DataFrame, threshold: Double, idCol: String, vecCol: String,
       maxBenchRows: Int, literalMax: Int): DataFrame = {
+    val mx = maxCos(bench, idCol, vecCol, maxBenchRows, literalMax)
+    side(corpus, idCol, vecCol, "id", "__v")
+      .withColumn("__n", l2norm(col("__v")))
+      .select(col("id"), mx.as("max_cos"),
+        contaminated(mx, threshold).as("contaminated"))
+  }
+
+  /** The rows of `corpus` that [[semanticDecontaminate]] flags clean at
+    * its defaults (both frames keyed by `vec_id`, vectors in
+    * `embedding`), all columns kept: a map-side filter on the same
+    * max-cos column, so a chain that goes on with the vectors needs no
+    * join back by id. */
+  private[graft] def semanticClean(corpus: DataFrame, bench: DataFrame,
+                                   threshold: Double): DataFrame = {
+    val mx =
+      maxCos(bench, "vec_id", "embedding", BenchRowsMax, BenchLiteralMax)
+    corpus.withColumn("__v", asDouble(col("embedding")))
+      .withColumn("__n", l2norm(col("__v")))
+      .filter(!contaminated(mx, threshold))
+      .drop("__v", "__n")
+  }
+
+  /** `coalesce(max_cos >= threshold, false)`: a null max-cos (a
+    * degenerate corpus vector) is clean, never a three-valued null. */
+  private def contaminated(mx: Column, threshold: Double): Column =
+    coalesce(mx >= threshold, lit(false))
+
+  /** The one max-cos column of semantic decontamination, over a row's
+    * `__v` (array<double>) and `__n` (its norm): the max cosine to the
+    * collected, capped bench vectors, as a literal-matrix expression up
+    * to `literalMax` of them and a broadcast UDF above. */
+  private def maxCos(bench: DataFrame, idCol: String, vecCol: String,
+                     maxBenchRows: Int, literalMax: Int): Column = {
     val collected = collectVectors(
       side(bench, idCol, vecCol, "id", "v").filter(col("v").isNotNull),
       maxBenchRows, "semanticDecontaminate", "maxBenchRows",
@@ -628,8 +699,6 @@ object Similarity {
       "vectors are degenerate (zero/NaN/Inf norm) — refusing to mark " +
       "the corpus clean against an unusable benchmark")
     val bNorms = bvecs.map(norm)
-    val base = side(corpus, idCol, vecCol, "id", "__v")
-      .withColumn("__n", l2norm(col("__v")))
     // corpus-side validity: positive FINITE norm, so the literal
     // branch's Catalyst compares (NaN > 0 is TRUE in SQL; an Inf norm
     // makes a NaN cosine that array_max surfaces as the max) stay
@@ -639,7 +708,7 @@ object Similarity {
     // produce a NaN cosine — normalize such embeddings upstream.
     val vOk = col("__n") > 0 && !isnan(col("__n")) &&
       col("__n") =!= Double.PositiveInfinity
-    val mx = if (bvecs.length <= literalMax) {
+    if (bvecs.length <= literalMax) {
       val bLit = typedlit(bvecs.map(_.toSeq).toSeq)
       val bNormsLit = typedlit(bNorms.toSeq)
       array_max(transform(sequence(lit(0), lit(bvecs.length - 1)),
@@ -651,7 +720,7 @@ object Similarity {
       // broadcast variable and take the per-row max in a UDF — no
       // join, no groupBy, no generated row-id, so the one-row-per-
       // corpus-row contract survives task retries and duplicate ids.
-      val bc = corpus.sparkSession.sparkContext.broadcast((bvecs, bNorms))
+      val bc = bench.sparkSession.sparkContext.broadcast((bvecs, bNorms))
       udf { (v: Seq[Double]) =>
         val (bv, bn) = bc.value
         val arr = if (v == null) null else v.toArray
@@ -670,8 +739,6 @@ object Similarity {
         }
       }.apply(col("__v"))
     }
-    base.select(col("id"), mx.as("max_cos"),
-      coalesce(mx >= threshold, lit(false)).as("contaminated"))
   }
 
   /** IVF-PQ combined ANN (FAISS IVFPQ shape): coarse cells bound the

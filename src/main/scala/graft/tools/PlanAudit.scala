@@ -40,7 +40,8 @@ object PlanAudit {
     "q_tfidf" -> "BM25/TF-IDF: ONE tokenize (ReusedExchange on the (doc,term) aggregate feeds df/stats/scoring), vocab equi-join (never broadcast), doc-length + top-k share one doc-id window shuffle",
     "q_line_dedup" -> "corpus-wide line dedup: content-keyed map-side-combinable min aggregate, shuffle join-back (AQE skew-safe), per-doc bounded reassembly",
     "q_mixture" -> "temperature resampling: |strata|-row broadcast into a map-side filter — the corpus is never shuffled",
-    "q_quality_gate" -> "composite quality gate: codegen metrics over the scan + one (doc,gram) shuffle for the bigram cap",
+    "q_quality_gate" -> "composite quality gate: every metric (the top-bigram share too, native graft_top_bigram_frac over the token array) is one projection over the scan — no (doc,gram) explode, no join; the only exchange is the presentation sort",
+    "q_rep_metrics" -> "repetition metrics: one projection over the scan (array_distinct + graft_top_bigram_frac), zero shuffle before the presentation sort",
     "q_dedup_incr" -> "incremental dedup: native bloom might_contain routes definitely-new digests around the exact anti-join (union of the two branches)",
     "q_semdedup" -> "SemDeDup: zero-shuffle literal-centroid assignment (no id join-back), ONE cluster-keyed shuffle feeds the in-cluster pair join, native codegen dot per pair",
     "q_pq_topk" -> "PQ/ADC: zero-shuffle native-kernel encode (graft_nearest_centroid, r15 — no slice/struct trees), queries broadcast WITH their precomputed ADC lookup tables so scoring reads m cells per pair, WindowGroupLimit top-k",
@@ -64,9 +65,10 @@ object PlanAudit {
     "q_quantize_int8" -> "int8 quantization: pure codegen transform over the scan, zero shuffle before the presentation sort",
     "q_substring_dedup" -> "substring-span dedup: the rolling-hash explode appears ONCE (count-over-(h1,h2) window, no dup-agg/semi-join pair), then the per-doc span merge",
     "q_dedup_clusters_star" -> "spanning-edge (path-per-bucket) LSH emission: same single-shuffle flatMapGroups shape as all-pairs, output linear in posting volume, identical components",
+    "q_dedup_fuzzy" -> "fuzzy dedup end to end: spanning-edge LSH edges checkpointed once, counted in one RDD job and, when they fit driverEdgeLimit, collected once into the driver union-find, whose table (LocalTableScan) joins the corpus — no doc explode/distinct",
     "q_pipeline_e2e" -> "9-stage pipeline composition — the builder persists the three survivor frames (consumer fan-out would otherwise re-evaluate upstream combinatorially); the four consumers of the BOUNDED token-budget stage re-root on its collected LocalRelation (r15 — re-analyzing the full chain per join branch cost a 5 s driver gap), the ~100-row result materializes eagerly and the caches are RELEASED; the returned plan is therefore the local result scan — the composed plan itself is documented in SCALE.md 'Pipeline composition'",
     "q_pipeline_funnel" -> "per-stage funnel over the e2e chain (r14: observe-harvested): every boundary carries a CollectMetrics node, multi-consumer frames persist, and ONE action on the final stage yields every count + the six gate-reason sums as byproducts — the in-plan form of 'counts come free from storage-write metrics'; the returned plan is the local report scan",
-    "q_pipeline_semantic" -> "semantic-leg composition (SemDeDup -> semantic decontam -> int8 quantize -> dequantized top-3): zero-shuffle literal-centroid assignment + one cluster-keyed pair shuffle + literal bench matrix + broadcast query cross join, boundaries persisted and released; the returned plan is the local result scan",
+    "q_pipeline_semantic" -> "semantic-leg composition (SemDeDup -> semantic decontam -> int8 quantize -> dequantized top-3): zero-shuffle literal-centroid assignment + one cluster-keyed pair shuffle (the star branch only when the k-row size probe finds a hot cluster), survivors carry their vectors (one anti-join on the duplicate table, a map-side max-cos filter, no id join-back), one persisted store feeds the broadcast query cross join; the returned plan is the local result scan",
     "q_pipeline_semantic_ann" -> "the production ANN path composed (r14): the same semantic store feeds ivfPqTopK (literal cells/codebooks map-side, ONE cell-keyed equi-join, WindowGroupLimit top-k) with recall@5 measured against the exact L2 top-5 over that store; the returned plan is the local recall scan")
 
   def main(args: Array[String]): Unit = args match {

@@ -107,6 +107,30 @@ class CurationSpec extends SparkSpec {
     assert(out(1).getDouble(2) == 0.0 &&
       math.abs(out(1).getDouble(3) - 1.0 / 3.0) < 1e-12)
     assert(out(2).getDouble(3) == 0.0) // < 2 tokens: no bigrams
+    // null and duplicated ids: one row per input row, each with its own
+    // metrics, in repetitionMetrics and in gopherFilter alike
+    val df = Seq(
+      (Some(7L), "a b a b a b"),  // 6 tokens: ab ba ab ba ab -> 3/5
+      (Some(7L), "x y z"),        // 3 tokens: xy yz -> 1/2
+      (None, "p q p q p"),        // 5 tokens: pq qp pq qp -> 2/4
+      (None, "m n")               // 2 tokens: mn -> 1/1
+    ).toDF("doc_id", "text")
+    val want = Seq((Some(7L), 6, 3.0 / 5), (None, 5, 2.0 / 4),
+      (Some(7L), 3, 1.0 / 2), (None, 2, 1.0)) // by n_tokens, descending
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map { r =>
+        (Option(r.get(r.fieldIndex("doc_id"))).map(_.asInstanceOf[Long]),
+          r.getInt(r.fieldIndex("n_tokens")),
+          r.getDouble(r.fieldIndex("top_bigram_frac")))
+      }.sortBy(-_._2).toSeq
+    for (got <- Seq(
+        rows(Curation.repetitionMetrics(df, "doc_id", "text")),
+        rows(Curation.gopherFilter(df, "doc_id", "text")))) {
+      assert(got.map(g => (g._1, g._2)) == want.map(w => (w._1, w._2)))
+      got.zip(want).foreach { case (g, w) =>
+        assert(math.abs(g._3 - w._3) < 1e-12, s"$g vs $w")
+      }
+    }
   }
 
   test("dedupLines keep-first: a line survives only at its global (id, pos) min") {

@@ -369,4 +369,64 @@ class FunctionsSpec extends SparkSpec {
       assert(n == 1000L && h.values.sum == 1000L && h.size == 11, s"key $k")
     }
   }
+
+  /** The explode/group-by formulation TopBigramFrac replaced, kept as
+    * the reference: (doc, bigram) rows, a count per bigram, the max and
+    * the sum per doc, joined back on the doc id. */
+  private def topBigramReference(df: org.apache.spark.sql.DataFrame) = {
+    import graft.pipeline.{Dedup, TextAnalysis}
+    val base = df.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("w"))
+      .withColumn("n", size(col("w")))
+    val top = base.filter(col("n") >= 2)
+      .select(col("doc_id"), explode(Dedup.shinglesFromWords(col("w"), 2)).as("g"))
+      .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
+      .groupBy("doc_id").agg(max("c").as("top"), sum("c").as("tot"))
+    base.join(top, Seq("doc_id"), "left").select(col("doc_id"),
+      coalesce(col("top").cast("double") / col("tot"), lit(0.0)).as("ref"))
+  }
+
+  test("TopBigramFrac equals the explode/group-by formulation, codegen " +
+    "only and interpreted") {
+    import graft.functions.TopBigramFrac
+    import graft.pipeline.TextAnalysis
+    val rnd = new scala.util.Random(1709L)
+    val texts: Seq[(Long, String)] = Seq(
+      1L -> null, 2L -> "", 3L -> "   ", 4L -> "solo", 5L -> "a b",
+      6L -> "a b a b a b", 7L -> "x y x y z x y x y",
+      // NBSP (U+00A0) is not whitespace to the tokenizer: doc 8's
+      // "cafe<NBSP>bar" is ONE token
+      8L -> "caf\u00e9\u00a0bar baz caf\u00e9\u00a0bar baz caf\u00e9 bar",
+      9L -> "\tlead tab, then   runs of  spaces", 10L -> "A a A a") ++
+      (11L to 60L).map(i => i -> Seq.fill(1 + rnd.nextInt(30))(
+        Seq("p", "q", "r", "s")(rnd.nextInt(4))).mkString(" "))
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select((col("doc_id") + 1000L).as("doc_id"), col("text"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+    val modes = Seq(
+      "codegen only" -> Map("spark.sql.codegen.fallback" -> "false",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((mode, confs) <- modes) {
+      val s = spark.newSession()
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      val df = s.createDataFrame(texts ++ docs).toDF("doc_id", "text")
+      val got = df.select(col("doc_id"),
+          TopBigramFrac(TextAnalysis.tokens(col("text"))).as("k"))
+        .join(topBigramReference(df), "doc_id")
+        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+      assert(got.length == texts.length + docs.length, mode)
+      got.foreach { case (id, k, ref) =>
+        assert(java.lang.Double.doubleToLongBits(k) ==
+          java.lang.Double.doubleToLongBits(ref), s"$mode doc $id: $k != $ref")
+      }
+      val byId = got.map(g => g._1 -> g._2).toMap
+      assert(byId(1L) == 0.0 && byId(2L) == 0.0 && byId(4L) == 0.0, mode)
+      assert(byId(6L) == 3.0 / 5.0 && byId(8L) == 2.0 / 5.0, mode)
+      // null elements (never produced by the tokenizer) pair as one value
+      val nulls = s.range(1).select(TopBigramFrac(array(lit("a"),
+        lit(null).cast("string"), lit("a"), lit(null).cast("string"))))
+      assert(nulls.head().getDouble(0) == 2.0 / 3.0, mode)
+    }
+  }
 }

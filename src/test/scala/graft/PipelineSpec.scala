@@ -1150,4 +1150,97 @@ class PipelineSpec extends SparkSpec {
     // and the funnel really dropped docs at sf0.001 (non-degenerate)
     assert(expected.head.getLong(3) > 0)
   }
+
+  test("nearDupPairs (LSH): every pair is an exact pair at the same " +
+    "threshold, and no pair appears twice") {
+    // 60 vectors around 4 random centers (cosine ~0.99 within a group),
+    // so both paths find pairs and LSH splits some groups across buckets
+    val rnd = new scala.util.Random(52L)
+    val centers = Seq.fill(4)(Array.fill(8)(rnd.nextGaussian()))
+    val emb = (0L until 60L).map { i =>
+      (i, centers((i % 4).toInt).map(x => (x + 0.05 * rnd.nextGaussian()).toFloat))
+    }.toDF("vec_id", "embedding")
+    val exact = Similarity.nearDupPairsExact(emb, threshold = 0.95)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val lsh = Similarity.nearDupPairs(emb, threshold = 0.95, planes = 6,
+      dim = 8).collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
+    assert(lsh.nonEmpty, "no LSH pair — the check is vacuous")
+    assert(lsh.map(_._1).distinct.length == lsh.length, "a pair came twice")
+    lsh.foreach { case (pair, cos) =>
+      assert(exact.get(pair).exists(c => math.abs(c - cos) < 1e-12),
+        s"LSH pair $pair (cos $cos) is not an exact pair")
+    }
+  }
+
+  test("ivfTopKWith refuses a centroid table above its cap, loudly") {
+    val emb = Seq((0L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
+    val cents = spark.range(65537).select(col("id").as("vec_id"),
+      array(lit(1.0), lit(0.0)).as("embedding"))
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfTopKWith(emb, emb, cents, k = 1, nprobe = 1)
+    }
+    assert(e.getMessage.contains("ivfTopKWith"))
+    assert(e.getMessage.contains("centroid cap=65536"))
+  }
+
+  test("clusters: edges that fit come back as a driver table; a stalled " +
+    "contraction fails loudly") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc1", "doc2")
+    val cl = Dedup.clusters(pairs)
+    assert(cl.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      cl.queryExecution.optimizedPlan.toString)
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("doc1", "doc2")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.clusters(chain, driverEdgeLimit = 10L, maxContract = 0)
+    }
+    assert(e.getMessage.contains("driverEdgeLimit=10"))
+  }
+
+  /** Jobs `f` submits, counted by a listener; a marker job flushes the
+    * listener queue before the count is read. */
+  private def jobsDuring(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = "job-budget-marker"
+    @volatile var seen = false
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties.getProperty("spark.job.description") == marker) seen = true
+        else if (!seen) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      f
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val until = System.nanoTime() + 30000000000L
+      while (!seen && System.nanoTime() < until) Thread.sleep(20)
+      assert(seen, "listener never saw the marker job")
+      jobs.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("llm_curation ops: a repeat call in one session stays within its " +
+    "job budget") {
+    val d = "/root/testdata/sf0.001"
+    // jobs of the second call (build + a noop write of the full result)
+    // at sf0.001 on local[4]. Before the map-side bigram kernel, the
+    // driver-table CC finish, the join-free semantic chain and the
+    // schema reuse of Query.T, the same calls ran 8, 14, 9 and 25 jobs
+    val budget = Seq("q_quality_gate" -> 3, "q_dedup_fuzzy" -> 10,
+      "q_pq_topk" -> 8, "q_pipeline_semantic" -> 18)
+    def call(name: String): Unit =
+      SparkEntry.queries(name)(spark, d).write.format("noop")
+        .mode("overwrite").save()
+    val got = budget.map { case (name, _) =>
+      call(name)
+      name -> jobsDuring(call(name))
+    }.toMap
+    budget.foreach { case (name, max) =>
+      assert(got(name) <= max, s"$name ran ${got(name)} jobs (budget $max)")
+    }
+  }
 }

@@ -219,7 +219,11 @@ class PlanGuardSpec extends SparkSpec {
           split(lower(trim(col("text"))), "\\s+").as("toks")),
         "doc_id", "toks", chunkLen = 32, stride = 24, minTail = 8),
       "quantize+dequantize" -> graft.pipeline.Similarity.dequantizeInt8(
-        graft.pipeline.Similarity.quantizeInt8(emb)))
+        graft.pipeline.Similarity.quantizeInt8(emb)),
+      "repetitionMetrics" -> graft.pipeline.Curation.repetitionMetrics(
+        docs, "doc_id", "text"),
+      "gopherFilter" -> graft.pipeline.Curation.gopherFilter(
+        docs, "doc_id", "text"))
     zeroShuffle.foreach { case (name, df) =>
       val shuffles = walk(df.queryExecution.executedPlan).collect {
         case s: ShuffleExchangeLike => s
@@ -256,6 +260,35 @@ class PlanGuardSpec extends SparkSpec {
     assert(!nodes.exists(_.nodeName.contains("Window")) &&
       !nodes.exists(_.nodeName.contains("Join")),
       "qcut bucketing must stay a pure when-chain projection")
+  }
+
+  test("q_quality_gate, q_rep_metrics: the Gopher metrics are one " +
+    "projection — no join, no explode, only the presentation range sort") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    for (name <- Seq("q_quality_gate", "q_rep_metrics")) {
+      val nodes = walkPlan(SparkEntry.queries(name)(spark,
+        "/root/testdata/sf0.001").queryExecution.executedPlan)
+      val shuffles = nodes.collect { case s: ShuffleExchangeLike => s }
+      assert(shuffles.size == 1 &&
+        shuffles.head.outputPartitioning.toString.contains("range"),
+        s"$name: ${shuffles.map(_.outputPartitioning).mkString(", ")}")
+      assert(!nodes.exists {
+        case _: BaseJoinExec | _: GenerateExec => true
+        case _ => false
+      }, s"$name: the bigram metric left the scan projection")
+      assert(nodes.exists(_.toString.contains("graft_top_bigram_frac")), name)
+    }
+  }
+
+  test("q_dedup_fuzzy: the cluster table is a driver table joined to the " +
+    "corpus, not a doc explode/distinct plan") {
+    import org.apache.spark.sql.execution.{GenerateExec, LocalTableScanExec}
+    val nodes = walkPlan(SparkEntry.queries("q_dedup_fuzzy")(spark,
+      "/root/testdata/sf0.001").queryExecution.executedPlan)
+    assert(nodes.exists(_.isInstanceOf[LocalTableScanExec]))
+    assert(!nodes.exists(_.isInstanceOf[GenerateExec]))
   }
 
   test("q_corr_matrix_full: corpus is NEVER shuffled — rank stats ride " +
