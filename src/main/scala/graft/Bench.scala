@@ -73,13 +73,7 @@ object Bench {
       val emb = s.read.parquet(s"$d/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
       val big = graft.tools.MakeSf1.tenfold(emb, Seq("vec_id"))
-      def rows(f: org.apache.spark.sql.DataFrame): Array[Array[Double]] =
-        f.orderBy("vec_id").select(col("embedding").cast("array<double>"))
-          .collect().map(_.getSeq[Double](0).toArray)
-      val cells = rows(emb.filter(col("vec_id") < 8))
-      val src = rows(emb.filter(col("vec_id") >= 16 && col("vec_id") < 32))
-      val books = Array.tabulate(4)(sub =>
-        src.map(_.slice(sub * 16, sub * 16 + 16)))
+      val (cells, books) = Queries9.ivfPqTables(emb)
       graft.pipeline.Similarity.ivfPqTopK(
         big.filter(col("vec_id") < 64), big, cells, books,
         k = 5, nprobe = 2)

@@ -23,11 +23,9 @@ object PipelineQueries6 {
     * `caches`). */
   private def semanticStore(s: SparkSession, d: String)
       : (DataFrame, Seq[DataFrame]) = {
-    val emb = T(s, d, "embeddings")
-    val bench = emb.filter(col("vec_id") < 16)
-    val kept = Similarity.semDedupKept(emb.filter(col("vec_id") >= 16),
-      "vec_id", "embedding", k = 4, iters = 2, tau = 0.4)
-    val dec = Similarity.semanticClean(kept, bench, threshold = 0.4)
+    val dec = Similarity.semanticCurate(T(s, d, "embeddings"),
+      isBench = col("vec_id") < 16, k = 4, iters = 2, tau = 0.4,
+      threshold = 0.4)
     val deq = Similarity.dequantizeInt8(Similarity.quantizeInt8(dec)).persist()
     (deq, Seq(deq))
   }

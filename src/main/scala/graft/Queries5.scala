@@ -341,9 +341,7 @@ object Queries5 {
     //      oracled by q_kmeans and spec-tested for PQ). ----
     Query("q_pq_topk", (s, d) => {
       val emb = T(s, d, "embeddings")
-      val src = emb.filter(col("vec_id") < 16).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0).toArray)
+      val src = Similarity.pinnedVectors(emb.filter(col("vec_id") < 16), 16)
       val books = Array.tabulate(4)(sub =>
         src.map(v => v.slice(sub * 16, sub * 16 + 16)))
       val codes = Similarity.pqEncode(emb, "vec_id", "embedding", books)
@@ -365,9 +363,7 @@ object Queries5 {
     //      spec-asserted (PipelineSpec blob precision). ----
     Query("q_pq_recall", (s, d) => {
       val emb = T(s, d, "embeddings")
-      val src = emb.filter(col("vec_id") < 16).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0).toArray)
+      val src = Similarity.pinnedVectors(emb.filter(col("vec_id") < 16), 16)
       val books = Array.tabulate(4)(sub =>
         src.map(v => v.slice(sub * 16, sub * 16 + 16)))
       val codes = Similarity.pqEncode(emb, "vec_id", "embedding", books)

@@ -32,11 +32,9 @@ object Queries9 {
     * sub-slices of vec_id in [16,32) (vec_id order = code index). */
   private[graft] def ivfPqTables(emb: DataFrame)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    def rows(f: DataFrame): Array[Array[Double]] =
-      f.orderBy("vec_id").select(col("embedding").cast("array<double>"))
-        .collect().map(_.getSeq[Double](0).toArray)
-    val cells = rows(emb.filter(col("vec_id") < 8))
-    val src = rows(emb.filter(col("vec_id") >= 16 && col("vec_id") < 32))
+    val cells = Similarity.pinnedVectors(emb.filter(col("vec_id") < 8), 8)
+    val src = Similarity.pinnedVectors(
+      emb.filter(col("vec_id") >= 16 && col("vec_id") < 32), 16)
     val books = Array.tabulate(4)(s => src.map(_.slice(s * 16, s * 16 + 16)))
     (cells, books)
   }

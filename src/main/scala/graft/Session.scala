@@ -23,10 +23,10 @@ object Session {
       // static, JVM-wide: generated classes are cached by (class loader,
       // source), and driver threads and executor tasks load each
       // whole-stage class under different loaders, so a class takes two
-      // entries. Measured: the four llm_curation ops, called in passes in
-      // one local[4] session, compile ~91 classes per warm pass (~180
-      // entries); Spark's default of 100 evicts them every pass, 256
-      // keeps them all
+      // entries. The four llm_curation ops alone hold 79 entries at
+      // sf0.001 in local[4], near Spark's default of 100 (4 segments
+      // of 25, so some JVMs still recompile a few per call); the
+      // Verify, Bench and test mixes run many more queries per JVM
       .config("spark.sql.codegen.cache.maxEntries", "256")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -62,7 +65,10 @@ object Core {
     * scale the scan has hundreds of partitions and this adds nothing. */
   def spread(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+    // the physical RDD's partitions: `df.rdd` would add a Row
+    // deserializer to the scan's generated stage, a class of its own
+    if (df.queryExecution.toRdd.getNumPartitions < p) df.repartition(p)
+    else df
   }
 
   /** The testdata `events.ts` has shipped in two parquet physical forms:
@@ -174,66 +180,63 @@ object Core {
     * LocalRelation: one capped collect, then a local scan in place of
     * the whole upstream lineage, so later plans neither re-analyze nor
     * re-run it. More than `cap` rows fails loudly, naming `what`; row
-    * order is kept. Only for verification-sized results — a production
+    * order is kept. The rows stay internal rows end to end (no Row
+    * encoder pair). Only for verification-sized results — a production
     * pipeline writes such a stage to storage instead. */
   def reroot(df: DataFrame, cap: Int, what: String): DataFrame = {
-    val rows = df.limit(cap + 1).collect()
+    val rows = GraftSqlShim.collectRows(df.limit(cap + 1))
     require(rows.length <= cap,
       s"$what: more than $cap rows, over the driver re-root cap — " +
         "run the stages with per-stage storage writes instead")
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      df.schema)
+    GraftSqlShim.localFrame(df.sparkSession, df.schema, rows.toSeq)
   }
 
-  /** A lineage-truncated frame plus the handle to free its storage.
-    * `release()` drops the checkpointed blocks — call it only after the
-    * NEXT iteration's state is materialized; the frame is unusable
+  /** A lineage-truncated frame over checkpointed internal rows `rows`;
+    * `release()` drops a local checkpoint's blocks — call it only after
+    * the NEXT iteration's state is materialized; the frame is unusable
     * afterwards. */
-  final case class Truncated(df: DataFrame,
-      ck: Option[org.apache.spark.rdd.RDD[_]]) {
-    def release(): Unit = ck.foreach(_.unpersist(blocking = false))
+  final case class Truncated(df: DataFrame, rows: RDD[InternalRow],
+                             local: Boolean) {
+    def release(): Unit = if (local) rows.unpersist(blocking = false)
   }
 
   /** Cut a DataFrame's lineage for ITERATIVE algorithms (pageRank,
-    * cluster contraction): eager `localCheckpoint` + re-wrap through
-    * `createDataFrame`, because a bare localCheckpoint CARRIES the
+    * cluster contraction): eager checkpoint, then a fresh frame over the
+    * checkpointed internal rows, because a bare checkpoint CARRIES the
     * origin plan's estimated sizeInBytes into its LogicalRDD — an
     * iterative self-join then squares the estimate every round until
     * the planner multiplies million-digit BigInts (found in round 6's
     * cluster work). The re-wrap resets stats AND caps plan depth at
     * O(1) per iteration, so Catalyst analysis stays constant-time at
-    * production iteration counts instead of doubling per round. */
-  def truncatePlan(df: DataFrame): Truncated = {
-    val spark = df.sparkSession
-    val ck = df.localCheckpoint()
-    val inner = ck.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
-    Truncated(spark.createDataFrame(ck.rdd, ck.schema), inner)
-  }
-
-  /** [[truncatePlan]] with selectable truncation STORAGE (r14, VERDICT
-    * r13 item 5). `None` -> `localCheckpoint` (executor block manager:
-    * fastest, but its MEMORY_AND_DISK blocks contend with every other
-    * cached/checkpointed frame in a shared batch — the measured sf10
-    * dedup-fuzzy 27-63 s swing, BASELINE.md). `Some(dir)` -> RELIABLE
-    * checkpoint files under `dir` — the "CC runs as a dedicated storage
-    * stage" production protocol: block-manager-free, so concurrent
-    * rows' storage churn cannot evict or stall the iteration state. An
-    * already-configured SparkContext checkpoint dir wins over `dir`
-    * (set once per session); checkpoint FILES are cleaned by Spark at
-    * application exit (or eagerly with
+    * production iteration counts instead of doubling per round. It
+    * wraps the same rows, so no row is converted and no class compiled.
+    *
+    * `checkpointDir`: `None` -> `localCheckpoint` (executor block
+    * manager: fastest, but its MEMORY_AND_DISK blocks contend with every
+    * other cached/checkpointed frame in a shared batch — the measured
+    * sf10 dedup-fuzzy 27-63 s swing, BASELINE.md). `Some(dir)` ->
+    * RELIABLE checkpoint files under `dir` — the "CC runs as a dedicated
+    * storage stage" production protocol: block-manager-free, so
+    * concurrent rows' storage churn cannot evict or stall the iteration
+    * state. An already-configured SparkContext checkpoint dir wins over
+    * `dir` (set once per session); checkpoint FILES are cleaned by Spark
+    * at application exit (or eagerly with
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true`), so
     * `release()` is a no-op for them by design. */
-  def truncatePlan(df: DataFrame, checkpointDir: Option[String]): Truncated =
-    checkpointDir match {
-      case None => truncatePlan(df)
-      case Some(dir) =>
-        val spark = df.sparkSession
-        if (spark.sparkContext.getCheckpointDir.isEmpty)
-          spark.sparkContext.setCheckpointDir(dir)
-        val ck = df.checkpoint() // eager + reliable
-        Truncated(spark.createDataFrame(ck.rdd, ck.schema), None)
+  def truncatePlan(df: DataFrame,
+                   checkpointDir: Option[String] = None): Truncated = {
+    val spark = df.sparkSession
+    checkpointDir.foreach { dir =>
+      if (spark.sparkContext.getCheckpointDir.isEmpty)
+        spark.sparkContext.setCheckpointDir(dir)
     }
+    val ck = if (checkpointDir.isEmpty) df.localCheckpoint()
+      else df.checkpoint() // eager + reliable
+    val rows = ck.queryExecution.logical match {
+      case l: LogicalRDD => l.rdd
+      case other => sys.error(s"truncatePlan: no checkpointed rows in ${other.nodeName}")
+    }
+    Truncated(GraftSqlShim.rddFrame(spark, rows, ck.schema), rows,
+      local = checkpointDir.isEmpty)
+  }
 }

@@ -135,17 +135,25 @@ object StrDt {
   /** pandas str.get_dummies(sep): one 0/1 indicator column per distinct
     * sep-delimited token, sorted by token. The dummy SCHEMA is
     * data-dependent in pandas too; the single bounded driver collect
-    * here is that schema discovery (vocabulary-sized — get_dummies is
-    * only meaningful for small category sets). The indicator columns
-    * themselves are pure map-side codegen over one split. */
+    * here is that schema discovery, capped at [[MaxDummies]] tokens
+    * with a loud failure above it (get_dummies is only meaningful for
+    * small category sets; same guard as [[Frame.getDummies]]). The
+    * indicator columns themselves are pure map-side codegen over one
+    * split. */
   def strGetDummies(df: DataFrame, c: String, sep: String): Seq[Column] = {
     val pat = java.util.regex.Pattern.quote(sep)
     val cats = df.select(explode(split(col(c), pat)).as("__t"))
       .filter(col("__t").isNotNull && col("__t") =!= "").distinct()
-      .collect().map(_.getString(0)).sorted
+      .limit(MaxDummies + 1).collect().map(_.getString(0)).sorted
+    require(cats.length <= MaxDummies,
+      s"str.get_dummies: > $MaxDummies categories in '$c'")
     cats.toSeq.map(cat =>
       array_contains(split(col(c), pat), cat).cast("int").as(cat))
   }
+
+  /** The token cap of [[strGetDummies]]' vocabulary collect (the
+    * default of [[Frame.getDummies]]' `maxCategories`). */
+  private val MaxDummies = 10000
 
   // ---- dt ----
   def dtYear(c: Column): Column = year(c)

@@ -775,12 +775,10 @@ object Curation {
     // materialization job before the first iteration — with the frame
     // form, setup + iteration 1 fuse into a single job
     val nF = base.agg(count(lit(1)).cast("double").as("__n"))
-    var ranks = graft.engine.Core.Truncated(
-      base.crossJoin(nF).select(col("node"), col("outdeg"),
-        (lit(1.0) / col("__n")).as("rank"), col("__n")),
-      None)
+    var cur = base.crossJoin(nF).select(col("node"), col("outdeg"),
+      (lit(1.0) / col("__n")).as("rank"), col("__n"))
+    var held: Option[graft.engine.Core.Truncated] = None
     for (i <- 1 to iters) {
-      val cur = ranks.df
       val contrib = cur.filter(col("outdeg").isNotNull)
         .select(col("node"), (col("rank") / col("outdeg")).as("__share"))
         .join(e, col("node") === col("e_src"))
@@ -805,13 +803,12 @@ object Curation {
       // job saves a full materialization pass.
       if (i < iters) {
         val t = graft.engine.Core.truncatePlan(next)
-        ranks.release()
-        ranks = t
-      } else {
-        ranks = graft.engine.Core.Truncated(next, ranks.ck)
-      }
+        held.foreach(_.release())
+        held = Some(t)
+        cur = t.df
+      } else cur = next
     }
-    ranks.df.select(col("node"), col("rank"))
+    cur.select(col("node"), col("rank"))
   }
 
   /** Funnel/lineage report over a composed pipeline's stage boundaries:

@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
+import graft.engine.Core.Truncated
 import graft.pipeline.TextAnalysis.tokens
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -367,23 +371,31 @@ object Dedup {
     * component extraction / keep-best dedup rather than a similarity
     * join; a corpus whose near-dup clusters are large (the exact regime
     * where all-pairs emission blows up at 100 TB) costs no more than a
-    * clean one. Chaining beats a min-hub star here: the hub form must
-    * buffer every bucket member to find the minimum, the chain holds
-    * one id. Edge set is iterator-order-dependent (components are not);
-    * output (doc1 < doc2), distinct. */
+    * clean one.
+    *
+    * The path links each member to the next-larger id of its bucket
+    * (`lag` over the bucket ordered by doc): one bucket-keyed shuffle
+    * and sort, all native operators, and a deterministic edge set.
+    * A pair that shares several bands' buckets is linked only in the
+    * first of them: the lag also reads the earlier member's signature,
+    * and an edge whose two docs share an earlier band's key is dropped,
+    * since that band's path already connects them. So each pair comes
+    * out at most once, with no `distinct` stage. Output (doc1 < doc2,
+    * or equal for a repeated doc id). */
   def minhashLshEdges(df: DataFrame, id: String, text: String,
                       k: Int = 3, bands: Int = 4,
                       rowsPerBand: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    minhashBandKeys(df, id, text, k, bands, rowsPerBand)
-      .select(col("band"), col("key"), col("doc"))
-      .as[(Int, Seq[Long], Long)]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroups((_: (Int, Seq[Long]), it: Iterator[(Int, Seq[Long], Long)]) =>
-        chainEdges(it.map(_._3)))
-      .toDF("doc1", "doc2")
-      .distinct()
+    val bucket = Window.partitionBy(col("band"), col("key")).orderBy(col("doc"))
+    def sharesBand(bd: Int): Column = (0 until rowsPerBand)
+      .map(r => col("sig1")(bd * rowsPerBand + r) <=> col("sig")(bd * rowsPerBand + r))
+      .reduce(_ && _)
+    val sharedEarlier = (0 until bands - 1)
+      .map(bd => col("band") > bd && sharesBand(bd)).foldLeft(lit(false))(_ || _)
+    minhashBands(df, id, text, k, bands, rowsPerBand)
+      .select(lag(col("doc"), 1).over(bucket).as("doc1"), col("doc").as("doc2"),
+        lag(col("sig"), 1).over(bucket).as("sig1"), col("sig"), col("band"))
+      .filter(col("doc1").isNotNull && !sharedEarlier)
+      .select("doc1", "doc2")
   }
 
   /** 32-bit SimHash fingerprint from word tokens (md5-derived token
@@ -514,45 +526,50 @@ object Dedup {
                checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    def truncate(df: DataFrame): DataFrame =
-      graft.engine.Core.truncatePlan(df, checkpointDir).df
+    def truncate(df: DataFrame): Truncated =
+      graft.engine.Core.truncatePlan(df, checkpointDir)
     // no distinct here: the driver union-find tolerates duplicate edges,
     // and the contraction loop dedups whenever it actually runs
     var edges = truncate(pairs
       .select(least(col(doc1), col(doc2)).cast("long").as("a"),
         greatest(col(doc1), col(doc2)).cast("long").as("b")))
-    // the count bounds the collect: nothing is collected above the bound
+    // count and collect read the checkpointed rows themselves: one job
+    // each, no row conversion and no generated class. The count bounds
+    // the collect: nothing is collected above the bound. A null edge
+    // (both docs null) joins nothing.
     def unionFind(): UnionFind = {
       val uf = new UnionFind
-      edges.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
+      edges.rows.filter(!_.isNullAt(0)).map(r => (r.getLong(0), r.getLong(1)))
+        .collect().foreach { case (a, b) => uf.union(a, b) }
       uf
     }
-    // a count of the physical rows is one job, with no row conversion
-    // (Dataset.count adds a shuffle stage, Dataset.rdd a deserializer)
-    def edgeCount(): Long = edges.queryExecution.toRdd.count()
+    def edgeCount(): Long = edges.rows.count()
     var n = edgeCount()
     if (n <= driverEdgeLimit)
       // the driver union-find IS the cluster table (<= 2 rows per edge)
-      unionFind().entries.toSeq.toDF("doc", "cluster_rep")
+      GraftSqlShim.localFrame(spark, new StructType()
+          .add("doc", LongType, nullable = false)
+          .add("cluster_rep", LongType, nullable = false),
+        unionFind().entries.map { case (d, r) => InternalRow(d, r) }.toSeq)
     else {
       // full-resolution doc -> contracted-label mapping (starts identity;
       // materialized once at the end unless a pass composes through it)
       var mapping =
-        edges.select(explode(array(col("a"), col("b"))).as("doc")).distinct()
+        edges.df.select(explode(array(col("a"), col("b"))).as("doc")).distinct()
           .withColumn("lbl", col("doc"))
       var pass = 0
       while (n > driverEdgeLimit && pass < maxContract) {
-        val local = edges.as[(Long, Long)].mapPartitions { it =>
+        val local = edges.df.as[(Long, Long)].mapPartitions { it =>
           val uf = new UnionFind
           it.foreach { case (a, b) => uf.union(a, b) }
           uf.entries
         }.toDF("node", "root")
           .groupBy("node").agg(min("root").as("root"))
-        val m = truncate(local)
+        val m = truncate(local).df
         mapping = truncate(mapping
           .join(m.withColumnRenamed("node", "lbl"), Seq("lbl"), "left")
-          .select(col("doc"), coalesce(col("root"), col("lbl")).as("lbl")))
-        edges = truncate(edges
+          .select(col("doc"), coalesce(col("root"), col("lbl")).as("lbl"))).df
+        edges = truncate(edges.df
           .join(m.withColumnRenamed("node", "a").withColumnRenamed("root", "ra"),
             Seq("a"), "left")
           .join(m.withColumnRenamed("node", "b").withColumnRenamed("root", "rb"),
@@ -840,7 +857,6 @@ object Dedup {
                      maxWindowDf: Option[Long] = None): DataFrame = {
     require(win >= 2 && stride >= 1, s"need win>=2, stride>=1; got $win, $stride")
     maxWindowDf.foreach(c => require(c >= 2, s"maxWindowDf must be >= 2; got $c"))
-    import org.apache.spark.sql.expressions.Window
     // spread BEFORE the explode: a compact doc table reads as a handful
     // of input splits, and without this every window hash is computed on
     // those few tasks (the explode inflates rows ~|text|/stride-fold)

@@ -1,8 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.AdcTable.adcTable
 import graft.functions.NearestCentroid.nearestCentroid
 import graft.functions.VectorFunctions
 
@@ -85,23 +87,75 @@ object Similarity {
   private def norm(v: Array[Double]): Double = math.sqrt(dot(v, v))
 
   /** One driver collect of a (long id, vector) frame, ordered by id and
-    * capped by `limit(cap + 1)`: the bound binds on the collect itself
-    * (a count probe followed by an uncapped collect is a second job, and
-    * races an input whose plan is non-deterministic). Above the cap it
-    * fails loudly naming `fn`, `knob` and the alternative in `hint`. */
+    * capped at its `cap + 1` lowest ids: the bound binds on the collect
+    * itself (a count probe followed by an uncapped collect is a second
+    * job, and races an input whose plan is non-deterministic). Above the
+    * cap it fails loudly naming `fn`, `knob` and the alternative in
+    * `hint`. */
   private def collectVectors(vecs: DataFrame, cap: Long, fn: String,
                              knob: String,
                              hint: String): Array[(Long, Array[Double])] = {
-    val rows = vecs.orderBy(vecs.columns(0))
-      .limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    require(rows.length <= cap, {
-      val dim = rows.head._2.length
-      s"$fn: more than $knob=$cap vectors (~${cap * 8 * dim >> 20} MB " +
-        s"at dim $dim) — $hint"
-    })
+    val rows = lowestIds(vecs, math.min(cap + 1, Int.MaxValue.toLong).toInt)
+    require(!rows.exists(_._2 == null), s"$fn: a null vector")
+    require(rows.length <= cap,
+      overCap(fn, knob, cap, rows.head._2.length, hint))
     rows
   }
+
+  /** The `n` lowest-id rows of a (long id, vector) frame in id order: one
+    * `takeOrdered` job over its physical rows, so each partition sends
+    * at most `n` rows and no sort is planned. */
+  private def lowestIds(vecs: DataFrame,
+                        n: Int): Array[(Long, Array[Double])] =
+    GraftSqlShim.withRows(vecs)(_.map(idVector).takeOrdered(n)(byId))
+
+  /** [[lowestIds]] for several sides in one job: for each tag t of the
+    * (long id, vector, int tag) rows of `tagged`, its `limits(t)`
+    * lowest-id rows in id order; a row with a null tag is skipped. Each
+    * partition keeps its lowest rows per tag in bounded heaps, and the
+    * partials merge as they arrive, as in `takeOrdered`. */
+  private def lowestByTag(tagged: DataFrame,
+                          limits: Seq[Int]): Seq[Array[(Long, Array[Double])]] =
+    GraftSqlShim.withRows(tagged) {
+      _.mapPartitions { it =>
+        val heaps = limits.map(_ =>
+          new java.util.PriorityQueue[(Long, Array[Double])](byId.reverse))
+        it.filter(!_.isNullAt(2)).foreach { r =>
+          val (t, row) = (r.getInt(2), idVector(r))
+          if (heaps(t).size < limits(t) || row._1 < heaps(t).peek._1) {
+            heaps(t).add(row)
+            if (heaps(t).size > limits(t)) heaps(t).poll()
+          }
+        }
+        Iterator.single(heaps.map(_.toArray(Array.empty[(Long, Array[Double])])))
+      }.fold(limits.map(_ => Array.empty[(Long, Array[Double])])) { (a, b) =>
+        limits.indices.map(t => (a(t) ++ b(t)).sortBy(_._1).take(limits(t)))
+      }
+    }
+
+  private val byId = Ordering.by[(Long, Array[Double]), Long](_._1)
+
+  /** A (long id, vector) row of an id-ordered collect: a null id fails
+    * loudly; a null vector comes back as null. */
+  private def idVector(r: InternalRow): (Long, Array[Double]) = {
+    require(!r.isNullAt(0), "a null vec_id in an id-ordered collect")
+    (r.getLong(0), if (r.isNullAt(1)) null else r.getArray(1).toDoubleArray())
+  }
+
+  /** The loud message of a vector collect over its cap. */
+  private def overCap(fn: String, knob: String, cap: Long, dim: Int,
+                      hint: String): String =
+    s"$fn: more than $knob=$cap vectors (~${cap * 8 * dim >> 20} MB " +
+      s"at dim $dim) — $hint"
+
+  /** The vectors of `rows` (vec_id, embedding) in id order, for
+    * codebooks and cells pinned to table rows: one capped collect of one
+    * job (more than `cap` rows fails loudly). */
+  private[graft] def pinnedVectors(rows: DataFrame,
+                                   cap: Int): Array[Array[Double]] =
+    collectVectors(side(rows, "vec_id", "embedding", "id", "v"), cap,
+      "pinnedVectors", "cap", "pin the rows by a narrower id range")
+      .map(_._2)
 
   /** Exact top-k neighbors for each query vector (brute force).
     * Queries must be small enough to broadcast. */
@@ -341,9 +395,13 @@ object Similarity {
     * Scale shape per iteration: centroids live on the DRIVER (k × dim
     * doubles — tiny) and enter the plan as one native argmin
     * ([[graft.functions.NearestCentroid]]), so assignment is a
-    * zero-shuffle codegen projection; the update is one hash-aggregate
-    * keyed (cluster, dim) — 64·N rows spread over the cluster, no hot
-    * key. Nothing frame-sized ever serializes to the driver.
+    * zero-shuffle codegen projection; the update is one job whose map
+    * side folds each partition's rows into one sums-and-counts partial
+    * per cluster it meets (Spark's spillable map-side combine), and one
+    * shuffle keyed on the cluster adds the partials, so a reducer holds
+    * at most one partial per map task and the driver receives k × dim
+    * sums and counts at any partition count. Nothing frame-sized ever
+    * serializes to the driver.
     *
     * Determinism: init = the k lowest-id vectors (cid by id order);
     * argmin ties break to the lowest cid; centroid means are exact sums
@@ -380,21 +438,78 @@ object Similarity {
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
                       k: Int, iters: Int): Array[Array[Double]] = {
     require(k > 0 && iters >= 0, s"kmeans: need k>0, iters>=0")
-    var cents: Array[Array[Double]] = side(df, idCol, vecCol, "vec_id", "x")
-      .orderBy("vec_id").limit(k)
-      .select("x").collect().map(_.getSeq[Double](0).toArray)
-    require(cents.length == k, s"kmeans: k=$k but only ${cents.length} rows")
+    val init = lowestIds(side(df, idCol, vecCol, "id", "v"), k)
+    lloyd(df, idCol, vecCol, init.map(_._2), k, iters)
+  }
+
+  /** One job over the physical rows of the [[assigned]] frame against
+    * `cents`: each cluster's rows fold into one value (`first` starts
+    * it, `add` takes one more row, `merge` adds two partials), combined
+    * on the executors by one shuffle keyed on the cluster. The driver
+    * gets one value per cluster that has a row, at most k, whatever the
+    * partition count; a row is read as it streams past. */
+  private def perCluster[C: scala.reflect.ClassTag](df: DataFrame,
+      idCol: String, vecCol: String, cents: Array[Array[Double]])(
+      first: InternalRow => C)(add: (C, InternalRow) => C,
+      merge: (C, C) => C): Map[Int, C] =
+    GraftSqlShim.withRows(assigned(df, idCol, vecCol, cents)) {
+      _.map(r => (r.getInt(1), r)).combineByKey(first, add, merge)
+        .collect().toMap
+    }
+
+  /** The assigned frame (vec_id, cluster, __v, __n = its norm) that the
+    * Lloyd pass, [[semDedup]]'s size probe and its pair join all read:
+    * one plan shape, so one generated stage serves all three. */
+  private def assigned(df: DataFrame, idCol: String, vecCol: String,
+                       cents: Array[Array[Double]]): DataFrame =
+    kmeansAssign(df, idCol, vecCol, cents)
+      .select(col("vec_id"), col("cluster"), col("x").as("__v"))
+      .withColumn("__n", l2norm(col("__v")))
+
+  /** `iters` Lloyd updates from `init`, one Spark job each: the sums
+    * and counts of each (cluster, position) over the physical rows of
+    * the native assignment, combined per cluster on the executors
+    * ([[perCluster]]). A centroid position no row reaches keeps its
+    * value (an empty cluster keeps its centroid); elements past a
+    * centroid's length do not move it. The sums are exact (see
+    * [[kmeans]]), so neither the partitioning nor the combine order can
+    * change a centroid. */
+  private def lloyd(df: DataFrame, idCol: String, vecCol: String,
+                    init: Array[Array[Double]], k: Int,
+                    iters: Int): Array[Array[Double]] = {
+    require(init.length == k, s"kmeans: k=$k but only ${init.length} rows")
+    require(!init.contains(null), "kmeans: a null vector among the k lowest ids")
+    var cents = init
     for (_ <- 0 until iters) {
-      val sums = kmeansAssign(df, idCol, vecCol, cents)
-        .select(col("cluster").as("cid"), posexplode(col("x")).as(Seq("p", "v")))
-        .groupBy("cid", "p")
-        .agg(sum("v").as("s"), count("v").as("n"))
-        .collect()
-      val next = cents.map(_.clone()) // empty cluster keeps its centroid
-      sums.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = r.getDouble(2) / r.getLong(3)
+      val widths = cents.map(_.length)
+      def add(acc: (Array[Double], Array[Long]),
+              r: InternalRow): (Array[Double], Array[Long]) = {
+        val (sum, cnt) = acc
+        if (!r.isNullAt(2)) {
+          val x = r.getArray(2)
+          var p = 0
+          while (p < math.min(x.numElements(), sum.length)) {
+            if (!x.isNullAt(p)) { sum(p) += x.getDouble(p); cnt(p) += 1 }
+            p += 1
+          }
+        }
+        acc
       }
-      cents = next
+      val parts = perCluster(df, idCol, vecCol, cents)(
+        r => add((new Array[Double](widths(r.getInt(1))),
+          new Array[Long](widths(r.getInt(1)))), r))(
+        add,
+        { (a, b) =>
+          for (p <- a._1.indices) { a._1(p) += b._1(p); a._2(p) += b._2(p) }
+          a
+        })
+      cents = Array.tabulate(k) { c =>
+        parts.get(c).fold(cents(c)) { case (sum, cnt) =>
+          Array.tabulate(widths(c)) { p =>
+            if (cnt(p) == 0) cents(c)(p) else sum(p) / cnt(p)
+          }
+        }
+      }
     }
     cents
   }
@@ -435,13 +550,17 @@ object Similarity {
     * with the paper's k ∝ n/200 the cap never fires on a balanced fit.
     *
     * Returns one row per vector: (vec_id, cluster, keep, dup_of) with
-    * dup_of = the smallest qualifying same-cluster id (null ⇒ keep=1). */
+    * dup_of = the smallest qualifying same-cluster id (null ⇒ keep=1).
+    * `vec_id` keys the vectors: rows repeating an id and its vector
+    * within a cluster come back as one row. */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
                k: Int, iters: Int, tau: Double,
                maxCluster: Int = SemDedupMaxCluster): DataFrame = {
-    val (m, dups) = semDedupDups(df, idCol, vecCol, k, iters, tau, maxCluster)
-    m.select(col("vec_id"), col("cluster"))
-      .join(dups, Seq("vec_id"), "left")
+    val cents = kmeansCentroids(df, idCol, vecCol, k, iters)
+    semDedupMatches(assigned(df, idCol, vecCol, cents),
+        hotHubs(df, idCol, vecCol, cents, maxCluster), tau, "left")
+      .groupBy(col("cluster"), col("vec_id"), col("__v"), col("__n"))
+      .agg(min(col("__a")).as("dup_of"))
       .select(col("vec_id"), col("cluster"),
         col("dup_of").isNull.cast("int").as("keep"), col("dup_of"))
   }
@@ -449,72 +568,73 @@ object Similarity {
   /** [[semDedup]]'s default `maxCluster`. */
   private val SemDedupMaxCluster = 100000
 
-  /** The rows [[semDedup]] keeps (keep = 1) at its default `maxCluster`,
-    * WITH their vectors: (vec_id, embedding as array<double>). The
-    * survivors come out of the assigned frame itself, so a chain that
-    * goes on with the vectors needs no join back to `df` by id. */
-  private[graft] def semDedupKept(df: DataFrame, idCol: String, vecCol: String,
-                                  k: Int, iters: Int, tau: Double): DataFrame = {
-    val (m, dups) =
-      semDedupDups(df, idCol, vecCol, k, iters, tau, SemDedupMaxCluster)
-    m.join(dups, Seq("vec_id"), "left_anti")
+  /** The rows of `emb` (vec_id, embedding) off the bench (`isBench`
+    * false) that [[semDedup]] keeps (keep = 1) at its default
+    * `maxCluster`, then those [[semanticDecontaminate]] flags clean
+    * against the bench rows at its defaults, WITH their vectors:
+    * (vec_id, embedding as array<double>). The survivors come out of the
+    * assigned frame itself (no join back by id), the max-cos filter runs
+    * on its vectors and norms, and the k-means init and the bench
+    * vectors arrive in one driver collect over one scan of `emb`. */
+  private[graft] def semanticCurate(emb: DataFrame, isBench: Column, k: Int,
+                                    iters: Int, tau: Double,
+                                    threshold: Double): DataFrame = {
+    val corpus = emb.filter(!isBench)
+    // the init as kmeansCentroids picks it (the k lowest corpus ids) and
+    // the non-null bench vectors in id order, capped as
+    // semanticDecontaminate caps them; rows whose tag is null (a null
+    // isBench) belong to neither side
+    val Seq(init, benchRows) = lowestByTag(
+      emb.select(col("vec_id").cast("long"), asDouble(col("embedding")),
+        when(isBench && col("embedding").isNotNull, 1).when(!isBench, 0)),
+      Seq(k, BenchRowsMax + 1))
+    require(benchRows.length <= BenchRowsMax,
+      overCap("semanticDecontaminate", "maxBenchRows", BenchRowsMax,
+        benchRows.head._2.length, BenchHint))
+    val cents = lloyd(corpus, "vec_id", "embedding", init.map(_._2), k, iters)
+    val mx = maxCos(benchRows.map(_._2), BenchLiteralMax, emb.sparkSession)
+    semDedupMatches(assigned(corpus, "vec_id", "embedding", cents),
+        hotHubs(corpus, "vec_id", "embedding", cents, SemDedupMaxCluster),
+        tau, "left_anti")
+      .filter(!contaminated(mx, threshold))
       .select(col("vec_id"), col("__v").as("embedding"))
   }
 
-  /** [[semDedup]]'s assigned frame m (vec_id, cluster, __v, __n) and
-    * its duplicate table (vec_id, dup_of). */
-  private def semDedupDups(df: DataFrame, idCol: String, vecCol: String,
-                           k: Int, iters: Int, tau: Double,
-                           maxCluster: Int): (DataFrame, DataFrame) = {
-    val cents = kmeansCentroids(df, idCol, vecCol, k, iters)
-    val m = kmeansAssign(df, idCol, vecCol, cents)
-      .select(col("vec_id"), col("cluster"), col("x").as("__v"))
-      .withColumn("__n", l2norm(col("__v")))
-    val dups = semDedupCandidates(m, maxCluster)
-      .filter(round(pairCos(col("__va"), col("__na"), col("__vb"), col("__nb"))
-        + lit(1e-9), 6) >= tau)
-      .groupBy(col("__b").as("vec_id"))
-      .agg(min(col("__a")).as("dup_of"))
-    (m, dups)
+  /** The hub (min id) of each cluster over `maxCluster` under `cents`,
+    * in cluster order: each cluster's size and min id come from one job
+    * over the [[assigned]] frame the Lloyd pass reads ([[perCluster]]).
+    * Package-visible so the spec can check the probe itself. */
+  private[graft] def hotHubs(df: DataFrame, idCol: String, vecCol: String,
+                             cents: Array[Array[Double]],
+                             maxCluster: Int): Seq[(Int, Long)] = {
+    def add(acc: (Long, Long), r: InternalRow): (Long, Long) =
+      (acc._1 + 1, if (r.isNullAt(0)) acc._2 else math.min(acc._2, r.getLong(0)))
+    perCluster(df, idCol, vecCol, cents)(r => add((0L, Long.MaxValue), r))(
+        add, (a, b) => (a._1 + b._1, math.min(a._2, b._2)))
+      .toSeq.sorted.collect { case (c, (size, hub)) if size > maxCluster => c -> hub }
   }
 
-  /** Candidate pair stream of [[semDedup]]: all in-cluster (a < b)
-    * pairs for clusters within `maxCluster`, hub-star pairs (min-id
-    * member vs everyone else) for clusters over it. One ≤k-row collect
-    * of the cluster sizes picks the hot clusters; the star branch (a
-    * hub aggregate and its broadcast) is planned only when one exists,
-    * and the cold/hot split is then a map-side filter on that literal
-    * id list — no shuffle of the frame beyond the cluster-keyed pair
-    * join. Package-visible so the spec can assert the O(|c|)
-    * degradation directly. */
-  private[graft] def semDedupCandidates(m: DataFrame,
-                                        maxCluster: Int): DataFrame = {
-    val hotIds = m.groupBy(col("cluster")).agg(count(lit(1)).as("__cn"))
-      .filter(col("__cn") > maxCluster).select("cluster")
-      .collect().map(_.get(0))
-    val isHot = if (hotIds.isEmpty) lit(false) else col("cluster").isin(hotIds: _*)
-    val cold = m.filter(!isHot)
-    val coldPairs = cold
-      .select(col("cluster"), col("vec_id").as("__a"),
-        col("__v").as("__va"), col("__n").as("__na"))
-      .join(cold.select(col("cluster"), col("vec_id").as("__b"),
-        col("__v").as("__vb"), col("__n").as("__nb")), Seq("cluster"))
-      .filter(col("__a") < col("__b"))
-    if (hotIds.isEmpty) coldPairs
-    else {
-      val hot = m.filter(isHot)
-      // hub = the min-id member WITH its vector: struct min orders by the
-      // leading vec_id field, so one hash aggregate carries the payload
-      val hubs = hot.groupBy(col("cluster"))
-        .agg(min(struct(col("vec_id"), col("__v"), col("__n"))).as("__h"))
-        .select(col("cluster"), col("__h.vec_id").as("__a"),
-          col("__h.__v").as("__va"), col("__h.__n").as("__na"))
-      val hotPairs = hot.join(broadcast(hubs), Seq("cluster"))
-        .filter(col("vec_id") =!= col("__a"))
-        .select(col("cluster"), col("__a"), col("__va"), col("__na"),
-          col("vec_id").as("__b"), col("__v").as("__vb"), col("__n").as("__nb"))
-      coldPairs.unionByName(hotPairs)
-    }
+  /** The [[assigned]] frame m (vec_id, cluster, __v, __n) joined by
+    * `joinType` to every same-cluster row `__a` with a smaller id and a
+    * rounded cosine >= `tau` — every member of a cold cluster, but only
+    * the hub of each hot cluster in `hubs` (cluster -> min id), so a hot
+    * cluster costs O(|c|) candidate pairs. "left" pairs each row with
+    * its matches (and keeps the unmatched); "left_anti" keeps the rows
+    * [[semDedup]] keeps. Package-visible so the spec can assert the
+    * O(|c|) degradation directly. */
+  private[graft] def semDedupMatches(m: DataFrame, hubs: Seq[(Int, Long)],
+                                     tau: Double,
+                                     joinType: String): DataFrame = {
+    val earlier = if (hubs.isEmpty) m
+      else m.filter(!col("cluster").isin(hubs.map(_._1): _*) ||
+        hubs.map { case (c, h) => col("cluster") === c && col("vec_id") === h }
+          .reduce(_ || _))
+    // the same column order as m, so both sides share its generated stage
+    m.join(earlier.select(col("vec_id").as("__a"), col("cluster").as("__ca"),
+        col("__v").as("__va"), col("__n").as("__na")),
+      col("cluster") === col("__ca") && col("__a") < col("vec_id") &&
+        round(pairCos(col("__va"), col("__na"), col("__v"), col("__n"))
+          + lit(1e-9), 6) >= tau, joinType)
   }
 
   // ---------------------------------------------------------------
@@ -567,8 +687,8 @@ object Similarity {
 
   /** Asymmetric-distance (ADC) top-k: queries stay exact, the corpus
     * is its PQ codes. Each (query, doc) score is
-    * sum_s ||q_sub_s - centroid[s][code_s]||² — element_at into the
-    * literal codebook arrays, all inside codegen; the corpus-side scan
+    * sum_s ||q_sub_s - centroid[s][code_s]||² — m reads of the query's
+    * ADC table ([[graft.functions.AdcTable]]); the corpus-side scan
     * touches only (id, codes). Broadcast queries, one WindowGroupLimit
     * top-k per query. Returns (query_id, neighbor_id, dist, rank), rank
     * by ascending approximate squared distance. */
@@ -578,13 +698,10 @@ object Similarity {
     val w = books(0)(0).length
     // ADC lookup table: ||q_sub_s - book[s][c]||² is a pure function of
     // the QUERY, so all m×k entries are computed ONCE per query row
-    // before the broadcast; each (query, candidate) pair then reads m
-    // table cells, summed in subspace order.
+    // (one native kernel) before the broadcast; each (query, candidate)
+    // pair then reads m table cells, summed in subspace order.
     val q = side(queries, qId, qVec, "query_id", "qv")
-      .withColumn("qlut", array(books.indices.map { s =>
-        array(books(s).map(cv => VectorFunctions.sqdist(
-          slice(col("qv"), s * w + 1, w), array(cv.map(lit): _*))): _*)
-      }: _*))
+      .withColumn("qlut", adcTable(col("qv"), books, w))
       .drop("qv")
     topK(codes.withColumnRenamed("vec_id", "neighbor_id")
       .crossJoin(broadcast(q))
@@ -645,26 +762,15 @@ object Similarity {
   private[graft] def semanticDecontaminateWith(corpus: DataFrame,
       bench: DataFrame, threshold: Double, idCol: String, vecCol: String,
       maxBenchRows: Int, literalMax: Int): DataFrame = {
-    val mx = maxCos(bench, idCol, vecCol, maxBenchRows, literalMax)
+    val collected = collectVectors(
+      side(bench, idCol, vecCol, "id", "v").filter(col("v").isNotNull),
+      maxBenchRows, "semanticDecontaminate", "maxBenchRows", BenchHint)
+      .map(_._2)
+    val mx = maxCos(collected, literalMax, corpus.sparkSession)
     side(corpus, idCol, vecCol, "id", "__v")
       .withColumn("__n", l2norm(col("__v")))
       .select(col("id"), mx.as("max_cos"),
         contaminated(mx, threshold).as("contaminated"))
-  }
-
-  /** The rows of `corpus` that [[semanticDecontaminate]] flags clean at
-    * its defaults (both frames keyed by `vec_id`, vectors in
-    * `embedding`), all columns kept: a map-side filter on the same
-    * max-cos column, so a chain that goes on with the vectors needs no
-    * join back by id. */
-  private[graft] def semanticClean(corpus: DataFrame, bench: DataFrame,
-                                   threshold: Double): DataFrame = {
-    val mx =
-      maxCos(bench, "vec_id", "embedding", BenchRowsMax, BenchLiteralMax)
-    corpus.withColumn("__v", asDouble(col("embedding")))
-      .withColumn("__n", l2norm(col("__v")))
-      .filter(!contaminated(mx, threshold))
-      .drop("__v", "__n")
   }
 
   /** `coalesce(max_cos >= threshold, false)`: a null max-cos (a
@@ -672,18 +778,16 @@ object Similarity {
   private def contaminated(mx: Column, threshold: Double): Column =
     coalesce(mx >= threshold, lit(false))
 
+  /** The bench-cap hint of semantic decontamination. */
+  private val BenchHint = "an eval set that large is a corpus-vs-corpus " +
+    "problem; use ivfTopKWith/lshTopKMulti or Curation.decontaminate instead"
+
   /** The one max-cos column of semantic decontamination, over a row's
     * `__v` (array<double>) and `__n` (its norm): the max cosine to the
     * collected, capped bench vectors, as a literal-matrix expression up
     * to `literalMax` of them and a broadcast UDF above. */
-  private def maxCos(bench: DataFrame, idCol: String, vecCol: String,
-                     maxBenchRows: Int, literalMax: Int): Column = {
-    val collected = collectVectors(
-      side(bench, idCol, vecCol, "id", "v").filter(col("v").isNotNull),
-      maxBenchRows, "semanticDecontaminate", "maxBenchRows",
-      "an eval set that large is a corpus-vs-corpus problem; use " +
-        "ivfTopKWith/lshTopKMulti or Curation.decontaminate instead")
-      .map(_._2)
+  private def maxCos(collected: Array[Array[Double]], literalMax: Int,
+                     spark: org.apache.spark.sql.SparkSession): Column = {
     require(collected.nonEmpty, "semanticDecontaminate: empty benchmark set")
     // zero/NaN/Inf-norm bench vectors can never produce a meaningful
     // cosine — drop them ONCE here so both branches share identical
@@ -720,7 +824,7 @@ object Similarity {
       // broadcast variable and take the per-row max in a UDF — no
       // join, no groupBy, no generated row-id, so the one-row-per-
       // corpus-row contract survives task retries and duplicate ids.
-      val bc = bench.sparkSession.sparkContext.broadcast((bvecs, bNorms))
+      val bc = spark.sparkContext.broadcast((bvecs, bNorms))
       udf { (v: Seq[Double]) =>
         val (bv, bn) = bc.value
         val arr = if (v == null) null else v.toArray
@@ -774,12 +878,11 @@ object Similarity {
                 cId: String = "vec_id", cVec: String = "embedding")
       : DataFrame = {
     val w = books(0)(0).length
-    // ONE nested-array Literal per matrix (not a CreateArray-of-
-    // CreateArrays tree): plan size is O(1) in nlist and m*k, which
-    // keeps Catalyst analysis/codegen sub-second where the unrolled
+    // ONE nested-array Literal for the cells (not a CreateArray-of-
+    // CreateArrays tree) and native kernels over referenced codebooks:
+    // plan size is O(1) in nlist and m*k, where the unrolled
     // per-centroid expression forest cost ~5s of planning per query
     val cellsLit = typedlit(cells.map(_.toSeq).toSeq)
-    val booksLit = typedlit(books.map(_.map(_.toSeq).toSeq).toSeq)
     def sqd(a: Column, b: Column): Column = VectorFunctions.sqdist(a, b)
     // (dist, cell-index) structs; array_sort's lexicographic order =
     // dist-then-lowest-index tie-break, same as NearestCentroid
@@ -805,12 +908,7 @@ object Similarity {
       // function of (query, probed cell), so the m×k sqdist table is
       // computed once per q0 row — |queries| × nprobe rows — before the
       // cell-keyed join; scoring reads m cells per candidate.
-      .withColumn("qlut", array(books.indices.map { s =>
-        array(books(s).indices.map { c =>
-          sqd(slice(col("qrv"), s * w + 1, w),
-            element_at(element_at(booksLit, s + 1), lit(c + 1)))
-        }: _*)
-      }: _*))
+      .withColumn("qlut", adcTable(col("qrv"), books, w))
       .drop("qrv")
     // the query side is |queries| × nprobe rows BY CONTRACT — the small
     // side. The hint pins the build side: size ESTIMATES here are

@@ -4,8 +4,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 
 /** Per-JOB wall-time attribution for one query (optimization-round
   * measurement aid, guide §1/§7.1 with the UI disabled): runs a named
-  * query (registered or bench-only) `reps` times and prints, for the
-  * LAST rep, every Spark job it launched — start offset, duration,
+  * query (registered or bench-only) `reps` times, each time writing its
+  * full result to the `noop` sink (so no work is pruned, as a `count()`
+  * would let Catalyst do). Every rep prints its time, its job count and
+  * the classes it compiled (the delta of Spark's codegen compilation
+  * counter): rep 1's count is the query's generated-class working set,
+  * later reps show what the codegen cache failed to keep. The LAST rep
+  * also lists every Spark job it launched — start offset, duration,
   * description — plus the gaps (driver-side work: planning, collects,
   * local finishes). Earlier reps warm JIT/codegen so the attribution
   * is not startup noise.
@@ -41,18 +46,22 @@ object JobProfile {
         if (j != null) j.t1 = je.time
       }
     }
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    spark.sparkContext.addSparkListener(listener)
     for (r <- 1 to reps) {
-      jobs.clear()
       spark.catalog.clearCache(); System.gc()
-      if (r == reps) spark.sparkContext.addSparkListener(listener)
+      // listener events are posted asynchronously; drain before reading
+      Thread.sleep(500)
+      jobs.clear()
+      val c0 = compiled.getCount
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[profile] rep $r: $dt%.3f s (rows=$n)")
+      Thread.sleep(500)
+      println(f"[profile] rep $r: $dt%.3f s, ${jobs.size} jobs, " +
+        s"${compiled.getCount - c0} classes compiled")
       if (r == reps) {
-        spark.sparkContext.removeSparkListener(listener)
-        // listener events are posted asynchronously; drain before reading
-        Thread.sleep(500)
         val js = jobs.values.toArray(Array.empty[Job]).sortBy(_.t0)
         if (js.nonEmpty) {
           val base = js.head.t0

@@ -44,7 +44,7 @@ object PlanAudit {
     "q_rep_metrics" -> "repetition metrics: one projection over the scan (array_distinct + graft_top_bigram_frac), zero shuffle before the presentation sort",
     "q_dedup_incr" -> "incremental dedup: native bloom might_contain routes definitely-new digests around the exact anti-join (union of the two branches)",
     "q_semdedup" -> "SemDeDup: zero-shuffle literal-centroid assignment (no id join-back), ONE cluster-keyed shuffle feeds the in-cluster pair join, native codegen dot per pair",
-    "q_pq_topk" -> "PQ/ADC: zero-shuffle native-kernel encode (graft_nearest_centroid, r15 — no slice/struct trees), queries broadcast WITH their precomputed ADC lookup tables so scoring reads m cells per pair, WindowGroupLimit top-k",
+    "q_pq_topk" -> "PQ/ADC: zero-shuffle native-kernel encode (graft_nearest_centroid, r15 — no slice/struct trees), queries broadcast WITH their precomputed ADC lookup tables (one graft_adc_table kernel) so scoring reads m cells per pair, WindowGroupLimit top-k",
     "q_resample" -> "resample: ONE map-side-combinable hash aggregate on the period label; calendar-spine gap fill is a broadcast join of bucket-sized frames",
     "q_corr_pairwise" -> "pairwise-complete corr, 2 jobs total: ONE rank-kernel probe over every per-pair masked column, then ONE main aggregate over broadcast rank-stats joins evaluates every pearson cell, pair count and spearman cell — no per-pair jobs",
     "q_dedup_minhash_incr" -> "incremental LSH: batch signatures map-side, ONE (band,key) equi-join against persisted state — state text never re-shingled",
@@ -64,11 +64,11 @@ object PlanAudit {
     "q_heavy_hitters" -> "Misra-Gries heavy hitters: partial/final ObjectHashAggregate split (k-entry summaries combine map-side), one partials exchange + the k-row sort",
     "q_quantize_int8" -> "int8 quantization: pure codegen transform over the scan, zero shuffle before the presentation sort",
     "q_substring_dedup" -> "substring-span dedup: the rolling-hash explode appears ONCE (count-over-(h1,h2) window, no dup-agg/semi-join pair), then the per-doc span merge",
-    "q_dedup_clusters_star" -> "spanning-edge (path-per-bucket) LSH emission: same single-shuffle flatMapGroups shape as all-pairs, output linear in posting volume, identical components",
+    "q_dedup_clusters_star" -> "spanning-edge (path-per-bucket) LSH emission: one bucket-keyed lag window, each pair at most once, output linear in posting volume, identical components; the driver union-find's table is the plan (LocalTableScan)",
     "q_dedup_fuzzy" -> "fuzzy dedup end to end: spanning-edge LSH edges checkpointed once, counted in one RDD job and, when they fit driverEdgeLimit, collected once into the driver union-find, whose table (LocalTableScan) joins the corpus — no doc explode/distinct",
     "q_pipeline_e2e" -> "9-stage pipeline composition — the builder persists the three survivor frames (consumer fan-out would otherwise re-evaluate upstream combinatorially); the four consumers of the BOUNDED token-budget stage re-root on its collected LocalRelation (r15 — re-analyzing the full chain per join branch cost a 5 s driver gap), the ~100-row result materializes eagerly and the caches are RELEASED; the returned plan is therefore the local result scan — the composed plan itself is documented in SCALE.md 'Pipeline composition'",
     "q_pipeline_funnel" -> "per-stage funnel over the e2e chain (r14: observe-harvested): every boundary carries a CollectMetrics node, multi-consumer frames persist, and ONE action on the final stage yields every count + the six gate-reason sums as byproducts — the in-plan form of 'counts come free from storage-write metrics'; the returned plan is the local report scan",
-    "q_pipeline_semantic" -> "semantic-leg composition (SemDeDup -> semantic decontam -> int8 quantize -> dequantized top-3): zero-shuffle literal-centroid assignment + one cluster-keyed pair shuffle (the star branch only when the k-row size probe finds a hot cluster), survivors carry their vectors (one anti-join on the duplicate table, a map-side max-cos filter, no id join-back), one persisted store feeds the broadcast query cross join; the returned plan is the local result scan",
+    "q_pipeline_semantic" -> "semantic-leg composition (SemDeDup -> semantic decontam -> int8 quantize -> dequantized top-3): zero-shuffle literal-centroid assignment + one cluster-keyed anti-join of the assigned frame with its earlier same-cluster matches (a hot cluster offers only its hub, from the one-job size probe), a map-side max-cos filter, no id join-back; one persisted store feeds the broadcast query cross join; the returned plan is the local result scan",
     "q_pipeline_semantic_ann" -> "the production ANN path composed (r14): the same semantic store feeds ivfPqTopK (literal cells/codebooks map-side, ONE cell-keyed equi-join, WindowGroupLimit top-k) with recall@5 measured against the exact L2 top-5 over that store; the returned plan is the local recall scan")
 
   def main(args: Array[String]): Unit = args match {

@@ -429,4 +429,69 @@ class FunctionsSpec extends SparkSpec {
       assert(nulls.head().getDouble(0) == 2.0 / 3.0, mode)
     }
   }
+
+  test("AdcTable equals the per-entry sqdist formulation, codegen only and " +
+    "interpreted") {
+    import graft.functions.AdcTable
+    // the form AdcTable replaced: one graft_sqdist over a slice and a
+    // literal centroid per (subspace, centroid)
+    def reference(v: org.apache.spark.sql.Column,
+                  books: Array[Array[Array[Double]]], w: Int) =
+      array(books.indices.map { s =>
+        array(books(s).map(cv => VectorFunctions.sqdist(
+          slice(v, s * w + 1, w),
+          array(cv.map(lit): _*).cast("array<double>"))): _*)
+      }: _*)
+    // 200 seeded 64-dim float32-valued vectors, like the embeddings table
+    val rnd = new scala.util.Random(2303L)
+    val emb = (0L until 200L).map(i =>
+      i -> Array.fill(64)(rnd.nextGaussian().toFloat.toDouble))
+    val src = emb.take(16).map(_._2)
+    // q_pq_topk's book shape (4 x 16 centroids of width 16, sub-slices of
+    // the first 16 vectors), and a ragged set: a short centroid, an empty
+    // one and one wider than the subspace
+    val pinned = Array.tabulate(4)(s => src.map(_.slice(s * 16, s * 16 + 16)).toArray)
+    val ragged = Array(Array(Array(1.0, -2.0), Array.empty[Double]),
+      Array(Array(0.5, 0.25, 3.0, 7.0), Array(-0.0)))
+    // edge vectors under negative ids, apart from the seeded ones
+    val edge = Seq(
+      -1L -> Array.empty[Double], -2L -> Array.tabulate(40)(_ * 0.5),
+      -3L -> Array.tabulate(70)(i => -i * 0.25),
+      -4L -> Array(Double.NaN, 1.0, Double.PositiveInfinity, -0.0, 0.0),
+      -5L -> Array(-0.0, -0.0, 1e300, -1e300))
+    val rows = (emb ++ edge).map { case (id, v) => (id, v.toSeq) } :+
+      ((-6L, null.asInstanceOf[Seq[Double]]))
+    val modes = Seq(
+      "codegen only" -> Map("spark.sql.codegen.fallback" -> "false",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((mode, confs) <- modes; (books, w) <- Seq(pinned -> 16, ragged -> 2)) {
+      val s = spark.newSession()
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      val got = s.createDataFrame(rows).toDF("id", "v")
+        .select(col("id"), AdcTable.adcTable(col("v"), books, w).as("k"),
+          reference(col("v"), books, w).as("r"))
+        .collect()
+      assert(got.length == rows.length, mode)
+      got.foreach { r =>
+        val id = r.getLong(0)
+        type Table = scala.collection.Seq[scala.collection.Seq[Any]]
+        val ref = r.getAs[Table](2)
+        if (id == -6L) {
+          // a null vector: a null table where every reference entry is null
+          assert(r.isNullAt(1) && ref.flatten.forall(_ == null), mode)
+        } else {
+          val k = r.getAs[Table](1)
+          assert(k.map(_.length) == ref.map(_.length), s"$mode vec $id")
+          k.flatten.zip(ref.flatten).foreach {
+            case (a: Double, b: Double) =>
+              assert(java.lang.Double.doubleToLongBits(a) ==
+                java.lang.Double.doubleToLongBits(b), s"$mode vec $id: $a != $b")
+            case (a, b) => fail(s"$mode vec $id: $a vs $b")
+          }
+        }
+      }
+    }
+  }
 }

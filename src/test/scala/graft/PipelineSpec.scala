@@ -307,18 +307,27 @@ class PipelineSpec extends SparkSpec {
   test("semDedup: mega-cluster degrades to O(|c|) star pairs under maxCluster") {
     // 12 near-identical vectors -> one cluster (k=1). Uncapped the
     // candidate join is |c|(|c|-1)/2 = 66 pairs; capped at 10 the star
-    // fallback emits exactly |c|-1 = 11 hub pairs, and every non-hub
-    // member resolves dup_of = hub (min-id survivor preserved).
+    // fallback matches exactly |c|-1 = 11 hub pairs, and every non-hub
+    // member resolves dup_of = hub (min-id survivor preserved). A tau
+    // below every cosine counts the candidates themselves.
     val emb = (0L until 12L).map(i => (i, Array(1.0f, i.toFloat * 1e-4f)))
       .toDF("vec_id", "embedding")
-    def pairsWithCap(cap: Int): Long = {
-      Similarity.semDedupCandidates(
+    // semDedup's size probe over four partitions: the one cluster is hot
+    // above a cap of 10, and its hub is the min id
+    val one = Array(Array(1.0, 0.0))
+    def hubs(cap: Int): Seq[(Int, Long)] =
+      Similarity.hotHubs(emb.repartition(4), "vec_id", "embedding", one, cap)
+    assert(hubs(10) == Seq(0 -> 0L))
+    assert(hubs(11) == Seq(0 -> 0L) && hubs(12).isEmpty && hubs(100).isEmpty)
+    def pairsWithCap(cap: Int): Long =
+      Similarity.semDedupMatches(
         emb.select(col("vec_id").cast("long").as("vec_id"),
             transform(col("embedding"), _.cast("double")).as("__v"))
           .withColumn("cluster", lit(0))
           .withColumn("__n", sqrt(aggregate(col("__v"), lit(0.0),
-            (acc, v) => acc + v * v))), cap).count()
-    }
+            (acc, v) => acc + v * v))),
+        hubs(cap), tau = -2.0, "left")
+        .filter(col("__a").isNotNull).count()
     assert(pairsWithCap(100) == 66L)
     assert(pairsWithCap(10) == 11L)
     val out = Similarity.semDedup(emb, "vec_id", "embedding",
@@ -327,6 +336,40 @@ class PipelineSpec extends SparkSpec {
         (if (r.isNullAt(3)) -1L else r.getLong(3))).toMap
     assert(out(0L) == -1L)
     assert((1L until 12L).forall(i => out(i) == 0L))
+  }
+
+  test("kmeans: a Lloyd update sends the driver one partial per cluster, " +
+    "not one k x dim partial per partition") {
+    // 64 partitions of 3 vectors, k = 96, dim 64. Per-partition dense
+    // partials would bring 64 x 96 x 64 x 16 B = 6.3 MB to the driver per
+    // update, over a 2 MB spark.driver.maxResultSize; combined per
+    // cluster on the executors, at most 96 x 64 x 16 B = 98 KB plus each
+    // task's own result. The driver's bytes are the task results Spark
+    // counts against that limit, summed by a listener.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val rng = new scala.util.Random(17)
+    val emb = (0L until 192L).map(i => (i, Array.fill(64)(rng.nextFloat())))
+      .toDF("vec_id", "embedding").repartition(64)
+    def driverBytes(iters: Int): (Long, Array[Array[Double]]) = {
+      val bytes = new java.util.concurrent.atomic.AtomicLong
+      val l = new SparkListener {
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+          if (t.taskMetrics != null) bytes.addAndGet(t.taskMetrics.resultSize)
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
+          k = 96, iters = iters)
+        flushListeners()
+        (bytes.get, cents)
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    val (init, _) = driverBytes(0)
+    val (two, cents) = driverBytes(2)
+    val perUpdate = (two - init) / 2
+    assert(perUpdate < (2L << 20),
+      s"a Lloyd update sent $perUpdate bytes of task results to the driver")
+    assert(cents.length == 96 && cents.forall(_.length == 64))
   }
 
   test("minhash incremental: batch joins persisted band keys + within-batch pairs") {
@@ -1197,30 +1240,43 @@ class PipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("driverEdgeLimit=10"))
   }
 
-  /** Jobs `f` submits, counted by a listener; a marker job flushes the
-    * listener queue before the count is read. */
-  private def jobsDuring(f: => Unit): Int = {
+  private val FlushMarker = "listener-flush-marker"
+
+  /** Runs a marker job and returns once a listener has seen it start:
+    * listeners share one event queue, so every listener has then seen
+    * every event before it. */
+  private def flushListeners(): Unit = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val marker = "job-budget-marker"
     @volatile var seen = false
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties.getProperty("spark.job.description") == marker) seen = true
-        else if (!seen) jobs.incrementAndGet()
+        if (j.properties.getProperty("spark.job.description") == FlushMarker)
+          seen = true
     }
     val sc = spark.sparkContext
     sc.addSparkListener(l)
     try {
-      f
-      sc.setJobDescription(marker)
+      sc.setJobDescription(FlushMarker)
       sc.parallelize(Seq(1), 1).count()
       sc.setJobDescription(null)
       val until = System.nanoTime() + 30000000000L
       while (!seen && System.nanoTime() < until) Thread.sleep(20)
       assert(seen, "listener never saw the marker job")
-      jobs.get
     } finally sc.removeSparkListener(l)
+  }
+
+  /** Jobs `f` submits, counted by a listener. */
+  private def jobsDuring(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties.getProperty("spark.job.description") != FlushMarker)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { f; flushListeners(); jobs.get }
+    finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("llm_curation ops: a repeat call in one session stays within its " +
@@ -1229,9 +1285,12 @@ class PipelineSpec extends SparkSpec {
     // jobs of the second call (build + a noop write of the full result)
     // at sf0.001 on local[4]. Before the map-side bigram kernel, the
     // driver-table CC finish, the join-free semantic chain and the
-    // schema reuse of Query.T, the same calls ran 8, 14, 9 and 25 jobs
-    val budget = Seq("q_quality_gate" -> 3, "q_dedup_fuzzy" -> 10,
-      "q_pq_topk" -> 8, "q_pipeline_semantic" -> 18)
+    // schema reuse of Query.T, the same calls ran 8, 14, 9 and 25 jobs;
+    // before the window-lag LSH edges, the one-job codebook, Lloyd,
+    // cluster-size and init+bench collects and the anti-join survivors,
+    // 3, 10, 8 and 18
+    val budget = Seq("q_quality_gate" -> 3, "q_dedup_fuzzy" -> 9,
+      "q_pq_topk" -> 6, "q_pipeline_semantic" -> 11)
     def call(name: String): Unit =
       SparkEntry.queries(name)(spark, d).write.format("noop")
         .mode("overwrite").save()

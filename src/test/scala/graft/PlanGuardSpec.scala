@@ -390,27 +390,29 @@ class PlanGuardSpec extends SparkSpec {
         "k-entry summary must combine map-side before the shuffle")
   }
 
-  test("spanning-edge emitters: exactly the groupByKey shuffle + the " +
-    "distinct — never a join, never an all-pairs materialization") {
+  test("spanning-edge emitters: exactly their bucket shuffle (+ the " +
+    "n-gram edge distinct) — never a join, never an all-pairs " +
+    "materialization") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for ((name, df) <- Seq(
-        "minhashLshEdges" ->
-          graft.pipeline.Dedup.minhashLshEdges(docs, "doc_id", "text"),
-        "ngramShingleEdges" ->
-          graft.pipeline.Dedup.ngramShingleEdges(docs, "doc_id", "text"))) {
+    for ((name, df, keyed, expected) <- Seq(
+        ("minhashLshEdges",
+          graft.pipeline.Dedup.minhashLshEdges(docs, "doc_id", "text"), 1,
+          "the bucket shuffle of the lag window"),
+        ("ngramShingleEdges",
+          graft.pipeline.Dedup.ngramShingleEdges(docs, "doc_id", "text"), 2,
+          "the posting groupByKey shuffle plus the edge distinct"))) {
       val nodes = walkPlan(df.queryExecution.executedPlan)
       // Core.spread's RoundRobin fan-out of the compact doc scan is
       // input plumbing shared with every dedup path, not part of the
       // edge algorithm — exclude it from the count
       val shuffles = nodes.collect { case s: ShuffleExchangeLike => s }
         .filterNot(_.outputPartitioning.toString.contains("RoundRobin"))
-      assert(shuffles.size == 2,
-        s"$name plans ${shuffles.size} keyed exchanges — expected the " +
-          "posting/bucket groupByKey shuffle plus the edge distinct")
+      assert(shuffles.size == keyed,
+        s"$name plans ${shuffles.size} keyed exchanges — expected $expected")
       assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]),
-        s"$name grew a join — edges must stream out of flatMapGroups")
+        s"$name grew a join — edges must stream out of one bucket pass")
     }
   }
 

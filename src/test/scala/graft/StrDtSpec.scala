@@ -179,6 +179,19 @@ class StrDtSpec extends SparkSpec {
           "red ring" -> Seq(0, 0, 1, 1)))
   }
 
+  test("str.get_dummies: a vocabulary over the 10,000-token cap fails loudly") {
+    import spark.implicits._
+    // 10,001 distinct tokens over 101 rows: one over the cap
+    val over = (0 until 100).map(r =>
+      (0 until 100).map(t => s"t${r * 100 + t}").mkString(" ")) :+ "t10000"
+    val e = intercept[IllegalArgumentException](
+      StrDt.strGetDummies(over.toDF("n"), "n", " "))
+    assert(e.getMessage.contains("str.get_dummies: > 10000 categories in 'n'"))
+    // exactly at the cap: 10,000 columns
+    assert(StrDt.strGetDummies(over.dropRight(1).toDF("n"), "n", " ")
+      .length == 10000)
+  }
+
   test("dt tranche 5: to_period labels for Y/Q/M/D/W") {
     val df = Seq(Timestamp.valueOf("2024-03-15 10:30:00")).toDF("t")
     val r = df.select(
